@@ -68,47 +68,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // bench contract is local[32] (the driver may or may not export the env)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // sorted bucketed scans (see Verify.scala note): one sorted file
-      // per bucket by construction, so the SMJ skips per-query sorts
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      // experiment knob: in theory AQE's re-planning jobs are pure
-      // overhead at a pinned 32-partition local layout. Measured round 2
-      // (quiet host): AQE on/off made NO difference to the per-query
-      // floor; round-3 off-runs were load-poisoned (loadavg 8-14, the
-      // telemetry below flagged them) and showed no improvement either.
-      // No evidence of a win, and AQE's skew-join safety matters at real
-      // scale — the default stays ON.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // Bench-session knob, library-neutral: single-machine shuffles move
-      // through page cache, so lz4 on every exchange is CPU with no I/O to
-      // save at this scale. Interleaved A/B at sf0.1 (2-pass best-sums):
-      // off 47.2/51.2 vs on 57.6/52.1 under ambient load 2-3 — within
-      // noise but never worse, and strictly less per-exchange work. A real
-      // cluster (network + disk spill) keeps compression ON; this config
-      // lives only in the bench/local entry point, not in any operator.
-      .config("spark.shuffle.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-      .config("spark.shuffle.spill.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-      // Bench-session knob: the codegen class cache defaults to 100
-      // entries — a 238-query suite evicts constantly, so every pass
-      // re-Janino-compiles every query's generated code (~50-150 ms per
-      // codegen unit) and the cross-pass min never reaches the warm
-      // state isolated probes converge to by pass 3. 2000 entries holds
-      // the whole suite; the queries themselves are unchanged — this
-      // removes redundant COMPILATION between passes, not work inside
-      // any timed plan.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
-      .getOrCreate()
+    val spark = Session.builder(Session.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val loadStart = loadAvg
     // One untimed query warms the session (JIT, codegen compiler, parquet
@@ -252,49 +212,12 @@ object Bench {
       //      for the judge;
       //   2. the FINAL stdout line is a short (<500 B) summary regardless of
       //      how many queries the suite grows to.
-      // Regime disclosure (ADVICE r7): these queries' timed path serves
-      // precomputed per-corpus state — stamped landings (CDC A/B states,
-      // the near-dup base index, stored histogram partials) or persisted
-      // in-memory index artifacts (trained IVF/PQ quantizers and their
-      // assignments) — while the DuckDB denominator rebuilds everything
-      // from raw per run. Their per-query ratios therefore compare an
-      // incremental/index-serving regime against a full recompute; the
-      // oracle hash-match still proves served-state ≡ rebuild.
-      val warmState = Seq("cdc_incremental_join", "cdc_incremental_neardup",
-          "cdc_incremental_ivf", "agg_hist_rollup", "embedding_ivf_knn",
-          "embedding_pq_knn", "embedding_semantic_dedup", "layout_zorder",
-          "layout_compaction", "catalog_stats", "embedding_outlier_gate",
-          // r11: the envelope topic lands once (the capture agent's write);
-          // the timed path is the consumer decode. The txn demo db builds
-          // once per JVM; the timed path reads committed versions.
-          "cdc_debezium_envelope", "txlog_txn_commit",
-          // the streamed feed drains + lands once per JVM; the timed
-          // path reads the landing
-          "txlog_changefeed_stream", "txlog_view_from_feed",
-          // the zorder demo table builds + OPTIMIZEs once per JVM
-          "txlog_optimize_zorder",
-          // the envelope stream drains + lands its state once per JVM
-          "cdc_debezium_stream", "cdc_avro_stream",
-          // r15: the composed pipeline's table (seed + one CDC-apply
-          // commit off the avro landing) builds once per JVM; the timed
-          // path is the consumer view (v0 census + CDF delta merge)
-          "cdc_e2e_pipeline", "cdc_e2e_stream",
-          // r15: the transformWithState profile / timer-session drains
-          // run once per JVM; the timed paths read the landed state
-          "events_tws_profile", "events_timer_sessions",
-          // the evolution demo table builds + ALTERs once per JVM
-          "txlog_schema_evolution",
-          // r14: these read the bucketed lineitem/orders landing (one
-          // keyed re-land per corpus; the layout answer to a recurring
-          // order-keyed join/agg)
-          "join_bucketed", "basket_rules", "graph_kcore", "orders_backlog",
-          // r15: the BFS edge frame pins from its stamped pair landing
-          "graph_shortest_paths",
-          // r16: triangles reads the SAME bucketed adjacency landing
-          // graph_kcore serves (one derived edge index, two graph
-          // consumers — the r15 verdict's transplant item); pagerank's
-          // edge pin builds from the co-bucketed lineitem/orders landing
-          "graph_triangles", "graph_pagerank")
+      // Regime disclosure: these queries' timed path serves state built
+      // once per JVM or corpus (Query.warm), while the DuckDB denominator
+      // rebuilds everything from raw per run. Their per-query ratios
+      // compare a served regime against a full recompute; the oracle
+      // hash-match still proves served-state ≡ rebuild.
+      val warmState = SparkEntry.registry.filter(_.warm).map(_.name)
         .filter(best.contains)
         .map("\"" + _ + "\"").mkString("[", ",", "]")
       val passWallJson = passWalls.mkString("[", ",", "]")

@@ -4,57 +4,58 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * The engine's public API surface: every operator family registers its
-  * (name → query) pairs and the matching DuckDB oracle SQL here. Modules
-  * live under graft.operators.*; each query is a pure
-  * (SparkSession, sfDir) => DataFrame over the TESTDATA.md parquet tables.
+  * The engine's public API surface: every operator family declares its
+  * `registry` of [[Query]] rows (name, implementation, DuckDB oracle SQL)
+  * and this object concatenates them. Modules live under graft.operators.*
+  * and graft.sources.*; each query is a pure (SparkSession, sfDir) =>
+  * DataFrame over the TESTDATA.md parquet tables.
   */
 object SparkEntry {
-  private def modules: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
-    Seq(
-      (operators.Relational.queries, operators.Relational.oracle),
-      (operators.Joins.queries, operators.Joins.oracle),
-      (operators.Intervals.queries, operators.Intervals.oracle),
-      (operators.Windows.queries, operators.Windows.oracle),
-      (operators.Cdc.queries, operators.Cdc.oracle),
-      (operators.AvroWire.queries, operators.AvroWire.oracle),
-      (operators.CdcE2e.queries, operators.CdcE2e.oracle),
-      (operators.Olap.queries, operators.Olap.oracle),
-      (operators.Docs.queries, operators.Docs.oracle),
-      (operators.NearDup.queries, operators.NearDup.oracle),
-      (operators.Retrieval.queries, operators.Retrieval.oracle),
-      (operators.Embeddings.queries, operators.Embeddings.oracle),
-      (operators.Multimodal.queries, operators.Multimodal.oracle),
-      (operators.Analytics.queries, operators.Analytics.oracle),
-      (operators.Scalar.queries, operators.Scalar.oracle),
-      (operators.Collections.queries, operators.Collections.oracle),
-      (operators.Pipeline.queries, operators.Pipeline.oracle),
-      (operators.Skew.queries, operators.Skew.oracle),
-      (operators.Quality.queries, operators.Quality.oracle),
-      (operators.TimeSeries.queries, operators.TimeSeries.oracle),
-      (operators.SqlSuite.queries, operators.SqlSuite.oracle),
-      (sources.Partitioned.queries, sources.Partitioned.oracle),
-      (sources.Formats.queries, sources.Formats.oracle),
-      (sources.Bucketed.queries, sources.Bucketed.oracle),
-      (sources.Catalog.queries, sources.Catalog.oracle),
-      (sources.Dml.queries, sources.Dml.oracle),
-      (sources.TxLog.queries, sources.TxLog.oracle),
-      (sources.TxSql.queries, sources.TxSql.oracle),
-      (sources.TxFeatures.queries, sources.TxFeatures.oracle),
-      (sources.TxDml.queries, sources.TxDml.oracle),
-      (sources.Layout.queries, sources.Layout.oracle),
-      (sources.ChangeLog.queries, sources.ChangeLog.oracle))
+  /** Every registered query, in module order. */
+  lazy val registry: Seq[Query] = Query.checked(Seq(
+    operators.Relational.registry,
+    operators.Joins.registry,
+    operators.Intervals.registry,
+    operators.Windows.registry,
+    operators.Cdc.registry,
+    operators.AvroWire.registry,
+    operators.CdcE2e.registry,
+    operators.Olap.registry,
+    operators.Docs.registry,
+    operators.NearDup.registry,
+    operators.Retrieval.registry,
+    operators.Embeddings.registry,
+    operators.Multimodal.registry,
+    operators.Analytics.registry,
+    operators.Scalar.registry,
+    operators.Collections.registry,
+    operators.Pipeline.registry,
+    operators.Skew.registry,
+    operators.Quality.registry,
+    operators.TimeSeries.registry,
+    operators.SqlSuite.registry,
+    sources.Partitioned.registry,
+    sources.Formats.registry,
+    sources.Bucketed.registry,
+    sources.Catalog.registry,
+    sources.Dml.registry,
+    sources.TxLog.registry,
+    sources.TxSql.registry,
+    sources.TxFeatures.registry,
+    sources.TxDml.registry,
+    sources.Layout.registry,
+    sources.ChangeLog.registry).flatten)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     operators.Relational.q1Pricing(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.map(_._1).reduce(_ ++ _)
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    modules.map(_._2).reduce(_ ++ _)
+    * the same parquet tables. */
+  lazy val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracleSql).toMap
 }

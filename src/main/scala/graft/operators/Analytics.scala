@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.Tables
 import graft.functions.Det._
 
@@ -1811,65 +1812,36 @@ object Analytics {
       |    THEN 1 ELSE 0 END) AS BIGINT) AS n_anomalies
       |FROM s GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_seasonal_anomaly" -> (eventsSeasonalAnomaly _),
-    "q11_important_share" -> (q11ImportantShare _),
-    "events_burstiness" -> (eventsBurstiness _),
-    "agg_corr" -> (aggCorr _),
-    "events_dau_mau" -> (eventsDauMau _),
-    "nation_revenue_yoy" -> (nationRevenueYoy _),
-    "events_error_budget" -> (eventsErrorBudget _),
-    "orders_cohort_ltv" -> (ordersCohortLtv _),
-    "agg_hist_rollup" -> (aggHistRollup _),
-    "agg_hist_quantile" -> (aggHistQuantile _),
-    "having_filter" -> (havingFilter _),
-    "events_anomaly" -> (eventsAnomaly _),
-    "events_anomaly_mad" -> (eventsAnomalyMad _),
-    "events_rfm" -> (eventsRfm _),
-    "events_trend" -> (eventsTrend _),
-    "events_holt" -> (eventsHolt _),
-    "events_diversity" -> (eventsDiversity _),
-    "events_forecast_backtest" -> (eventsForecastBacktest _),
-    "events_seasonality" -> (eventsSeasonality _),
-    "events_autocorr" -> (eventsAutocorr _),
-    "agg_grouping_sets" -> (aggGroupingSets _),
-    "agg_cube" -> (aggCube _),
-    "pivot_segment" -> (pivotSegment _),
-    "agg_median" -> (aggMedian _),
-    "agg_quantiles" -> (aggQuantiles _),
-    "agg_stats" -> (aggStats _),
-    "unpivot_measures" -> (unpivotMeasures _),
-    "null_semantics" -> (nullSemantics _),
-    "sql_subquery" -> (sqlSubquery _))
-
-  def oracle: Map[String, String] = Map(
-    "events_seasonal_anomaly" -> eventsSeasonalAnomalySql,
-    "q11_important_share" -> q11ImportantShareSql,
-    "events_burstiness" -> eventsBurstinessSql,
-    "agg_corr" -> aggCorrSql,
-    "events_dau_mau" -> eventsDauMauSql,
-    "nation_revenue_yoy" -> nationRevenueYoySql,
-    "events_error_budget" -> eventsErrorBudgetSql,
-    "orders_cohort_ltv" -> ordersCohortLtvSql,
-    "agg_hist_rollup" -> aggHistRollupSql,
-    "agg_hist_quantile" -> aggHistQuantileSql,
-    "having_filter" -> havingFilterSql,
-    "events_anomaly" -> eventsAnomalySql,
-    "events_anomaly_mad" -> eventsAnomalyMadSql,
-    "events_rfm" -> eventsRfmSql,
-    "events_trend" -> eventsTrendSql,
-    "events_holt" -> eventsHoltSql,
-    "events_diversity" -> eventsDiversitySql,
-    "events_forecast_backtest" -> eventsForecastBacktestSql,
-    "events_seasonality" -> eventsSeasonalitySql,
-    "events_autocorr" -> eventsAutocorrSql,
-    "agg_grouping_sets" -> aggGroupingSetsSql,
-    "agg_cube" -> aggCubeSql,
-    "pivot_segment" -> pivotSegmentSql,
-    "agg_median" -> aggMedianSql,
-    "agg_quantiles" -> aggQuantilesSql,
-    "agg_stats" -> aggStatsSql,
-    "unpivot_measures" -> unpivotMeasuresSql,
-    "null_semantics" -> nullSemanticsSql,
-    "sql_subquery" -> sqlSubquerySql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("events_seasonal_anomaly", eventsSeasonalAnomaly,
+      eventsSeasonalAnomalySql),
+    Query("q11_important_share", q11ImportantShare, q11ImportantShareSql),
+    Query("events_burstiness", eventsBurstiness, eventsBurstinessSql),
+    Query("agg_corr", aggCorr, aggCorrSql),
+    Query("events_dau_mau", eventsDauMau, eventsDauMauSql),
+    Query("nation_revenue_yoy", nationRevenueYoy, nationRevenueYoySql),
+    Query("events_error_budget", eventsErrorBudget, eventsErrorBudgetSql),
+    Query("orders_cohort_ltv", ordersCohortLtv, ordersCohortLtvSql),
+    Query("agg_hist_rollup", aggHistRollup, aggHistRollupSql, warm = true),
+    Query("agg_hist_quantile", aggHistQuantile, aggHistQuantileSql),
+    Query("having_filter", havingFilter, havingFilterSql),
+    Query("events_anomaly", eventsAnomaly, eventsAnomalySql),
+    Query("events_anomaly_mad", eventsAnomalyMad, eventsAnomalyMadSql),
+    Query("events_rfm", eventsRfm, eventsRfmSql),
+    Query("events_trend", eventsTrend, eventsTrendSql),
+    Query("events_holt", eventsHolt, eventsHoltSql),
+    Query("events_diversity", eventsDiversity, eventsDiversitySql),
+    Query("events_forecast_backtest", eventsForecastBacktest,
+      eventsForecastBacktestSql),
+    Query("events_seasonality", eventsSeasonality, eventsSeasonalitySql),
+    Query("events_autocorr", eventsAutocorr, eventsAutocorrSql),
+    Query("agg_grouping_sets", aggGroupingSets, aggGroupingSetsSql),
+    Query("agg_cube", aggCube, aggCubeSql),
+    Query("pivot_segment", pivotSegment, pivotSegmentSql),
+    Query("agg_median", aggMedian, aggMedianSql),
+    Query("agg_quantiles", aggQuantiles, aggQuantilesSql),
+    Query("agg_stats", aggStats, aggStatsSql),
+    Query("unpivot_measures", unpivotMeasures, unpivotMeasuresSql),
+    Query("null_semantics", nullSemantics, nullSemanticsSql),
+    Query("sql_subquery", sqlSubquery, sqlSubquerySql))
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.Tables
 import graft.functions.{AvroEnvelope, AvroEnvelopeDecode}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -256,11 +257,7 @@ object AvroWire {
     finalize0(spark.read.parquet(state))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cdc_avro_apply" -> (cdcAvroApply _),
-    "cdc_avro_stream" -> (cdcAvroStream _))
-
-  def oracle: Map[String, String] = Map(
-    "cdc_avro_apply" -> cdcAvroApplySql,
-    "cdc_avro_stream" -> cdcAvroApplySql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("cdc_avro_apply", cdcAvroApply, cdcAvroApplySql),
+    Query("cdc_avro_stream", cdcAvroStream, cdcAvroApplySql, warm = true))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Query
 import graft.Tables
 import graft.functions.Det._
 
@@ -2091,62 +2092,37 @@ object Cdc {
       |WHERE r.rn = 1 AND NOT r.is_del
       |ORDER BY r.user_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cdc_debezium_envelope" -> (cdcDebeziumEnvelope _),
-    "cdc_debezium_stream" -> (cdcDebeziumStream _),
-    "json_extract" -> (jsonExtract _),
-    "cdc_apply" -> (cdcApply _),
-    "cdc_dual_wire_merge" -> (cdcDualWireMerge _),
-    "cdc_chunked_snapshot" -> (cdcChunkedSnapshot _),
-    "cdc_conflict_audit" -> (cdcConflictAudit _),
-    "cdc_resume_offsets" -> (cdcResumeOffsets _),
-    "cdc_forget_audit" -> (cdcForgetAudit _),
-    "cdc_inc_apply" -> (cdcIncApply _),
-    "cdc_gap_detection" -> (cdcGapDetection _),
-    "cdc_replication_lag" -> (cdcReplicationLag _),
-    "cdc_at_least_once" -> (cdcAtLeastOnce _),
-    "cdc_compaction" -> (cdcCompaction _),
-    "cdc_merge_apply" -> (cdcMergeApply _),
-    "cdc_ddl_evolution" -> (cdcDdlEvolution _),
-    "cdc_txn_apply" -> (cdcTxnApply _),
-    "cdc_snapshot_diff" -> (cdcSnapshotDiff _),
-    "cdc_time_travel" -> (cdcTimeTravel _),
-    "cdc_incremental_agg" -> (cdcIncrementalAgg _),
-    "cdc_incremental_join" -> (cdcIncrementalJoin _),
-    "cdc_scd2" -> (cdcScd2 _),
-    "join_scd2_asof" -> (joinScd2Asof _),
-    "event_funnel" -> (eventFunnel _),
-    "join_stream_static" -> (joinStreamStatic _),
-    "events_attribution" -> (eventsAttribution _),
-    "events_attribution_outer" -> (eventsAttributionOuter _))
-
-  def oracle: Map[String, String] = Map(
-    "cdc_debezium_envelope" -> cdcDebeziumEnvelopeSql,
+  lazy val registry: Seq[Query] = Seq(
+    Query("cdc_debezium_envelope", cdcDebeziumEnvelope,
+      cdcDebeziumEnvelopeSql, warm = true),
     // the streamed apply must equal the batch apply — same oracle
-    "cdc_debezium_stream" -> cdcDebeziumEnvelopeSql,
-    "json_extract" -> jsonExtractSql,
-    "cdc_apply" -> cdcApplySql,
-    "cdc_dual_wire_merge" -> cdcDualWireMergeSql,
-    "cdc_chunked_snapshot" -> cdcChunkedSnapshotSql,
-    "cdc_conflict_audit" -> cdcConflictAuditSql,
-    "cdc_resume_offsets" -> cdcResumeOffsetsSql,
-    "cdc_forget_audit" -> cdcForgetAuditSql,
-    "cdc_inc_apply" -> cdcIncApplySql,
-    "cdc_gap_detection" -> cdcGapDetectionSql,
-    "cdc_replication_lag" -> cdcReplicationLagSql,
-    "cdc_at_least_once" -> cdcAtLeastOnceSql,
-    "cdc_compaction" -> cdcCompactionSql,
-    "cdc_merge_apply" -> cdcMergeApplySql,
-    "cdc_ddl_evolution" -> cdcDdlEvolutionSql,
-    "cdc_txn_apply" -> cdcTxnApplySql,
-    "cdc_snapshot_diff" -> cdcSnapshotDiffSql,
-    "cdc_time_travel" -> cdcTimeTravelSql,
-    "cdc_incremental_agg" -> cdcIncrementalAggSql,
-    "cdc_incremental_join" -> cdcIncrementalJoinSql,
-    "cdc_scd2" -> cdcScd2Sql,
-    "join_scd2_asof" -> joinScd2AsofSql,
-    "event_funnel" -> eventFunnelSql,
-    "join_stream_static" -> joinStreamStaticSql,
-    "events_attribution" -> eventsAttributionSql,
-    "events_attribution_outer" -> eventsAttributionOuterSql)
+    Query("cdc_debezium_stream", cdcDebeziumStream,
+      cdcDebeziumEnvelopeSql, warm = true),
+    Query("json_extract", jsonExtract, jsonExtractSql),
+    Query("cdc_apply", cdcApply, cdcApplySql),
+    Query("cdc_dual_wire_merge", cdcDualWireMerge, cdcDualWireMergeSql),
+    Query("cdc_chunked_snapshot", cdcChunkedSnapshot, cdcChunkedSnapshotSql),
+    Query("cdc_conflict_audit", cdcConflictAudit, cdcConflictAuditSql),
+    Query("cdc_resume_offsets", cdcResumeOffsets, cdcResumeOffsetsSql),
+    Query("cdc_forget_audit", cdcForgetAudit, cdcForgetAuditSql),
+    Query("cdc_inc_apply", cdcIncApply, cdcIncApplySql),
+    Query("cdc_gap_detection", cdcGapDetection, cdcGapDetectionSql),
+    Query("cdc_replication_lag", cdcReplicationLag, cdcReplicationLagSql),
+    Query("cdc_at_least_once", cdcAtLeastOnce, cdcAtLeastOnceSql),
+    Query("cdc_compaction", cdcCompaction, cdcCompactionSql),
+    Query("cdc_merge_apply", cdcMergeApply, cdcMergeApplySql),
+    Query("cdc_ddl_evolution", cdcDdlEvolution, cdcDdlEvolutionSql),
+    Query("cdc_txn_apply", cdcTxnApply, cdcTxnApplySql),
+    Query("cdc_snapshot_diff", cdcSnapshotDiff, cdcSnapshotDiffSql),
+    Query("cdc_time_travel", cdcTimeTravel, cdcTimeTravelSql),
+    Query("cdc_incremental_agg", cdcIncrementalAgg, cdcIncrementalAggSql),
+    Query("cdc_incremental_join", cdcIncrementalJoin,
+      cdcIncrementalJoinSql, warm = true),
+    Query("cdc_scd2", cdcScd2, cdcScd2Sql),
+    Query("join_scd2_asof", joinScd2Asof, joinScd2AsofSql),
+    Query("event_funnel", eventFunnel, eventFunnelSql),
+    Query("join_stream_static", joinStreamStatic, joinStreamStaticSql),
+    Query("events_attribution", eventsAttribution, eventsAttributionSql),
+    Query("events_attribution_outer", eventsAttributionOuter,
+      eventsAttributionOuterSql))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Query
 import graft.sources.{TxLog, TxSql}
 import java.io.File
 
@@ -277,11 +278,7 @@ object CdcE2e {
       |    AS total_cents
       |FROM s1 GROUP BY 1 ORDER BY band""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cdc_e2e_pipeline" -> (cdcE2ePipeline _),
-    "cdc_e2e_stream" -> (cdcE2eStream _))
-
-  def oracle: Map[String, String] = Map(
-    "cdc_e2e_pipeline" -> cdcE2ePipelineSql,
-    "cdc_e2e_stream" -> cdcE2eStreamSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("cdc_e2e_pipeline", cdcE2ePipeline, cdcE2ePipelineSql, warm = true),
+    Query("cdc_e2e_stream", cdcE2eStream, cdcE2eStreamSql, warm = true))
 }

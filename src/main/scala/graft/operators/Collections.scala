@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Query
 import graft.Tables
 
 /** Collection-type surface (SURVEY.md §2.7 array/map rows, §1.3 BSON
@@ -269,17 +270,10 @@ object Collections {
       |    AS BIGINT) AS n_absent_path
       |FROM env GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "map_ops" -> (mapOps _),
-    "array_hof" -> (arrayHof _),
-    "json_malformed" -> (jsonMalformed _),
-    "json_variant" -> (jsonVariant _),
-    "json_evolution" -> (jsonEvolution _))
-
-  def oracle: Map[String, String] = Map(
-    "map_ops" -> mapOpsSql,
-    "array_hof" -> arrayHofSql,
-    "json_malformed" -> jsonMalformedSql,
-    "json_variant" -> jsonVariantSql,
-    "json_evolution" -> jsonEvolutionSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("map_ops", mapOps, mapOpsSql),
+    Query("array_hof", arrayHof, arrayHofSql),
+    Query("json_malformed", jsonMalformed, jsonMalformedSql),
+    Query("json_variant", jsonVariant, jsonVariantSql),
+    Query("json_evolution", jsonEvolution, jsonEvolutionSql))
 }

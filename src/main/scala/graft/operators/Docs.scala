@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.Tables
 
 /** Text-pipeline operators over the `documents` table (SURVEY.md §2.8 rows
@@ -919,39 +920,21 @@ object Docs {
        |  n_xy, lift
        |FROM r WHERE rank <= 15 ORDER BY lang, rank""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "doc_dedup" -> (docDedup _),
-    "doc_heavy_hitters" -> (docHeavyHitters _),
-    "doc_keyword_search" -> (docKeywordSearch _),
-    "doc_bm25" -> (docBm25 _),
-    "doc_readability" -> (docReadability _),
-    "doc_collocations" -> (docCollocations _),
-    "doc_bpe_pairs" -> (docBpePairs _),
-    "doc_lm_coverage" -> (docLmCoverage _),
-    "doc_quality_model" -> (docQualityModel _),
-    "doc_text_stats" -> (docTextStats _),
-    "doc_tokens" -> (docTokens _),
-    "doc_quality" -> (docQuality _),
-    "sample_quota" -> (sampleQuota _),
-    "doc_lang_id" -> (docLangId _),
-    "doc_fingerprint" -> (docFingerprint _),
-    "doc_tfidf" -> (docTfidf _))
-
-  def oracle: Map[String, String] = Map(
-    "doc_dedup" -> docDedupSql,
-    "doc_heavy_hitters" -> docHeavyHittersSql,
-    "doc_keyword_search" -> docKeywordSearchSql,
-    "doc_bm25" -> docBm25Sql,
-    "doc_readability" -> docReadabilitySql,
-    "doc_collocations" -> docCollocationsSql,
-    "doc_bpe_pairs" -> docBpePairsSql,
-    "doc_lm_coverage" -> docLmCoverageSql,
-    "doc_quality_model" -> docQualityModelSql,
-    "doc_text_stats" -> docTextStatsSql,
-    "doc_tokens" -> docTokensSql,
-    "doc_quality" -> docQualitySql,
-    "sample_quota" -> sampleQuotaSql,
-    "doc_lang_id" -> docLangIdSql,
-    "doc_fingerprint" -> docFingerprintSql,
-    "doc_tfidf" -> docTfidfSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("doc_dedup", docDedup, docDedupSql),
+    Query("doc_heavy_hitters", docHeavyHitters, docHeavyHittersSql),
+    Query("doc_keyword_search", docKeywordSearch, docKeywordSearchSql),
+    Query("doc_bm25", docBm25, docBm25Sql),
+    Query("doc_readability", docReadability, docReadabilitySql),
+    Query("doc_collocations", docCollocations, docCollocationsSql),
+    Query("doc_bpe_pairs", docBpePairs, docBpePairsSql),
+    Query("doc_lm_coverage", docLmCoverage, docLmCoverageSql),
+    Query("doc_quality_model", docQualityModel, docQualityModelSql),
+    Query("doc_text_stats", docTextStats, docTextStatsSql),
+    Query("doc_tokens", docTokens, docTokensSql),
+    Query("doc_quality", docQuality, docQualitySql),
+    Query("sample_quota", sampleQuota, sampleQuotaSql),
+    Query("doc_lang_id", docLangId, docLangIdSql),
+    Query("doc_fingerprint", docFingerprint, docFingerprintSql),
+    Query("doc_tfidf", docTfidf, docTfidfSql))
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.Tables
 
 /** Similarity search + vector-column operators over `embeddings`
@@ -1337,35 +1338,25 @@ object Embeddings {
        |WHERE r.rank <= 5 ORDER BY q_id, rank""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "array_ops" -> (arrayOps _),
-    "embedding_bq_knn" -> (embeddingBqKnn _),
-    "embedding_recall_eval" -> (embeddingRecallEval _),
-    "embedding_knn" -> (embeddingKnn _),
-    "embedding_filtered_knn" -> (embeddingFilteredKnn _),
-    "embedding_range_search" -> (embeddingRangeSearch _),
-    "embedding_knn_lsh" -> (embeddingKnnLsh _),
-    "embedding_sq_knn" -> (embeddingSqKnn _),
-    "embedding_pq_knn" -> (embeddingPqKnn _),
-    "embedding_ivf_knn" -> (embeddingIvfKnn _),
-    "embedding_outlier_gate" -> (embeddingOutlierGate _),
-    "embedding_semantic_dedup" -> (embeddingSemanticDedup _),
-    "embedding_near_dedup" -> (embeddingNearDedup _),
-    "cdc_incremental_ivf" -> (cdcIncrementalIvf _))
-
-  def oracle: Map[String, String] = Map(
-    "array_ops" -> arrayOpsSql,
-    "embedding_bq_knn" -> embeddingBqKnnSql,
-    "embedding_recall_eval" -> embeddingRecallEvalSql,
-    "embedding_knn" -> embeddingKnnSql,
-    "embedding_filtered_knn" -> embeddingFilteredKnnSql,
-    "embedding_range_search" -> embeddingRangeSearchSql,
-    "embedding_knn_lsh" -> embeddingKnnLshSql,
-    "embedding_sq_knn" -> embeddingSqKnnSql,
-    "embedding_pq_knn" -> embeddingPqKnnSql,
-    "embedding_ivf_knn" -> embeddingIvfKnnSql,
-    "embedding_outlier_gate" -> embeddingOutlierGateSql,
-    "embedding_semantic_dedup" -> embeddingSemanticDedupSql,
-    "embedding_near_dedup" -> embeddingNearDedupSql,
-    "cdc_incremental_ivf" -> cdcIncrementalIvfSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("array_ops", arrayOps, arrayOpsSql),
+    Query("embedding_bq_knn", embeddingBqKnn, embeddingBqKnnSql),
+    Query("embedding_recall_eval", embeddingRecallEval, embeddingRecallEvalSql),
+    Query("embedding_knn", embeddingKnn, embeddingKnnSql),
+    Query("embedding_filtered_knn", embeddingFilteredKnn,
+      embeddingFilteredKnnSql),
+    Query("embedding_range_search", embeddingRangeSearch,
+      embeddingRangeSearchSql),
+    Query("embedding_knn_lsh", embeddingKnnLsh, embeddingKnnLshSql),
+    Query("embedding_sq_knn", embeddingSqKnn, embeddingSqKnnSql),
+    Query("embedding_pq_knn", embeddingPqKnn, embeddingPqKnnSql, warm = true),
+    Query("embedding_ivf_knn", embeddingIvfKnn,
+      embeddingIvfKnnSql, warm = true),
+    Query("embedding_outlier_gate", embeddingOutlierGate,
+      embeddingOutlierGateSql, warm = true),
+    Query("embedding_semantic_dedup", embeddingSemanticDedup,
+      embeddingSemanticDedupSql, warm = true),
+    Query("embedding_near_dedup", embeddingNearDedup, embeddingNearDedupSql),
+    Query("cdc_incremental_ivf", cdcIncrementalIvf,
+      cdcIncrementalIvfSql, warm = true))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.Tables
 import graft.functions.Det._
 
@@ -92,8 +93,9 @@ object Intervals {
     //    AQE skew splitting on the bin key — which at 100 TB is the
     //    protection the concurrency-skewed bins actually need.
     //  - r14 re-probe AT SF1 (the r13 verdict's "where the exchange
-    //    actually matters" question, tools/AB.binsV2): the zero-exchange
-    //    landing loses THERE TOO — 4.24 vs 3.54 min-of-7 interleaved at
+    //    actually matters" question, AB variant binsV2 at 3ddf2cc): the
+    //    zero-exchange landing loses THERE TOO — 4.24 vs 3.54 min-of-7
+    //    interleaved at
     //    10× data, quiet host. Writing the exploded frame once costs
     //    more than shuffling it twice at every scale measured; the
     //    committed shape stands on data, not argument.
@@ -141,9 +143,6 @@ object Intervals {
        |GROUP BY a.user_id, a.session_no, a.s
        |ORDER BY a.user_id, a.session_no""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "join_interval_bins" -> (joinIntervalBins _))
-
-  def oracle: Map[String, String] = Map(
-    "join_interval_bins" -> joinIntervalBinsSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("join_interval_bins", joinIntervalBins, joinIntervalBinsSql))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.Tables
 import graft.functions.Det._
 
@@ -439,27 +440,15 @@ object Joins {
       |      EXCEPT SELECT s_nationkey AS nk FROM supplier)
       |ORDER BY kind, nk""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q5_multijoin" -> (q5Multijoin _),
-    "join_outer" -> (joinOuter _),
-    "join_semi_anti" -> (joinSemiAnti _),
-    "join_range" -> (joinRange _),
-    "join_asof" -> (joinAsof _),
-    "join_asof_tolerance" -> (joinAsofTolerance _),
-    "join_asof_nearest" -> (joinAsofNearest _),
-    "join_bloom_filtered" -> (joinBloomFiltered _),
-    "setop_union" -> (setopUnion _),
-    "setop_diff" -> (setopDiff _))
-
-  def oracle: Map[String, String] = Map(
-    "q5_multijoin" -> q5MultijoinSql,
-    "join_outer" -> joinOuterSql,
-    "join_semi_anti" -> joinSemiAntiSql,
-    "join_range" -> joinRangeSql,
-    "join_asof" -> joinAsofSql,
-    "join_asof_tolerance" -> joinAsofToleranceSql,
-    "join_asof_nearest" -> joinAsofNearestSql,
-    "join_bloom_filtered" -> joinBloomFilteredSql,
-    "setop_union" -> setopUnionSql,
-    "setop_diff" -> setopDiffSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("q5_multijoin", q5Multijoin, q5MultijoinSql),
+    Query("join_outer", joinOuter, joinOuterSql),
+    Query("join_semi_anti", joinSemiAnti, joinSemiAntiSql),
+    Query("join_range", joinRange, joinRangeSql),
+    Query("join_asof", joinAsof, joinAsofSql),
+    Query("join_asof_tolerance", joinAsofTolerance, joinAsofToleranceSql),
+    Query("join_asof_nearest", joinAsofNearest, joinAsofNearestSql),
+    Query("join_bloom_filtered", joinBloomFiltered, joinBloomFilteredSql),
+    Query("setop_union", setopUnion, setopUnionSql),
+    Query("setop_diff", setopDiff, setopDiffSql))
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.Tables
 
 /** Multimodal-column plumbing (SURVEY.md task mandate): media assets are
@@ -301,15 +302,9 @@ object Multimodal {
        |FROM c GROUP BY lang, unit_id ORDER BY lang, unit_id""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_decode" -> (mmDecode _),
-    "mm_frame_sample" -> (mmFrameSample _),
-    "mm_phash_dedup" -> (mmPhashDedup _),
-    "mm_interleave_pack" -> (mmInterleavePack _))
-
-  def oracle: Map[String, String] = Map(
-    "mm_decode" -> mmDecodeSql,
-    "mm_frame_sample" -> mmFrameSampleSql,
-    "mm_phash_dedup" -> mmPhashDedupSql,
-    "mm_interleave_pack" -> mmInterleavePackSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("mm_decode", mmDecode, mmDecodeSql),
+    Query("mm_frame_sample", mmFrameSample, mmFrameSampleSql),
+    Query("mm_phash_dedup", mmPhashDedup, mmPhashDedupSql),
+    Query("mm_interleave_pack", mmInterleavePack, mmInterleavePackSql))
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.Tables
 
 /** Near-duplicate detection over `documents` (SURVEY.md §2.8 row L2 plus the
@@ -982,27 +983,17 @@ object NearDup {
        |  substring(b.text, 1, 80)) <= 10
        |ORDER BY a_id, b_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "doc_fuzzy_match" -> (docFuzzyMatch _),
-    "doc_near_dedup" -> (docNearDedup _),
-    "cdc_incremental_neardup" -> (cdcIncrementalNearDup _),
-    "doc_simhash" -> (docSimhash _),
-    "doc_simhash_dup" -> (docSimhashDup _),
-    "doc_ngram_jaccard" -> (docNgramJaccard _),
-    "doc_containment" -> (docContainment _),
-    "doc_winnowing" -> (docWinnowing _),
-    "doc_minhash_est_error" -> (docMinhashEstError _))
-
-  def oracle: Map[String, String] = Map(
-    "doc_fuzzy_match" -> docFuzzyMatchSql,
-    "doc_near_dedup" -> docNearDedupSql,
+  lazy val registry: Seq[Query] = Seq(
+    Query("doc_fuzzy_match", docFuzzyMatch, docFuzzyMatchSql),
+    Query("doc_near_dedup", docNearDedup, docNearDedupSql),
     // the oracle is the FULL batch recompute: hash-match proves
     // incremental maintenance == rebuild
-    "cdc_incremental_neardup" -> docNearDedupSql,
-    "doc_simhash" -> docSimhashSql,
-    "doc_simhash_dup" -> docSimhashDupSql,
-    "doc_ngram_jaccard" -> docNgramJaccardSql,
-    "doc_containment" -> docContainmentSql,
-    "doc_winnowing" -> docWinnowingSql,
-    "doc_minhash_est_error" -> docMinhashEstErrorSql)
+    Query("cdc_incremental_neardup", cdcIncrementalNearDup,
+      docNearDedupSql, warm = true),
+    Query("doc_simhash", docSimhash, docSimhashSql),
+    Query("doc_simhash_dup", docSimhashDup, docSimhashDupSql),
+    Query("doc_ngram_jaccard", docNgramJaccard, docNgramJaccardSql),
+    Query("doc_containment", docContainment, docContainmentSql),
+    Query("doc_winnowing", docWinnowing, docWinnowingSql),
+    Query("doc_minhash_est_error", docMinhashEstError, docMinhashEstErrorSql))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.Tables
 import graft.functions.Det._
 
@@ -791,30 +792,6 @@ object Olap {
       |FROM mv JOIN mu ON mu.event_type = mv.event_type
       |ORDER BY mv.event_type""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_mode" -> (aggMode _),
-    "agg_approx_distinct" -> (aggApproxDistinct _),
-    "agg_approx_percentile" -> (aggApproxPercentile _),
-    "agg_weighted_median" -> (aggWeightedMedian _),
-    "agg_sketch_rollup" -> (aggSketchRollup _),
-    "agg_countmin" -> (aggCountmin _),
-    "events_funnel_steps" -> (eventsFunnelSteps _),
-    "agg_bitmap_distinct" -> (aggBitmapDistinct _),
-    "events_bitmap_overlap" -> (eventsBitmapOverlap _),
-    "agg_rollup" -> (aggRollup _),
-    "agg_collect" -> (aggCollect _),
-    "events_tumbling_1h" -> (eventsTumbling1h _),
-    "events_sliding" -> (eventsSliding _),
-    "events_sliding_distinct" -> (eventsSlidingDistinct _),
-    "events_sessionize" -> (eventsSessionize _),
-    "events_retention" -> (eventsRetention _),
-    "events_ab_test" -> (eventsAbTest _),
-    "basket_rules" -> (basketRules _),
-    "events_funnel_time" -> (eventsFunnelTime _),
-    "events_cohort_matrix" -> (eventsCohortMatrix _),
-    "events_adoption" -> (eventsAdoption _),
-    "events_pareto" -> (eventsPareto _))
-
   /** events_ab_test (A20) — deterministic A/B experiment analysis: users
     * hash-assigned to variants by md5(user_id) (the sample_split idiom —
     * no RNG, stable under retries/repartitioning/engines, and the
@@ -1249,27 +1226,28 @@ object Olap {
       |  CAST(cents_b // n_b - cents_a // n_a AS BIGINT) AS mean_lift_cents
       |FROM s""".stripMargin
 
-  def oracle: Map[String, String] = Map(
-    "agg_mode" -> aggModeSql,
-    "agg_approx_distinct" -> aggApproxDistinctSql,
-    "agg_approx_percentile" -> aggApproxPercentileSql,
-    "agg_weighted_median" -> aggWeightedMedianSql,
-    "agg_sketch_rollup" -> aggSketchRollupSql,
-    "agg_countmin" -> aggCountminSql,
-    "events_funnel_steps" -> eventsFunnelStepsSql,
-    "agg_bitmap_distinct" -> aggBitmapDistinctSql,
-    "events_bitmap_overlap" -> eventsBitmapOverlapSql,
-    "agg_rollup" -> aggRollupSql,
-    "agg_collect" -> aggCollectSql,
-    "events_tumbling_1h" -> eventsTumbling1hSql,
-    "events_sliding" -> eventsSlidingSql,
-    "events_sliding_distinct" -> eventsSlidingDistinctSql,
-    "events_sessionize" -> eventsSessionizeSql,
-    "events_retention" -> eventsRetentionSql,
-    "events_ab_test" -> eventsAbTestSql,
-    "basket_rules" -> basketRulesSql,
-    "events_funnel_time" -> eventsFunnelTimeSql,
-    "events_cohort_matrix" -> eventsCohortMatrixSql,
-    "events_adoption" -> eventsAdoptionSql,
-    "events_pareto" -> eventsParetoSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("agg_mode", aggMode, aggModeSql),
+    Query("agg_approx_distinct", aggApproxDistinct, aggApproxDistinctSql),
+    Query("agg_approx_percentile", aggApproxPercentile, aggApproxPercentileSql),
+    Query("agg_weighted_median", aggWeightedMedian, aggWeightedMedianSql),
+    Query("agg_sketch_rollup", aggSketchRollup, aggSketchRollupSql),
+    Query("agg_countmin", aggCountmin, aggCountminSql),
+    Query("events_funnel_steps", eventsFunnelSteps, eventsFunnelStepsSql),
+    Query("agg_bitmap_distinct", aggBitmapDistinct, aggBitmapDistinctSql),
+    Query("events_bitmap_overlap", eventsBitmapOverlap, eventsBitmapOverlapSql),
+    Query("agg_rollup", aggRollup, aggRollupSql),
+    Query("agg_collect", aggCollect, aggCollectSql),
+    Query("events_tumbling_1h", eventsTumbling1h, eventsTumbling1hSql),
+    Query("events_sliding", eventsSliding, eventsSlidingSql),
+    Query("events_sliding_distinct", eventsSlidingDistinct,
+      eventsSlidingDistinctSql),
+    Query("events_sessionize", eventsSessionize, eventsSessionizeSql),
+    Query("events_retention", eventsRetention, eventsRetentionSql),
+    Query("events_ab_test", eventsAbTest, eventsAbTestSql),
+    Query("basket_rules", basketRules, basketRulesSql, warm = true),
+    Query("events_funnel_time", eventsFunnelTime, eventsFunnelTimeSql),
+    Query("events_cohort_matrix", eventsCohortMatrix, eventsCohortMatrixSql),
+    Query("events_adoption", eventsAdoption, eventsAdoptionSql),
+    Query("events_pareto", eventsPareto, eventsParetoSql))
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.Tables
 
 /** Training-data pipeline operators beyond the per-query dedup/scoring
@@ -1534,14 +1535,14 @@ object Pipeline {
     * more than the one saved pin job. A 7th (r12, the r11 verdict's
     * refinement): the same 2-level fusion with the intermediate frontier
     * CACHED (persist) so both its consumers read one materialization
-    * (tools/AB.gspV7) — interleaved min-of-7 twice: 1.585 vs 1.681 (v7
-    * wins), then 2.063 vs 1.922 (v7 loses) — inside round-to-round
+    * (AB variant gspV7 at 3ddf2cc) — interleaved min-of-7 twice: 1.585
+    * vs 1.681 (v7 wins), then 2.063 vs 1.922 (v7 loses) — inside round-to-round
     * noise, with the cached variant drifting upward across rounds
     * (accumulating persists it cannot unpersist pre-execution). No
     * reliable win; the per-level pin stands as the measured floor and
     * this line of attack is closed.
     *
-    * r14 probes (tools/AB.gspV8/V9, the r13 verdict's remaining ideas):
+    * r14 probes (AB variants gspV8/V9, the r13 verdict's remaining ideas):
     * (8) cp built from the CO-BUCKETED lineitem/orders landing
     * (exchange-free merge join) and (9) v8 plus a FUSED census — one
     * exploded (kind, id) distinct + one broadcast dist join instead of
@@ -1778,7 +1779,8 @@ object Pipeline {
     * next to its fact source — maintained incrementally by the
     * S17-style delta discipline, not rebuilt per query.
     *
-    * Build history (all interleaved A/B, ledgers in tools/AB.scala):
+    * Build history (all interleaved A/B, variants in tools/AB.scala at
+    * 3ddf2cc):
     * pairs expand map-side from the sorted item array (the basket_rules
     * idiom), one pair-distinct exchange; r14 pointed the basket agg at
     * the BUCKETED lineitem landing (clustered by l_orderkey, the
@@ -1854,7 +1856,7 @@ object Pipeline {
 
   def graphKcore(spark: SparkSession, dir: String): DataFrame = {
     // Shape history (every step an interleaved A/B, ledgers in
-    // tools/AB.scala kcoreV3..V12):
+    // tools/AB.scala kcoreV3..V12 at 3ddf2cc):
     //  - r8-r14 ground the checkpoint-pinned explode-degrees shape to
     //    its job floor (one deg pin per round, literal k, un-aliased
     //    shared keep build; lazy-pin and persist variants rejected —
@@ -2028,50 +2030,29 @@ object Pipeline {
        |FROM s ORDER BY score_ppm DESC, doc_id LIMIT 100""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "corpus_dsir" -> (corpusDsir _),
-    "graph_pagerank" -> (graphPagerank _),
-    "graph_triangles" -> (graphTriangles _),
-    "graph_shortest_paths" -> (graphShortestPaths _),
-    "graph_kcore" -> (graphKcore _),
-    "corpus_mix" -> (corpusMix _),
-    "doc_dup_spans" -> (docDupSpans _),
-    "doc_repetition" -> (docRepetition _),
-    "doc_pii_scrub" -> (docPiiScrub _),
-    "doc_chunk" -> (docChunk _),
-    "doc_decontaminate" -> (docDecontaminate _),
-    "doc_decontaminate_xl" -> (docDecontaminateXl _),
-    "doc_line_dedup" -> (docLineDedup _),
-    "doc_shard_pack" -> (docShardPack _),
-    "corpus_clean" -> (corpusClean _),
-    "sample_stratified" -> (sampleStratified _),
-    "sample_weighted" -> (sampleWeighted _),
-    "sample_split" -> (sampleSplit _),
-    "dedup_clusters" -> (dedupClusters _),
-    "dedup_survivorship" -> (dedupSurvivorship _))
-
-  def oracle: Map[String, String] = Map(
-    "corpus_dsir" -> corpusDsirSql,
-    "corpus_mix" -> corpusMixSql,
-    "doc_dup_spans" -> docDupSpansSql,
-    "doc_repetition" -> docRepetitionSql,
-    "doc_pii_scrub" -> docPiiScrubSql,
-    "doc_chunk" -> docChunkSql,
-    "doc_decontaminate" -> docDecontaminateSql,
+  lazy val registry: Seq[Query] = Seq(
+    Query("corpus_dsir", corpusDsir, corpusDsirSql),
+    Query("graph_pagerank", graphPagerank, graphPagerankSql, warm = true),
+    Query("graph_triangles", graphTriangles, graphTrianglesSql, warm = true),
+    Query("graph_shortest_paths", graphShortestPaths,
+      graphShortestPathsSql, warm = true),
+    Query("graph_kcore", graphKcore, graphKcoreSql, warm = true),
+    Query("corpus_mix", corpusMix, corpusMixSql),
+    Query("doc_dup_spans", docDupSpans, docDupSpansSql),
+    Query("doc_repetition", docRepetition, docRepetitionSql),
+    Query("doc_pii_scrub", docPiiScrub, docPiiScrubSql),
+    Query("doc_chunk", docChunk, docChunkSql),
+    Query("doc_decontaminate", docDecontaminate, docDecontaminateSql),
     // the xl variant makes the identical decision by construction; the
     // oracle is the same SQL — what differs is the physical plan, which
     // PlanSpec asserts.
-    "doc_decontaminate_xl" -> docDecontaminateSql,
-    "doc_line_dedup" -> docLineDedupSql,
-    "doc_shard_pack" -> docShardPackSql,
-    "corpus_clean" -> corpusCleanSql,
-    "sample_stratified" -> sampleStratifiedSql,
-    "sample_weighted" -> sampleWeightedSql,
-    "sample_split" -> sampleSplitSql,
-    "dedup_clusters" -> dedupClustersSql,
-    "dedup_survivorship" -> dedupSurvivorshipSql,
-    "graph_pagerank" -> graphPagerankSql,
-    "graph_triangles" -> graphTrianglesSql,
-    "graph_shortest_paths" -> graphShortestPathsSql,
-    "graph_kcore" -> graphKcoreSql)
+    Query("doc_decontaminate_xl", docDecontaminateXl, docDecontaminateSql),
+    Query("doc_line_dedup", docLineDedup, docLineDedupSql),
+    Query("doc_shard_pack", docShardPack, docShardPackSql),
+    Query("corpus_clean", corpusClean, corpusCleanSql),
+    Query("sample_stratified", sampleStratified, sampleStratifiedSql),
+    Query("sample_weighted", sampleWeighted, sampleWeightedSql),
+    Query("sample_split", sampleSplit, sampleSplitSql),
+    Query("dedup_clusters", dedupClusters, dedupClustersSql),
+    Query("dedup_survivorship", dedupSurvivorship, dedupSurvivorshipSql))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.Tables
 import graft.functions.Det.{fmtTs, sqlFmtTs}
 
@@ -758,27 +759,16 @@ object Quality {
       |FROM w WHERE prev_us IS NOT NULL AND us - prev_us <= 600000000
       |ORDER BY user_id, event_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_benford" -> (eventsBenford _),
-    "events_rapid_repeat" -> (eventsRapidRepeat _),
-    "dq_audit" -> (dqAudit _),
-    "events_srm_check" -> (eventsSrmCheck _),
-    "dq_kanonymity" -> (dqKanonymity _),
-    "dq_profile" -> (dqProfile _),
-    "dq_drift" -> (dqDrift _),
-    "dq_ks_test" -> (dqKsTest _),
-    "dq_freshness" -> (dqFreshness _),
-    "events_lateness_profile" -> (eventsLatenessProfile _))
-
-  def oracle: Map[String, String] = Map(
-    "events_benford" -> eventsBenfordSql,
-    "events_rapid_repeat" -> eventsRapidRepeatSql,
-    "dq_audit" -> dqAuditSql,
-    "events_srm_check" -> eventsSrmCheckSql,
-    "dq_kanonymity" -> dqKanonymitySql,
-    "dq_profile" -> dqProfileSql,
-    "dq_drift" -> dqDriftSql,
-    "dq_ks_test" -> dqKsTestSql,
-    "dq_freshness" -> dqFreshnessSql,
-    "events_lateness_profile" -> eventsLatenessProfileSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("events_benford", eventsBenford, eventsBenfordSql),
+    Query("events_rapid_repeat", eventsRapidRepeat, eventsRapidRepeatSql),
+    Query("dq_audit", dqAudit, dqAuditSql),
+    Query("events_srm_check", eventsSrmCheck, eventsSrmCheckSql),
+    Query("dq_kanonymity", dqKanonymity, dqKanonymitySql),
+    Query("dq_profile", dqProfile, dqProfileSql),
+    Query("dq_drift", dqDrift, dqDriftSql),
+    Query("dq_ks_test", dqKsTest, dqKsTestSql),
+    Query("dq_freshness", dqFreshness, dqFreshnessSql),
+    Query("events_lateness_profile", eventsLatenessProfile,
+      eventsLatenessProfileSql))
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.Tables
 import graft.functions.Det._
 
@@ -1089,53 +1090,28 @@ object Relational {
       |WHERE q * 10 > tq * 3
       |GROUP BY 1, 2 ORDER BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q4_priority_exists" -> (q4PriorityExists _),
-    "q6_forecast_revenue" -> (q6ForecastRevenue _),
-    "q9_nation_profit" -> (q9NationProfit _),
-    "q12_shipmode_priority" -> (q12ShipmodePriority _),
-    "q20_excess_suppliers" -> (q20ExcessSuppliers _),
-    "q15_top_supplier" -> (q15TopSupplier _),
-    "q16_supp_variety" -> (q16SuppVariety _),
-    "q7_volume_shipping" -> (q7VolumeShipping _),
-    "q8_market_share" -> (q8MarketShare _),
-    "q10_returned_top" -> (q10ReturnedTop _),
-    "q14_promo_share" -> (q14PromoShare _),
-    "q17_small_qty_rev" -> (q17SmallQtyRev _),
-    "q18_big_orders" -> (q18BigOrders _),
-    "q13_order_dist" -> (q13OrderDist _),
-    "q2_min_cost_supp" -> (q2MinCostSupp _),
-    "q21_sole_returner" -> (q21SoleReturner _),
-    "q22_dormant_value" -> (q22DormantValue _),
-    "q19_disjunction" -> (q19Disjunction _),
-    "q1_pricing" -> (q1Pricing _),
-    "filter_pushdown" -> (filterPushdown _),
-    "agg_distinct" -> (aggDistinct _),
-    "date_buckets" -> (dateBuckets _),
-    "q3_join_topk" -> (q3JoinTopk _))
-
-  def oracle: Map[String, String] = Map(
-    "q4_priority_exists" -> q4PriorityExistsSql,
-    "q6_forecast_revenue" -> q6ForecastRevenueSql,
-    "q9_nation_profit" -> q9NationProfitSql,
-    "q12_shipmode_priority" -> q12ShipmodePrioritySql,
-    "q20_excess_suppliers" -> q20ExcessSuppliersSql,
-    "q15_top_supplier" -> q15TopSupplierSql,
-    "q16_supp_variety" -> q16SuppVarietySql,
-    "q7_volume_shipping" -> q7VolumeShippingSql,
-    "q8_market_share" -> q8MarketShareSql,
-    "q10_returned_top" -> q10ReturnedTopSql,
-    "q14_promo_share" -> q14PromoShareSql,
-    "q17_small_qty_rev" -> q17SmallQtyRevSql,
-    "q18_big_orders" -> q18BigOrdersSql,
-    "q13_order_dist" -> q13OrderDistSql,
-    "q2_min_cost_supp" -> q2MinCostSuppSql,
-    "q21_sole_returner" -> q21SoleReturnerSql,
-    "q22_dormant_value" -> q22DormantValueSql,
-    "q19_disjunction" -> q19DisjunctionSql,
-    "q1_pricing" -> q1PricingSql,
-    "filter_pushdown" -> filterPushdownSql,
-    "agg_distinct" -> aggDistinctSql,
-    "date_buckets" -> dateBucketsSql,
-    "q3_join_topk" -> q3JoinTopkSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("q4_priority_exists", q4PriorityExists, q4PriorityExistsSql),
+    Query("q6_forecast_revenue", q6ForecastRevenue, q6ForecastRevenueSql),
+    Query("q9_nation_profit", q9NationProfit, q9NationProfitSql),
+    Query("q12_shipmode_priority", q12ShipmodePriority, q12ShipmodePrioritySql),
+    Query("q20_excess_suppliers", q20ExcessSuppliers, q20ExcessSuppliersSql),
+    Query("q15_top_supplier", q15TopSupplier, q15TopSupplierSql),
+    Query("q16_supp_variety", q16SuppVariety, q16SuppVarietySql),
+    Query("q7_volume_shipping", q7VolumeShipping, q7VolumeShippingSql),
+    Query("q8_market_share", q8MarketShare, q8MarketShareSql),
+    Query("q10_returned_top", q10ReturnedTop, q10ReturnedTopSql),
+    Query("q14_promo_share", q14PromoShare, q14PromoShareSql),
+    Query("q17_small_qty_rev", q17SmallQtyRev, q17SmallQtyRevSql),
+    Query("q18_big_orders", q18BigOrders, q18BigOrdersSql),
+    Query("q13_order_dist", q13OrderDist, q13OrderDistSql),
+    Query("q2_min_cost_supp", q2MinCostSupp, q2MinCostSuppSql),
+    Query("q21_sole_returner", q21SoleReturner, q21SoleReturnerSql),
+    Query("q22_dormant_value", q22DormantValue, q22DormantValueSql),
+    Query("q19_disjunction", q19Disjunction, q19DisjunctionSql),
+    Query("q1_pricing", q1Pricing, q1PricingSql),
+    Query("filter_pushdown", filterPushdown, filterPushdownSql),
+    Query("agg_distinct", aggDistinct, aggDistinctSql),
+    Query("date_buckets", dateBuckets, dateBucketsSql),
+    Query("q3_join_topk", q3JoinTopk, q3JoinTopkSql))
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.Tables
 
 /** Hybrid retrieval (SURVEY.md §2.8 row L29): the RAG-serving primitive
@@ -283,11 +284,7 @@ object Retrieval {
        |FROM allsel ORDER BY q_id, step""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "hybrid_search" -> (hybridSearch _),
-    "embedding_mmr" -> (embeddingMmr _))
-
-  def oracle: Map[String, String] = Map(
-    "hybrid_search" -> hybridSearchSql,
-    "embedding_mmr" -> embeddingMmrSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("hybrid_search", hybridSearch, hybridSearchSql),
+    Query("embedding_mmr", embeddingMmr, embeddingMmrSql))
 }

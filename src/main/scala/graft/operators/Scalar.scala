@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.Tables
 import graft.functions.Det._
 
@@ -137,13 +138,8 @@ object Scalar {
        |FROM j GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "string_funcs" -> (stringFuncs _),
-    "date_funcs" -> (dateFuncs _),
-    "date_business_days" -> (dateBusinessDays _))
-
-  def oracle: Map[String, String] = Map(
-    "string_funcs" -> stringFuncsSql,
-    "date_funcs" -> dateFuncsSql,
-    "date_business_days" -> dateBusinessDaysSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("string_funcs", stringFuncs, stringFuncsSql),
+    Query("date_funcs", dateFuncs, dateFuncsSql),
+    Query("date_business_days", dateBusinessDays, dateBusinessDaysSql))
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.Tables
 import graft.functions.Det._
 
@@ -68,9 +69,6 @@ object Skew {
        |WHERE o_orderpriority = '1-URGENT'
        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "join_skew" -> (joinSkew _))
-
-  def oracle: Map[String, String] = Map(
-    "join_skew" -> joinSkewSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("join_skew", joinSkew, joinSkewSql))
 }

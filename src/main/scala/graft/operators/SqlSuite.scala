@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Query
 import graft.Tables
 import graft.functions.Det._
 
@@ -181,26 +182,16 @@ object SqlSuite {
       |  FROM customer WHERE c_nationkey = n_nationkey) t
       |ORDER BY n_name""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sql_pivot" -> (run(sqlPivot) _),
-    "sql_lateral" -> (run(sqlLateral) _),
-    "sql_recursive" -> (run(sqlRecursive) _),
-    "sql_q1" -> (run(sqlQ1) _),
-    "sql_q5" -> (run(sqlQ5) _),
-    "sql_window" -> (run(sqlWindow) _),
-    "sql_subquery_agg" -> (run(sqlSubqueryAgg) _),
-    "sql_params" -> (sqlParams _))
-
   /** The SAME strings are the oracle — one text, two engines (sql_params
     * binds at execution; its oracle is the inlined text).
     */
-  def oracle: Map[String, String] = Map(
-    "sql_pivot" -> sqlPivot,
-    "sql_lateral" -> sqlLateral,
-    "sql_recursive" -> sqlRecursive,
-    "sql_q1" -> sqlQ1,
-    "sql_q5" -> sqlQ5,
-    "sql_window" -> sqlWindow,
-    "sql_subquery_agg" -> sqlSubqueryAgg,
-    "sql_params" -> sqlParamsOracle)
+  lazy val registry: Seq[Query] = Seq(
+    Query("sql_pivot", run(sqlPivot), sqlPivot),
+    Query("sql_lateral", run(sqlLateral), sqlLateral),
+    Query("sql_recursive", run(sqlRecursive), sqlRecursive),
+    Query("sql_q1", run(sqlQ1), sqlQ1),
+    Query("sql_q5", run(sqlQ5), sqlQ5),
+    Query("sql_window", run(sqlWindow), sqlWindow),
+    Query("sql_subquery_agg", run(sqlSubqueryAgg), sqlSubqueryAgg),
+    Query("sql_params", sqlParams, sqlParamsOracle))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.Tables
 import graft.functions.Det._
 
@@ -931,31 +932,19 @@ object TimeSeries {
        |FROM g GROUP BY user_id, sid
        |ORDER BY user_id, session_start""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_timer_sessions" -> (eventsTimerSessions _),
-    "events_tws_profile" -> (eventsTwsProfile _),
-    "events_rolling_corr" -> (eventsRollingCorr _),
-    "events_ewma" -> (eventsEwma _),
-    "events_paths" -> (eventsPaths _),
-    "events_streaks" -> (eventsStreaks _),
-    "events_transitions" -> (eventsTransitions _),
-    "events_gapfill" -> (eventsGapfill _),
-    "orders_backlog" -> (ordersBacklog _),
-    "orders_fill_rate" -> (ordersFillRate _),
-    "events_ohlc" -> (eventsOhlc _),
-    "events_cusum" -> (eventsCusum _))
-
-  def oracle: Map[String, String] = Map(
-    "events_timer_sessions" -> eventsTimerSessionsSql,
-    "events_tws_profile" -> eventsTwsProfileSql,
-    "events_rolling_corr" -> eventsRollingCorrSql,
-    "events_ewma" -> eventsEwmaSql,
-    "events_paths" -> eventsPathsSql,
-    "events_streaks" -> eventsStreaksSql,
-    "events_transitions" -> eventsTransitionsSql,
-    "events_gapfill" -> eventsGapfillSql,
-    "orders_backlog" -> ordersBacklogSql,
-    "orders_fill_rate" -> ordersFillRateSql,
-    "events_ohlc" -> eventsOhlcSql,
-    "events_cusum" -> eventsCusumSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("events_timer_sessions", eventsTimerSessions,
+      eventsTimerSessionsSql, warm = true),
+    Query("events_tws_profile", eventsTwsProfile,
+      eventsTwsProfileSql, warm = true),
+    Query("events_rolling_corr", eventsRollingCorr, eventsRollingCorrSql),
+    Query("events_ewma", eventsEwma, eventsEwmaSql),
+    Query("events_paths", eventsPaths, eventsPathsSql),
+    Query("events_streaks", eventsStreaks, eventsStreaksSql),
+    Query("events_transitions", eventsTransitions, eventsTransitionsSql),
+    Query("events_gapfill", eventsGapfill, eventsGapfillSql),
+    Query("orders_backlog", ordersBacklog, ordersBacklogSql, warm = true),
+    Query("orders_fill_rate", ordersFillRate, ordersFillRateSql),
+    Query("events_ohlc", eventsOhlc, eventsOhlcSql),
+    Query("events_cusum", eventsCusum, eventsCusumSql))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.Tables
 import graft.functions.Det._
 
@@ -299,25 +300,14 @@ object Windows {
       |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
       |ORDER BY o_custkey, o_orderkey""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "window_first_last" -> (windowFirstLast _),
-    "window_ntile" -> (windowNtile _),
-    "window_dist" -> (windowDist _),
-    "window_rank" -> (windowRank _),
-    "window_lag_gap" -> (windowLagGap _),
-    "window_running" -> (windowRunning _),
-    "window_range_frame" -> (windowRangeFrame _),
-    "topk_per_group" -> (topkPerGroup _),
-    "topk_native" -> (topkNative _))
-
-  def oracle: Map[String, String] = Map(
-    "window_first_last" -> windowFirstLastSql,
-    "window_ntile" -> windowNtileSql,
-    "window_dist" -> windowDistSql,
-    "window_rank" -> windowRankSql,
-    "window_lag_gap" -> windowLagGapSql,
-    "window_running" -> windowRunningSql,
-    "window_range_frame" -> windowRangeFrameSql,
-    "topk_per_group" -> topkPerGroupSql,
-    "topk_native" -> topkPerGroupSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("window_first_last", windowFirstLast, windowFirstLastSql),
+    Query("window_ntile", windowNtile, windowNtileSql),
+    Query("window_dist", windowDist, windowDistSql),
+    Query("window_rank", windowRank, windowRankSql),
+    Query("window_lag_gap", windowLagGap, windowLagGapSql),
+    Query("window_running", windowRunning, windowRunningSql),
+    Query("window_range_frame", windowRangeFrame, windowRangeFrameSql),
+    Query("topk_per_group", topkPerGroup, topkPerGroupSql),
+    Query("topk_native", topkNative, topkPerGroupSql))
 }

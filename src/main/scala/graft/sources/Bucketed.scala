@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.Tables
 import graft.functions.Det._
 
@@ -138,9 +139,6 @@ object Bucketed {
        |GROUP BY 1, 2 HAVING COUNT(*) >= 6
        |ORDER BY orderkey""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "join_bucketed" -> (joinBucketed _))
-
-  def oracle: Map[String, String] = Map(
-    "join_bucketed" -> joinBucketedSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("join_bucketed", joinBucketed, joinBucketedSql, warm = true))
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Catalog-backed table surface (SURVEY.md §2.1 row S19, round-8): the
@@ -447,15 +448,9 @@ object Catalog {
       |FROM t GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "catalog_view" -> (catalogView _),
-    "catalog_stats" -> (catalogStats _),
-    "sql_ctas" -> (sqlCtas _),
-    "sql_alter_table" -> (sqlAlterTable _))
-
-  def oracle: Map[String, String] = Map(
-    "catalog_view" -> catalogViewSql,
-    "catalog_stats" -> catalogStatsSql,
-    "sql_ctas" -> sqlCtasSql,
-    "sql_alter_table" -> sqlAlterTableSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("catalog_view", catalogView, catalogViewSql),
+    Query("catalog_stats", catalogStats, catalogStatsSql, warm = true),
+    Query("sql_ctas", sqlCtas, sqlCtasSql),
+    Query("sql_alter_table", sqlAlterTable, sqlAlterTableSql))
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Query
 import graft.streaming.Streams.ChangeEvent
 
 /** The CDC change-log source (SURVEY.md §2.1 rows S2/S4), in both forms the
@@ -110,11 +111,8 @@ object ChangeLog {
       raw.withColumn("ts", to_timestamp(col("ts"), TS_FMT)))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cdc_jsonl_apply" -> (cdcJsonlApply _))
-
-  def oracle: Map[String, String] = Map(
+  lazy val registry: Seq[Query] = Seq(
     // the oracle is cdc_apply's SQL over the ORIGINAL parquet: identical
     // output proves the JSONL encode/decode round-trip is lossless
-    "cdc_jsonl_apply" -> graft.operators.Cdc.cdcApplySql)
+    Query("cdc_jsonl_apply", cdcJsonlApply, graft.operators.Cdc.cdcApplySql))
 }

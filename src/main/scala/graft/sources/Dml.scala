@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable,
@@ -430,13 +431,8 @@ object Dml {
       |    AS n_reset
       |FROM t GROUP BY seg ORDER BY seg""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sql_update" -> (sqlUpdate _),
-    "sql_delete" -> (sqlDelete _),
-    "sql_merge" -> (sqlMerge _))
-
-  def oracle: Map[String, String] = Map(
-    "sql_update" -> sqlUpdateSql,
-    "sql_delete" -> sqlDeleteSql,
-    "sql_merge" -> sqlMergeSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("sql_update", sqlUpdate, sqlUpdateSql),
+    Query("sql_delete", sqlDelete, sqlDeleteSql),
+    Query("sql_merge", sqlMerge, sqlMergeSql))
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.Tables
 import graft.functions.Det._
 
@@ -205,13 +206,8 @@ object Formats {
        |    AS total_value
        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_orc" -> (eventsOrc _),
-    "events_csv_quarantine" -> (eventsCsvQuarantine _),
-    "events_schema_merge" -> (eventsSchemaMerge _))
-
-  def oracle: Map[String, String] = Map(
-    "events_orc" -> eventsOrcSql,
-    "events_csv_quarantine" -> eventsCsvQuarantineSql,
-    "events_schema_merge" -> eventsSchemaMergeSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("events_orc", eventsOrc, eventsOrcSql),
+    Query("events_csv_quarantine", eventsCsvQuarantine, eventsCsvQuarantineSql),
+    Query("events_schema_merge", eventsSchemaMerge, eventsSchemaMergeSql))
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.Tables
 import graft.functions.Det
 
@@ -308,15 +309,11 @@ object Layout {
       |FROM orders WHERE year(o_orderdate) = 1997
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "layout_zorder" -> (layoutZorder _),
-    "layout_hive_partition" -> (layoutHivePartition _),
-    "layout_compaction" -> (layoutCompaction _),
-    "layout_deletion_vectors" -> (layoutDeletionVectors _))
-
-  def oracle: Map[String, String] = Map(
-    "layout_zorder" -> layoutZorderSql,
-    "layout_hive_partition" -> layoutHivePartitionSql,
-    "layout_compaction" -> layoutCompactionSql,
-    "layout_deletion_vectors" -> layoutDeletionVectorsSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("layout_zorder", layoutZorder, layoutZorderSql, warm = true),
+    Query("layout_hive_partition", layoutHivePartition, layoutHivePartitionSql),
+    Query("layout_compaction", layoutCompaction,
+      layoutCompactionSql, warm = true),
+    Query("layout_deletion_vectors", layoutDeletionVectors,
+      layoutDeletionVectorsSql))
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.Tables
 import graft.functions.Det._
 
@@ -137,11 +138,7 @@ object Partitioned {
        |FROM events e JOIN spike s ON CAST(e.ts AS DATE) = s.event_date
        |GROUP BY s.event_date, s.n_err ORDER BY event_date""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_pruned" -> (eventsPruned _),
-    "events_dpp" -> (eventsDpp _))
-
-  def oracle: Map[String, String] = Map(
-    "events_pruned" -> eventsPrunedSql,
-    "events_dpp" -> eventsDppSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("events_pruned", eventsPruned, eventsPrunedSql),
+    Query("events_dpp", eventsDpp, eventsDppSql))
 }

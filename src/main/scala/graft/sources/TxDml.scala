@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Query
 import java.io.File
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -372,15 +373,10 @@ object TxDml {
       |  CAST(MIN(cents) AS BIGINT) AS min_cents
       |FROM t GROUP BY seg ORDER BY seg""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sql_txlog_update" -> (sqlTxlogUpdate _),
-    "sql_txlog_delete" -> (sqlTxlogDelete _),
-    "sql_txlog_merge" -> (sqlTxlogMerge _),
-    "txlog_merge_conditional" -> (txlogMergeConditional _))
-
-  def oracle: Map[String, String] = Map(
-    "sql_txlog_update" -> sqlTxlogUpdateSql,
-    "sql_txlog_delete" -> sqlTxlogDeleteSql,
-    "sql_txlog_merge" -> sqlTxlogMergeSql,
-    "txlog_merge_conditional" -> txlogMergeConditionalSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("sql_txlog_update", sqlTxlogUpdate, sqlTxlogUpdateSql),
+    Query("sql_txlog_delete", sqlTxlogDelete, sqlTxlogDeleteSql),
+    Query("sql_txlog_merge", sqlTxlogMerge, sqlTxlogMergeSql),
+    Query("txlog_merge_conditional", txlogMergeConditional,
+      txlogMergeConditionalSql))
 }

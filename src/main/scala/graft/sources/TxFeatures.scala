@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Query
 import java.io.File
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -1487,52 +1488,30 @@ object TxFeatures {
       |  CAST(SUM(cents) AS BIGINT) AS total_cents
       |FROM t""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sql_show_create" -> (sqlShowCreate _),
-    "sql_vacuum_dry_run" -> (sqlVacuumDryRun _),
-    "txlog_column_mapping" -> (txlogColumnMapping _),
-    "sql_timestamp_travel" -> (sqlTimestampTravel _),
-    "sql_table_changes" -> (sqlTableChanges _),
-    "txlog_data_skipping" -> (txlogDataSkipping _),
-    "txlog_dv_delete" -> (txlogDvDelete _),
-    "txlog_restore" -> (txlogRestore _),
-    "txlog_clone" -> (txlogClone _),
-    "txlog_partitioned" -> (txlogPartitioned _),
-    "txlog_show_partitions" -> (txlogShowPartitions _),
-    "txlog_constraints" -> (txlogConstraints _),
-    "txlog_add_column_default" -> (txlogAddColumnDefault _),
-    "txlog_generated_column" -> (txlogGeneratedColumn _),
-    "txlog_bloom_skipping" -> (txlogBloomSkipping _),
-    "txlog_copy_into" -> (txlogCopyInto _),
-    "txlog_row_provenance" -> (txlogRowProvenance _),
-    "txlog_merge_evolution" -> (txlogMergeEvolution _),
-    "txlog_type_widening" -> (txlogTypeWidening _),
-    "sql_txlog_insert" -> (sqlTxlogInsert _),
-    "txlog_identity" -> (txlogIdentity _),
-    "txlog_cdc_apply" -> (txlogCdcApply _))
-
-  def oracle: Map[String, String] = Map(
-    "sql_show_create" -> sqlShowCreateSql,
-    "sql_vacuum_dry_run" -> sqlVacuumDryRunSql,
-    "txlog_column_mapping" -> txlogColumnMappingSql,
-    "sql_timestamp_travel" -> sqlTimestampTravelSql,
+  lazy val registry: Seq[Query] = Seq(
+    Query("sql_show_create", sqlShowCreate, sqlShowCreateSql),
+    Query("sql_vacuum_dry_run", sqlVacuumDryRun, sqlVacuumDryRunSql),
+    Query("txlog_column_mapping", txlogColumnMapping, txlogColumnMappingSql),
+    Query("sql_timestamp_travel", sqlTimestampTravel, sqlTimestampTravelSql),
     // the statement surface must equal the batch feed row-for-row
-    "sql_table_changes" -> TxLog.txlogChangefeedSql,
-    "txlog_data_skipping" -> txlogDataSkippingSql,
-    "txlog_dv_delete" -> txlogDvDeleteSql,
-    "txlog_restore" -> txlogRestoreSql,
-    "txlog_clone" -> txlogCloneSql,
-    "txlog_partitioned" -> txlogPartitionedSql,
-    "txlog_show_partitions" -> txlogShowPartitionsSql,
-    "txlog_constraints" -> txlogConstraintsSql,
-    "txlog_add_column_default" -> txlogAddColumnDefaultSql,
-    "txlog_generated_column" -> txlogGeneratedColumnSql,
-    "txlog_bloom_skipping" -> txlogBloomSkippingSql,
-    "txlog_copy_into" -> txlogCopyIntoSql,
-    "txlog_row_provenance" -> txlogRowProvenanceSql,
-    "txlog_merge_evolution" -> txlogMergeEvolutionSql,
-    "txlog_type_widening" -> txlogTypeWideningSql,
-    "sql_txlog_insert" -> sqlTxlogInsertSql,
-    "txlog_identity" -> txlogIdentitySql,
-    "txlog_cdc_apply" -> graft.operators.Cdc.cdcApplySql)
+    Query("sql_table_changes", sqlTableChanges, TxLog.txlogChangefeedSql),
+    Query("txlog_data_skipping", txlogDataSkipping, txlogDataSkippingSql),
+    Query("txlog_dv_delete", txlogDvDelete, txlogDvDeleteSql),
+    Query("txlog_restore", txlogRestore, txlogRestoreSql),
+    Query("txlog_clone", txlogClone, txlogCloneSql),
+    Query("txlog_partitioned", txlogPartitioned, txlogPartitionedSql),
+    Query("txlog_show_partitions", txlogShowPartitions, txlogShowPartitionsSql),
+    Query("txlog_constraints", txlogConstraints, txlogConstraintsSql),
+    Query("txlog_add_column_default", txlogAddColumnDefault,
+      txlogAddColumnDefaultSql),
+    Query("txlog_generated_column", txlogGeneratedColumn,
+      txlogGeneratedColumnSql),
+    Query("txlog_bloom_skipping", txlogBloomSkipping, txlogBloomSkippingSql),
+    Query("txlog_copy_into", txlogCopyInto, txlogCopyIntoSql),
+    Query("txlog_row_provenance", txlogRowProvenance, txlogRowProvenanceSql),
+    Query("txlog_merge_evolution", txlogMergeEvolution, txlogMergeEvolutionSql),
+    Query("txlog_type_widening", txlogTypeWidening, txlogTypeWideningSql),
+    Query("sql_txlog_insert", sqlTxlogInsert, sqlTxlogInsertSql),
+    Query("txlog_identity", txlogIdentity, txlogIdentitySql),
+    Query("txlog_cdc_apply", txlogCdcApply, graft.operators.Cdc.cdcApplySql))
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType}
@@ -4061,24 +4062,16 @@ object TxLog {
       |  FROM j)
       |ORDER BY version""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "txlog_txn_commit" -> (txlogTxnCommit _),
-    "txlog_snapshot" -> (txlogSnapshot _),
-    "txlog_history" -> (txlogHistory _),
-    "txlog_time_travel" -> (txlogTimeTravel _),
-    "txlog_changefeed" -> (txlogChangefeed _),
-    "txlog_changefeed_stream" -> (txlogChangefeedStream _),
-    "txlog_view_from_feed" -> (txlogViewFromFeed _),
-    "txlog_merge" -> (txlogMerge _))
-
-  def oracle: Map[String, String] = Map(
-    "txlog_txn_commit" -> txlogTxnCommitSql,
-    "txlog_snapshot" -> txlogSnapshotSql,
-    "txlog_history" -> txlogHistorySql,
-    "txlog_time_travel" -> txlogTimeTravelSql,
-    "txlog_changefeed" -> txlogChangefeedSql,
+  lazy val registry: Seq[Query] = Seq(
+    Query("txlog_txn_commit", txlogTxnCommit, txlogTxnCommitSql, warm = true),
+    Query("txlog_snapshot", txlogSnapshot, txlogSnapshotSql),
+    Query("txlog_history", txlogHistory, txlogHistorySql),
+    Query("txlog_time_travel", txlogTimeTravel, txlogTimeTravelSql),
+    Query("txlog_changefeed", txlogChangefeed, txlogChangefeedSql),
     // the streamed feed must equal the batch feed row-for-row — same oracle
-    "txlog_changefeed_stream" -> txlogChangefeedSql,
-    "txlog_view_from_feed" -> txlogViewFromFeedSql,
-    "txlog_merge" -> txlogMergeSql)
+    Query("txlog_changefeed_stream", txlogChangefeedStream,
+      txlogChangefeedSql, warm = true),
+    Query("txlog_view_from_feed", txlogViewFromFeed,
+      txlogViewFromFeedSql, warm = true),
+    Query("txlog_merge", txlogMerge, txlogMergeSql))
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Query
 import java.io.File
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -930,13 +931,10 @@ object TxSql {
       |FROM t GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sql_time_travel" -> (sqlTimeTravel _),
-    "txlog_optimize_zorder" -> (txlogOptimizeZorder _),
-    "txlog_schema_evolution" -> (txlogSchemaEvolution _))
-
-  def oracle: Map[String, String] = Map(
-    "sql_time_travel" -> sqlTimeTravelSql,
-    "txlog_optimize_zorder" -> txlogOptimizeZorderSql,
-    "txlog_schema_evolution" -> txlogSchemaEvolutionSql)
+  lazy val registry: Seq[Query] = Seq(
+    Query("sql_time_travel", sqlTimeTravel, sqlTimeTravelSql),
+    Query("txlog_optimize_zorder", txlogOptimizeZorder,
+      txlogOptimizeZorderSql, warm = true),
+    Query("txlog_schema_evolution", txlogSchemaEvolution,
+      txlogSchemaEvolutionSql, warm = true))
 }

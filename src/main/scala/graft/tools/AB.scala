@@ -1,2333 +1,76 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.atomic.AtomicInteger
+
+import graft.{Session, SparkEntry}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Builder-side A/B harness (not part of the library surface): times
-  * variant implementations of a query INTERLEAVED in a single JVM and
-  * session, taking the per-variant min across rounds — ambient host-load
-  * bursts hit both arms alike, which cross-run Bench comparisons on this
-  * VM cannot guarantee (measured: the same implementation varies ±60%
-  * across separate JVM runs under external load, while interleaved
-  * minima rank variants consistently). Edit `variants` to point at the
-  * candidates while iterating; registered queries can be compared by
-  * name via SparkEntry. Nothing here registers in SparkEntry.
+  * registered queries INTERLEAVED in a single JVM and session, taking each
+  * query's minimum across rounds. Ambient host-load bursts hit every arm
+  * alike, which separate Bench runs cannot guarantee (the same
+  * implementation varies ±60% across JVM runs under external load, while
+  * interleaved minima rank variants consistently). To compare a candidate
+  * implementation, register it under a new name and pass both names.
+  *
+  * Each call also prints the Spark jobs it launched, counted by a
+  * listener: in local mode every job is a driver round trip, so the count
+  * is a cost floor that does not move with host load.
+  *
+  * Usage: tools/ab.sh <query[,query...]> [rounds]
+  * (reads SPARK_GRAFT_SF_DIR, default /root/testdata/sf0.1)
   */
 object AB {
-  private def force(df: DataFrame): Long = df.queryExecution.toRdd.count()
-
-  import org.apache.spark.sql.functions._
-  import org.apache.spark.sql.expressions.Window
-  import graft.Tables
-  import graft.functions.Det._
-
-  private def scaledLong(c: org.apache.spark.sql.Column, s: Long) =
-    when(c >= 0, ((c * s.toDouble) + 0.5).cast("long"))
-      .otherwise(((c * s.toDouble) - 0.5).cast("long"))
-
-  /** mad: domain-sized repartition AFTER the map-side-combined cell agg
-    * (scale-correct: raw rows never hash to |types| partitions). */
-  def madV3(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select(col("event_type"), col("event_id"),
-        scaledLong(col("value"), 100L).as("c"))
-    def lowerMedian(hist: org.apache.spark.sql.DataFrame, vcol: String,
-        out: String): DataFrame = {
-      val wCum = Window.partitionBy(col("event_type")).orderBy(col(vcol))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      hist.withColumn("cum", sum(col("cnt")).over(wCum))
-        .withColumn("n",
-          sum(col("cnt")).over(Window.partitionBy(col("event_type"))))
-        .groupBy(col("event_type"))
-        .agg(min(when(col("cum") >= expr("(n + 1) div 2"), col(vcol)))
-          .as(out))
-    }
-    val hist1 = ev.groupBy(col("event_type"), col("c"))
-      .agg(count(lit(1)).as("cnt"), bit_xor(col("event_id")).as("idx"))
-      .repartition(col("event_type"))
-    val med = lowerMedian(hist1, "c", "med")
-    val hist2 = hist1.join(broadcast(med), Seq("event_type"))
-      .select(col("event_type"), abs(col("c") - col("med")).as("d"),
-        col("cnt"))
-      .groupBy(col("event_type"), col("d"))
-      .agg(sum(col("cnt")).as("cnt"))
-    val mad = lowerMedian(hist2, "d", "mad")
-    hist1.join(broadcast(med), Seq("event_type"))
-      .join(broadcast(mad), Seq("event_type"))
-      .withColumn("d", abs(col("c") - col("med")))
-      .withColumn("anom", col("d") * 10000L > col("mad") * 44478L)
-      .groupBy(col("event_type"))
-      .agg(sum(col("cnt")).cast("long").as("n_events"),
-        max(col("med")).cast("long").as("med_cents"),
-        max(col("mad")).cast("long").as("mad_cents"),
-        sum(when(col("anom"), col("cnt")).otherwise(0L)).cast("long")
-          .as("n_anom"),
-        bit_xor(when(col("anom"), col("idx"))).as("anom_id_xor"))
-      .orderBy(col("event_type"))
-  }
-
-  /** sliding distinct: no checkpoint; domain-sized repartition(type)
-    * after the word agg, exchange-free downstream, raw scan dedups via
-    * ReusedExchange across the hours/expanded consumers. */
-  def slidingV2(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-    val hourly = e
-      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"),
-        shiftright(col("user_id"), 6).as("w"))
-      .agg(expr("bit_or(shiftleft(1L, cast(user_id % 64 as int)))")
-        .as("bits"))
-      .repartition(col("event_type"))
-    val hours = hourly.select(col("h").as("we")).distinct()
-    val expanded = hourly.select(col("event_type"),
-        explode(array(col("h"),
-          col("h") + expr("INTERVAL 1 HOUR"),
-          col("h") + expr("INTERVAL 2 HOURS"))).as("we"),
-        col("w"), col("bits"))
-      .join(broadcast(hours), Seq("we"), "left_semi")
-    expanded.groupBy(col("event_type"), col("we"), col("w"))
-      .agg(expr("bit_or(bits)").as("b"))
-      .groupBy(col("event_type"), col("we"))
-      .agg(sum(bit_count(col("b"))).cast("long").as("n_users"))
-      .select(col("event_type"), fmtTs(col("we")).as("window_end"),
-        col("n_users"))
-      .orderBy(col("event_type"), col("window_end"))
-  }
-
-  /** shortest paths: frontier expands against ONE pinned edge frame
-    * (broadcast-hash join per level) instead of two collect_list
-    * adjacency landings. */
-  def gspV2(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir)
-      .select(col("o_orderkey"), col("o_custkey"))
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
-    val cp = li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-      .localCheckpoint()
-    val seeds = Tables.customer(spark, dir)
-      .filter(col("c_nationkey") === 0)
-      .select(col("c_custkey").as("id"))
-      .join(cp.select(col("c").as("id")), Seq("id"), "left_semi")
-    var dC = seeds.select(col("id"), lit(0L).as("dist")).localCheckpoint()
-    var dP = spark.range(0).select(col("id"), lit(0L).as("dist"))
-    var frontier = dC.select(col("id"))
-    for (k <- 1 to 4) {
-      val fromC = k % 2 == 1
-      val (key, other) = if (fromC) ("c", "p") else ("p", "c")
-      val own = if (fromC) dP else dC
-      val cand = cp
-        .join(broadcast(frontier.withColumnRenamed("id", key)), Seq(key))
-        .select(col(other).as("id")).distinct()
-      val fresh = cand
-        .join(broadcast(own.select(col("id"))), Seq("id"), "left_anti")
-        .select(col("id"), lit(k.toLong).as("dist"))
-        .localCheckpoint()
-      if (fromC) dP = dP.unionByName(fresh)
-      else dC = dC.unionByName(fresh)
-      frontier = fresh.select(col("id"))
-    }
-    val custs = cp.select(col("c").as("id")).distinct()
-      .join(dC, Seq("id"), "left")
-      .select(lit("customer").as("kind"), col("id"), col("dist"))
-    val parts = cp.select(col("p").as("id")).distinct()
-      .join(dP, Seq("id"), "left")
-      .select(lit("part").as("kind"), col("id"), col("dist"))
-    custs.unionByName(parts)
-      .select(col("kind"), coalesce(col("dist"), lit(-1L)).as("dist"),
-        col("id"))
-      .groupBy(col("kind"), col("dist"))
-      .agg(count(lit(1)).as("n_nodes"),
-        bit_xor(col("id")).as("id_xor"),
-        min(col("id")).as("min_id"),
-        max(col("id")).as("max_id"))
-      .orderBy(col("kind"), col("dist"))
-  }
-
-  /** gsp r14 candidate 10: the committed shape with every pin LAZY
-    * (localCheckpoint(eager=false)) — one shared RDD per pin,
-    * materialized by its first consumer; the census action absorbs the
-    * six standalone pin jobs. RDD-level, not CacheManager: each rep
-    * recomputes honestly (the kcoreV9 discipline).
-    */
-  def gspV10(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir)
-      .select(col("o_orderkey"), col("o_custkey"))
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
-    val cp = li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-      .localCheckpoint(false)
-    val seeds = Tables.customer(spark, dir)
-      .filter(col("c_nationkey") === 0)
-      .select(col("c_custkey").as("id"))
-      .join(cp.select(col("c").as("id")), Seq("id"), "left_semi")
-    var dC = seeds.select(col("id"), lit(0L).as("dist")).localCheckpoint(false)
-    var dP = spark.range(0).select(col("id"), lit(0L).as("dist"))
-    var frontier = dC.select(col("id"))
-    for (k <- 1 to 4) {
-      val fromC = k % 2 == 1
-      val (key, other) = if (fromC) ("c", "p") else ("p", "c")
-      val own = if (fromC) dP else dC
-      val cand = cp
-        .join(broadcast(frontier.withColumnRenamed("id", key)), Seq(key))
-        .select(col(other).as("id")).distinct()
-      val fresh = cand
-        .join(broadcast(own.select(col("id"))), Seq("id"), "left_anti")
-        .select(col("id"), lit(k.toLong).as("dist"))
-        .localCheckpoint(false)
-      if (fromC) dP = dP.unionByName(fresh)
-      else dC = dC.unionByName(fresh)
-      frontier = fresh.select(col("id"))
-    }
-    val custs = cp.select(col("c").as("id")).distinct()
-      .join(dC, Seq("id"), "left")
-      .select(lit("customer").as("kind"), col("id"), col("dist"))
-    val parts = cp.select(col("p").as("id")).distinct()
-      .join(dP, Seq("id"), "left")
-      .select(lit("part").as("kind"), col("id"), col("dist"))
-    custs.unionByName(parts)
-      .select(col("kind"), coalesce(col("dist"), lit(-1L)).as("dist"),
-        col("id"))
-      .groupBy(col("kind"), col("dist"))
-      .agg(count(lit(1)).as("n_nodes"),
-        bit_xor(col("id")).as("id_xor"),
-        min(col("id")).as("min_id"),
-        max(col("id")).as("max_id"))
-      .orderBy(col("kind"), col("dist"))
-  }
-
-  private def nrm(c: org.apache.spark.sql.Column) =
-    lower(trim(regexp_replace(c, "\\s+", " ")))
-
-  /** est_error with the verify pipeline and signature frame PINNED. */
-  def estV2(spark: SparkSession, dir: String): DataFrame = {
-    val ex = graft.operators.NearDup.shingles(Tables.documentsWide(spark, dir))
-      .localCheckpoint()
-    val bands = graft.operators.NearDup.minhashBands(ex)
-    val cand = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band_id") === col("b.band_id") &&
-          col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-      .distinct()
-    val pairs = graft.operators.NearDup.verifyPairs(cand, ex).localCheckpoint()
-    val pairIds = pairs
-      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-      .distinct()
-    val mh = ex.join(broadcast(pairIds), Seq("doc_id"), "left_semi")
-      .withColumn("h", md5(col("g")))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("nsh"),
-        (0 until 8).map(i =>
-          min(substring(col("h"), 1 + 4 * i, 4)).as(s"m$i")): _*)
-      .localCheckpoint()
-    def sig(side: String) = (Seq(col("doc_id").as(side),
-      col("nsh").as(s"nsh_$side")) ++
-      (0 until 8).map(i => col(s"m$i").as(s"${side}_m$i"))): Seq[org.apache.spark.sql.Column]
-    val matches = (0 until 8).map(i =>
-      when(col(s"doc_a_m$i") === col(s"doc_b_m$i"), 1L).otherwise(0L))
-      .reduce(_ + _)
-    pairs
-      .join(broadcast(mh.select(sig("doc_a"): _*)), Seq("doc_a"))
-      .join(broadcast(mh.select(sig("doc_b"): _*)), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        expr("n_common * 1000000 div (nsh_doc_a + nsh_doc_b - n_common)")
-          .as("exact_ppm"),
-        (matches * lit(125000L)).as("est_ppm"))
-      .withColumn("err_ppm", abs(col("est_ppm") - col("exact_ppm")))
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  /** containment with xxhash64 gram keys (bucketing only). */
-  def contV2(spark: SparkSession, dir: String): DataFrame = {
-    val G = 8
-    val base = Tables.documentsWide(spark, dir)
-      .select(col("doc_id"), nrm(col("text")).as("nt"))
-      .filter(length(col("nt")) >= 4)
-    val toked = base
-      .select(col("doc_id"), split(col("nt"), " ").as("toks"))
-      .withColumn("n", size(col("toks")))
-    val g8 = toked.filter(col("n") >= G)
-      .select(col("doc_id"), col("toks"),
-        explode(sequence(lit(1), col("n") - (G - 1))).as("s"))
-      .select(col("doc_id"),
-        xxhash64(concat_ws(" ", slice(col("toks"), col("s"), lit(G))))
-          .as("g"))
-    val cand = g8.groupBy(col("g"))
-      .agg(collect_set(col("doc_id")).as("docs"))
-      .filter(size(col("docs")) >= 2)
-      .select(explode(col("docs")).as("x"), col("docs"))
-      .select(col("x"), explode(col("docs")).as("y"))
-      .filter(col("x") < col("y"))
-      .distinct()
-      .localCheckpoint()
-    val candIds = cand
-      .select(explode(array(col("x"), col("y"))).as("doc_id"))
-      .distinct()
-    val arr = graft.operators.NearDup.packedGram4Arrays(
-      base.join(broadcast(candIds), Seq("doc_id"), "left_semi"))
-    val v = cand
-      .join(arr.select(col("doc_id").as("x"), col("gs").as("gsx"),
-        col("ng").as("ngx")), Seq("x"))
-      .join(arr.select(col("doc_id").as("y"), col("gs").as("gsy"),
-        col("ng").as("ngy")), Seq("y"))
-      .withColumn("n_common",
-        graft.functions.VectorExprs.sortedIntersectCount(
-          col("gsx"), col("gsy")))
-      .select(
-        when(col("ngx") <= col("ngy"), col("x")).otherwise(col("y"))
-          .as("doc_small"),
-        when(col("ngx") <= col("ngy"), col("y")).otherwise(col("x"))
-          .as("doc_big"),
-        least(col("ngx"), col("ngy")).as("ng_small"),
-        greatest(col("ngx"), col("ngy")).as("ng_big"),
-        col("n_common"))
-    v.filter(col("n_common") * 2 >= col("ng_small"))
-      .select(col("doc_small"), col("doc_big"), col("ng_small"),
-        col("ng_big"), col("n_common"),
-        expr("n_common * 1000000 div ng_small").as("containment_ppm"))
-      .orderBy(col("doc_small"), col("doc_big"))
-  }
-
-  /** dup_spans with xxhash64 gram keys (bucketing only). */
-  def spansV2(spark: SparkSession, dir: String): DataFrame = {
-    val G = 8
-    val d = Tables.documentsWide(spark, dir)
-    val toked = d.select(col("doc_id"), col("lang"),
-        split(nrm(col("text")), " ").as("toks"))
-      .withColumn("n", size(col("toks")))
-      .localCheckpoint()
-    val grams = toked.filter(col("n") >= G)
-      .select(col("doc_id"), col("toks"), col("n"),
-        explode(sequence(lit(1), col("n") - (G - 1))).as("s"))
-      .select(col("doc_id"), col("s"),
-        xxhash64(concat_ws(" ", slice(col("toks"), col("s"), lit(G))))
-          .as("g"))
-    val perDoc = grams.groupBy(col("g"))
-      .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"),
-        collect_list(struct(col("doc_id"), col("s"))).as("occ"))
-      .filter(col("lo") =!= col("hi"))
-      .select(explode(col("occ")).as("o"))
-      .select(col("o.doc_id").as("doc_id"),
-        explode(sequence(col("o.s"), col("o.s") + (G - 1))).as("p"))
-      .distinct()
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("dup_tokens"))
-    toked.join(perDoc, Seq("doc_id"), "left_outer")
-      .groupBy(col("lang"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        count(col("dup_tokens")).as("n_docs_hit"),
-        sum(coalesce(col("dup_tokens"), lit(0L))).as("dup_tokens"),
-        sum(col("n").cast("long")).as("total_tokens"),
-        coalesce(expr(
-          "bit_xor(CASE WHEN dup_tokens IS NOT NULL THEN doc_id END)"),
-          lit(0L)).as("hit_id_xor"))
-      .withColumn("dup_rate",
-        col("dup_tokens").cast("double") / col("total_tokens").cast("double"))
-      .orderBy(col("lang"))
-  }
-
-  /** backlog with a hash join (skips the SMJ sorts) on the ship attach. */
-  def backlogV2(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir)
-      .select(col("o_orderkey"), to_date(col("o_orderdate")).as("s"))
-    val ship = Tables.lineitem(spark, dir)
-      .groupBy(col("l_orderkey"))
-      .agg(max(to_date(col("l_shipdate"))).as("last_ship"))
-    val spans = o.join(ship.hint("shuffle_hash"),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("s"), date_add(col("last_ship"), 1).as("e"))
-    val deltas = spans.select(col("s").as("d"), lit(1L).as("delta"))
-      .unionByName(spans.select(col("e").as("d"), lit(-1L).as("delta")))
-      .groupBy(col("d")).agg(sum(col("delta")).as("delta"))
-    val cum = deltas.as("a")
-      .join(deltas.as("b"), col("b.d") <= col("a.d"))
-      .groupBy(col("a.d").as("d"))
-      .agg(sum(col("b.delta")).as("open_orders"))
-    cum.groupBy(trunc(col("d"), "month").as("m"))
-      .agg(count(lit(1)).as("n_boundary_days"),
-        max(struct(col("d"), col("open_orders"))).as("eom"),
-        max(col("open_orders")).as("peak_open"))
-      .select(fmtDate(col("m")).as("month"), col("n_boundary_days"),
-        col("eom.open_orders").cast("long").as("eom_open"),
-        col("peak_open").cast("long").as("peak_open"))
-      .orderBy(col("month"))
-  }
-
-  /** backlog: map-side ± boundary explode — the span join runs ONCE
-    * (the union shape re-executes the join per branch). */
-  def backlogV3(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir)
-      .select(col("o_orderkey"), to_date(col("o_orderdate")).as("s"))
-    val ship = Tables.lineitem(spark, dir)
-      .groupBy(col("l_orderkey"))
-      .agg(max(to_date(col("l_shipdate"))).as("last_ship"))
-    val deltas = o.join(ship.hint("shuffle_hash"),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(explode(array(
-        struct(col("s").as("d"), lit(1L).as("delta")),
-        struct(date_add(col("last_ship"), 1).as("d"),
-          lit(-1L).as("delta")))).as("b"))
-      .groupBy(col("b.d").as("d")).agg(sum(col("b.delta")).as("delta"))
-    val cum = deltas.as("a")
-      .join(deltas.as("b"), col("b.d") <= col("a.d"))
-      .groupBy(col("a.d").as("d"))
-      .agg(sum(col("b.delta")).as("open_orders"))
-    cum.groupBy(trunc(col("d"), "month").as("m"))
-      .agg(count(lit(1)).as("n_boundary_days"),
-        max(struct(col("d"), col("open_orders"))).as("eom"),
-        max(col("open_orders")).as("peak_open"))
-      .select(fmtDate(col("m")).as("month"), col("n_boundary_days"),
-        col("eom.open_orders").cast("long").as("eom_open"),
-        col("peak_open").cast("long").as("peak_open"))
-      .orderBy(col("month"))
-  }
-
-  /** basket without the checkpoint: supports from raw distinct pairs,
-    * order count from raw distinct, baskets single-consumer. */
-  def basketV3(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
-    val po = li.distinct()
-    val supp = po.groupBy(col("l_partkey")).agg(count(lit(1)).as("supp_i"))
-    val nOrders = po.agg(countDistinct(col("l_orderkey")).as("n_orders"))
-    val baskets = li
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("items"))
-    val pairsCol = expr(
-      "flatten(transform(items, (x, i) -> " +
-        "transform(slice(items, i + 2, size(items)), " +
-        "y -> struct(x AS pa, y AS pb))))")
-    val pairs = baskets.select(explode(pairsCol).as("pr"))
-      .select(col("pr.pa").as("pa"), col("pr.pb").as("pb"))
-      .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("supp_ab"))
-    pairs
-      .join(broadcast(supp.select(col("l_partkey").as("pa"),
-        col("supp_i").as("supp_a"))), Seq("pa"))
-      .join(broadcast(supp.select(col("l_partkey").as("pb"),
-        col("supp_i").as("supp_b"))), Seq("pb"))
-      .crossJoin(broadcast(nOrders))
-      .select(col("pa"), col("pb"),
-        col("supp_ab").cast("long").as("supp_ab"),
-        col("supp_a").cast("long").as("supp_a"),
-        col("supp_b").cast("long").as("supp_b"),
-        expr("supp_ab * 1000000 div supp_a").as("conf_ab_ppm"),
-        expr("supp_ab * 1000000 div supp_b").as("conf_ba_ppm"),
-        expr("supp_ab * n_orders * 1000000 div (supp_a * supp_b)")
-          .as("lift_ppm"))
-      .orderBy(col("supp_ab").desc, col("lift_ppm").desc,
-        col("pa"), col("pb"))
-      .limit(20)
-  }
-
-  /** kcore: committed shape but both endpoint semi-joins probe ONE
-    * broadcast build (no per-side alias projection). */
-  def kcoreV3(spark: SparkSession, dir: String): DataFrame = {
-    val baskets = Tables.lineitem(spark, dir)
-      .filter(col("l_partkey") % 2 === 0)
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("items"))
-    val pairsCol = expr(
-      "flatten(transform(items, (v, i) -> " +
-        "transform(slice(items, i + 2, size(items)), " +
-        "w -> struct(v AS x, w AS y))))")
-    var edges = baskets.select(explode(pairsCol).as("pr"))
-      .select(col("pr.x").as("x"), col("pr.y").as("y"))
-      .distinct().localCheckpoint()
-    def degrees(e: DataFrame): DataFrame =
-      e.select(col("x").as("n")).unionByName(e.select(col("y").as("n")))
-        .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    var deg = degrees(edges).localCheckpoint()
-    val kf = deg.agg(
-      expr("sum(deg) div count(1) + 1").as("k"))
-    val rounds = (1 to 3).map { r =>
-      val keep = deg.crossJoin(broadcast(kf))
-        .filter(col("deg") >= col("k")).select(col("n"))
-      edges = edges
-        .join(broadcast(keep), col("x") === keep("n"), "left_semi")
-        .join(broadcast(keep), col("y") === keep("n"), "left_semi")
-        .select(col("x"), col("y")).localCheckpoint()
-      deg = degrees(edges).localCheckpoint()
-      deg.agg(
-          coalesce(count(col("n")), lit(0L)).as("n_nodes"),
-          coalesce(expr("sum(deg) div 2"), lit(0L)).as("n_edges"),
-          coalesce(bit_xor(col("n")), lit(0L)).as("node_xor"))
-        .select(lit(r.toLong).as("round"), col("n_nodes"),
-          col("n_edges"), col("node_xor"))
-    }
-    rounds.reduce(_ unionByName _).orderBy(col("round"))
-  }
-
-  /** triangles: basket-idiom edge build + one shared adjacency
-    * broadcast build probed by both endpoint joins. */
-  def trianglesV2(spark: SparkSession, dir: String): DataFrame = {
-    val baskets = Tables.lineitem(spark, dir)
-      .filter(col("l_partkey") % 2 === 0)
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("items"))
-    val pairsCol = expr(
-      "flatten(transform(items, (v, i) -> " +
-        "transform(slice(items, i + 2, size(items)), " +
-        "w -> struct(v AS x, w AS y))))")
-    val e0 = baskets.select(explode(pairsCol).as("pr"))
-      .select(col("pr.x").as("x"), col("pr.y").as("y"))
-      .distinct()
-      .localCheckpoint()
-    val ad = e0.unionByName(e0.select(col("y").as("x"), col("x").as("y")))
-    val adj = ad.groupBy(col("x"))
-      .agg(sort_array(collect_list(col("y"))).as("arr"))
-    val emb = e0.as("e")
-      .join(broadcast(adj.as("p")), col("e.x") === col("p.x"))
-      .join(broadcast(adj.as("q")), col("e.y") === col("q.x"))
-      .select(col("e.x").as("part_a"), col("e.y").as("part_b"),
-        graft.functions.VectorExprs.sortedIntersectCount(
-          col("p.arr"), col("q.arr")).as("n_common"))
-      .localCheckpoint()
-    val tot = emb.agg(count(lit(1)).as("n_edges"),
-      expr("sum(n_common) div 3").as("n_triangles"))
-    emb.crossJoin(broadcast(tot))
-      .orderBy(col("n_common").desc, col("part_a"), col("part_b"))
-      .limit(10)
-  }
-
-  /** r9 agg_weighted_median: per-flag cumulative window (3 partitions). */
-  def wmedianOld(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_returnflag"),
-        scaledLong(col("l_extendedprice"), 100L).as("cents"),
-        scaledLong(col("l_quantity"), 1L).as("w"))
-    val census = li.groupBy(col("l_returnflag"), col("cents"))
-      .agg(sum(col("w")).as("wsum"))
-    val cum = Window.partitionBy(col("l_returnflag")).orderBy(col("cents"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = Window.partitionBy(col("l_returnflag"))
-    census
-      .withColumn("cumw", sum(col("wsum")).over(cum))
-      .withColumn("totw", sum(col("wsum")).over(tot))
-      .groupBy(col("l_returnflag"))
-      .agg(min(when(col("cumw") * 2 >= col("totw"), col("cents")))
-          .as("weighted_median_cents"),
-        max(col("totw")).as("total_weight"))
-      .orderBy(col("l_returnflag"))
-  }
-
-  /** wmedian v3: ONE fact exchange — raw rows repartition by (flag,
-    * shard); census, intra-shard window, and shard totals all satisfy
-    * that clustering (subset-key rule), so no second census-sized
-    * exchange exists anywhere.
-    */
-  def wmedianV3(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_returnflag"),
-        scaledLong(col("l_extendedprice"), 100L).as("cents"),
-        scaledLong(col("l_quantity"), 1L).as("w"))
-      .withColumn("shard", (col("cents") / lit(262144L)).cast("long"))
-      .repartition(col("l_returnflag"), col("shard"))
-    val census = li.groupBy(col("l_returnflag"), col("shard"), col("cents"))
-      .agg(sum(col("w")).as("wsum"))
-    val shards = census.groupBy(col("l_returnflag"), col("shard"))
-      .agg(sum(col("wsum")).as("ssum"))
-    val wOff = Window.partitionBy(col("l_returnflag")).orderBy(col("shard"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val off = shards
-      .withColumn("off", coalesce(sum(col("ssum")).over(wOff), lit(0L)))
-      .withColumn("totw",
-        sum(col("ssum")).over(Window.partitionBy(col("l_returnflag"))))
-      .select(col("l_returnflag"), col("shard"), col("off"), col("totw"))
-    val intra = Window.partitionBy(col("l_returnflag"), col("shard"))
-      .orderBy(col("cents"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    census
-      .withColumn("icum", sum(col("wsum")).over(intra))
-      .join(broadcast(off), Seq("l_returnflag", "shard"))
-      .groupBy(col("l_returnflag"))
-      .agg(min(when((col("icum") + col("off")) * 2 >= col("totw"),
-          col("cents"))).as("weighted_median_cents"),
-        max(col("totw")).as("total_weight"))
-      .orderBy(col("l_returnflag"))
-  }
-
-  /** r9 orders_backlog: shuffle-hash join of ship agg against orders. */
-  def backlogOld(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir)
-      .select(col("o_orderkey"), to_date(col("o_orderdate")).as("s"))
-    val ship = Tables.lineitem(spark, dir)
-      .groupBy(col("l_orderkey"))
-      .agg(max(to_date(col("l_shipdate"))).as("last_ship"))
-    val deltas = o.join(ship.hint("shuffle_hash"),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(explode(array(
-        struct(col("s").as("d"), lit(1L).as("delta")),
-        struct(date_add(col("last_ship"), 1).as("d"),
-          lit(-1L).as("delta")))).as("b"))
-      .groupBy(col("b.d").as("d")).agg(sum(col("b.delta")).as("delta"))
-      .withColumn("yr", year(col("d")))
-    val wCum = Window.partitionBy(col("yr")).orderBy(col("d"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val inYear = deltas.withColumn("cin", sum(col("delta")).over(wCum))
-    val yearTot = deltas.groupBy(col("yr")).agg(sum(col("delta")).as("yt"))
-    val off = yearTot.as("a")
-      .join(yearTot.as("b"), col("b.yr") < col("a.yr"))
-      .groupBy(col("a.yr").as("yr")).agg(sum(col("b.yt")).as("off"))
-    val cum = inYear.join(broadcast(off), Seq("yr"), "left")
-      .select(col("d"),
-        (col("cin") + coalesce(col("off"), lit(0L))).as("open_orders"))
-    cum.groupBy(trunc(col("d"), "month").as("m"))
-      .agg(count(lit(1)).as("n_boundary_days"),
-        max(struct(col("d"), col("open_orders"))).as("eom"),
-        max(col("open_orders")).as("peak_open"))
-      .select(col("m"), col("n_boundary_days"),
-        col("eom.open_orders").cast("long").as("eom_open"),
-        col("peak_open").cast("long").as("peak_open"))
-      .orderBy(col("m"))
-  }
-
-  /** r9 q16: one scan, pair agg + suppkey window + distinct count. */
-  def q16Old(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_partkey"), col("l_suppkey"),
-        when(col("l_returnflag") === "R" && col("l_quantity") >= 50 &&
-          col("l_shipdate") >= lit("1995-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1995-03-01").cast("timestamp"), 1L)
-          .otherwise(0L).as("bad"))
-    val pairs = li.groupBy(col("l_partkey"), col("l_suppkey"))
-      .agg(max(col("bad")).as("pair_bad"))
-    val supp = Window.partitionBy(col("l_suppkey"))
-    val p = Tables.part(spark, dir)
-      .filter(col("p_type").isin("SMALL", "MEDIUM"))
-      .select(col("p_partkey"), col("p_brand"), col("p_size"))
-    pairs
-      .withColumn("supp_bad", max(col("pair_bad")).over(supp))
-      .filter(col("supp_bad") === 0L)
-      .join(p, col("l_partkey") === col("p_partkey"))
-      .groupBy(col("p_brand"), col("p_size"))
-      .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-      .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_size"))
-      .limit(30)
-  }
-
-  /** kcore r11 candidate: explode-based degrees (ONE scan of the pinned
-    * edge frame per round instead of the union's two) + the LAST round's
-    * degree frame left unpinned (its only consumer is the lazy final
-    * census union, so the checkpoint job buys nothing).
-    */
-  def kcoreV4(spark: SparkSession, dir: String): DataFrame = {
-    val baskets = Tables.lineitem(spark, dir)
-      .filter(col("l_partkey") % 2 === 0)
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("items"))
-    val pairsCol = expr(
-      "flatten(transform(items, (v, i) -> " +
-        "transform(slice(items, i + 2, size(items)), " +
-        "w -> struct(v AS x, w AS y))))")
-    val edges0 = baskets.select(explode(pairsCol).as("pr"))
-      .select(col("pr.x").as("x"), col("pr.y").as("y"))
-      .distinct().localCheckpoint()
-    def degrees(e: DataFrame): DataFrame =
-      e.select(explode(array(col("x"), col("y"))).as("n"))
-        .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    var deg = degrees(edges0).localCheckpoint()
-    val kRow = deg.agg(expr("sum(deg) div count(1) + 1").as("k")).head()
-    val k = if (kRow.isNullAt(0)) Long.MaxValue else kRow.getLong(0)
-    var edges = edges0
-    val rounds = (1 to 3).map { r =>
-      val keep = deg.filter(col("deg") >= k).select(col("n"))
-      edges = edges
-        .join(broadcast(keep), col("x") === keep("n"), "left_semi")
-        .join(broadcast(keep), col("y") === keep("n"), "left_semi")
-        .select(col("x"), col("y"))
-      val d = degrees(edges)
-      deg = if (r < 3) d.localCheckpoint() else d
-      deg.agg(
-          coalesce(count(col("n")), lit(0L)).as("n_nodes"),
-          coalesce(expr("sum(deg) div 2"), lit(0L)).as("n_edges"),
-          coalesce(bit_xor(col("n")), lit(0L)).as("node_xor"))
-        .select(lit(r.toLong).as("round"), col("n_nodes"),
-          col("n_edges"), col("node_xor"))
-    }
-    rounds.reduce(_ unionByName _).orderBy(col("round"))
-  }
-
-  /** kcore r14 candidate: FULLY LAZY rounds — only edges0 and the
-    * round-0 degree frame pin (k needs a driver read); rounds 1-3 build
-    * one DAG whose final census union is the single action. Within that
-    * one execution, each deg_r shuffle exchange has two consumers
-    * (census r and round r+1's keep broadcast) and Spark's exchange
-    * reuse serves both from one materialization — the cross-ACTION
-    * replay that killed the r9 lazy variant (k head + keep broadcast as
-    * separate jobs) does not apply to consumers inside one action.
-    * Saves the two mid-round checkpoint jobs.
-    */
-  def kcoreV5(spark: SparkSession, dir: String): DataFrame = {
-    val baskets = Tables.lineitem(spark, dir)
-      .filter(col("l_partkey") % 2 === 0)
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("items"))
-    val pairsCol = expr(
-      "flatten(transform(items, (v, i) -> " +
-        "transform(slice(items, i + 2, size(items)), " +
-        "w -> struct(v AS x, w AS y))))")
-    val edges0 = baskets.select(explode(pairsCol).as("pr"))
-      .select(col("pr.x").as("x"), col("pr.y").as("y"))
-      .distinct().localCheckpoint()
-    def degrees(e: DataFrame): DataFrame =
-      e.select(explode(array(col("x"), col("y"))).as("n"))
-        .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    var deg = degrees(edges0).localCheckpoint()
-    val kRow = deg.agg(expr("sum(deg) div count(1) + 1").as("k")).head()
-    val k = if (kRow.isNullAt(0)) Long.MaxValue else kRow.getLong(0)
-    var edges = edges0
-    val rounds = (1 to 3).map { r =>
-      val keep = deg.filter(col("deg") >= k).select(col("n"))
-      edges = edges
-        .join(broadcast(keep), col("x") === keep("n"), "left_semi")
-        .join(broadcast(keep), col("y") === keep("n"), "left_semi")
-        .select(col("x"), col("y"))
-      deg = degrees(edges) // lazy: exchange reuse inside the one action
-      deg.agg(
-          coalesce(count(col("n")), lit(0L)).as("n_nodes"),
-          coalesce(expr("sum(deg) div 2"), lit(0L)).as("n_edges"),
-          coalesce(bit_xor(col("n")), lit(0L)).as("node_xor"))
-        .select(lit(r.toLong).as("round"), col("n_nodes"),
-          col("n_edges"), col("node_xor"))
-    }
-    rounds.reduce(_ unionByName _).orderBy(col("round"))
-  }
-
-  /** kcore r15 candidate 10: the LANDED edges0 (stamped per-corpus
-    * parquet, the committed r15 shape's leaf) + FULLY LAZY rounds — the
-    * kcoreV5 idea re-opened: V5/V7 lost because every extra consumer
-    * re-ran the EXPENSIVE pair build, but the landing makes the leaf a
-    * ~1.6 MB parquet scan, so the lazy union's re-scans cost ~nothing
-    * and the two mid-round checkpoint jobs disappear. deg0 still pins
-    * eagerly (k needs a driver read).
-    */
-  def kcoreV10(spark: SparkSession, dir: String): DataFrame = {
-    val edges0 = spark.read.parquet(
-      graft.operators.Pipeline.kcoreEdges0Path(spark, dir))
-    def degrees(e: DataFrame): DataFrame =
-      e.select(explode(array(col("x"), col("y"))).as("n"))
-        .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    var deg = degrees(edges0).localCheckpoint()
-    val kRow = deg.agg(expr("sum(deg) div count(1) + 1").as("k")).head()
-    val k = if (kRow.isNullAt(0)) Long.MaxValue else kRow.getLong(0)
-    var edges = edges0
-    val rounds = (1 to 3).map { r =>
-      val keep = deg.filter(col("deg") >= k).select(col("n"))
-      edges = edges
-        .join(broadcast(keep), col("x") === keep("n"), "left_semi")
-        .join(broadcast(keep), col("y") === keep("n"), "left_semi")
-        .select(col("x"), col("y"))
-      deg = degrees(edges) // lazy: exchange reuse inside the one action
-      deg.agg(
-          coalesce(count(col("n")), lit(0L)).as("n_nodes"),
-          coalesce(expr("sum(deg) div 2"), lit(0L)).as("n_edges"),
-          coalesce(bit_xor(col("n")), lit(0L)).as("node_xor"))
-        .select(lit(r.toLong).as("round"), col("n_nodes"),
-          col("n_edges"), col("node_xor"))
-    }
-    rounds.reduce(_ unionByName _).orderBy(col("round"))
-  }
-
-  /** kcore r15 candidate 11: v10 with deg0's pin LAZY too (the kcoreV9
-    * shared-RDD discipline — the k head materializes it, the final
-    * union reuses the same checkpoint RDD; each rep builds fresh
-    * frames, no CacheManager registration).
-    */
-  def kcoreV11(spark: SparkSession, dir: String): DataFrame = {
-    val edges0 = spark.read.parquet(
-      graft.operators.Pipeline.kcoreEdges0Path(spark, dir))
-    def degrees(e: DataFrame): DataFrame =
-      e.select(explode(array(col("x"), col("y"))).as("n"))
-        .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    var deg = degrees(edges0).localCheckpoint(eager = false)
-    val kRow = deg.agg(expr("sum(deg) div count(1) + 1").as("k")).head()
-    val k = if (kRow.isNullAt(0)) Long.MaxValue else kRow.getLong(0)
-    var edges = edges0
-    val rounds = (1 to 3).map { r =>
-      val keep = deg.filter(col("deg") >= k).select(col("n"))
-      edges = edges
-        .join(broadcast(keep), col("x") === keep("n"), "left_semi")
-        .join(broadcast(keep), col("y") === keep("n"), "left_semi")
-        .select(col("x"), col("y"))
-      deg = degrees(edges)
-      deg.agg(
-          coalesce(count(col("n")), lit(0L)).as("n_nodes"),
-          coalesce(expr("sum(deg) div 2"), lit(0L)).as("n_edges"),
-          coalesce(bit_xor(col("n")), lit(0L)).as("node_xor"))
-        .select(lit(r.toLong).as("round"), col("n_nodes"),
-          col("n_edges"), col("node_xor"))
-    }
-    rounds.reduce(_ unionByName _).orderBy(col("round"))
-  }
-
-  /** gsp r15 candidate 11: the TWO-COPY bucketed edge landing (by c and
-    * by p) + FULLY LAZY levels — the kcore-v12 shape on the bipartite
-    * BFS. Each level's candidate distinct inherits the scan's bucket
-    * distribution (frontier filter is a broadcast, preserves it), the
-    * anti-join is a broadcast, the censuses read their matching copy —
-    * zero hash exchanges anywhere; per-run cost is the level broadcast
-    * builds inside ONE census action.
-    */
-  // REJECTED-variant infrastructure: the by-c/by-p bucketed copies only
-  // gspV11/gspV12 consume (moved here from Pipeline after the r15
-  // review — production keeps only the pair landing)
-  private val gspCpDone = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (String, String)]
-
-  private def gspCpTables(spark: SparkSession, dir: String)
-      : (String, String) = {
-    val stamp = Tables.srcStamp(
-      new java.io.File(dir, "lineitem.parquet"))
-    gspCpDone.getOrElseUpdate((dir, stamp), {
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val pairs = graft.operators.Pipeline.gspCpPairsPath(spark, dir)
-      def bucketed(key: String): String =
-        graft.sources.Bucketed.ensureClusteredTable(spark,
-          s"graft_gsp_cp_by_${key}_${safe}_$stamp"
-            .replace('.', '_').replace('-', '_'),
-          "c BIGINT, p BIGINT", s"CLUSTERED BY ($key) INTO 8 BUCKETS",
-          new java.io.File(sys.props("java.io.tmpdir"),
-            s"graft_gsp_$safe/by_${key}_$stamp"))(
-          spark.read.parquet(pairs).repartition(8, col(key)))
-      (bucketed("c"), bucketed("p"))
-    })
-  }
-
-  def gspV11(spark: SparkSession, dir: String): DataFrame = {
-    val (byC, byP) = gspCpTables(spark, dir)
-    val cpC = spark.table(byC)
-    val cpP = spark.table(byP)
-    val seeds = Tables.customer(spark, dir)
-      .filter(col("c_nationkey") === 0)
-      .select(col("c_custkey").as("id"))
-      .join(cpC.select(col("c").as("id")), Seq("id"), "left_semi")
-    var dC = seeds.select(col("id"), lit(0L).as("dist"))
-    var dP = spark.range(0).select(col("id"), lit(0L).as("dist"))
-    var frontier = dC.select(col("id"))
-    for (k <- 1 to 4) {
-      val fromC = k % 2 == 1
-      // expand over the copy bucketed by the DESTINATION side: the
-      // candidate distinct then needs no exchange
-      val (scan, key, other) =
-        if (fromC) (cpP, "c", "p") else (cpC, "p", "c")
-      val own = if (fromC) dP else dC
-      val cand = scan
-        .join(broadcast(frontier.withColumnRenamed("id", key)), Seq(key))
-        .select(col(other).as("id")).distinct()
-      val fresh = cand
-        .join(broadcast(own.select(col("id"))), Seq("id"), "left_anti")
-        .select(col("id"), lit(k.toLong).as("dist"))
-      if (fromC) dP = dP.unionByName(fresh)
-      else dC = dC.unionByName(fresh)
-      frontier = fresh.select(col("id"))
-    }
-    val custs = cpC.select(col("c").as("id")).distinct()
-      .join(broadcast(dC), Seq("id"), "left")
-      .select(lit("customer").as("kind"), col("id"), col("dist"))
-    val parts = cpP.select(col("p").as("id")).distinct()
-      .join(broadcast(dP), Seq("id"), "left")
-      .select(lit("part").as("kind"), col("id"), col("dist"))
-    custs.unionByName(parts)
-      .select(col("kind"), coalesce(col("dist"), lit(-1L)).as("dist"),
-        col("id"))
-      .groupBy(col("kind"), col("dist"))
-      .agg(count(lit(1)).as("n_nodes"),
-        bit_xor(col("id")).as("id_xor"),
-        min(col("id")).as("min_id"),
-        max(col("id")).as("max_id"))
-      .orderBy(col("kind"), col("dist"))
-  }
-
-  /** gsp r15 candidate 12: the landing + the committed per-level PIN
-    * discipline (fresh localCheckpoint per level) — isolates how much
-    * of any v11 win is the landing vs the laziness.
-    */
-  def gspV12(spark: SparkSession, dir: String): DataFrame = {
-    val (byC, byP) = gspCpTables(spark, dir)
-    val cpC = spark.table(byC)
-    val cpP = spark.table(byP)
-    val seeds = Tables.customer(spark, dir)
-      .filter(col("c_nationkey") === 0)
-      .select(col("c_custkey").as("id"))
-      .join(cpC.select(col("c").as("id")), Seq("id"), "left_semi")
-    var dC = seeds.select(col("id"), lit(0L).as("dist")).localCheckpoint()
-    var dP = spark.range(0).select(col("id"), lit(0L).as("dist"))
-    var frontier = dC.select(col("id"))
-    for (k <- 1 to 4) {
-      val fromC = k % 2 == 1
-      val (scan, key, other) =
-        if (fromC) (cpP, "c", "p") else (cpC, "p", "c")
-      val own = if (fromC) dP else dC
-      val cand = scan
-        .join(broadcast(frontier.withColumnRenamed("id", key)), Seq(key))
-        .select(col(other).as("id")).distinct()
-      val fresh = cand
-        .join(broadcast(own.select(col("id"))), Seq("id"), "left_anti")
-        .select(col("id"), lit(k.toLong).as("dist"))
-        .localCheckpoint()
-      if (fromC) dP = dP.unionByName(fresh)
-      else dC = dC.unionByName(fresh)
-      frontier = fresh.select(col("id"))
-    }
-    val custs = cpC.select(col("c").as("id")).distinct()
-      .join(broadcast(dC), Seq("id"), "left")
-      .select(lit("customer").as("kind"), col("id"), col("dist"))
-    val parts = cpP.select(col("p").as("id")).distinct()
-      .join(broadcast(dP), Seq("id"), "left")
-      .select(lit("part").as("kind"), col("id"), col("dist"))
-    custs.unionByName(parts)
-      .select(col("kind"), coalesce(col("dist"), lit(-1L)).as("dist"),
-        col("id"))
-      .groupBy(col("kind"), col("dist"))
-      .agg(count(lit(1)).as("n_nodes"),
-        bit_xor(col("id")).as("id_xor"),
-        min(col("id")).as("min_id"),
-        max(col("id")).as("max_id"))
-      .orderBy(col("kind"), col("dist"))
-  }
-
-  /** gsp r15 candidate 13: the COMMITTED shape with the cp edge frame
-    * pinned from the PAIR LANDING instead of rebuilt (li⋈o + distinct)
-    * per run — kcore's step-1 lesson in isolation: keep the per-level
-    * pin discipline (v11/v12 showed lazy and bucketed-scan levels both
-    * lose), delete only the per-run build.
-    */
-  def gspV13(spark: SparkSession, dir: String): DataFrame = {
-    val cp = spark.read.parquet(
-        graft.operators.Pipeline.gspCpPairsPath(spark, dir))
-      .localCheckpoint()
-    val seeds = Tables.customer(spark, dir)
-      .filter(col("c_nationkey") === 0)
-      .select(col("c_custkey").as("id"))
-      .join(cp.select(col("c").as("id")), Seq("id"), "left_semi")
-    var dC = seeds.select(col("id"), lit(0L).as("dist")).localCheckpoint()
-    var dP = spark.range(0).select(col("id"), lit(0L).as("dist"))
-    var frontier = dC.select(col("id"))
-    for (k <- 1 to 4) {
-      val fromC = k % 2 == 1
-      val (key, other) = if (fromC) ("c", "p") else ("p", "c")
-      val own = if (fromC) dP else dC
-      val cand = cp
-        .join(broadcast(frontier.withColumnRenamed("id", key)), Seq(key))
-        .select(col(other).as("id")).distinct()
-      val fresh = cand
-        .join(broadcast(own.select(col("id"))), Seq("id"), "left_anti")
-        .select(col("id"), lit(k.toLong).as("dist"))
-        .localCheckpoint()
-      if (fromC) dP = dP.unionByName(fresh)
-      else dC = dC.unionByName(fresh)
-      frontier = fresh.select(col("id"))
-    }
-    val custs = cp.select(col("c").as("id")).distinct()
-      .join(dC, Seq("id"), "left")
-      .select(lit("customer").as("kind"), col("id"), col("dist"))
-    val parts = cp.select(col("p").as("id")).distinct()
-      .join(dP, Seq("id"), "left")
-      .select(lit("part").as("kind"), col("id"), col("dist"))
-    custs.unionByName(parts)
-      .select(col("kind"), coalesce(col("dist"), lit(-1L)).as("dist"),
-        col("id"))
-      .groupBy(col("kind"), col("dist"))
-      .agg(count(lit(1)).as("n_nodes"),
-        bit_xor(col("id")).as("id_xor"),
-        min(col("id")).as("min_id"),
-        max(col("id")).as("max_id"))
-      .orderBy(col("kind"), col("dist"))
-  }
-
-  /** gsp r15 candidate 14: v13 (committed) minus the LAST level's pin —
-    * fresh(4)'s only consumer is the census union, so its eager
-    * checkpoint job may buy nothing (the kcore last-round lesson).
-    */
-  def gspV14(spark: SparkSession, dir: String): DataFrame = {
-    val cp = spark.read.parquet(
-        graft.operators.Pipeline.gspCpPairsPath(spark, dir))
-      .localCheckpoint()
-    val seeds = Tables.customer(spark, dir)
-      .filter(col("c_nationkey") === 0)
-      .select(col("c_custkey").as("id"))
-      .join(cp.select(col("c").as("id")), Seq("id"), "left_semi")
-    var dC = seeds.select(col("id"), lit(0L).as("dist")).localCheckpoint()
-    var dP = spark.range(0).select(col("id"), lit(0L).as("dist"))
-    var frontier = dC.select(col("id"))
-    for (k <- 1 to 4) {
-      val fromC = k % 2 == 1
-      val (key, other) = if (fromC) ("c", "p") else ("p", "c")
-      val own = if (fromC) dP else dC
-      val cand = cp
-        .join(broadcast(frontier.withColumnRenamed("id", key)), Seq(key))
-        .select(col(other).as("id")).distinct()
-      val fresh0 = cand
-        .join(broadcast(own.select(col("id"))), Seq("id"), "left_anti")
-        .select(col("id"), lit(k.toLong).as("dist"))
-      val fresh = if (k < 4) fresh0.localCheckpoint() else fresh0
-      if (fromC) dP = dP.unionByName(fresh)
-      else dC = dC.unionByName(fresh)
-      frontier = fresh.select(col("id"))
-    }
-    val custs = cp.select(col("c").as("id")).distinct()
-      .join(dC, Seq("id"), "left")
-      .select(lit("customer").as("kind"), col("id"), col("dist"))
-    val parts = cp.select(col("p").as("id")).distinct()
-      .join(dP, Seq("id"), "left")
-      .select(lit("part").as("kind"), col("id"), col("dist"))
-    custs.unionByName(parts)
-      .select(col("kind"), coalesce(col("dist"), lit(-1L)).as("dist"),
-        col("id"))
-      .groupBy(col("kind"), col("dist"))
-      .agg(count(lit(1)).as("n_nodes"),
-        bit_xor(col("id")).as("id_xor"),
-        min(col("id")).as("min_id"),
-        max(col("id")).as("max_id"))
-      .orderBy(col("kind"), col("dist"))
-  }
-
-  /** gsp r15 candidate 15: committed shape + the census reads the
-    * LANDED node lists (part of the same derived index as the pairs)
-    * with broadcast dist joins — deletes the final job's two
-    * distinct-over-edges exchanges and its cp re-scans.
-    */
-  def gspV15(spark: SparkSession, dir: String): DataFrame = {
-    val cp = spark.read.parquet(
-        graft.operators.Pipeline.gspCpPairsPath(spark, dir))
-      .localCheckpoint()
-    val seeds = Tables.customer(spark, dir)
-      .filter(col("c_nationkey") === 0)
-      .select(col("c_custkey").as("id"))
-      .join(cp.select(col("c").as("id")), Seq("id"), "left_semi")
-    var dC = seeds.select(col("id"), lit(0L).as("dist")).localCheckpoint()
-    var dP = spark.range(0).select(col("id"), lit(0L).as("dist"))
-    var frontier = dC.select(col("id"))
-    for (k <- 1 to 4) {
-      val fromC = k % 2 == 1
-      val (key, other) = if (fromC) ("c", "p") else ("p", "c")
-      val own = if (fromC) dP else dC
-      val cand = cp
-        .join(broadcast(frontier.withColumnRenamed("id", key)), Seq(key))
-        .select(col(other).as("id")).distinct()
-      val fresh0 = cand
-        .join(broadcast(own.select(col("id"))), Seq("id"), "left_anti")
-        .select(col("id"), lit(k.toLong).as("dist"))
-      val fresh = if (k < 4) fresh0.localCheckpoint() else fresh0
-      if (fromC) dP = dP.unionByName(fresh)
-      else dC = dC.unionByName(fresh)
-      frontier = fresh.select(col("id"))
-    }
-    val custs = spark.read.parquet(
-        graft.operators.Pipeline.gspNodesPath(spark, dir, "c"))
-      .join(broadcast(dC), Seq("id"), "left")
-      .select(lit("customer").as("kind"), col("id"), col("dist"))
-    val parts = spark.read.parquet(
-        graft.operators.Pipeline.gspNodesPath(spark, dir, "p"))
-      .join(broadcast(dP), Seq("id"), "left")
-      .select(lit("part").as("kind"), col("id"), col("dist"))
-    custs.unionByName(parts)
-      .select(col("kind"), coalesce(col("dist"), lit(-1L)).as("dist"),
-        col("id"))
-      .groupBy(col("kind"), col("dist"))
-      .agg(count(lit(1)).as("n_nodes"),
-        bit_xor(col("id")).as("id_xor"),
-        min(col("id")).as("min_id"),
-        max(col("id")).as("max_id"))
-      .orderBy(col("kind"), col("dist"))
-  }
-
-  /** kcore r15 candidate 12: the BUCKETED ADJACENCY landing (each edge
-    * twice, clustered by src) — every degree aggregate's clustering is
-    * satisfied by the scan, so the plan has ZERO shuffle exchanges:
-    * per-run cost is the k head, three broadcast builds, and one final
-    * union action whose rounds are all map-side. Fully lazy — nothing
-    * to pin, the parquet leaf is stable and tiny.
-    */
-  def kcoreV12(spark: SparkSession, dir: String): DataFrame = {
-    val adj = spark.table(
-      graft.operators.Pipeline.kcoreAdjTable(spark, dir))
-    def degrees(e: DataFrame): DataFrame =
-      e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    var deg = degrees(adj)
-    val kRow = deg.agg(expr("sum(deg) div count(1) + 1").as("k")).head()
-    val k = if (kRow.isNullAt(0)) Long.MaxValue else kRow.getLong(0)
-    var edges = adj
-    val rounds = (1 to 3).map { r =>
-      val keep = deg.filter(col("deg") >= k)
-        .select(col("src").as("n"))
-      edges = edges
-        .join(broadcast(keep), col("src") === col("n"), "left_semi")
-        .join(broadcast(keep), col("dst") === col("n"), "left_semi")
-        .select(col("src"), col("dst"))
-      deg = degrees(edges)
-      deg.agg(
-          coalesce(count(col("src")), lit(0L)).as("n_nodes"),
-          coalesce(expr("sum(deg) div 2"), lit(0L)).as("n_edges"),
-          coalesce(bit_xor(col("src")), lit(0L)).as("node_xor"))
-        .select(lit(r.toLong).as("round"), col("n_nodes"),
-          col("n_edges"), col("node_xor"))
-    }
-    rounds.reduce(_ unionByName _).orderBy(col("round"))
-  }
-
-  /** kcore r14 candidate: edges0's basket agg reads the BUCKETED
-    * lineitem landing (clustered by l_orderkey) — the scan already
-    * carries HashPartitioning(l_orderkey), so the collect_set aggregate
-    * runs exchange-free and edges0 drops to ONE shuffle (the pair
-    * distinct). Rounds unchanged from the committed shape.
-    */
-  def kcoreV6(spark: SparkSession, dir: String): DataFrame = {
-    val (lTbl, _) = graft.sources.Bucketed.ensure(spark, dir)
-    val baskets = spark.table(lTbl)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .filter(col("l_partkey") % 2 === 0)
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("items"))
-    val pairsCol = expr(
-      "flatten(transform(items, (v, i) -> " +
-        "transform(slice(items, i + 2, size(items)), " +
-        "w -> struct(v AS x, w AS y))))")
-    val edges0 = baskets.select(explode(pairsCol).as("pr"))
-      .select(col("pr.x").as("x"), col("pr.y").as("y"))
-      .distinct().localCheckpoint()
-    def degrees(e: DataFrame): DataFrame =
-      e.select(explode(array(col("x"), col("y"))).as("n"))
-        .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    var deg = degrees(edges0).localCheckpoint()
-    val kRow = deg.agg(expr("sum(deg) div count(1) + 1").as("k")).head()
-    val k = if (kRow.isNullAt(0)) Long.MaxValue else kRow.getLong(0)
-    var edges = edges0
-    val rounds = (1 to 3).map { r =>
-      val keep = deg.filter(col("deg") >= k).select(col("n"))
-      edges = edges
-        .join(broadcast(keep), col("x") === keep("n"), "left_semi")
-        .join(broadcast(keep), col("y") === keep("n"), "left_semi")
-        .select(col("x"), col("y"))
-      val d = degrees(edges)
-      deg = if (r < 3) d.localCheckpoint() else d
-      deg.agg(
-          coalesce(count(col("n")), lit(0L)).as("n_nodes"),
-          coalesce(expr("sum(deg) div 2"), lit(0L)).as("n_edges"),
-          coalesce(bit_xor(col("n")), lit(0L)).as("node_xor"))
-        .select(lit(r.toLong).as("round"), col("n_nodes"),
-          col("n_edges"), col("node_xor"))
-    }
-    rounds.reduce(_ unionByName _).orderBy(col("round"))
-  }
-
-/** kcore r14 candidate: v6 bucketed build + v5 lazy rounds. */
-  def kcoreV7(spark: SparkSession, dir: String): DataFrame = {
-    val (lTbl, _) = graft.sources.Bucketed.ensure(spark, dir)
-    val baskets = spark.table(lTbl)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .filter(col("l_partkey") % 2 === 0)
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("items"))
-    val pairsCol = expr(
-      "flatten(transform(items, (v, i) -> " +
-        "transform(slice(items, i + 2, size(items)), " +
-        "w -> struct(v AS x, w AS y))))")
-    val edges0 = baskets.select(explode(pairsCol).as("pr"))
-      .select(col("pr.x").as("x"), col("pr.y").as("y"))
-      .distinct().localCheckpoint()
-    def degrees(e: DataFrame): DataFrame =
-      e.select(explode(array(col("x"), col("y"))).as("n"))
-        .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    var deg = degrees(edges0).localCheckpoint()
-    val kRow = deg.agg(expr("sum(deg) div count(1) + 1").as("k")).head()
-    val k = if (kRow.isNullAt(0)) Long.MaxValue else kRow.getLong(0)
-    var edges = edges0
-    val rounds = (1 to 3).map { r =>
-      val keep = deg.filter(col("deg") >= k).select(col("n"))
-      edges = edges
-        .join(broadcast(keep), col("x") === keep("n"), "left_semi")
-        .join(broadcast(keep), col("y") === keep("n"), "left_semi")
-        .select(col("x"), col("y"))
-      deg = degrees(edges) // lazy rounds (v5) on the bucketed build (v6)
-      deg.agg(
-          coalesce(count(col("n")), lit(0L)).as("n_nodes"),
-          coalesce(expr("sum(deg) div 2"), lit(0L)).as("n_edges"),
-          coalesce(bit_xor(col("n")), lit(0L)).as("node_xor"))
-        .select(lit(r.toLong).as("round"), col("n_nodes"),
-          col("n_edges"), col("node_xor"))
-    }
-    rounds.reduce(_ unionByName _).orderBy(col("round"))
-  }
-
-  /** kcore r14 candidate 9: v6's bucketed build with every pin LAZY
-    * (localCheckpoint(eager=false)) — the Dataset API builds ONE shared
-    * RDD per pin at call time, so the k driver probe materializes
-    * edges0+deg0 in its single job and the final census action
-    * materializes the mid-round pins inside itself (shared-lineage
-    * stage dedup; checkpoint blocks serve the second consumer). Unlike
-    * the rejected persist() probe this is RDD-level, NOT CacheManager:
-    * a fresh call builds fresh RDDs, so every bench rep recomputes
-    * honestly.
-    */
-  def kcoreV9(spark: SparkSession, dir: String): DataFrame = {
-    val (lTbl, _) = graft.sources.Bucketed.ensure(spark, dir)
-    val baskets = spark.table(lTbl)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .filter(col("l_partkey") % 2 === 0)
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("items"))
-    val pairsCol = expr(
-      "flatten(transform(items, (v, i) -> " +
-        "transform(slice(items, i + 2, size(items)), " +
-        "w -> struct(v AS x, w AS y))))")
-    val edges0 = baskets.select(explode(pairsCol).as("pr"))
-      .select(col("pr.x").as("x"), col("pr.y").as("y"))
-      .distinct().localCheckpoint(false)
-    def degrees(e: DataFrame): DataFrame =
-      e.select(explode(array(col("x"), col("y"))).as("n"))
-        .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    var deg = degrees(edges0).localCheckpoint(false)
-    val kRow = deg.agg(expr("sum(deg) div count(1) + 1").as("k")).head()
-    val k = if (kRow.isNullAt(0)) Long.MaxValue else kRow.getLong(0)
-    var edges = edges0
-    val rounds = (1 to 3).map { r =>
-      val keep = deg.filter(col("deg") >= k).select(col("n"))
-      edges = edges
-        .join(broadcast(keep), col("x") === keep("n"), "left_semi")
-        .join(broadcast(keep), col("y") === keep("n"), "left_semi")
-        .select(col("x"), col("y"))
-      val d = degrees(edges)
-      deg = if (r < 3) d.localCheckpoint(false) else d
-      deg.agg(
-          coalesce(count(col("n")), lit(0L)).as("n_nodes"),
-          coalesce(expr("sum(deg) div 2"), lit(0L)).as("n_edges"),
-          coalesce(bit_xor(col("n")), lit(0L)).as("node_xor"))
-        .select(lit(r.toLong).as("round"), col("n_nodes"),
-          col("n_edges"), col("node_xor"))
-    }
-    rounds.reduce(_ unionByName _).orderBy(col("round"))
-  }
-
-  /** basket r14 candidate: reads the BUCKETED lineitem landing — the
-    * scan's HashPartitioning(l_orderkey) satisfies BOTH the (okey,pkey)
-    * distinct's clustering (subset rule) and the basket collect_set, so
-    * the only remaining data exchange is the small supp re-key.
-    */
-  def basketV4(spark: SparkSession, dir: String): DataFrame = {
-    val (lTbl, _) = graft.sources.Bucketed.ensure(spark, dir)
-    val li = spark.table(lTbl)
-      .select(col("l_orderkey"), col("l_partkey"))
-    val po = li.distinct()
-    val supp = po.groupBy(col("l_partkey")).agg(count(lit(1)).as("supp_i"))
-    val nOrders = po.agg(countDistinct(col("l_orderkey")).as("n_orders"))
-    val baskets = li
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("items"))
-    val pairsCol = expr(
-      "flatten(transform(items, (x, i) -> " +
-        "transform(slice(items, i + 2, size(items)), " +
-        "y -> struct(x AS pa, y AS pb))))")
-    val pairs = baskets.select(explode(pairsCol).as("pr"))
-      .select(col("pr.pa").as("pa"), col("pr.pb").as("pb"))
-      .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("supp_ab"))
-    pairs
-      .join(broadcast(supp.select(col("l_partkey").as("pa"),
-        col("supp_i").as("supp_a"))), Seq("pa"))
-      .join(broadcast(supp.select(col("l_partkey").as("pb"),
-        col("supp_i").as("supp_b"))), Seq("pb"))
-      .crossJoin(broadcast(nOrders))
-      .select(col("pa"), col("pb"),
-        col("supp_ab").cast("long").as("supp_ab"),
-        col("supp_a").cast("long").as("supp_a"),
-        col("supp_b").cast("long").as("supp_b"),
-        expr("supp_ab * 1000000 div supp_a").as("conf_ab_ppm"),
-        expr("supp_ab * 1000000 div supp_b").as("conf_ba_ppm"),
-        expr("supp_ab * n_orders * 1000000 div (supp_a * supp_b)")
-          .as("lift_ppm"))
-      .orderBy(col("supp_ab").desc, col("lift_ppm").desc,
-        col("pa"), col("pb"))
-      .limit(20)
-  }
-
-  /** gsp r14 candidate: the cp edge frame builds from the CO-BUCKETED
-    * lineitem/orders landing — the okey=okey join runs as an
-    * exchange-free merge over pre-sorted buckets, killing both wide
-    * exchanges in the pinned-frame build. Rounds unchanged.
-    */
-  def gspV8(spark: SparkSession, dir: String): DataFrame = {
-    val (lTbl, oTbl) = graft.sources.Bucketed.ensure(spark, dir)
-    val li = spark.table(lTbl).select(col("l_orderkey"), col("l_partkey"))
-    val o = spark.table(oTbl).select(col("o_orderkey"), col("o_custkey"))
-    val cp = li.hint("merge").join(o, col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-      .localCheckpoint()
-    val seeds = Tables.customer(spark, dir)
-      .filter(col("c_nationkey") === 0)
-      .select(col("c_custkey").as("id"))
-      .join(cp.select(col("c").as("id")), Seq("id"), "left_semi")
-    var dC = seeds.select(col("id"), lit(0L).as("dist")).localCheckpoint()
-    var dP = spark.range(0).select(col("id"), lit(0L).as("dist"))
-    var frontier = dC.select(col("id"))
-    for (k <- 1 to 4) {
-      val fromC = k % 2 == 1
-      val (key, other) = if (fromC) ("c", "p") else ("p", "c")
-      val own = if (fromC) dP else dC
-      val cand = cp
-        .join(broadcast(frontier.withColumnRenamed("id", key)), Seq(key))
-        .select(col(other).as("id")).distinct()
-      val fresh = cand
-        .join(broadcast(own.select(col("id"))), Seq("id"), "left_anti")
-        .select(col("id"), lit(k.toLong).as("dist"))
-        .localCheckpoint()
-      if (fromC) dP = dP.unionByName(fresh)
-      else dC = dC.unionByName(fresh)
-      frontier = fresh.select(col("id"))
-    }
-    val custs = cp.select(col("c").as("id")).distinct()
-      .join(dC, Seq("id"), "left")
-      .select(lit("customer").as("kind"), col("id"), col("dist"))
-    val parts = cp.select(col("p").as("id")).distinct()
-      .join(dP, Seq("id"), "left")
-      .select(lit("part").as("kind"), col("id"), col("dist"))
-    custs.unionByName(parts)
-      .select(col("kind"), coalesce(col("dist"), lit(-1L)).as("dist"),
-        col("id"))
-      .groupBy(col("kind"), col("dist"))
-      .agg(count(lit(1)).as("n_nodes"),
-        bit_xor(col("id")).as("id_xor"),
-        min(col("id")).as("min_id"),
-        max(col("id")).as("max_id"))
-      .orderBy(col("kind"), col("dist"))
-  }
-
-  /** gsp r14 candidate: v8's co-bucketed cp build + a FUSED census —
-    * one exploded (kind, id) pass over cp (ONE distinct exchange instead
-    * of two) and one broadcast join against the tagged dist union.
-    */
-  def gspV9(spark: SparkSession, dir: String): DataFrame = {
-    val (lTbl, oTbl) = graft.sources.Bucketed.ensure(spark, dir)
-    val li = spark.table(lTbl).select(col("l_orderkey"), col("l_partkey"))
-    val o = spark.table(oTbl).select(col("o_orderkey"), col("o_custkey"))
-    val cp = li.hint("merge").join(o, col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-      .localCheckpoint()
-    val seeds = Tables.customer(spark, dir)
-      .filter(col("c_nationkey") === 0)
-      .select(col("c_custkey").as("id"))
-      .join(cp.select(col("c").as("id")), Seq("id"), "left_semi")
-    var dC = seeds.select(col("id"), lit(0L).as("dist")).localCheckpoint()
-    var dP = spark.range(0).select(col("id"), lit(0L).as("dist"))
-    var frontier = dC.select(col("id"))
-    for (k <- 1 to 4) {
-      val fromC = k % 2 == 1
-      val (key, other) = if (fromC) ("c", "p") else ("p", "c")
-      val own = if (fromC) dP else dC
-      val cand = cp
-        .join(broadcast(frontier.withColumnRenamed("id", key)), Seq(key))
-        .select(col(other).as("id")).distinct()
-      val fresh = cand
-        .join(broadcast(own.select(col("id"))), Seq("id"), "left_anti")
-        .select(col("id"), lit(k.toLong).as("dist"))
-        .localCheckpoint()
-      if (fromC) dP = dP.unionByName(fresh)
-      else dC = dC.unionByName(fresh)
-      frontier = fresh.select(col("id"))
-    }
-    val dists = dC.select(lit("customer").as("kind"), col("id"),
-        col("dist"))
-      .unionByName(dP.select(lit("part").as("kind"), col("id"),
-        col("dist")))
-    cp.select(explode(array(
-        struct(lit("customer").as("kind"), col("c").as("id")),
-        struct(lit("part").as("kind"), col("p").as("id")))).as("n"))
-      .select(col("n.kind").as("kind"), col("n.id").as("id"))
-      .distinct()
-      .join(broadcast(dists), Seq("kind", "id"), "left")
-      .select(col("kind"), coalesce(col("dist"), lit(-1L)).as("dist"),
-        col("id"))
-      .groupBy(col("kind"), col("dist"))
-      .agg(count(lit(1)).as("n_nodes"),
-        bit_xor(col("id")).as("id_xor"),
-        min(col("id")).as("min_id"),
-        max(col("id")).as("max_id"))
-      .orderBy(col("kind"), col("dist"))
-  }
-
-  /** interval-bins r14 probe (r13 verdict task 3): the ledger's
-    * rejected repartition(bin)+pin zero-exchange join, re-measured at
-    * sf1 where the two bin exchanges actually carry 10x the data. AQE
-    * stays ON (the committed shape's skew protection); the pinned frame
-    * joins itself with no exchange because the checkpoint captures the
-    * bin partitioning pre-AQE-reset only when taken eagerly here.
-    */
-  def binsV2(spark: SparkSession, dir: String): DataFrame = {
-    val BinUs = 3600L * 1000000L
-    val e = Tables.events(spark, dir)
-    val ord = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val gapUs = unix_micros(col("ts")) - unix_micros(lag(col("ts"), 1).over(ord))
-    val flagged = e.withColumn("is_start",
-      when(gapUs.isNull || gapUs > 1800L * 1000000L, 1L).otherwise(0L))
-    val sess = flagged
-      .withColumn("session_no", sum(col("is_start")).over(
-        ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("user_id"), col("session_no"))
-      .agg(
-        min(col("ts")).as("s_ts"),
-        min(unix_micros(col("ts"))).as("s_us"),
-        max(unix_micros(col("ts"))).as("e_us"))
-      .localCheckpoint()
-    val binned = sess.select(
-      col("user_id"), col("session_no"), col("s_ts"), col("s_us"), col("e_us"),
-      explode(sequence(
-        expr(s"s_us div $BinUs"), expr(s"e_us div $BinUs"))).as("bin"))
-      .repartition(col("bin"))
-      .localCheckpoint()
-    val a = binned.toDF("a_user", "a_no", "a_sts", "a_s", "a_e", "bin")
-    val b = binned.select(
-      col("s_us").as("b_s"), col("e_us").as("b_e"), col("bin"))
-    val pairs = a.join(b.hint("shuffle_hash"), Seq("bin"))
-      .filter(col("a_s") <= col("b_e") && col("b_s") <= col("a_e") &&
-        expr(s"greatest(a_s, b_s) div $BinUs") === col("bin"))
-    pairs.groupBy(col("a_user"), col("a_no"), col("a_sts"))
-      .agg((count(lit(1)) - 1L).as("n_concurrent"))
-      .select(
-        col("a_user").as("user_id"), col("a_no").as("session_no"),
-        graft.functions.Det.fmtTs(col("a_sts")).as("session_start"),
-        col("n_concurrent"))
-      .orderBy(col("user_id"), col("session_no"))
-  }
-
-  /** backlog r14 candidate: the order/lineitem pairing reads the
-    * CO-BUCKETED landing — the per-order last-ship aggregate inherits
-    * the scan's HashPartitioning (exchange-free) and the pairing is a
-    * zero-exchange merge join, deleting the one fact-sized exchange the
-    * cogroup-via-union shape paid. The boundary-delta aggregate is then
-    * the plan's only data shuffle.
-    */
-  def backlogV4(spark: SparkSession, dir: String): DataFrame = {
-    val (lTbl, oTbl) = graft.sources.Bucketed.ensure(spark, dir)
-    val ship = spark.table(lTbl)
-      .select(col("l_orderkey").as("k"), to_date(col("l_shipdate")).as("d"))
-      .groupBy(col("k")).agg(max(col("d")).as("last_ship"))
-    val orderSide = spark.table(oTbl)
-      .select(col("o_orderkey").as("k"),
-        to_date(col("o_orderdate")).as("s"))
-    val perOrder = ship.hint("merge")
-      .join(orderSide, Seq("k"))
-    val deltas = perOrder
-      .select(explode(array(
-        struct(col("s").as("d"), lit(1L).as("delta")),
-        struct(date_add(col("last_ship"), 1).as("d"),
-          lit(-1L).as("delta")))).as("b"))
-      .groupBy(col("b.d").as("d")).agg(sum(col("b.delta")).as("delta"))
-      .withColumn("yr", year(col("d")))
-    val wCum = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("yr")).orderBy(col("d"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val inYear = deltas
-      .withColumn("cin", sum(col("delta")).over(wCum))
-    val yearTot = deltas.groupBy(col("yr")).agg(sum(col("delta")).as("yt"))
-    val off = yearTot.as("a")
-      .join(yearTot.as("b"), col("b.yr") < col("a.yr"))
-      .groupBy(col("a.yr").as("yr")).agg(sum(col("b.yt")).as("off"))
-    val cum = inYear.join(broadcast(off), Seq("yr"), "left")
-      .select(col("d"),
-        (col("cin") + coalesce(col("off"), lit(0L))).as("open_orders"))
-    cum.groupBy(trunc(col("d"), "month").as("m"))
-      .agg(count(lit(1)).as("n_boundary_days"),
-        max(struct(col("d"), col("open_orders"))).as("eom"),
-        max(col("open_orders")).as("peak_open"))
-      .select(fmtDate(col("m")).as("month"), col("n_boundary_days"),
-        col("eom.open_orders").cast("long").as("eom_open"),
-        col("peak_open").cast("long").as("peak_open"))
-      .orderBy(col("month"))
-  }
-
-  /** kcore r14 candidate 8: v6's bucketed build, but edges0 and deg0
-    * CACHE (lazy persist) instead of eager localCheckpoint pins — the k
-    * driver probe then materializes BOTH in its one job (edges0 fills
-    * the cache on the way to deg0's shuffle), deleting two standalone
-    * pin jobs from the round ladder. Mid-round pins unchanged.
-    */
-  def kcoreV8(spark: SparkSession, dir: String): DataFrame = {
-    val (lTbl, _) = graft.sources.Bucketed.ensure(spark, dir)
-    val baskets = spark.table(lTbl)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .filter(col("l_partkey") % 2 === 0)
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("items"))
-    val pairsCol = expr(
-      "flatten(transform(items, (v, i) -> " +
-        "transform(slice(items, i + 2, size(items)), " +
-        "w -> struct(v AS x, w AS y))))")
-    val edges0 = baskets.select(explode(pairsCol).as("pr"))
-      .select(col("pr.x").as("x"), col("pr.y").as("y"))
-      .distinct().persist()
-    def degrees(e: DataFrame): DataFrame =
-      e.select(explode(array(col("x"), col("y"))).as("n"))
-        .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    var deg = degrees(edges0).persist()
-    val kRow = deg.agg(expr("sum(deg) div count(1) + 1").as("k")).head()
-    val k = if (kRow.isNullAt(0)) Long.MaxValue else kRow.getLong(0)
-    var edges = edges0
-    val rounds = (1 to 3).map { r =>
-      val keep = deg.filter(col("deg") >= k).select(col("n"))
-      edges = edges
-        .join(broadcast(keep), col("x") === keep("n"), "left_semi")
-        .join(broadcast(keep), col("y") === keep("n"), "left_semi")
-        .select(col("x"), col("y"))
-      val d = degrees(edges)
-      deg = if (r < 3) d.localCheckpoint() else d
-      deg.agg(
-          coalesce(count(col("n")), lit(0L)).as("n_nodes"),
-          coalesce(expr("sum(deg) div 2"), lit(0L)).as("n_edges"),
-          coalesce(bit_xor(col("n")), lit(0L)).as("node_xor"))
-        .select(lit(r.toLong).as("round"), col("n_nodes"),
-          col("n_edges"), col("node_xor"))
-    }
-    rounds.reduce(_ unionByName _).orderBy(col("round"))
-  }
-
-  /** probe: kcore's edges0 build alone (basket agg + pair explode +
-    * distinct + pin) — isolates the round-independent cost floor. */
-  def kcoreEdges0(spark: SparkSession, dir: String): DataFrame = {
-    val baskets = Tables.lineitem(spark, dir)
-      .filter(col("l_partkey") % 2 === 0)
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("items"))
-    val pairsCol = expr(
-      "flatten(transform(items, (v, i) -> " +
-        "transform(slice(items, i + 2, size(items)), " +
-        "w -> struct(v AS x, w AS y))))")
-    baskets.select(explode(pairsCol).as("pr"))
-      .select(col("pr.x").as("x"), col("pr.y").as("y"))
-      .distinct().localCheckpoint().agg(count(lit(1)).as("n"))
-  }
-
-  /** gsp r11 candidate: TWO BFS levels fused per checkpoint — the fused
-    * round computes fresh_P (level k) and fresh_C (level k+1) in one DAG,
-    * tags them into ONE union frame, and pins that single frame (one
-    * checkpoint job per two levels instead of two); the halves split back
-    * out as map-side filters on the pinned frame.
-    */
-  def gspV6(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir)
-      .select(col("o_orderkey"), col("o_custkey"))
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
-    val cp = li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-      .localCheckpoint()
-    val seeds = Tables.customer(spark, dir)
-      .filter(col("c_nationkey") === 0)
-      .select(col("c_custkey").as("id"))
-      .join(cp.select(col("c").as("id")), Seq("id"), "left_semi")
-    var dC = seeds.select(col("id"), lit(0L).as("dist")).localCheckpoint()
-    var dP = spark.range(0).select(col("id"), lit(0L).as("dist"))
-    var frontierC = dC.select(col("id"))
-    for (k <- Seq(1, 3)) {
-      // level k: C → P
-      val candP = cp
-        .join(broadcast(frontierC.withColumnRenamed("id", "c")), Seq("c"))
-        .select(col("p").as("id")).distinct()
-      val freshP = candP
-        .join(broadcast(dP.select(col("id"))), Seq("id"), "left_anti")
-        .select(col("id"), lit(k.toLong).as("dist"))
-      // level k+1: P → C, probing freshP (broadcast materializes it
-      // inside this same job)
-      val candC = cp
-        .join(broadcast(freshP.select(col("id").as("p"))), Seq("p"))
-        .select(col("c").as("id")).distinct()
-      val freshC = candC
-        .join(broadcast(dC.select(col("id"))), Seq("id"), "left_anti")
-        .select(col("id"), lit((k + 1).toLong).as("dist"))
-      // ONE pin for both halves
-      val both = freshP.select(lit("p").as("side"), col("id"), col("dist"))
-        .unionByName(
-          freshC.select(lit("c").as("side"), col("id"), col("dist")))
-        .localCheckpoint()
-      dP = dP.unionByName(
-        both.filter(col("side") === "p").select(col("id"), col("dist")))
-      dC = dC.unionByName(
-        both.filter(col("side") === "c").select(col("id"), col("dist")))
-      frontierC =
-        both.filter(col("side") === "c").select(col("id"))
-    }
-    val custs = cp.select(col("c").as("id")).distinct()
-      .join(dC, Seq("id"), "left")
-      .select(lit("customer").as("kind"), col("id"), col("dist"))
-    val parts = cp.select(col("p").as("id")).distinct()
-      .join(dP, Seq("id"), "left")
-      .select(lit("part").as("kind"), col("id"), col("dist"))
-    custs.unionByName(parts)
-      .select(col("kind"), coalesce(col("dist"), lit(-1L)).as("dist"),
-        col("id"))
-      .groupBy(col("kind"), col("dist"))
-      .agg(count(lit(1)).as("n_nodes"),
-        bit_xor(col("id")).as("id_xor"),
-        min(col("id")).as("min_id"),
-        max(col("id")).as("max_id"))
-      .orderBy(col("kind"), col("dist"))
-  }
-
-  /** gsp_v7 (r12, r11 verdict task 8): TWO levels fused per pin with the
-    * intermediate frontier CACHED (persist) instead of checkpointed or
-    * broadcast-materialized — the refinement of r11's losing gsp v6,
-    * whose fused union branch replayed freshP's distinct exchange
-    * because a broadcast materialization serves only broadcast
-    * consumers. Here freshP.cache() lets BOTH its consumers (the next
-    * level's broadcast build and the dP union) read one materialization.
-    */
-  def gspV7(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir)
-      .select(col("o_orderkey"), col("o_custkey"))
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
-    val cp = li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-      .localCheckpoint()
-    val seeds = Tables.customer(spark, dir)
-      .filter(col("c_nationkey") === 0)
-      .select(col("c_custkey").as("id"))
-      .join(cp.select(col("c").as("id")), Seq("id"), "left_semi")
-    var dC = seeds.select(col("id"), lit(0L).as("dist")).localCheckpoint()
-    var dP = spark.range(0).select(col("id"), lit(0L).as("dist"))
-    var frontier = dC.select(col("id"))
-    val cached = scala.collection.mutable.Buffer.empty[DataFrame]
-    for (k <- Seq(1, 3)) {
-      // level k: frontier is customer-side; fresh parts — CACHED
-      val candP = cp
-        .join(broadcast(frontier.withColumnRenamed("id", "c")), Seq("c"))
-        .select(col("p").as("id")).distinct()
-      val freshP = candP
-        .join(broadcast(dP.select(col("id"))), Seq("id"), "left_anti")
-        .select(col("id"), lit(k.toLong).as("dist"))
-        .persist()
-      cached += freshP
-      // level k+1: fresh customers off the cached parts frontier — pinned
-      val candC = cp
-        .join(broadcast(freshP.select(col("id").as("p"))), Seq("p"))
-        .select(col("c").as("id")).distinct()
-      val freshC = candC
-        .join(broadcast(dC.select(col("id"))), Seq("id"), "left_anti")
-        .select(col("id"), lit(k.toLong + 1).as("dist"))
-        .localCheckpoint()
-      dP = dP.unionByName(freshP)
-      dC = dC.unionByName(freshC)
-      frontier = freshC.select(col("id"))
-    }
-    val custs = cp.select(col("c").as("id")).distinct()
-      .join(dC, Seq("id"), "left")
-      .select(lit("customer").as("kind"), col("id"), col("dist"))
-    val parts = cp.select(col("p").as("id")).distinct()
-      .join(dP, Seq("id"), "left")
-      .select(lit("part").as("kind"), col("id"), col("dist"))
-    // NOTE: the cached frontiers deliberately leak for the A/B probe's
-    // lifetime — unpersisting before execution would void the cache the
-    // variant exists to measure; they are node-sized frames.
-    custs.unionByName(parts)
-      .select(col("kind"), coalesce(col("dist"), lit(-1L)).as("dist"),
-        col("id"))
-      .groupBy(col("kind"), col("dist"))
-      .agg(count(lit(1)).as("n_nodes"),
-        bit_xor(col("id")).as("id_xor"),
-        min(col("id")).as("min_id"),
-        max(col("id")).as("max_id"))
-      .orderBy(col("kind"), col("dist"))
-  }
-
-  /** Scratch map: point entries at candidate implementations while
-    * iterating (e.g. a rewritten operator vs the registered one). */
-  // ===== r16 probes =====
-
-  /** r16: events_anomaly_mad as ONE aggregation chain — the per-type
-    * histogram collects into a sorted cell array and med/MAD/flags all
-    * compute in a single projection (HOF lambdas over ≤|value domain|
-    * cells), deleting both cumulative windows, both broadcast joins and
-    * the repartition. Exchanges: (type,c) cell agg + |types|-row collect
-    * + presentation sort. */
-  def madV4(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select(col("event_type"), col("event_id"),
-        scaledLong(col("value"), 100L).as("c"))
-    val cells = ev.groupBy(col("event_type"), col("c"))
-      .agg(count(lit(1)).as("cnt"), bit_xor(col("event_id")).as("idx"))
-    val perType = cells.groupBy(col("event_type"))
-      .agg(sort_array(collect_list(struct(col("c"), col("cnt"), col("idx"))))
-        .as("cs"))
-      .withColumn("n_events", expr(
-        "aggregate(cs, 0L, (a, x) -> a + x.cnt)"))
-      .withColumn("med", expr(
-        """aggregate(cs, named_struct('cum', 0L, 'med', CAST(NULL AS BIGINT)),
-          |  (a, x) -> named_struct(
-          |    'cum', a.cum + x.cnt,
-          |    'med', coalesce(a.med,
-          |      IF(a.cum + x.cnt >= (n_events + 1) div 2, x.c,
-          |         CAST(NULL AS BIGINT))))).med""".stripMargin))
-      .withColumn("ds", expr(
-        "sort_array(transform(cs, x -> named_struct(" +
-          "'d', abs(x.c - med), 'cnt', x.cnt)))"))
-      .withColumn("mad", expr(
-        """aggregate(ds, named_struct('cum', 0L, 'mad', CAST(NULL AS BIGINT)),
-          |  (a, x) -> named_struct(
-          |    'cum', a.cum + x.cnt,
-          |    'mad', coalesce(a.mad,
-          |      IF(a.cum + x.cnt >= (n_events + 1) div 2, x.d,
-          |         CAST(NULL AS BIGINT))))).mad""".stripMargin))
-      .withColumn("n_anom", expr(
-        "aggregate(cs, 0L, (a, x) -> " +
-          "a + IF(abs(x.c - med) * 10000L > mad * 44478L, x.cnt, 0L))"))
-      .withColumn("anom_id_xor", expr(
-        "IF(n_anom = 0, CAST(NULL AS BIGINT), aggregate(cs, 0L, (a, x) -> " +
-          "IF(abs(x.c - med) * 10000L > mad * 44478L, a ^ x.idx, a)))"))
-    perType.select(col("event_type"),
-        col("n_events"), col("med").as("med_cents"), col("mad").as("mad_cents"),
-        col("n_anom"), col("anom_id_xor"))
-      .orderBy(col("event_type"))
-  }
-
-  /** r16: doc_near_dedup with the shingle frame PINNED (the est_error
-    * discipline): ex feeds bands + both verify legs — without the pin
-    * the scan+explode+distinct replays per consumer subtree. */
-  def nddV2(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.NearDup
-    val ex = NearDup.shingles(Tables.documentsWide(spark, dir))
-      .localCheckpoint()
-    val bands = NearDup.minhashBands(ex)
-    val cand = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band_id") === col("b.band_id") &&
-          col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-      .distinct()
-    NearDup.verifyPairs(cand, ex)
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  /** r16: doc_ngram_jaccard with the banded-array posts frame PINNED:
-    * the salted sides are no longer identical subplans (si/sj swap), so
-    * ReusedExchange cannot fire and the packed-gram array build runs
-    * TWICE in the shipped shape. */
-  def jaccV2(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.NearDup
-    val base = Tables.documentsWide(spark, dir)
-      .select(col("doc_id"), nrm(col("text")).as("nt"))
-      .filter(length(col("nt")) >= 4)
-    val arr = NearDup.packedGram4Arrays(base)
-    val posts = base.select(col("doc_id"),
-        (length(col("nt")).cast("long") / lit(4L)).cast("long").as("band"))
-      .select(col("doc_id"),
-        explode(array(col("band"), col("band") + 1)).as("pband"))
-      .join(arr, Seq("doc_id"))
-      .localCheckpoint()
-    val S = 8
-    val nPart = spark.sparkContext.defaultParallelism * 2
-    val saltKeys = Seq(col("pband"), col("si"), col("sj"))
-    val pa = posts
-      .withColumn("si", pmod(hash(col("doc_id")), lit(S)))
-      .withColumn("sj", explode(sequence(lit(0), lit(S - 1))))
-      .repartition(nPart, saltKeys: _*)
-    val pb = posts
-      .withColumn("sj", pmod(hash(col("doc_id")), lit(S)))
-      .withColumn("si", explode(sequence(lit(0), lit(S - 1))))
-      .repartition(nPart, saltKeys: _*)
-    pa.as("a")
-      .join(pb.as("b"),
-        col("a.pband") === col("b.pband") &&
-          col("a.si") === col("b.si") && col("a.sj") === col("b.sj") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        graft.functions.VectorExprs.sortedIntersectCount(col("a.gs"), col("b.gs"))
-          .as("n_common"),
-        col("a.ng").as("nga"), col("b.ng").as("ngb"))
-      .distinct()
-      .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (col("nga") + col("ngb") - col("n_common")).cast("double"))
-      .filter(col("jaccard") >= 0.5)
-      .select(col("doc_a"), col("doc_b"), col("n_common"), col("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  /** r16: graph_triangles served from the kcore BUCKETED ADJACENCY
-    * landing (the r15 verdict transplant): e0 = adj filtered src<dst
-    * (each undirected edge stored twice), adjacency arrays from an
-    * exchange-free groupBy(src) on the bucketed scan — the basket
-    * build + pair distinct (0.8 s raw at sf0.1) leave the per-run path. */
-  def triV3(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Pipeline
-    val adjT = spark.table(Pipeline.kcoreAdjTable(spark, dir))
-    val adj = adjT.groupBy(col("src"))
-      .agg(sort_array(collect_list(col("dst"))).as("arr"))
-    val e0 = adjT.filter(col("src") < col("dst"))
-      .select(col("src").as("x"), col("dst").as("y"))
-    val emb = e0.as("e")
-      .join(broadcast(adj.as("p")), col("e.x") === col("p.src"))
-      .join(broadcast(adj.as("q")), col("e.y") === col("q.src"))
-      .select(col("e.x").as("part_a"), col("e.y").as("part_b"),
-        graft.functions.VectorExprs.sortedIntersectCount(
-          col("p.arr"), col("q.arr")).as("n_common"))
-      .localCheckpoint()
-    val tot = emb.agg(count(lit(1)).as("n_edges"),
-      expr("sum(n_common) div 3").as("n_triangles"))
-    emb.crossJoin(broadcast(tot))
-      .orderBy(col("n_common").desc, col("part_a"), col("part_b"))
-      .limit(10)
-  }
-
-  /** r16: doc_decontaminate with the tokenized corpus PINNED — toked
-    * feeds bench grams, corpus grams and the final rollup; the shipped
-    * shape re-scans + re-normalizes + re-splits per consumer. */
-  def decontV2(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val toked = d.select(col("doc_id"), col("lang"),
-        split(nrm(col("text")), " ").as("toks"))
-      .withColumn("n", size(col("toks")))
-      .localCheckpoint()
-    def grams(df: DataFrame): DataFrame = df
-      .filter(col("n") >= 8)
-      .select(col("doc_id"), col("toks"),
-        explode(sequence(lit(1), col("n") - 7)).as("s"))
-      .select(col("doc_id"),
-        xxhash64(concat_ws(" ", slice(col("toks"), col("s"), lit(8))))
-          .as("g"))
-    val benchGrams = grams(toked.filter(col("doc_id") % 50 === 0))
-      .select(col("g")).distinct()
-    val contaminated = grams(toked.filter(col("doc_id") % 50 =!= 0))
-      .join(broadcast(benchGrams), Seq("g"), "left_semi")
-      .select(col("doc_id")).distinct()
-      .withColumn("hit", lit(1L))
-    toked.filter(col("doc_id") % 50 =!= 0)
-      .join(contaminated, Seq("doc_id"), "left_outer")
-      .groupBy(col("lang"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_contaminated"),
-        coalesce(sum(when(col("hit").isNotNull, col("doc_id"))), lit(0L))
-          .as("contaminated_id_sum"))
-      .withColumn("contam_rate",
-        col("n_contaminated").cast("double") / col("n_docs").cast("double"))
-      .orderBy(col("lang"))
-  }
-
-  /** r16: corpus_clean with ONE pinned tokenized-corpus frame feeding
-    * every stage (bench grams, corpus grams, gate arithmetic) and the
-    * simhash stage exploding the PINNED toks instead of re-norm+split
-    * of the gated text. */
-  def cleanV2(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{NearDup, Pipeline}
-    val toked = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), nrm(col("text")).as("nt"))
-      .withColumn("toks", split(col("nt"), " "))
-      .withColumn("n", size(col("toks")))
-      .localCheckpoint()
-    def grams(df: DataFrame): DataFrame = df
-      .filter(col("n") >= 8)
-      .select(col("doc_id"), col("toks"),
-        explode(sequence(lit(1), col("n") - 7)).as("s"))
-      .select(col("doc_id"),
-        xxhash64(concat_ws(" ", slice(col("toks"), col("s"), lit(8))))
-          .as("g"))
-    val corpus = toked.filter(col("doc_id") % 50 =!= 0)
-    val benchGrams = grams(toked.filter(col("doc_id") % 50 === 0))
-      .select(col("g")).distinct()
-    val contaminated = grams(corpus)
-      .join(broadcast(benchGrams), Seq("g"), "left_semi")
-      .select(col("doc_id")).distinct()
-      .withColumn("contam", lit(true))
-    val nTok = col("n").cast("double")
-    val nStop = regexp_count(col("nt"),
-      lit("(^| )(the|a|of|and|to)(?= |$)")).cast("double")
-    val wordLen = (length(col("nt")) - (col("n") - 1)).cast("double") / nTok
-    val quality =
-      lit(0.4) * least(nTok / lit(100.0), lit(1.0)) +
-        lit(0.3) * (nStop / nTok) +
-        lit(0.3) * least(wordLen / lit(8.0), lit(1.0))
-    val flagged = corpus
-      .join(contaminated, Seq("doc_id"), "left_outer")
-      .withColumn("f_dec", col("contam").isNull)
-      .withColumn("f_q",
-        col("f_dec") && col("n") >= 16 && quality >= 0.35)
-      .localCheckpoint()
-    val eligible = flagged.filter(col("f_q"))
-      .select(col("doc_id"), col("toks"))
-    val occ = eligible
-      .select(col("doc_id"), explode(col("toks")).as("tok"))
-      .withColumn("h48",
-        conv(substring(md5(col("tok")), 1, 12), 16, 10).cast("long"))
-    val sig = occ.groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).as("t"),
-        (0 until 16).map { j =>
-          sum(expr(
-            s"(h48 div ${1L << j}) % 2" +
-              s" + ((h48 div ${1L << (j + 16)}) % 2) * ${1L << 21}" +
-              s" + ((h48 div ${1L << (j + 32)}) % 2) * ${1L << 42}"))
-            .as(s"c$j")
-        }: _*)
-      .select(col("doc_id"),
-        (0 until 48).map { b =>
-          val j = b % 16
-          val off = (b / 16) * 21
-          when(expr(s"((c$j div ${1L << off}) % ${1L << 21}) * 2 > t"),
-            lit(1L << b)).otherwise(lit(0L))
-        }.reduce(_ + _).as("simhash"))
-      .localCheckpoint()
-    val pairs = NearDup.simhashPairsOf(sig)
-      .select(col("doc_a"), col("doc_b"))
-    val labels = Pipeline.connectedComponents(pairs)
-      .select(col("id"), col("label"))
-    flagged.join(labels, flagged("doc_id") === labels("id"), "left_outer")
-      .withColumn("f_final",
-        col("f_q") && (col("label").isNull || col("label") === col("doc_id")))
-      .groupBy(col("lang"))
-      .agg(
-        count(lit(1)).as("n_input"),
-        sum(when(col("f_dec"), 1L).otherwise(0L)).as("n_decontaminated"),
-        sum(when(col("f_q"), 1L).otherwise(0L)).as("n_quality"),
-        sum(when(col("f_final"), 1L).otherwise(0L)).as("n_final"),
-        bit_xor(when(col("f_final"), col("doc_id"))).as("kept_id_xor"))
-      .orderBy(col("lang"))
-  }
-
-  /** r16: cdc_incremental_neardup with the delta band frame and the
-    * verify shingle frame PINNED — deltaBands feeds the probe join's
-    * both sides (a + the union leg of b), and the candidate-narrowed
-    * shingle table feeds both verify legs. */
-  def incnddV2(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.NearDup
-    val idx = NearDup.baseIndex(spark, dir)
-    val baseBands = spark.read.parquet(s"$idx/bands")
-    val basePairs = spark.read.parquet(s"$idx/pairs")
-    val delta = Tables.documentsWide(spark, dir)
-      .filter(col("doc_id") % 20 === 0)
-    val deltaBands = NearDup.minhashBands(NearDup.shingles(delta))
-      .localCheckpoint()
-    val cand = deltaBands.as("a")
-      .join(baseBands.unionByName(deltaBands).as("b"),
-        col("a.band_id") === col("b.band_id") &&
-          col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") =!= col("b.doc_id"))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("da"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("db"))
-      .distinct()
-      .localCheckpoint()
-    val candIds = cand
-      .select(explode(array(col("da"), col("db"))).as("doc_id"))
-      .distinct()
-    val candDocs = Tables.documentsWide(spark, dir)
-      .join(broadcast(candIds), Seq("doc_id"), "left_semi")
-    val deltaPairs = NearDup.verifyPairs(cand,
-      NearDup.shingles(candDocs).localCheckpoint())
-    basePairs.unionByName(deltaPairs)
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  /** r16: graph_pagerank with the edge pin built from the CO-BUCKETED
-    * lineitem/orders landing (merge join, zero exchanges in the build)
-    * instead of a shuffle join of the raw scans. */
-  def prV2(spark: SparkSession, dir: String): DataFrame = {
-    val (lTbl, oTbl) = graft.sources.Bucketed.ensure(spark, dir)
-    val o = spark.table(oTbl).select(col("o_orderkey"), col("o_custkey"))
-    val li = spark.table(lTbl).select(col("l_orderkey"), col("l_partkey"))
-    val cp = li.hint("merge").join(o, col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey") * 2).as("src"),
-        (col("l_partkey") * 2 + 1).as("dst"))
-      .localCheckpoint()
-    val edges = cp.unionByName(
-        cp.select(col("dst").as("src"), col("src").as("dst")))
-    val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    val edgesD = edges.join(broadcast(outdeg), Seq("src"))
-      .coalesce(8).localCheckpoint()
-    val n = outdeg.count()
-    val r0 = 1000000000000000L / n
-    val base = (15L * r0) / 100L
-    var ranks = outdeg.select(col("src").as("node"), lit(r0).as("rank"))
-    for (_ <- 1 to 3) {
-      ranks = edgesD
-        .join(broadcast(ranks.select(col("node").as("src"), col("rank"))),
-          Seq("src"))
-        .select(col("dst").as("node"), expr("rank div deg").as("contrib"))
-        .groupBy(col("node")).agg(sum(col("contrib")).as("s"))
-        .select(col("node"),
-          (lit(base) + expr("(85 * s) div 100")).as("rank"))
-    }
-    ranks
-      .select(
-        when(col("node") % 2 === 0, lit("customer")).otherwise(lit("part"))
-          .as("kind"),
-        expr("node div 2").as("id"), col("rank"))
-      .orderBy(col("rank").desc, col("kind"), col("id"))
-      .limit(20)
-  }
-
-  /** r16b: connectedComponents copy with the per-round `next` pin LAZY —
-    * the convergence count then materializes the checkpoint inside its own
-    * job, folding 3 driver round-trips per round to 2. `half` stays eager:
-    * both sides of the dereference self-join read it, and a lazy pin lets
-    * the two shuffle-map stages compute the prop subtree concurrently
-    * (the r15-measured double-execution failure mode). */
-  private def ccLazy(rawPairs: DataFrame): DataFrame = {
-    val cols = rawPairs.columns
-    val pairs = rawPairs
-      .select(col(cols(0)).as("doc_a"), col(cols(1)).as("doc_b"))
-      .localCheckpoint()
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    var labels = edges
-      .groupBy(col("src"))
-      .agg(least(min(col("dst")), col("src")).as("label"))
-      .select(col("src").as("id"), col("label"))
-      .localCheckpoint()
-    val spark = rawPairs.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val partKey = "spark.sql.shuffle.partitions"
-    val aqePrev = spark.conf.get(aqeKey, "true")
-    val partPrev = spark.conf.get(partKey, "32")
-    spark.conf.set(aqeKey, "false")
-    spark.conf.set(partKey, "4")
-    try {
-      var changed = 1L
-      while (changed > 0) {
-        val prop = edges.join(labels, col("src") === col("id"))
-          .groupBy(col("dst"))
-          .agg(min(col("label")).as("nbr_min"))
-        val half = labels.as("x")
-          .join(prop, col("x.id") === col("dst"), "left")
-          .select(col("x.id").as("id"), col("x.label").as("old"),
-            least(col("x.label"), coalesce(col("nbr_min"), col("x.label")))
-              .as("l1"))
-          .localCheckpoint()
-        val next = half
-          .join(half.select(col("id").as("yid"), col("l1").as("ylabel")),
-            col("l1") === col("yid"), "left")
-          .select(col("id"),
-            least(col("l1"), coalesce(col("ylabel"), col("l1"))).as("label"),
-            col("old"))
-          .withColumn("chg", col("label") < col("old"))
-          .select(col("id"), col("label"), col("chg"))
-          .localCheckpoint(false)
-        changed = next.filter(col("chg")).count()
-        labels = next.select(col("id"), col("label"))
-      }
-    } finally {
-      spark.conf.set(aqeKey, aqePrev)
-      spark.conf.set(partKey, partPrev)
-    }
-    labels
-  }
-
-  /** r16b: ccLazy + self-loop edges folded into the prop aggregate — ONE
-    * join per round instead of two. edges2 = edges ∪ (v,v) over the static
-    * node set (a lazy union of two pinned frames — no pin needed), so
-    * min(label) over groupBy(dst) yields l1 = least(own, nbr min) directly
-    * and min(when(src===dst, label)) recovers the node's own previous
-    * label inside the same aggregate (exactly one self-loop row per node —
-    * the detector emits doc_a < doc_b, so no pre-existing self pairs). */
-  private def ccSelfLoop(rawPairs: DataFrame): DataFrame = {
-    val cols = rawPairs.columns
-    val pairs = rawPairs
-      .select(col(cols(0)).as("doc_a"), col(cols(1)).as("doc_b"))
-      .localCheckpoint()
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    var labels = edges
-      .groupBy(col("src"))
-      .agg(least(min(col("dst")), col("src")).as("label"))
-      .select(col("src").as("id"), col("label"))
-      .localCheckpoint()
-    val edges2 = edges.union(
-      labels.select(col("id").as("src"), col("id").as("dst")))
-    val spark = rawPairs.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val partKey = "spark.sql.shuffle.partitions"
-    val aqePrev = spark.conf.get(aqeKey, "true")
-    val partPrev = spark.conf.get(partKey, "32")
-    spark.conf.set(aqeKey, "false")
-    spark.conf.set(partKey, "4")
-    try {
-      var changed = 1L
-      while (changed > 0) {
-        val half = edges2.join(labels, col("src") === col("id"))
-          .groupBy(col("dst"))
-          .agg(min(col("label")).as("l1"),
-            min(when(col("src") === col("dst"), col("label"))).as("old"))
-          .select(col("dst").as("id"), col("l1"), col("old"))
-          .localCheckpoint()
-        val next = half
-          .join(half.select(col("id").as("yid"), col("l1").as("ylabel")),
-            col("l1") === col("yid"), "left")
-          .select(col("id"),
-            least(col("l1"), coalesce(col("ylabel"), col("l1"))).as("label"),
-            col("old"))
-          .withColumn("chg", col("label") < col("old"))
-          .select(col("id"), col("label"), col("chg"))
-          .localCheckpoint(false)
-        changed = next.filter(col("chg")).count()
-        labels = next.select(col("id"), col("label"))
-      }
-    } finally {
-      spark.conf.set(aqeKey, aqePrev)
-      spark.conf.set(partKey, partPrev)
-    }
-    labels
-  }
-
-  /** The simhash Hamming<=3 pair frame WITHOUT docSimhashDup's global
-    * orderBy — dedup_clusters/_survivorship destroy the order in the CC
-    * loop immediately, yet the Sort survives into CC's pair pin (Project
-    * preserves ordering, so EliminateSorts cannot fire) and pays a range
-    * exchange plus its sampling pass per query. */
-  private def simhashPairsUnordered(spark: SparkSession, dir: String)
-      : DataFrame = {
-    import graft.operators.NearDup
-    NearDup.simhashPairsOf(
-        NearDup.simhashSigOf(Tables.documentsWide(spark, dir)))
-      .select(col("doc_a"), col("doc_b"))
-  }
-
-  private def clustersTail(labels: DataFrame): DataFrame = labels
-    .groupBy(col("label").as("cluster"))
-    .agg(count(lit(1)).as("n_members"),
-      bit_xor(col("id")).as("member_id_xor"),
-      min(col("id")).as("min_member"),
-      max(col("id")).as("max_member"))
-    .orderBy(col("cluster"))
-
-  /** r16b: dedup_clusters fed from the unordered pair frame (stock CC). */
-  def cluV2(spark: SparkSession, dir: String): DataFrame =
-    clustersTail(graft.operators.Pipeline.connectedComponents(
-      simhashPairsUnordered(spark, dir)))
-
-  /** r16b: cluV2 + the lazy `next` pin. */
-  def cluV3(spark: SparkSession, dir: String): DataFrame =
-    clustersTail(ccLazy(simhashPairsUnordered(spark, dir)))
-
-  /** r16b: cluV3 + the self-loop fold (one join per CC round). */
-  def cluV4(spark: SparkSession, dir: String): DataFrame =
-    clustersTail(ccSelfLoop(simhashPairsUnordered(spark, dir)))
-
-  /** r16b: dedup_survivorship on the unordered pair frame + lazy-next CC. */
-  def survV2(spark: SparkSession, dir: String): DataFrame =
-    survTail(spark, dir, ccLazy(simhashPairsUnordered(spark, dir)))
-
-  /** r16b isolation arm: unordered pair frame + STOCK CC. */
-  def survV3(spark: SparkSession, dir: String): DataFrame =
-    survTail(spark, dir, graft.operators.Pipeline.connectedComponents(
-      simhashPairsUnordered(spark, dir)))
-
-  /** r16b: shipped dedup_survivorship + the `members` pin — the scoring
-    * leg (corpus scan + broadcast semi + norm/split/regex features) feeds
-    * BOTH the stats aggregate and the TopK election; unpinned it executes
-    * twice. members is |clustered docs| rows of 3 scalars. */
-  def survV4(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{NearDup, Pipeline}
-    val labels = Pipeline.connectedComponents(
-        NearDup.simhashDupPairs(spark, dir)
-          .select(col("doc_a"), col("doc_b")))
-      .select(col("id").as("doc_id"), col("label").as("cluster"))
-    val en = Seq("the", "a", "of", "and", "to")
-    val d = Tables.documents(spark, dir)
-      .join(broadcast(labels.select(col("doc_id"))), Seq("doc_id"),
-        "left_semi")
-      .withColumn("nt", nrm(col("text")))
-      .withColumn("toks", split(col("nt"), " "))
-    val nTok = size(col("toks")).cast("double")
-    val nStop = regexp_count(col("nt"),
-      lit(s"(^| )(${en.mkString("|")})(?= |$$)")).cast("double")
-    val lenScore = least(nTok / lit(100.0), lit(1.0))
-    val wordLen =
-      (length(col("nt")) - (size(col("toks")) - 1)).cast("double") / nTok
-    val scored = d.select(col("doc_id"),
-      (lit(0.4) * lenScore + lit(0.3) * (nStop / nTok) +
-        lit(0.3) * least(wordLen / lit(8.0), lit(1.0))).as("quality"))
-    val members = labels.join(scored, Seq("doc_id")).localCheckpoint()
-    val stats = members.groupBy(col("cluster"))
-      .agg(count(lit(1)).as("n_members"),
-        bit_xor(col("doc_id")).as("member_xor"))
-    val survivor = graft.plans.TopK.topKPerGroup(members, Seq("cluster"),
-        Seq(("quality", true), ("doc_id", false)), 1)
-      .select(col("cluster"), col("doc_id").as("survivor_doc"),
-        col("quality").as("survivor_quality"))
-    stats.join(survivor, Seq("cluster"))
-      .select(col("cluster"), col("n_members"), col("survivor_doc"),
-        col("survivor_quality"),
-        (col("n_members") - 1).as("n_dropped"),
-        col("member_xor").bitwiseXOR(col("survivor_doc"))
-          .as("dropped_id_xor"))
-      .orderBy(col("cluster"))
-  }
-
-  private def survTail(spark: SparkSession, dir: String,
-      ccLabels: DataFrame): DataFrame = {
-    val labels = ccLabels
-      .select(col("id").as("doc_id"), col("label").as("cluster"))
-    val en = Seq("the", "a", "of", "and", "to")
-    val d = Tables.documents(spark, dir)
-      .join(broadcast(labels.select(col("doc_id"))), Seq("doc_id"),
-        "left_semi")
-      .withColumn("nt", nrm(col("text")))
-      .withColumn("toks", split(col("nt"), " "))
-    val nTok = size(col("toks")).cast("double")
-    val nStop = regexp_count(col("nt"),
-      lit(s"(^| )(${en.mkString("|")})(?= |$$)")).cast("double")
-    val lenScore = least(nTok / lit(100.0), lit(1.0))
-    val wordLen =
-      (length(col("nt")) - (size(col("toks")) - 1)).cast("double") / nTok
-    val scored = d.select(col("doc_id"),
-      (lit(0.4) * lenScore + lit(0.3) * (nStop / nTok) +
-        lit(0.3) * least(wordLen / lit(8.0), lit(1.0))).as("quality"))
-    val members = labels.join(scored, Seq("doc_id"))
-    val stats = members.groupBy(col("cluster"))
-      .agg(count(lit(1)).as("n_members"),
-        bit_xor(col("doc_id")).as("member_xor"))
-    val survivor = graft.plans.TopK.topKPerGroup(members, Seq("cluster"),
-        Seq(("quality", true), ("doc_id", false)), 1)
-      .select(col("cluster"), col("doc_id").as("survivor_doc"),
-        col("quality").as("survivor_quality"))
-    stats.join(survivor, Seq("cluster"))
-      .select(col("cluster"), col("n_members"), col("survivor_doc"),
-        col("survivor_quality"),
-        (col("n_members") - 1).as("n_dropped"),
-        col("member_xor").bitwiseXOR(col("survivor_doc"))
-          .as("dropped_id_xor"))
-      .orderBy(col("cluster"))
-  }
-
-  /** r16b: doc_ngram_jaccard with the band length CARRIED through the
-    * gram distinct (one extra int per row, functionally dependent on
-    * doc_id so the distinct set is unchanged) — posts then derives from
-    * arr alone, deleting the second base scan+norm and the posts⋈arr
-    * join from the pin build. */
-  def jaccV3(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.Column
-    def packed(g: Column): Column =
-      ((ascii(g.substr(1, 1)).cast("long") * 65536L +
-        ascii(g.substr(2, 1)).cast("long")) * 65536L +
-        ascii(g.substr(3, 1)).cast("long")) * 65536L +
-        ascii(g.substr(4, 1)).cast("long")
-    val base = Tables.documentsWide(spark, dir)
-      .select(col("doc_id"), nrm(col("text")).as("nt"))
-      .filter(length(col("nt")) >= 4)
-    val arr = base
-      .select(col("doc_id"), col("nt"),
-        explode(sequence(lit(1), length(col("nt")) - 3)).as("i"))
-      .select(col("doc_id"), length(col("nt")).as("ln"),
-        packed(col("nt").substr(col("i"), lit(4))).as("g"))
-      .distinct()
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("g"))).as("gs"),
-        count(lit(1)).as("ng"), max(col("ln")).as("ln"))
-    val posts = arr
-      .select(col("doc_id"),
-        explode(array((col("ln").cast("long") / lit(4L)).cast("long"),
-          (col("ln").cast("long") / lit(4L)).cast("long") + 1)).as("pband"),
-        col("gs"), col("ng"))
-      .localCheckpoint()
-    val S = 8
-    val nPart = spark.sparkContext.defaultParallelism * 2
-    val saltKeys = Seq(col("pband"), col("si"), col("sj"))
-    val pa = posts
-      .withColumn("si", pmod(hash(col("doc_id")), lit(S)))
-      .withColumn("sj", explode(sequence(lit(0), lit(S - 1))))
-      .repartition(nPart, saltKeys: _*)
-    val pb = posts
-      .withColumn("sj", pmod(hash(col("doc_id")), lit(S)))
-      .withColumn("si", explode(sequence(lit(0), lit(S - 1))))
-      .repartition(nPart, saltKeys: _*)
-    pa.as("a")
-      .join(pb.as("b"),
-        col("a.pband") === col("b.pband") &&
-          col("a.si") === col("b.si") && col("a.sj") === col("b.sj") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        graft.functions.VectorExprs.sortedIntersectCount(
-          col("a.gs"), col("b.gs")).as("n_common"),
-        col("a.ng").as("nga"), col("b.ng").as("ngb"))
-      .distinct()
-      .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (col("nga") + col("ngb") - col("n_common")).cast("double"))
-      .filter(col("jaccard") >= 0.5)
-      .select(col("doc_a"), col("doc_b"), col("n_common"), col("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  def variants: Map[String, (SparkSession, String) => DataFrame] =
-    graft.SparkEntry.queries ++ Map[String, (SparkSession, String) => DataFrame](
-      "wmedian_old" -> (wmedianOld _),
-      "wmedian_v3" -> (wmedianV3 _),
-      "backlog_old" -> (backlogOld _),
-      "q16_old" -> (q16Old _),
-      "est_v2" -> (estV2 _),
-      "cont_v2" -> (contV2 _),
-      "spans_v2" -> (spansV2 _),
-      "backlog_v2" -> (backlogV2 _),
-      "backlog_v3" -> (backlogV3 _),
-      "basket_v3" -> (basketV3 _),
-      "kcore_v3" -> (kcoreV3 _),
-      "kcore_v4" -> (kcoreV4 _),
-      "kcore_v5" -> (kcoreV5 _),
-      "kcore_edges0" -> (kcoreEdges0 _),
-      "kcore_v6" -> (kcoreV6 _),
-      "basket_v4" -> (basketV4 _),
-      "gsp_v8" -> (gspV8 _),
-      "gsp_v9" -> (gspV9 _),
-      "gsp_v10" -> (gspV10 _),
-      "bins_v2" -> (binsV2 _),
-      "backlog_v4" -> (backlogV4 _),
-      "kcore_v7" -> (kcoreV7 _),
-      "kcore_v8" -> (kcoreV8 _),
-      "kcore_v9" -> (kcoreV9 _),
-      "kcore_v10" -> (kcoreV10 _),
-      "kcore_v11" -> (kcoreV11 _),
-      "kcore_v12" -> (kcoreV12 _),
-      "gsp_v11" -> (gspV11 _),
-      "gsp_v12" -> (gspV12 _),
-      "gsp_v13" -> (gspV13 _),
-      "gsp_v14" -> (gspV14 _),
-      "gsp_v15" -> (gspV15 _),
-      "gsp_v6" -> (gspV6 _),
-      "gsp_v7" -> (gspV7 _),
-      "triangles_v2" -> (trianglesV2 _),
-      "mad_v4" -> (madV4 _),
-      "ndd_v2" -> (nddV2 _),
-      "jacc_v2" -> (jaccV2 _),
-      "tri_v3" -> (triV3 _),
-      "decont_v2" -> (decontV2 _),
-      "clean_v2" -> (cleanV2 _),
-      "incndd_v2" -> (incnddV2 _),
-      "pr_v2" -> (prV2 _),
-      "clu_v2" -> (cluV2 _),
-      "clu_v3" -> (cluV3 _),
-      "surv_v2" -> (survV2 _),
-      "surv_v3" -> (survV3 _),
-      "clu_v4" -> (cluV4 _),
-      "surv_v4" -> (survV4 _),
-      "jacc_v3" -> (jaccV3 _))
-
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val names = args.lift(0).map(_.split(',').toSeq)
-      .getOrElse(variants.keys.toSeq.sorted)
+    val names = args.headOption.toSeq.flatMap(_.split(',').map(_.trim))
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    if (names.isEmpty || unknown.nonEmpty) {
+      System.err.println("usage: AB <query[,query...]> [rounds]")
+      if (unknown.nonEmpty)
+        System.err.println(s"unknown queries: ${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
     val rounds = args.lift(1).map(_.toInt).getOrElse(5)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    force(graft.SparkEntry.queries("q1_pricing")(spark, sfDir)) // warm
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = Session.builder(Session.cpus(32)).getOrCreate()
+    val sc = spark.sparkContext
+    sc.setLogLevel("WARN")
+
+    // Listener events arrive asynchronously. A one-task marker job, tagged
+    // by a local property, is delivered after every job posted before it,
+    // so once the listener has seen the marker the count is complete.
+    val markKey = "graft.ab.marker"
+    val jobs = new AtomicInteger
+    val marks = new AtomicInteger
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(markKey) != null))
+          marks.incrementAndGet()
+        else jobs.incrementAndGet()
+    })
+    def drainJobs(): Int = {
+      val target = marks.get + 1
+      sc.setLocalProperty(markKey, "1")
+      try sc.parallelize(Seq(0), 1).count()
+      finally sc.setLocalProperty(markKey, null)
+      while (marks.get < target) Thread.sleep(1)
+      jobs.getAndSet(0)
+    }
+    def force(name: String): Long =
+      SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
+
+    force("q1_pricing") // warms the JIT and codegen before the first timing
     val best = scala.collection.mutable.Map.empty[String, Double]
     for (r <- 1 to rounds; n <- names) {
+      drainJobs()
       val t0 = System.nanoTime()
-      force(variants(n)(spark, sfDir))
+      force(n)
       val t = (System.nanoTime() - t0) / 1e9
+      val j = drainJobs()
       best(n) = math.min(best.getOrElse(n, Double.MaxValue), t)
-      println(f"round $r $n%-24s $t%8.3f s   (best ${best(n)}%8.3f)")
+      println(f"round $r $n%-24s $t%8.3f s  jobs=$j%-4d (best ${best(n)}%8.3f)")
     }
-    println(best.toSeq.sortBy(_._1)
-      .map { case (k, v) => f"$k=$v%.3f" }.mkString("BEST: ", "  ", ""))
+    println(names.map(n => f"$n=${best(n)}%.3f").mkString("BEST: ", "  ", ""))
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Durable-catalog probe (SURVEY.md §2.1 row S64, round-13 — the r12
   * verdict's What's-missing #4): the catalog objects the Catalog module
   * declares (database, external parquet tables, the enrichment view, and
@@ -30,16 +28,12 @@ import org.apache.spark.sql.SparkSession
 object DurableCatalogProbe {
   def main(args: Array[String]): Unit = {
     val Array(phase, metaDir, whDir, dataDir) = args.take(4)
-    val spark = SparkSession.builder()
-      .master("local[4]")
+    val spark = graft.Session.builder(4)
       .appName(s"graft-durable-catalog-$phase")
       .config("spark.sql.catalogImplementation", "hive")
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$metaDir/metastore_db;create=true")
       .config("spark.sql.warehouse.dir", whDir)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .enableHiveSupport()
       .getOrCreate()
     try {

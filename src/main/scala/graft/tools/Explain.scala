@@ -1,68 +1,64 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
+import java.nio.file.{Files, Paths}
 
-/** Builder-side `.explain("formatted")` dump for the r15 optimization
-  * evidence files (plans/r15/<query>_{before,after}.txt). Runs under the
-  * SAME session confs as graft.Bench (local[32], 32 shuffle partitions,
-  * AQE on) so the captured plan is the plan the bench times — Plan.scala's
-  * local[4] tree is the PlanSpec pin surface, not the bench shape.
+import graft.{Session, SparkEntry}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+
+/** Builder-side plan dump under the same session profile as Bench (set
+  * `SPARK_GRAFT_CPUS` for the core count; default local[32]). For each
+  * query it prints the pre-AQE physical plan (`sparkPlan`, the tree
+  * PlanSpec's exchange/window/sort pins collect over), then executes the
+  * query and prints the final adaptive plan. PLANS.md is its output for
+  * `all` at sf0.01, local[4]; PlanSpec asserts the invariants, this is the
+  * human-readable evidence.
   *
-  * Usage: Explain <query[,query…]> [sfDir] [outDir] [tag]
-  * Writes outDir/<query>_<tag>.txt with the formatted plan (scan pushdown,
-  * ReadSchema, exchange placement, join strategy, codegen spans) followed
-  * by the post-execution executedPlan (AQE-final shape).
+  * Usage: Explain <query[,query...]|all> [sfDir] [outFile]
+  * (sfDir defaults to /root/testdata/sf0.01; without outFile the markdown
+  * goes to stdout)
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    // builder-side tool: fail with a usage hint instead of a bare
-    // ArrayIndexOutOfBounds / NoSuchElement (r15 advice)
-    if (args.isEmpty) {
-      System.err.println(
-        "usage: Explain <query[,query...]> [sfDir] [outDir] [tag]")
-      System.err.println("known queries: " +
-        SparkEntry.queries.keys.toSeq.sorted.mkString(", "))
-      sys.exit(2)
+    val known = SparkEntry.queries.keys.toSeq.sorted
+    val names = args.headOption match {
+      case Some("all") => known
+      case Some(list) => list.split(',').map(_.trim).toSeq
+      case None => Nil
     }
-    val names = args(0).split(",").map(_.trim).toSeq
     val unknown = names.filterNot(SparkEntry.queries.contains)
-    if (unknown.nonEmpty) {
-      System.err.println(s"unknown queries: ${unknown.mkString(", ")}")
-      System.err.println("known queries: " +
-        SparkEntry.queries.keys.toSeq.sorted.mkString(", "))
+    if (names.isEmpty || unknown.nonEmpty) {
+      System.err.println("usage: Explain <query[,query...]|all> [sfDir] [outFile]")
+      if (unknown.nonEmpty)
+        System.err.println(s"unknown queries: ${unknown.mkString(", ")}")
+      System.err.println("known queries: " + known.mkString(", "))
       sys.exit(2)
     }
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val outDir = if (args.length > 2) args(2) else "plans/r15"
-    val tag = if (args.length > 3) args(3) else "before"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
+    val cpus = Session.cpus(32)
+    val spark = Session.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    new java.io.File(outDir).mkdirs()
+    val sb = new StringBuilder
+    sb.append(s"# Physical plans (graft.tools.Explain, $sfDir, local[$cpus])\n\n")
+    sb.append("Reviewed invariants (asserted by PlanSpec): no " +
+      "CartesianProduct anywhere; dim joins broadcast; top-k plans as " +
+      "TakeOrderedAndProject; parquet scans show PushedFilters and pruned " +
+      "ReadSchema; bucketed co-located joins read without Sort.\n")
     for (name <- names) {
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val qe = df.queryExecution
-      val formatted = qe.explainString(ExplainMode.fromString("formatted"))
-      // execute so the AQE-final executed plan is real, not isFinalPlan=false
-      qe.toRdd.count()
-      val executed = qe.executedPlan.toString
-      val txt = s"===== $name — explain(formatted), sf=$sfDir, " +
-        s"local[$cpus] =====\n$formatted\n" +
-        s"===== $name — executedPlan after execution (AQE final) =====\n" +
-        s"$executed\n"
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(outDir, s"${name}_$tag.txt"),
-        txt.getBytes("UTF-8"))
-      println(s"[explain] wrote $outDir/${name}_$tag.txt")
+      val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
+      val pre = qe.sparkPlan.toString
+      qe.toRdd.count() // execute, so the adaptive plan below is final
+      val last = qe.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      sb.append(s"\n## $name\n\npre-AQE:\n\n```\n$pre```\n\n")
+        .append(s"final:\n\n```\n$last```\n")
+    }
+    args.lift(2) match {
+      case Some(out) =>
+        Files.writeString(Paths.get(out), sb.toString)
+        println(s"wrote $out")
+      case None => print(sb)
     }
     spark.stop()
   }
