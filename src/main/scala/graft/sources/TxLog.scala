@@ -30,6 +30,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *     matching rows (found via input_file_name over the snapshot, a
   *     file-count-bounded driver read) are rewritten; untouched files
   *     survive by reference — |affected files| cost, not |table|;
+  *   - MERGE-ON-READ CDC APPLY: a changelog batch commits deletion
+  *     vectors for the live rows it replaces plus one file of upserts,
+  *     rewriting no data file — |batch| cost per commit, whatever the
+  *     table size; small vectors ride inline in the log action;
   *   - ACID COMPACTION: S23's small-file OPTIMIZE as one commit that
   *     adds the binned rewrite and removes the fragments — readers
   *     switch atomically, and time travel still serves the pre-compact
@@ -96,13 +100,34 @@ object TxLog {
     * for TIMESTAMP AS OF binding, when the writer stamped one.
     */
   /** One DELETION-VECTOR attachment (round-12, merge-on-read DELETE):
-    * `path` is the live data file the vector applies to, `dvPath` the
-    * sidecar parquet group holding (f, i) row-position tombstones, and
-    * `rows` how many of THIS file's rows the sidecar tombstones — the
-    * count history/stats subtract without reading data (the Delta DV
-    * model: tombstones in sidecar files, bookkeeping in the log).
+    * `path` is the live data file the vector applies to and `rows` how
+    * many of THIS file's rows it tombstones — the count history/stats
+    * subtract without reading data (the Delta DV model). The tombstoned
+    * row positions live either in the sidecar parquet group `dvPath`
+    * (rows (f, i), see [[dvSchema]]) or, for a small vector, INLINE in
+    * the log action itself: `dvPath` is then empty and `positions`
+    * holds them (Delta's inline DV storage — no file to write, read or
+    * vacuum).
     */
-  private[graft] case class Dv(path: String, dvPath: String, rows: Long)
+  private[graft] case class Dv(path: String, dvPath: String, rows: Long,
+      positions: Seq[Long] = Seq.empty) {
+    def inline: Boolean = dvPath.isEmpty
+  }
+
+  /** Schema of a DV sidecar file: file key (see [[fileKeyExpr]]) and raw
+    * row index. Fixed, so sidecar reads never infer it (a schema-less
+    * parquet read launches a footer-sampling job).
+    */
+  private val dvSchema = StructType(Seq(StructField("f", StringType),
+    StructField("i", LongType)))
+
+  /** Most positions one file's DV may carry inline in a log action; a
+    * larger vector goes to a sidecar file. Inline positions ride every
+    * commit and checkpoint line and every reader's tombstone filter, so
+    * the bound keeps those lines small; a CDC micro-batch touches far
+    * fewer rows of any one file.
+    */
+  private val inlineDvMax = 256
 
   /** One CHECK-constraint delta: `expr = Some(text)` declares constraint
     * `name`, `expr = None` drops it (S59 — the Delta table-constraints
@@ -142,7 +167,8 @@ object TxLog {
     colDefaults: Seq[ColDefault] = Seq.empty,
     bloomIdx: Seq[BloomIdx] = Seq.empty,
     copies: Seq[String] = Seq.empty,
-    identities: Seq[(String, Long)] = Seq.empty)
+    identities: Seq[(String, Long)] = Seq.empty,
+    txns: Seq[(String, Long)] = Seq.empty)
 
   private val addRe =
     ("""\{"add":\s*\{"path":\s*"((?:[^"\\]|\\.)+)",\s*"rows":\s*(\d+)""" +
@@ -152,6 +178,9 @@ object TxLog {
   private val statRe = """"((?:[^"\\]|\\.)+)":\s*\[(-?\d+),\s*(-?\d+)\]""".r
   private val dvRe =
     ("""\{"dv":\s*\{"path":\s*"((?:[^"\\]|\\.)+)",\s*"dvPath":\s*"((?:[^"\\]|\\.)+)",""" +
+      """\s*"rows":\s*(\d+)\}\}""").r
+  private val dvInlineRe =
+    ("""\{"dv":\s*\{"path":\s*"((?:[^"\\]|\\.)+)",\s*"pos":\s*\[([0-9,\s]*)\],""" +
       """\s*"rows":\s*(\d+)\}\}""").r
   private val removeRe =
     """\{"remove":\s*\{"path":\s*"((?:[^"\\]|\\.)+)"\}\}""".r
@@ -182,6 +211,20 @@ object TxLog {
     """\{"copy":\s*\{"src":\s*"((?:[^"\\]|\\.)+)"\}\}""".r
   private val identityRe =
     """\{"identity":\s*\{"col":\s*"([^"]+)",\s*"next":\s*(\d+)\}\}""".r
+  private val txnRe =
+    """\{"txn":\s*\{"app":\s*"((?:[^"\\]|\\.)+)",\s*"batch":\s*(\d+)\}\}""".r
+
+  /** A `dv` action line, sidecar or inline form. */
+  private object DvAction {
+    def unapply(line: String): Option[Dv] = line match {
+      case dvRe(p, dp, r) => Some(Dv(unq(p), unq(dp), r.toLong))
+      case dvInlineRe(p, ps, r) =>
+        Some(Dv(unq(p), "", r.toLong,
+          ps.split(",").iterator.map(_.trim).filter(_.nonEmpty)
+            .map(_.toLong).toVector))
+      case _ => None
+    }
+  }
 
   private def parseStats(s: String): Map[String, (Long, Long)] =
     if (s == null || s.isEmpty) Map.empty
@@ -209,6 +252,7 @@ object TxLog {
     var bloomIdx = Vector.empty[BloomIdx]
     var copies = Vector.empty[String]
     var identities = Vector.empty[(String, Long)]
+    var txns = Vector.empty[(String, Long)]
     lines.asScala.foreach { line =>
       line match {
         // every captured string field UNESCAPES (r15 review: q()
@@ -218,7 +262,7 @@ object TxLog {
         case addRe(p, r, s, b) =>
           adds :+= Add(unq(p), r.toLong, parseStats(s), parseBlooms(b))
         case removeRe(p) => removes :+= unq(p)
-        case dvRe(p, dp, r) => dvs :+= Dv(unq(p), unq(dp), r.toLong)
+        case DvAction(d) => dvs :+= d
         case opRe(o) => op = o
         case metaRe(d, m) =>
           meta = Some(unq(d)); mapping = Option(m).map(unq)
@@ -235,6 +279,7 @@ object TxLog {
         case bloomIdxDropRe(c) => bloomIdx :+= BloomIdx(c, None)
         case copyRe(s) => copies :+= unq(s)
         case identityRe(c, n) => identities :+= (c -> n.toLong)
+        case txnRe(a, b) => txns :+= (unq(a) -> b.toLong)
         case _ => ()
       }
       line match {
@@ -243,7 +288,7 @@ object TxLog {
       }
     }
     Commit(adds, removes, op, meta, mapping, ts, dvs, partCols, constraints,
-      colDefaults, bloomIdx, copies, identities)
+      colDefaults, bloomIdx, copies, identities, txns)
   }
 
   /** Inverse of [[q]]'s escaping for constraint expression round-trips:
@@ -364,7 +409,7 @@ object TxLog {
       .asScala.toSeq
     (lines.collect { case addRe(p, r, s, b) =>
       Add(unq(p), r.toLong, parseStats(s), parseBlooms(b)) },
-      lines.collect { case dvRe(p, dp, r) => Dv(unq(p), unq(dp), r.toLong) })
+      lines.flatMap(DvAction.unapply))
   }
 
   private def maybeCheckpoint(table: File, v: Long): Unit =
@@ -487,8 +532,12 @@ object TxLog {
   }
 
   private def renderDv(d: Dv): String =
-    s"""{"dv": {"path": ${q(d.path)}, "dvPath": ${q(d.dvPath)}, """ +
-      s""""rows": ${d.rows}}}"""
+    if (d.inline)
+      s"""{"dv": {"path": ${q(d.path)}, "pos": """ +
+        d.positions.mkString("[", ", ", "]") + s""", "rows": ${d.rows}}}"""
+    else
+      s"""{"dv": {"path": ${q(d.path)}, "dvPath": ${q(d.dvPath)}, """ +
+        s""""rows": ${d.rows}}}"""
 
   private def renderConstraint(c: Constraint): String = c.expr match {
     case Some(e) =>
@@ -602,15 +651,16 @@ object TxLog {
   /** Write `df` as a fresh immutable file group under the table dir;
     * returns one [[Add]] (relative path, row count, per-column min/max
     * stats for integral columns) per data file. Counts AND stats come
-    * from ONE file-count-bounded job over the fresh group — the same
-    * single pass the row bookkeeping already paid; stats are the
-    * data-skipping input [[snapshotPruned]] prunes against with zero
-    * footer reads. Integral columns only: min/max compare exactly in
-    * i64, no float-rounding or collation hazards in the prune.
+    * from the Parquet footers the write just produced, read on the
+    * driver (Iceberg's file-metrics collection): no Spark job, and the
+    * stats are the data-skipping input [[snapshotPruned]] prunes against
+    * with zero footer reads at query time. Integral columns only:
+    * min/max compare exactly in i64, no float-rounding or collation
+    * hazards in the prune.
     */
   private val groupSeq = new java.util.concurrent.atomic.AtomicLong
 
-  private def writeFiles(df: DataFrame, table: File,
+  private[graft] def writeFiles(df: DataFrame, table: File,
       tag: String, partCols: Seq[String] = Seq.empty): Seq[Add] = {
     // nanos alone can COLLIDE across threads racing the same commit slot
     // (observed once in the 4-writer race spec: both landed in one group
@@ -639,39 +689,35 @@ object TxLog {
         f.dataType == org.apache.spark.sql.types.IntegerType => f.name
     }.toSeq
     // declared bloom indexes whose (physical) column this frame carries:
-    // the bitsets ride the SAME per-file pass as the min/max stats — an
-    // indexed table pays k extra collect_sets here, an unindexed one
-    // pays nothing (bytes are bits/8 per file per column in the log)
+    // their bitsets need the values, so an indexed table pays one
+    // aggregate over the fresh group (k collect_sets per column, bytes
+    // bits/8 per file per column in the log); an unindexed one pays
+    // nothing
     val bloomCols = bloomsAsOf(table,
       versions(table).lastOption.getOrElse(-1L)).toSeq.sortBy(_._1)
       .filter { case (c, _) => statCols.contains(c) }
-    val aggs = (count(lit(1)).as("_n") +: statCols.flatMap(c => Seq(
-      min(col(c)).cast("long").as(s"_lo_$c"),
-      max(col(c)).cast("long").as(s"_hi_$c")))) ++
-      bloomCols.zipWithIndex.flatMap { case ((c, (bits, k)), ci) =>
-        (0 until k).map(i => collect_set(
-          pmod(xxhash64(lit(i), col(c).cast("long")), lit(bits.toLong)))
-          .as(s"_bl_${ci}_$i"))
+    val bloomsByUri =
+      if (bloomCols.isEmpty) Map.empty[String, Map[String, String]]
+      else {
+        val aggs = bloomCols.zipWithIndex.flatMap { case ((c, (bits, k)), ci) =>
+          (0 until k).map(i => collect_set(
+            pmod(xxhash64(lit(i), col(c).cast("long")), lit(bits.toLong)))
+            .as(s"_bl_${ci}_$i"))
+        }
+        spark.read.schema(df.schema).parquet(dir.getAbsolutePath)
+          .groupBy(input_file_name().as("f"))
+          .agg(aggs.head, aggs.tail: _*)
+          .collect().map { r =>
+            r.getString(0) -> bloomCols.zipWithIndex.map {
+              case ((c, (bits, k)), ci) =>
+                val words = new Array[Long](bits / 64)
+                for (i <- 0 until k;
+                     p <- r.getAs[scala.collection.Seq[Long]](s"_bl_${ci}_$i"))
+                  words(p.toInt >> 6) |= 1L << (p & 63)
+                c -> words.map(w => f"$w%016x").mkString
+            }.toMap
+          }.toMap
       }
-    val perFile = spark.read.parquet(dir.getAbsolutePath)
-      .groupBy(input_file_name().as("f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect().map { r =>
-        val stats = statCols.flatMap { c =>
-          val lo = r.getAs[Any](s"_lo_$c"); val hi = r.getAs[Any](s"_hi_$c")
-          if (lo == null || hi == null) None // all-null column: no range
-          else Some(c -> (lo.asInstanceOf[Long], hi.asInstanceOf[Long]))
-        }.toMap
-        val blooms = bloomCols.zipWithIndex.map {
-          case ((c, (bits, k)), ci) =>
-            val words = new Array[Long](bits / 64)
-            for (i <- 0 until k;
-                 p <- r.getAs[scala.collection.Seq[Long]](s"_bl_${ci}_$i"))
-              words(p.toInt >> 6) |= 1L << (p & 63)
-            c -> words.map(w => f"$w%016x").mkString
-        }.toMap
-        (r.getString(0), (r.getAs[Long]("_n"), stats, blooms))
-      }.toMap
     def walk(d: File): Seq[File] =
       Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap {
         case f if f.isDirectory => walk(f)
@@ -681,23 +727,53 @@ object TxLog {
     // input_file_name() yields URI strings (space → %20, a Hive-escaped
     // value's % → %25) — decode to raw filesystem paths before matching
     // against the walked names
-    val perFileRaw = perFile.map { case (u, v) =>
+    val bloomsRaw = bloomsByUri.map { case (u, v) =>
       (try new java.net.URI(u).getPath catch {
         case _: java.net.URISyntaxException => u
       }) -> v
     }
+    val conf = spark.sessionState.newHadoopConf()
     walk(dir).sortBy(_.getName).map { f =>
       // match on the GROUP-relative path, never the basename alone: a
       // partitioned write puts the SAME part filename into every
       // partition directory of a task, and a basename match would hand
-      // every such Add one arbitrary sibling's count and stats
+      // every such Add one arbitrary sibling's bitsets
       val rel = dir.toPath.relativize(f.toPath).toString
-      val (n, stats, blooms) = perFileRaw.collectFirst {
+      val (n, stats) = footerStats(f, statCols, conf)
+      val blooms = bloomsRaw.collectFirst {
         case (u, v) if u.endsWith(s"/$rel") => v
-      }.getOrElse((0L, Map.empty[String, (Long, Long)],
-        Map.empty[String, String]))
+      }.getOrElse(Map.empty[String, String])
       Add(s"$sub/$rel", n, stats, blooms)
     }
+  }
+
+  /** Row count and per-column [min, max] of one Parquet file, from its
+    * footer's row-group statistics. A column gets no range when it holds
+    * no non-null value, or when a row group carries no statistics for it
+    * (a file without a range is never pruned).
+    */
+  private def footerStats(f: File, statCols: Seq[String],
+      conf: org.apache.hadoop.conf.Configuration)
+      : (Long, Map[String, (Long, Long)]) = {
+    import scala.jdk.CollectionConverters._
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toURI), conf))
+    val blocks = try reader.getFooter.getBlocks.asScala.toSeq
+      finally reader.close()
+    val stats = statCols.flatMap { c =>
+      val chunks = blocks.flatMap(_.getColumns.asScala
+        .find(_.getPath.toArray.toSeq == Seq(c)).map(_.getStatistics))
+      if (chunks.size != blocks.size || chunks.exists(_.isEmpty)) None
+      else {
+        val ranges = chunks.filter(_.hasNonNullValue).map(st =>
+          (st.genericGetMin.asInstanceOf[Number].longValue,
+            st.genericGetMax.asInstanceOf[Number].longValue))
+        if (ranges.isEmpty) None
+        else Some(c -> (ranges.map(_._1).min, ranges.map(_._2).max))
+      }
+    }.toMap
+    (blocks.map(_.getRowCount).sum, stats)
   }
 
   /** logical→physical column rename before a write on a mapped table
@@ -1708,23 +1784,23 @@ object TxLog {
     if (i < 0) path else path.substring(i + 1)
   }
 
-  /** The SCAN-side key of a live file: [[fileKeyOf]] over the file's
-    * URI-ENCODED path, because `_metadata.file_path` is a URI string —
-    * a partition value with a space (or a Hive-escaped char, whose `%`
-    * re-encodes as `%25`) differs between the raw filesystem name the
-    * log records and the encoded form the scan reports. For plain paths
-    * the two coincide, which is also why historical DV sidecar `f`
-    * values keep binding.
+  /** The SCAN-side key of a table-relative file path: [[fileKeyOf]]
+    * over the file's URI-ENCODED path, because `_metadata.file_path` is
+    * a URI string — a partition value with a space (or a Hive-escaped
+    * char, whose `%` re-encodes as `%25`) differs between the raw
+    * filesystem name the log records and the encoded form the scan
+    * reports. For plain paths the two coincide, which is also why
+    * historical DV sidecar `f` values keep binding.
     */
-  private def scanKeyOf(table: File, a: Add): String =
-    fileKeyOf(new File(table, a.path).toURI.getRawPath)
+  private def scanKey(table: File, path: String): String =
+    fileKeyOf(new File(table, path).toURI.getRawPath)
 
   /** scan key → table-relative `Add.path` over a live set — the writer-
     * side inverse of [[fileKeyExpr]]. Total and injective on any live
     * set.
     */
   private def byBase(table: File, live: Seq[Add]): Map[String, String] =
-    live.map(a => scanKeyOf(table, a) -> a.path).toMap
+    live.map(a => scanKey(table, a.path) -> a.path).toMap
 
   /** [[readAs]] plus POSITION columns: `_gf_rel` (the file-identity key,
     * see [[fileKeyExpr]]) and `_gi` (row index within the file) off the
@@ -1750,36 +1826,55 @@ object TxLog {
 
   /** Read a live-file subset under the AS-OF schema with the files' live
     * DELETION VECTORS applied (merge-on-read): tombstoned (file, row)
-    * positions anti-join out of the scan. `keepPos` retains the
+    * positions drop out of the scan. `keepPos` retains the
     * `_gf_rel`/`_gi` position columns for writers that need them.
     *
-    * Scale: the tombstone side is delete-count-bounded (DV sidecars, the
-    * Delta model) and broadcasts; the data side stays an ordinary pruned
-    * scan — a DV delete costs the READER one broadcast anti-join instead
-    * of costing the WRITER a file rewrite, the merge-on-read trade.
+    * Scale: the tombstone side is delete-count-bounded. Inline DVs apply
+    * as one literal-set filter (no job, no join); sidecar DVs broadcast
+    * into an anti-join — a DV delete costs the READER a filter or one
+    * broadcast instead of costing the WRITER a file rewrite, the
+    * merge-on-read trade. `compact` sheds accumulated DVs.
     */
   private[graft] def assemble(spark: SparkSession, table: File, v: Long,
       files: Seq[Add], dvs: Map[String, Seq[Dv]],
       keepPos: Boolean = false): DataFrame = {
     val paths = files.map(a => new File(table, a.path).getAbsolutePath)
-    val attached = dvs.filter { case (p, _) => files.exists(_.path == p) }
+    val attached = files.flatMap(a => dvs.getOrElse(a.path, Seq.empty))
     if (attached.isEmpty && !keepPos) readAs(spark, table, v, paths)
     else {
       val data = readAsPos(spark, table, v, paths)
+      val (inl, side) = attached.partition(_.inline)
+      val kept =
+        if (inl.isEmpty) data else data.filter(!inlineTombstoned(table, inl))
       val out =
-        if (attached.isEmpty) data
-        else {
-          val dvPaths = attached.values.flatten.map(_.dvPath).toSeq.distinct
-            .map(dp => new File(table, dp).getAbsolutePath)
-          val tomb = spark.read.parquet(dvPaths: _*)
-            .select(col("f").as("_tf"), col("i").as("_ti"))
-          data.join(broadcast(tomb),
-            data("_gf_rel") === col("_tf") && data("_gi") === col("_ti"),
-            "left_anti")
-        }
+        if (side.isEmpty) kept
+        else kept.join(broadcast(sidecarTombstones(spark, table, side)),
+          kept("_gf_rel") === col("_tf") && kept("_gi") === col("_ti"),
+          "left_anti")
       if (keepPos) out else out.drop("_gf_rel", "_gi")
     }
   }
+
+  /** TRUE on the rows (carrying `_gf_rel`/`_gi`) that the INLINE vectors
+    * `dvs` tombstone: one literal set of `key#position` strings, which
+    * the optimizer turns into a hash-set lookup.
+    */
+  private def inlineTombstoned(table: File,
+      dvs: Seq[Dv]): org.apache.spark.sql.Column =
+    concat(col("_gf_rel"), lit("#"), col("_gi").cast("string"))
+      .isin(dvs.flatMap { d =>
+        val k = scanKey(table, d.path)
+        d.positions.map(p => s"$k#$p")
+      }: _*)
+
+  /** The (file key, position) tombstones of SIDECAR vectors `dvs`, as
+    * `_tf`/`_ti`, read under the fixed [[dvSchema]].
+    */
+  private def sidecarTombstones(spark: SparkSession, table: File,
+      dvs: Seq[Dv]): DataFrame =
+    spark.read.schema(dvSchema).parquet(dvs.map(_.dvPath).distinct
+        .map(dp => new File(table, dp).getAbsolutePath): _*)
+      .select(col("f").as("_tf"), col("i").as("_ti"))
 
   /** Snapshot read at `version` (default: latest). Immutable-file reads:
     * a concurrent commit cannot change the resolved set.
@@ -2261,7 +2356,7 @@ object TxLog {
         .withColumn("_commit_version", lit(-1L))
     val addedAt = addedAtVersions(table, v)
     val entries = st.live.map { a =>
-      (scanKeyOf(table, a),
+      (scanKey(table, a.path),
         addedAt.getOrElse(new File(table, a.path).getCanonicalPath, -1L))
     }
     import spark.implicits._
@@ -2514,7 +2609,8 @@ object TxLog {
       tp.relativize(new File(source, p).getCanonicalFile.toPath).toString
     val adds = st.live.map(a => a.copy(path = rel(a.path)))
     val dvs = st.dvs.values.flatten.toSeq.map(d =>
-      d.copy(path = rel(d.path), dvPath = rel(d.dvPath)))
+      d.copy(path = rel(d.path),
+        dvPath = if (d.inline) d.dvPath else rel(d.dvPath)))
     val meta = metaAsOf(source, v)
     // the clone inherits the source's partition declaration, active
     // CHECK constraints, and IDENTITY high-water marks (r15 review:
@@ -2983,13 +3079,23 @@ object TxLog {
 
   /** CDC APPLY (S60): land one collapsed changelog batch — ≤1 row per
     * key, an `_op` column of `upsert` | `delete`, the table's columns
-    * otherwise — as ONE atomic file-pruned commit. Upserts REPLACE the
+    * otherwise — as ONE atomic MERGE-ON-READ commit. Upserts REPLACE the
     * target rows sharing their keys (or insert when unmatched), deletes
-    * drop them (a delete for an absent key no-ops), and only live files
-    * CONTAINING a batch key are rewritten — the merge/deleteWhere
-    * machinery fused into the shape a MongoDB-oplog → warehouse
-    * replicator actually ships: per-batch cost is |affected files| +
-    * |batch|, never |table|.
+    * drop them (a delete for an absent key no-ops). No data file is
+    * rewritten: the commit carries deletion vectors (DVs) tombstoning
+    * the live rows the batch replaces, plus one new file of upserts —
+    * the shape a MongoDB-oplog → warehouse replicator ships, at a cost
+    * of |batch| written plus one key-column probe of the live files
+    * whose key stats admit a batch key, never |table|.
+    *
+    * `changes` is ONE micro-batch, so its size is bounded by the
+    * trigger: it is collected to the driver once and audited there, and
+    * a retry after a lost commit slot reuses those rows — the source is
+    * never evaluated twice. The Spark work per commit is the probe scan
+    * and the upsert write (plus one sidecar write when a file's vector
+    * outgrows [[inlineDvMax]]). Positions are taken over the current
+    * state, so DVs stacked on one file hold only new positions; they
+    * accumulate commit after commit until `compact` materializes them.
     *
     * `txnApp`/`txnBatch` stamp the commit with the exactly-once txn
     * marker ([[lastTxnBatch]]): a replayed batch id is detected in the
@@ -3001,26 +3107,29 @@ object TxLog {
       txnBatch: Long = -1L): Long = {
     require(changes.columns.contains("_op"),
       "TxLog CDC APPLY: changes must carry an _op column (upsert|delete)")
-    // validate the batch ONCE, before the commit loop: an unknown _op
-    // would silently act as a delete (its key joins the affected probe
-    // but the row never re-enters), and a duplicate key would land
-    // twice. One aggregate pass over the batch covers both.
-    val audit = changes.agg(
-      coalesce(sum(when(!col("_op").isin("upsert", "delete"), 1L)
-        .otherwise(0L)), lit(0L)).as("_bad_op"),
-      count(lit(1)).as("_n"),
-      coalesce(sum(when(col("_op") === "upsert", 1L).otherwise(0L)),
-        lit(0L)).as("_n_upserts"),
-      count_distinct(struct(keys.map(col): _*)).as("_nk")).head()
-    require(audit.getAs[Long]("_bad_op") == 0,
-      s"TxLog CDC APPLY: ${audit.getAs[Long]("_bad_op")} row(s) carry an " +
-        "_op other than upsert|delete — an unknown op would silently " +
-        "act as a delete")
-    require(audit.getAs[Long]("_n") == audit.getAs[Long]("_nk"),
-      s"TxLog CDC APPLY: ${audit.getAs[Long]("_n") -
-        audit.getAs[Long]("_nk")} duplicate key(s) in the batch — " +
+    val batch = changes.collect().toSeq
+    val opAt = changes.schema.fieldIndex("_op")
+    val keyAt = keys.map(changes.schema.fieldIndex)
+    // validate the batch before the commit loop: an unknown _op would
+    // silently act as a delete (its key is probed but the row never
+    // lands), and a duplicate key would land twice. A NULL _op is not
+    // flagged — SQL three-valued `NOT IN` — and acts as a delete.
+    val badOps = batch.count(r => !r.isNullAt(opAt) &&
+      !Set("upsert", "delete").contains(r.getString(opAt)))
+    require(badOps == 0,
+      s"TxLog CDC APPLY: $badOps row(s) carry an _op other than " +
+        "upsert|delete — an unknown op would silently act as a delete")
+    val batchKeys = batch.map(r => keyAt.map(r.get))
+    val dupes = batchKeys.size - batchKeys.distinct.size
+    require(dupes == 0,
+      s"TxLog CDC APPLY: $dupes duplicate key(s) in the batch — " +
         "collapse the changelog to its per-key final state first " +
         "(LWW on the source ordering)")
+    // a key with a NULL component never matches a live row
+    val probeKeys = batchKeys.filterNot(_.contains(null))
+    val upsertSchema = StructType(changes.schema.filterNot(_.name == "_op"))
+    val upsertRows = batch.filter(r => "upsert" == r.getString(opAt))
+      .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.patch(opAt, Nil, 1)))
     var committed = -1L
     while (committed < 0) {
       if (txnApp.exists(a => lastTxnBatch(table, a).exists(_ >= txnBatch)))
@@ -3029,57 +3138,108 @@ object TxLog {
       val st = liveState(table, v)
       requireLocalized(st, "CDC APPLY")
       requireNoIdentity(table, v, "CDC APPLY")
-      val upserts0 = changes.filter(col("_op") === "upsert").drop("_op")
+      val declared = schemaDdlAsOf(table, v).map(StructType.fromDDL)
       // schema-ENFORCED like append (r15 review): a misspelled extra
-      // column would otherwise be silently dropped by the snap-columns
+      // column would otherwise be silently dropped by the table-columns
       // projection below, and an omitted defaulted column would land
       // physically missing with a post-declaration write epoch the
       // read-time fill never patches
-      schemaDdlAsOf(table, v).foreach { ddl =>
-        val declared = StructType.fromDDL(ddl).fieldNames.toSet
-        val unknown = upserts0.schema.fieldNames.filterNot(declared)
+      declared.foreach { d =>
+        val unknown = upsertSchema.fieldNames.filterNot(d.fieldNames.toSet)
         require(unknown.isEmpty,
           "TxLog CDC APPLY: column(s) not in the table's declared " +
             s"schema: ${unknown.mkString(", ")} — ALTER TABLE ADD " +
             "COLUMNS first")
       }
-      val upserts = withWriteDefaults(upserts0, table, Some(v))
-      // the constraint gate sees only the rows that will LAND
-      enforceConstraints(spark, table, upserts, "CDC APPLY")
-      val snap = assemble(spark, table, v, st.live, st.dvs)
-      val srcKeys = changes.select(keys.map(col): _*).distinct()
+      val mapping = mappingAsOf(table, v)
+      val landing = Option.when(upsertRows.nonEmpty) {
+        val upserts = withWriteDefaults(spark.createDataFrame(
+          java.util.Arrays.asList(upsertRows: _*), upsertSchema), table,
+          Some(v))
+        // the upserts land in the table's column order and types (a
+        // footer-owned table reads its schema off one live file)
+        val target = declared.orElse(st.live.headOption.map(a =>
+          readAs(spark, table, v, Seq(new File(table, a.path)
+            .getAbsolutePath)).schema)).getOrElse(upserts.schema)
+        val out = upserts.select(target.fields.toSeq.map(f =>
+          if (upserts.schema(f.name).dataType == f.dataType) col(f.name)
+          else col(f.name).cast(f.dataType).as(f.name)): _*)
+        // the constraint gate sees only the rows that will LAND
+        enforceConstraints(spark, table, out, "CDC APPLY")
+        out
+      }
+      val hits = probeKeyRows(spark, table, v, st, keys, probeKeys,
+        keys.map(k => mapping.getOrElse(k, k)))
       val toPath = byBase(table, st.live)
-      val affectedRel =
-        assemble(spark, table, v, st.live, st.dvs, keepPos = true)
-          .join(srcKeys, keys, "left_semi")
-          .select(col("_gf_rel")).distinct()
-          .collect().map(r => toPath(r.getString(0))).toSeq.sorted
-      val affected =
-        if (affectedRel.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[
-            org.apache.spark.sql.Row], snap.schema)
-        else assemble(spark, table, v,
-          st.live.filter(a => affectedRel.contains(a.path)), st.dvs)
-      // survivors of the affected files + every upsert; deletes simply
-      // never re-enter — one rewrite covers replace, insert, AND delete
-      val rewritten = affected.join(srcKeys, keys, "left_anti")
-        .unionByName(upserts.select(snap.columns.toIndexedSeq.map(col): _*))
-      // an all-delete batch that empties every affected file would hand
-      // the partitioned writeFiles an empty frame (zero part files → the
-      // stats pass throws 'Unable to infer schema'); commit removes-only
-      // instead, as deleteWhere does for empty survivors (r12 advice).
-      // The probe only runs on upsert-free batches — upserts guarantee
-      // a non-empty rewrite.
-      val files =
-        if (audit.getAs[Long]("_n_upserts") == 0L && rewritten.isEmpty)
-          Seq.empty[Add]
-        else writeFiles(toPhysical(rewritten, mappingAsOf(table, v)),
-          table, "cdc", partitionColsOf(table))
-      committed = commitIfBase(table, v, files, affectedRel, "cdc-apply",
-        txn = txnApp.map(a => (a, txnBatch)))
-      if (committed < 0) discardFileGroup(table, files)
+      val perFile = hits.groupBy(_._1).toSeq.sortBy(_._1)
+        .map { case (k, ps) => (k, ps.map(_._2).sorted) }
+      val (small, large) = perFile.partition(_._2.size <= inlineDvMax)
+      val sidecar =
+        if (large.isEmpty) None
+        else Some(writeSidecar(spark, table,
+          large.flatMap { case (k, ps) => ps.map(k -> _) }))
+      val dvs =
+        small.map { case (k, ps) => Dv(toPath(k), "", ps.size, ps) } ++
+          large.map { case (k, ps) => Dv(toPath(k), sidecar.get, ps.size) }
+      // one file of upserts: a local relation would otherwise write one
+      // file per core
+      val files = landing.toSeq.flatMap(l => writeFiles(
+        toPhysical(l.coalesce(1), mapping), table, "cdc",
+        partitionColsOf(table)))
+      committed = commitIfBase(table, v, files, Seq.empty, "cdc-apply",
+        dvs = dvs, txn = txnApp.map(a => (a, txnBatch)))
+      if (committed < 0) {
+        discardFileGroup(table, files)
+        sidecar.foreach(sub => graft.Tables.rmTree(new File(table, sub)))
+      }
     }
     committed
+  }
+
+  /** The live rows at `v` whose `keys` equal a tuple of `probeKeys`, as
+    * (file key, row position) — the apply's one probe scan. Reads only
+    * the key columns and positions of the files whose log stats admit a
+    * batch key (`physKeys` name the stats), with their current DVs
+    * applied, filtered by the keys as a literal set: a broadcast of the
+    * driver-held keys would cost a job of its own.
+    */
+  private def probeKeyRows(spark: SparkSession, table: File, v: Long,
+      st: LiveState, keys: Seq[String], probeKeys: Seq[Seq[Any]],
+      physKeys: Seq[String]): Seq[(String, Long)] = {
+    // stats are integral ranges: only an integral key value can miss one
+    def admits(a: Add): Boolean = probeKeys.exists(_.zip(physKeys).forall {
+      case (x @ (_: java.lang.Long | _: Integer | _: java.lang.Short |
+          _: java.lang.Byte), pk) if a.stats.contains(pk) =>
+        val n = x.asInstanceOf[Number].longValue
+        val (lo, hi) = a.stats(pk)
+        lo <= n && n <= hi
+      case _ => true
+    })
+    val candidates =
+      if (probeKeys.isEmpty) Seq.empty else st.live.filter(admits)
+    if (candidates.isEmpty) Seq.empty
+    else {
+      val frame = assemble(spark, table, v, candidates, st.dvs, keepPos = true)
+      val hit =
+        if (keys.size == 1) col(keys.head).isin(probeKeys.map(_.head): _*)
+        else struct(keys.map(col): _*).isin(probeKeys.map(t =>
+          struct(t.zip(keys).map { case (x, k) =>
+            lit(x).cast(frame.schema(k).dataType).as(k) }: _*)): _*)
+      frame.filter(hit).select(col("_gf_rel"), col("_gi")).collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSeq
+    }
+  }
+
+  /** Write (file key, position) tombstones as one DV sidecar group;
+    * returns its table-relative name.
+    */
+  private def writeSidecar(spark: SparkSession, table: File,
+      tombs: Seq[(String, Long)]): String = {
+    val sub = s"dv_${System.nanoTime()}_${groupSeq.incrementAndGet()}"
+    spark.createDataFrame(java.util.Arrays.asList(tombs.map { case (f, i) =>
+        org.apache.spark.sql.Row(f, i) }: _*), dvSchema)
+      .coalesce(1).write.parquet(new File(table, sub).getAbsolutePath)
+    sub
   }
 
   /** Streaming CDC APPLY: every micro-batch of the events changelog
@@ -3121,8 +3281,8 @@ object TxLog {
     * and the whole window resolves in ONE distributed pass: every
     * touched file is read once (a file both added and removed within the
     * window is still one read — the (version, sign) lookup multiplies
-    * its rows), a |touched-files|×2-row broadcast maps each row to its
-    * commit and side, and the per-commit bag-difference is the SIGNED
+    * its rows), a literal path → (version, sign) map maps each row to
+    * its commit and side, and the per-commit bag-difference is the SIGNED
     * NET COUNT per row value (adds − removes per (version, row): +n → n
     * inserts, −n → n deletes — exact under duplicate rows, the same
     * multiset algebra exceptAll computes, without a per-commit job
@@ -3187,47 +3347,55 @@ object TxLog {
   private def feedOfEntries(spark: SparkSession, table: File,
       entries: Seq[(String, Long, Int)],
       rowLevel: Seq[(Long, Seq[Dv], Int)] = Seq.empty): DataFrame = {
-    import spark.implicits._
     // ALL file reads bind the latest DECLARED schema (r12 advice): on a
     // column-mapped table raw footer reads would emit PHYSICAL names, and
     // mixed pre-/post-ADD-COLUMNS footers would misalign the unionByName
     // with the DV adjustment frames — the feed's rows surface under the
     // latest logical names, the Delta CDF read-schema convention.
     val declaredV = versions(table).last
+    // input_file_name yields file:///abs, a File URI file:/abs — both
+    // normalize to a bare absolute path for the lookup
+    def bare(uri: String): String = uri.replaceFirst("^file:/+", "/")
     val fileFrame: Option[DataFrame] = if (entries.isEmpty) None else {
-      val canonical = entries.map(_._1).distinct
-        .map(p => new File(table, p).getCanonicalFile.toURI.toString)
-      val lookup = entries.map { case (p, v, s) =>
-        (new File(table, p).getCanonicalFile.toURI.toString, v, s)
-      }.toDF("_path", "_version", "_sign")
+      def uriOf(p: String) = new File(table, p).getCanonicalFile.toURI.toString
+      val canonical = entries.map(e => uriOf(e._1)).distinct
+      // path → its (version, sign) entries as ONE literal map: a file
+      // both added and removed inside the window explodes to both rows,
+      // and no job ships a driver-held set to the executors
+      val lookup = map(entries.groupBy(e => bare(uriOf(e._1))).toSeq
+        .flatMap { case (p, es) =>
+          Seq(lit(p), array(es.map { case (_, v, sg) =>
+            struct(lit(v).as("_version"), lit(sg).as("_sign")) }: _*))
+        }: _*)
       val (raw, proj) = rawDeclared(spark, table, declaredV, canonical)
-      val data = raw.select(proj :+
-        // input_file_name yields file:///abs; the lookup holds file:/abs —
-        // normalize both to a bare absolute path before the equi-join
-        regexp_replace(input_file_name(), "^file:/+", "/").as("_path"): _*)
-      Some(data
-        .join(broadcast(lookup.withColumn("_path",
-          regexp_replace(col("_path"), "^file:/+", "/"))), Seq("_path"))
-        .drop("_path"))
+      Some(raw.select(proj :+
+          regexp_replace(input_file_name(), "^file:/+", "/").as("_path"): _*)
+        .withColumn("_vs", explode(lookup.getItem(col("_path"))))
+        .withColumn("_version", col("_vs._version"))
+        .withColumn("_sign", col("_vs._sign"))
+        .drop("_path", "_vs"))
     }
-    // each DV adjustment: read the tombstoned files with positions,
-    // semi-join the sidecar's (f, i) pairs — delete-count-bounded
-    val dvFrames = rowLevel.map { case (v, dvs, sign) =>
-      val dataPaths = dvs.map(_.path).distinct
-        .map(p => new File(table, p).getAbsolutePath)
-      val (raw, proj) = rawDeclared(spark, table, declaredV, dataPaths)
-      val data = raw.select(proj :+
-        fileKeyExpr.as("_gf_rel") :+
-        col("_metadata.row_index").as("_gi"): _*)
-      val tomb = spark.read.parquet(dvs.map(_.dvPath).distinct
-          .map(dp => new File(table, dp).getAbsolutePath): _*)
-        .select(col("f").as("_tf"), col("i").as("_ti"))
-      data.join(broadcast(tomb),
-          data("_gf_rel") === col("_tf") && data("_gi") === col("_ti"),
-          "left_semi")
-        .drop("_gf_rel", "_gi")
-        .withColumn("_version", lit(v))
-        .withColumn("_sign", lit(sign))
+    // each DV adjustment: read the tombstoned files with positions and
+    // keep the tombstoned rows — an inline vector's positions as a
+    // literal filter, a sidecar's (f, i) pairs as a broadcast semi-join
+    val dvFrames = rowLevel.flatMap { case (v, dvs, sign) =>
+      val (inl, side) = dvs.partition(_.inline)
+      Seq(inl, side).filter(_.nonEmpty).map { part =>
+        val dataPaths = part.map(_.path).distinct
+          .map(p => new File(table, p).getAbsolutePath)
+        val (raw, proj) = rawDeclared(spark, table, declaredV, dataPaths)
+        val data = raw.select(proj :+
+          fileKeyExpr.as("_gf_rel") :+
+          col("_metadata.row_index").as("_gi"): _*)
+        val hit =
+          if (part.head.inline) data.filter(inlineTombstoned(table, part))
+          else data.join(broadcast(sidecarTombstones(spark, table, part)),
+            data("_gf_rel") === col("_tf") && data("_gi") === col("_ti"),
+            "left_semi")
+        hit.drop("_gf_rel", "_gi")
+          .withColumn("_version", lit(v))
+          .withColumn("_sign", lit(sign))
+      }
     }
     val all = (fileFrame.toSeq ++ dvFrames).reduce(_ unionByName _)
     val cols = all.columns.filterNot(Set("_version", "_sign")).toSeq
@@ -3278,15 +3446,17 @@ object TxLog {
       .map(v => liveState(table, v))
     val retained = retainedStates.flatMap(_.live.map(_.path)).toSet
     val retainedDv = retainedStates
-      .flatMap(_.dvs.values.flatten.map(_.dvPath)).toSet
+      .flatMap(_.dvs.values.flatten.filterNot(_.inline).map(_.dvPath)).toSet
     // every file ever added, in log order
     val everAdded = vs.flatMap(v => readCommit(table, v).adds.map(_.path))
     val data = everAdded.filterNot(retained)
       .filterNot(_.startsWith(".."))
       .distinct
       .filter(p => new File(table, p).exists())
-    // DV sidecars past the horizon reclaim too (whole parquet groups)
-    val everDv = vs.flatMap(v => readCommit(table, v).dvs.map(_.dvPath))
+    // DV sidecars past the horizon reclaim too (whole parquet groups);
+    // inline vectors live in the log and have no file
+    val everDv = vs.flatMap(v =>
+        readCommit(table, v).dvs.filterNot(_.inline).map(_.dvPath))
       .distinct
     val dv = everDv.filterNot(retainedDv)
       .filterNot(_.startsWith(".."))
@@ -3294,10 +3464,6 @@ object TxLog {
     data ++ dv
   }
 
-  /** ACID compaction (S23, with the commit this time): bin ALL live
-    * files into `targetFiles` rewritten ones in one add+remove commit.
-    * Pre-compaction versions still time-travel from the original files.
-    */
   /** Partition-scoped OPTIMIZE (round-13, the Delta `OPTIMIZE … WHERE`
     * surface): compact ONLY the live files of the partitions `keep`
     * selects — cost is |selected partitions' files|, never |table|; the
@@ -3334,6 +3500,17 @@ object TxLog {
     committed
   }
 
+  /** ACID compaction (S23, with the commit this time): bin ALL live
+    * files into `targetFiles` rewritten ones in one add+remove commit.
+    * Pre-compaction versions still time-travel from the original files.
+    * This is how a table sheds what merge-on-read writers accumulate:
+    * the rewrite materializes every deletion vector (the re-read is
+    * DV-applied) and merges the small per-commit upsert files. Nothing
+    * compacts automatically: beside a live CDC tail a compaction loses
+    * its slot to every tail commit that lands during its rewrite and
+    * re-derives it whole, so it needs a conflict rule that lets it
+    * commit over those commits first.
+    */
   def compact(spark: SparkSession, table: File, targetFiles: Int): Long = {
     // compare-and-commit: a delete/merge landing mid-compaction would
     // otherwise be silently undone by the compacted re-add of its rows
@@ -3462,17 +3639,36 @@ object TxLog {
   /** Highest batch id committed for `app`, from the txn markers in the
     * log — the idempotence ledger of the exactly-once streaming sink.
     */
-  def lastTxnBatch(table: File, app: String): Option[Long] = {
-    val re = ("""\{"txn":\s*\{"app":\s*""" +
-      java.util.regex.Pattern.quote(q(app)) +
-      """,\s*"batch":\s*(\d+)\}\}""").r
-    val ids = versions(table).flatMap { v =>
-      import scala.jdk.CollectionConverters._
-      Files.readAllLines(versionFile(table, v).toPath).asScala.collectFirst {
-        case re(b) => b.toLong
-      }
+  def lastTxnBatch(table: File, app: String): Option[Long] =
+    versions(table).lastOption.flatMap(txnsAsOf(table, _).get(app))
+
+  /** app → highest committed batch id as of `v`. Same memoized fold as
+    * [[copiedAsOf]]: a call reads only the commits newer than its memo,
+    * so a streaming sink's per-batch check stays O(new commits), not
+    * O(log length) — checkpoints carry no txn markers to bound it.
+    */
+  private val txnMemo = scala.collection.concurrent.TrieMap
+    .empty[(String, Long), Map[String, Long]]
+
+  private def txnsAsOf(table: File, v: Long): Map[String, Long] = {
+    val key = table.getCanonicalPath
+    txnMemo.get((key, v)) match {
+      case Some(m) => m
+      case None =>
+        var base = v - 1
+        while (base >= 0 && !txnMemo.contains((key, base))) base -= 1
+        var acc =
+          if (base < 0) Map.empty[String, Long] else txnMemo((key, base))
+        var i = base + 1
+        while (i <= v) {
+          acc = readCommit(table, i).txns.foldLeft(acc) { case (m, (a, b)) =>
+            m.updated(a, math.max(b, m.getOrElse(a, b)))
+          }
+          txnMemo.put((key, i), acc)
+          i += 1
+        }
+        acc
     }
-    if (ids.isEmpty) None else Some(ids.max)
   }
 
   /** EXACTLY-ONCE streaming append (the Delta `txn` idempotence pattern):

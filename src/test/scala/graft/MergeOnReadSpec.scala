@@ -1,0 +1,246 @@
+package graft
+
+import java.io.File
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import graft.sources.TxLog
+
+/** Merge-on-read CDC apply: the commit shape (DVs + one upsert file, no
+  * rewrite), its row-exact change feed under hot keys, the log round
+  * trips the inline vectors go through, the Spark-job budget of a
+  * commit, the footer-derived file stats, and the bounded txn ledger.
+  */
+class MergeOnReadSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def freshTable(tag: String): File = {
+    val f = java.nio.file.Files
+      .createTempDirectory(s"graft_morspec_$tag").toFile
+    f.deleteOnExit(); f
+  }
+
+  private def state(t: File): Seq[(Long, String)] =
+    TxLog.snapshot(spark, t).select(col("id"), col("v")).as[(Long, String)]
+      .collect().toSeq.sorted
+
+  private def feedRows(df: DataFrame): Seq[(Long, String, Long, String)] =
+    df.select(col("_version"), col("_change_type"), col("id"), col("v"))
+      .as[(Long, String, Long, String)].collect().toSeq.sorted
+
+  /** The row-level delta between two states: an unchanged key emits
+    * nothing, a changed one its delete/insert pair.
+    */
+  private def delta(v: Long, before: Map[Long, String],
+      after: Map[Long, String]): Seq[(Long, String, Long, String)] =
+    (before.keySet ++ after.keySet).toSeq.flatMap { k =>
+      val (a, b) = (before.get(k), after.get(k))
+      if (a == b) Nil
+      else a.map(x => (v, "delete", k, x)).toSeq ++
+        b.map(x => (v, "insert", k, x))
+    }.sorted
+
+  /** Spark jobs `f` launches from this thread. Listener events arrive
+    * asynchronously: a one-task marker job, posted after `f`, is
+    * delivered after every job of `f`, so once it is seen the count is
+    * complete.
+    */
+  private def jobsOf[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"morspec_${System.nanoTime()}"
+    val jobs, marks = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet(); ()
+          case Some(g) if g == s"$group.mark" => marks.incrementAndGet(); ()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, group)
+      val r = try f finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group.mark", "marker")
+      try sc.parallelize(Seq(0), 1).count() finally sc.clearJobGroup()
+      while (marks.get < 1) Thread.sleep(1)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("hot keys: stacked DVs fold to last-writer-wins, the feed is " +
+      "row-exact, and the vectors survive checkpoint, clone and compact") {
+    val t = freshTable("hot")
+    TxLog.createEmpty(t, "id BIGINT, v STRING")                  // v0
+    (0 until 4).foreach { f =>                                   // v1-v4
+      TxLog.append((f * 10L until f * 10L + 10L)
+        .map(i => (i, s"v$i")).toDF("id", "v").coalesce(1), t)
+    }
+    var ref = (0L until 40L).map(i => i -> s"v$i").toMap
+    val batches = Seq(
+      // 1, 2, 3 update rows of the first file; 4 deleted; 100 inserted
+      Seq((1L, "a1", "upsert"), (2L, "a2", "upsert"), (3L, "a3", "upsert"),
+        (4L, null, "delete"), (100L, "a100", "upsert")),
+      // 1's live row is now in the first apply's upsert file; 2 is
+      // deleted there (its original row is already DV'd); 3 unchanged
+      Seq((1L, "b1", "upsert"), (2L, null, "delete"), (3L, "a3", "upsert"),
+        (15L, "b15", "upsert")),
+      // 2 comes back, 4 (already gone) deletes again as a no-op, 100 and
+      // 1 change once more
+      Seq((1L, "c1", "upsert"), (2L, "c2", "upsert"), (4L, null, "delete"),
+        (100L, null, "delete"), (15L, "c15", "upsert"))) ++
+      // more hot-key commits, across the checkpoint at v10
+      (0 until 5).map(i => Seq((1L, s"d$i", "upsert"),
+        (20L + i, null, "delete"), (200L + i, s"n$i", "upsert")))
+    var expectedFeed = Seq.empty[(Long, String, Long, String)]
+    batches.foreach { b =>
+      val v = TxLog.applyChanges(spark, t, b.toDF("id", "v", "_op"),
+        Seq("id"))
+      val before = ref
+      b.foreach {
+        case (k, x, "upsert") => ref = ref.updated(k, x)
+        case (k, _, _) => ref = ref - k
+      }
+      val c = TxLog.readCommit(t, v)
+      assert(c.removes.isEmpty && c.adds.size == 1 && c.dvs.forall(_.inline),
+        s"v$v is not one upsert file plus inline DVs: $c")
+      assert(state(t) == ref.toSeq.sorted, s"snapshot at v$v")
+      val want = delta(v, before, ref)
+      assert(feedRows(TxLog.changeFeed(spark, t, v - 1, v)) == want,
+        s"feed of v$v")
+      expectedFeed ++= want
+    }
+    val last = TxLog.versions(t).last
+    assert(last == 12L)
+    // the whole window nets per version: no delete is counted twice
+    assert(feedRows(TxLog.changeFeed(spark, t, 4L, last)) ==
+      expectedFeed.sorted)
+    // the checkpoint at v10 carries the inline vectors: its state equals
+    // a replay of the log without it
+    val st = TxLog.liveState(t, 10L)
+    assert(st.base == 10L && st.dvs.values.flatten.exists(_.inline))
+    val bare = freshTable("hot_replay")
+    val bareLog = new File(bare, "_graft_log"); bareLog.mkdirs()
+    (0L to 10L).foreach(i => java.nio.file.Files.copy(
+      new File(t, f"_graft_log/$i%08d.json").toPath,
+      new File(bareLog, f"$i%08d.json").toPath))
+    val replayed = TxLog.liveState(bare, 10L)
+    assert(replayed.base == -1L && replayed.live == st.live &&
+      replayed.dvs == st.dvs)
+    // no inline vector is ever a vacuum candidate
+    assert(TxLog.vacuumPreview(t, last).forall(p =>
+      p.nonEmpty && new File(t, p).exists()))
+    // a shallow clone binds the inline vectors through its ../ paths
+    val clone = freshTable("hot_clone")
+    TxLog.cloneShallow(spark, t, clone)
+    assert(state(clone) == ref.toSeq.sorted)
+    // compact materializes every vector; its feed is empty
+    val vc = TxLog.compact(spark, t, 1)
+    assert(TxLog.liveState(t, vc).dvs.isEmpty)
+    assert(state(t) == ref.toSeq.sorted)
+    assert(TxLog.feedForVersions(spark, t, Seq(vc)).isEmpty)
+    val preview = TxLog.vacuumPreview(t, vc)
+    assert(preview.nonEmpty && preview.forall(p =>
+      p.nonEmpty && new File(t, p).exists()))
+  }
+
+  test("a vector over the inline bound goes to a sidecar and still " +
+      "applies") {
+    val t = freshTable("sidecar")
+    TxLog.createEmpty(t, "id BIGINT, v STRING")
+    TxLog.append((0L until 600L).map(i => (i, s"v$i")).toDF("id", "v")
+      .coalesce(1), t)
+    val v = TxLog.applyChanges(spark, t,
+      (0L until 400L).map(i => (i, s"u$i", "upsert")).toDF("id", "v", "_op"),
+      Seq("id"))
+    val c = TxLog.readCommit(t, v)
+    assert(c.dvs.size == 1 && !c.dvs.head.inline && c.dvs.head.rows == 400)
+    val want = ((0L until 400L).map(i => (i, s"u$i")) ++
+      (400L until 600L).map(i => (i, s"v$i"))).sorted
+    assert(state(t) == want)
+    assert(TxLog.changeFeed(spark, t, v - 1, v).count() == 800)
+  }
+
+  test("job budget: a 50-row apply on a 16-file table runs at most two " +
+      "Spark jobs, and its one-commit change feed at most two") {
+    val t = freshTable("budget")
+    TxLog.createEmpty(t, "id BIGINT, v STRING")
+    TxLog.append(spark.range(0, 16000, 1, 16)
+      .select(col("id"), concat(lit("v"), col("id").cast("string")).as("v")),
+      t)
+    assert(TxLog.liveState(t, 1L).live.size == 16)
+    def batch(round: Int) =
+      ((0 until 40).map(i => (i * 397L + round, s"r$round", "upsert")) ++
+        (0 until 5).map(i => (500L + i * 3 + round, null, "delete")) ++
+        (0 until 5).map(i => (20000L + i + 10 * round, s"n$round", "upsert")))
+        .toDF("id", "v", "_op")
+    TxLog.applyChanges(spark, t, batch(0), Seq("id")) // warms code paths
+    val (v, applyJobs) =
+      jobsOf(TxLog.applyChanges(spark, t, batch(1), Seq("id")))
+    assert(applyJobs <= 2, s"applyChanges ran $applyJobs jobs")
+    val (rows, feedJobs) =
+      jobsOf(TxLog.changeFeed(spark, t, v - 1, v).collect())
+    assert(feedJobs <= 2, s"changeFeed ran $feedJobs jobs")
+    assert(rows.count(_.getAs[String]("_change_type") == "insert") == 45)
+  }
+
+  test("footer-derived Add rows and min/max equal the aggregate over the " +
+      "written files") {
+    val t = freshTable("footer")
+    /** What the stats pass computed by aggregating each written file. */
+    def aggregated(a: TxLog.Add, cols: Seq[String]) = {
+      val r = spark.read.parquet(new File(t, a.path).getAbsolutePath)
+        .agg(count(lit(1)), cols.flatMap(c =>
+          Seq(min(col(c)).cast("long"), max(col(c)).cast("long"))): _*)
+        .head()
+      val stats = cols.zipWithIndex.flatMap { case (c, i) =>
+        if (r.isNullAt(1 + 2 * i)) None
+        else Some(c -> (r.getLong(1 + 2 * i), r.getLong(2 + 2 * i)))
+      }.toMap
+      (r.getLong(0), stats)
+    }
+    def check(df: DataFrame,
+        partCols: Seq[String] = Seq.empty): Seq[TxLog.Add] = {
+      val adds = TxLog.writeFiles(df, t, "spec", partCols)
+      adds.foreach(a => assert((a.rows, a.stats) ==
+        aggregated(a, Seq("i", "l", "n", "p")),
+        s"footer stats differ for ${a.path}"))
+      adds
+    }
+    // three files of 1000 rows (range splits evenly): int and long
+    // columns with mixed nulls, `n` all null in the first file
+    val id = col("id")
+    val mixed = spark.range(0, 3000, 1, 3).select(
+      when(id % 7 === 0, null).otherwise(id - 1500).cast("int").as("i"),
+      when(id % 5 === 0, null).otherwise(id * 1000003L - 7L).as("l"),
+      when(id < 1000, null).otherwise(id).as("n"),
+      (id % 3).cast("int").as("p"),
+      concat(lit("s"), id.cast("string")).as("s"))
+    // small row groups, so the ranges merge across groups
+    spark.conf.set("parquet.block.size", "4096")
+    val plain = try check(mixed) finally spark.conf.unset("parquet.block.size")
+    assert(plain.size == 3 &&
+      plain.count(a => a.rows == 1000 && !a.stats.contains("n")) == 1)
+    assert(check(mixed.repartition(2), Seq("p")).size >= 3) // partitioned
+    assert(check(mixed.limit(0).coalesce(1)).size == 1)    // empty frame
+  }
+
+  test("the txn ledger stays exact over a long log: a replayed old batch " +
+      "is refused, a new one lands") {
+    val t = freshTable("txn")
+    (0L until 25L).foreach { b =>
+      assert(TxLog.exactlyOnceAppend(t, "app", b,
+        Seq((b, s"v$b")).toDF("id", "v")))
+      if (b == 11L) assert(TxLog.lastTxnBatch(t, "app").contains(11L))
+    }
+    assert(TxLog.lastTxnBatch(t, "app").contains(24L))
+    assert(TxLog.lastTxnBatch(t, "other").isEmpty)
+    assert(!TxLog.exactlyOnceAppend(t, "app", 3L,
+      Seq((3L, "again")).toDF("id", "v")))
+    assert(TxLog.exactlyOnceAppend(t, "app", 25L,
+      Seq((25L, "v25")).toDF("id", "v")))
+    assert(TxLog.snapshot(spark, t).count() == 26)
+  }
+}

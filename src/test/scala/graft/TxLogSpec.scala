@@ -254,9 +254,12 @@ class TxLogSpec extends SparkSpec {
     val liveAfter = TxLog.liveState(t, 2L).live.map(_.path).toSet
     assert(liveBefore.intersect(liveAfter).nonEmpty,
       "untouched file was rewritten")
-    // one ATOMIC commit: the apply is a single version with adds+removes
+    // one ATOMIC merge-on-read commit: one add (the upserts), DVs on the
+    // matched file A, and no data file removed
     val c = TxLog.readCommit(t, 2L)
-    assert(c.op == "cdc-apply" && c.adds.nonEmpty && c.removes.nonEmpty)
+    val fileA = TxLog.readCommit(t, 0L).adds.map(_.path)
+    assert(c.op == "cdc-apply" && c.adds.size == 1 && c.removes.isEmpty &&
+      c.dvs.map(_.path).distinct == fileA)
     // streaming form: exactly-once via the txn marker
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_txspec_cdcackpt").toFile.getAbsolutePath
