@@ -385,17 +385,8 @@ object TxFeatures {
     * orders, so the hash-match proves the restore's file re-referencing
     * to the row, from log metadata alone.
     */
-  def txlogRestore(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val t = restoreDemo(spark, dir)
-    val vs = TxLog.versions(t)
-    val counts = vs.map(v => TxLog.liveState(t, v).rowCount)
-    vs.zipWithIndex.map { case (v, i) =>
-      val prev = if (i == 0) 0L else counts(i - 1)
-      (v, TxLog.readCommit(t, v).op, counts(i), counts(i) - prev)
-    }.toDF("version", "op", "n_rows", "rows_delta")
-      .orderBy(col("version"))
-  }
+  def txlogRestore(spark: SparkSession, dir: String): DataFrame =
+    TxLog.history(spark, restoreDemo(spark, dir))
 
   val txlogRestoreSql: String =
     """WITH t AS (

@@ -46,6 +46,19 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * and the data files are both append-only, which is what makes every
   * property above compose.
   *
+  * Transactions: every writer that derives its commit from a snapshot
+  * (its files, removes, DVs, metadata or checks depend on the base
+  * version) commits through ONE loop, [[transact]], as one [[Commit]]
+  * value. The loop reads the base version, lets the writer stage the
+  * commit against it, and publishes into slot `base + 1` only; a lost
+  * slot deletes what the attempt wrote and re-derives from the new
+  * base, because a later-slot publish of stale work would resurrect
+  * concurrently deleted rows, double concurrently appended ones, or
+  * land files under metadata a racing ALTER already changed. Table
+  * creation rejects a base other than -1, so a creator that loses slot
+  * 0 fails instead of stacking onto someone else's table. The winner
+  * writes a checkpoint when its version is due.
+  *
   * Scale (100 TB): the log is metadata (bytes per commit, not per row);
   * snapshot resolution is a driver-side line scan of the log (a real
   * deployment checkpoints the action set every N commits — same
@@ -92,13 +105,6 @@ object TxLog {
     stats: Map[String, (Long, Long)] = Map.empty,
     blooms: Map[String, String] = Map.empty)
 
-  /** One committed action file, parsed. `metaMapping` (round-12) is the
-    * column-mapping half of a metaData action: the FULL logical→physical
-    * name map, present once the table has ever been RENAMEd/DROPped
-    * (Delta column-mapping mode); absent = identity (legacy logs parse
-    * unchanged). `ts` is the commit's deterministic wall-time surrogate
-    * for TIMESTAMP AS OF binding, when the writer stamped one.
-    */
   /** One DELETION-VECTOR attachment (round-12, merge-on-read DELETE):
     * `path` is the live data file the vector applies to and `rows` how
     * many of THIS file's rows it tombstones — the count history/stats
@@ -159,8 +165,17 @@ object TxLog {
     */
   private[graft] case class BloomIdx(col: String, spec: Option[(Int, Int)])
 
-  private[graft] case class Commit(adds: Seq[Add], removes: Seq[String],
-    op: String, metaDdl: Option[String] = None,
+  /** One commit's actions: what a writer stages, what [[commitBody]]
+    * renders and what [[readCommit]] parses back. `metaMapping` (round-12)
+    * is the column-mapping half of a metaData action: the FULL
+    * logical→physical name map, present once the table has ever been
+    * RENAMEd/DROPped (Delta column-mapping mode); absent = identity
+    * (legacy logs parse unchanged). `ts` is the commit's deterministic
+    * wall-time surrogate for TIMESTAMP AS OF binding, when the writer
+    * stamped one.
+    */
+  private[graft] case class Commit(op: String, adds: Seq[Add] = Seq.empty,
+    removes: Seq[String] = Seq.empty, metaDdl: Option[String] = None,
     metaMapping: Option[String] = None, ts: Option[Long] = None,
     dvs: Seq[Dv] = Seq.empty, partCols: Option[String] = None,
     constraints: Seq[Constraint] = Seq.empty,
@@ -287,7 +302,7 @@ object TxLog {
         case _ => ()
       }
     }
-    Commit(adds, removes, op, meta, mapping, ts, dvs, partCols, constraints,
+    Commit(op, adds, removes, meta, mapping, ts, dvs, partCols, constraints,
       colDefaults, bloomIdx, copies, identities, txns)
   }
 
@@ -304,55 +319,66 @@ object TxLog {
         if (m.group(1) != null) Integer.parseInt(m.group(1), 16).toChar.toString
         else m.group(2)))
 
-  /** The table's declared schema AS OF `v` (DDL string): the newest
-    * metaData action at or below `v`, or None when the table has never
-    * been ALTERed (readers then use the footers, the pre-evolution
-    * behavior). Memoized per (table, version) with the recurrence
-    * schema(v) = meta(v) orElse schema(v−1): without the memo EVERY
-    * snapshot() of a never-ALTERed table would rescan the whole log —
-    * exactly the O(all commits) driver cost the checkpoints bound
-    * resolve() away from (r11 code-review finding). Commit files are
-    * immutable once published, so a cached answer can never go stale.
+  /** A per-version fold over a table's commit files: `zero` before the
+    * first commit, `step(acc, commit v, v, table)` for each commit in
+    * order. Memoized per (canonical table path, version) with the
+    * recurrence fold(v) = step(fold(v−1), commit v), filled ITERATIVELY
+    * up from the highest memoized version below `v` — a call reads only
+    * the commits newer than its memo (amortized O(1) per new version),
+    * and a recursive fill would recurse one frame per commit and blow the
+    * stack on the long logs the checkpoint machinery exists for. Without
+    * the memo every snapshot() would rescan the whole log (r11 code-review
+    * finding). The walk reads `base+1 .. v`, which is sound because slots
+    * are contiguous from 0 (publishes go to `base+1` or `last+1`) and
+    * nothing deletes a commit file; committed files are immutable, so a
+    * memoized answer never goes stale. `v` must be committed (or < 0).
     */
-  private val schemaMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), Option[(String, Option[String])]]
+  private[graft] final class LogFold[A](zero: A)(
+      step: (A, Commit, Long, File) => A) {
+    private val memo =
+      scala.collection.concurrent.TrieMap.empty[(String, Long), A]
+
+    /** The memoized answer at `v`, without reading the log. */
+    def memoized(table: File, v: Long): Option[A] =
+      memo.get((table.getCanonicalPath, v))
+
+    def apply(table: File, v: Long): A =
+      if (v < 0) zero
+      else {
+        val key = table.getCanonicalPath
+        memo.get((key, v)) match {
+          case Some(a) => a
+          case None =>
+            var base = v - 1
+            while (base >= 0 && !memo.contains((key, base))) base -= 1
+            var acc = if (base < 0) zero else memo((key, base))
+            var i = base + 1
+            while (i <= v) {
+              acc = step(acc, readCommit(table, i), i, table)
+              memo.put((key, i), acc)
+              i += 1
+            }
+            acc
+        }
+      }
+  }
+
+  private val metaFold = new LogFold[Option[(String, Option[String])]](None)(
+    (acc, c, _, _) => c.metaDdl.map(d => (d, c.metaMapping)).orElse(acc))
 
   /** The table's declared (logical DDL, column mapping) AS OF `v`: the
-    * newest metaData action at or below `v`. The mapping half is the
-    * FULL logical→physical map once the table entered column-mapping
-    * mode (any RENAME/DROP), None before — both halves always travel in
-    * one metaData action, so they memoize together.
+    * newest metaData action at or below `v`, or None when the table has
+    * never been ALTERed (readers then use the footers, the pre-evolution
+    * behavior). The mapping half is the FULL logical→physical map once
+    * the table entered column-mapping mode (any RENAME/DROP), None
+    * before — both halves always travel in one metaData action, so they
+    * fold together. Time travel may name a version past the latest, so
+    * a memo miss clamps `v` to the newest committed version first.
     */
   private[graft] def metaAsOf(table: File, v: Long)
-      : Option[(String, Option[String])] = {
-    val key = table.getCanonicalPath
-    schemaMemo.get((key, v)) match {
-      case Some(cached) => cached
-      case None =>
-        // walk down only as far as the first memoized version, then fill
-        // the memo back up — amortized O(1) per NEW version
-        val vs = versions(table).filter(_ <= v)
-        var i = vs.size - 1
-        var found: Option[(String, Option[String])] = None
-        while (i >= 0 && found.isEmpty &&
-            !schemaMemo.contains((key, vs(i)))) {
-          i -= 1
-        }
-        if (i >= 0) found = schemaMemo.getOrElse((key, vs(i)), {
-          val c = readCommit(table, vs(i))
-          c.metaDdl.map(d => (d, c.metaMapping))
-        })
-        var j = math.max(i, 0)
-        var acc = found
-        while (j < vs.size) {
-          val c = readCommit(table, vs(j))
-          acc = c.metaDdl.map(d => (d, c.metaMapping)).orElse(acc)
-          schemaMemo.put((key, vs(j)), acc)
-          j += 1
-        }
-        acc
-    }
-  }
+      : Option[(String, Option[String])] =
+    metaFold.memoized(table, v).getOrElse(
+      metaFold(table, versions(table).filter(_ <= v).lastOption.getOrElse(-1L)))
 
   private[graft] def schemaDdlAsOf(table: File, v: Long): Option[String] =
     metaAsOf(table, v).map(_._1)
@@ -469,16 +495,6 @@ object TxLog {
       base.getOrElse(-1L), tail.size)
   }
 
-  /** Back-compat tuple view of [[liveState]] (live set, base, replayed). */
-  private[graft] def resolve(table: File, v: Long): (Seq[Add], Long, Int) = {
-    val st = liveState(table, v)
-    (st.live, st.base, st.replayed)
-  }
-
-  /** The live file set as of version `v` (inclusive). */
-  private def liveFiles(table: File, v: Long): Seq[Add] =
-    liveState(table, v).live
-
   /** Atomically occupy commit slot `target` with `body`, iff free.
     * The publish primitive is hard-link CREATE-IF-ABSENT, not rename:
     * POSIX rename(2) — what Files.move(ATOMIC_MOVE) compiles to —
@@ -508,12 +524,6 @@ object TxLog {
     }
   }
 
-  /** Publish `actions` as the next commit: write a temp file, atomically
-    * LINK it into the first free slot (create-if-absent). A lost race
-    * (slot taken between the version probe and the link) re-probes and
-    * retries — the optimistic-concurrency loop. Returns the committed
-    * version.
-    */
   /** One add-action wire line; stats ride the line when present (and so
     * survive checkpoint round-trips — the checkpoint body uses this too).
     */
@@ -561,92 +571,136 @@ object TxLog {
       s"""{"default": {"col": ${q(d.col)}, "drop": true}}"""
   }
 
-  private def commitBody(adds: Seq[Add], removes: Seq[String],
-      op: String, metaDdl: Option[String],
-      mapping: Option[String] = None, ts: Option[Long] = None,
-      dvs: Seq[Dv] = Seq.empty, partCols: Option[String] = None,
-      constraints: Seq[Constraint] = Seq.empty,
-      txn: Option[(String, Long)] = None,
-      colDefaults: Seq[ColDefault] = Seq.empty,
-      bloomIdx: Seq[BloomIdx] = Seq.empty,
-      copies: Seq[String] = Seq.empty,
-      identities: Seq[(String, Long)] = Seq.empty): String =
-    (adds.map(renderAdd) ++
-      removes.map(p => s"""{"remove": {"path": ${q(p)}}}""") ++
-      dvs.map(renderDv) ++
-      partCols.map(c => s"""{"partition": {"cols": ${q(c)}}}""") ++
-      constraints.map(renderConstraint) ++
-      colDefaults.map(renderDefault) ++
-      bloomIdx.map(renderBloomIdx) ++
-      copies.map(s => s"""{"copy": {"src": ${q(s)}}}""") ++
-      identities.map { case (c, n) =>
-        s"""{"identity": {"col": ${q(c)}, "next": $n}}""" } ++
-      txn.map { case (a, b) =>
+  /** The wire form of `c`: one JSON action per line, in a fixed order
+    * (adds, removes, DVs, partition, constraints, defaults, bloom specs,
+    * copies, identities, txns, metaData, then the commit line), so the
+    * same actions always render byte-identically.
+    */
+  private def commitBody(c: Commit): String =
+    (c.adds.map(renderAdd) ++
+      c.removes.map(p => s"""{"remove": {"path": ${q(p)}}}""") ++
+      c.dvs.map(renderDv) ++
+      c.partCols.map(p => s"""{"partition": {"cols": ${q(p)}}}""") ++
+      c.constraints.map(renderConstraint) ++
+      c.colDefaults.map(renderDefault) ++
+      c.bloomIdx.map(renderBloomIdx) ++
+      c.copies.map(s => s"""{"copy": {"src": ${q(s)}}}""") ++
+      c.identities.map { case (ic, n) =>
+        s"""{"identity": {"col": ${q(ic)}, "next": $n}}""" } ++
+      c.txns.map { case (a, b) =>
         s"""{"txn": {"app": ${q(a)}, "batch": $b}}""" } ++
-      metaDdl.map(d => s"""{"metaData": {"schemaDdl": ${q(d)}""" +
-        mapping.map(m => s""", "mapping": ${q(m)}""").getOrElse("") +
+      c.metaDdl.map(d => s"""{"metaData": {"schemaDdl": ${q(d)}""" +
+        c.metaMapping.map(m => s""", "mapping": ${q(m)}""").getOrElse("") +
         "}}") :+
-      (s"""{"commit": {"op": ${q(op)}""" +
-        ts.map(t => s""", "ts": $t""").getOrElse("") + "}}"))
+      (s"""{"commit": {"op": ${q(c.op)}""" +
+        c.ts.map(t => s""", "ts": $t""").getOrElse("") + "}}"))
       .mkString("", "\n", "\n")
 
-  /** Compare-and-commit: publish into slot `base + 1` ONLY. Returns the
-    * committed version, or -1 when another commit won the slot — the
-    * caller's work was derived from a now-stale snapshot and must be
-    * RE-DERIVED, not blindly re-slotted (the blind retry loop is only
-    * safe for self-contained appends; a snapshot-rewrite that retries
-    * into a later slot would resurrect concurrently-deleted rows and
-    * double concurrently-appended ones — r11 code-review finding).
+  /** One attempt of [[transact]]: the base version `v` its commit derives
+    * from, the live state at `v` (resolved on first use, so writers that
+    * never read it never pay for it), and the groups it wrote — deleted
+    * unless its commit is the one published.
     */
-  private[graft] def commitIfBase(table: File, base: Long,
-      adds: Seq[Add], removes: Seq[String],
-      op: String, metaDdl: Option[String] = None,
-      mapping: Option[String] = None, ts: Option[Long] = None,
-      dvs: Seq[Dv] = Seq.empty,
-      constraints: Seq[Constraint] = Seq.empty,
-      txn: Option[(String, Long)] = None,
-      partCols: Option[String] = None,
-      colDefaults: Seq[ColDefault] = Seq.empty,
-      copies: Seq[String] = Seq.empty,
-      identities: Seq[(String, Long)] = Seq.empty): Long = {
-    logDir(table).mkdirs()
-    val v = base + 1
-    if (publishSlot(versionFile(table, v),
-        commitBody(adds, removes, op, metaDdl, mapping, ts, dvs,
-          partCols = partCols, constraints = constraints, txn = txn,
-          colDefaults = colDefaults, copies = copies,
-          identities = identities))) {
-      maybeCheckpoint(table, v); v
-    } else -1L
+  private[graft] final class Attempt private[TxLog] (val table: File,
+      val v: Long) {
+    lazy val st: LiveState = liveState(table, v)
+    private var groups = Vector.empty[String]
+
+    /** A fresh group name (see [[newGroup]]), deleted by [[discard]]. */
+    private def track(prefix: String): String = {
+      val sub = newGroup(prefix)
+      groups :+= sub
+      sub
+    }
+
+    /** Reject a base other than -1 with `msg`: table creation never
+      * stacks onto an existing log, whether it was there up front or won
+      * slot 0 during the attempt.
+      */
+    def requireEmpty(msg: => String): Unit = require(v < 0, msg)
+
+    /** `v`, rejecting a table with no commits for writer `op`. */
+    def base(op: String): Long = {
+      require(v >= 0, s"TxLog $op: no commits in $table")
+      v
+    }
+
+    /** Write `df` as a fresh data group (see [[writeFiles]]) whose
+      * bitsets follow the bloom specs as of `v`.
+      */
+    def write(df: DataFrame, tag: String,
+        partCols: Seq[String] = partitionColsOf(table)): Seq[Add] =
+      writeFiles(df, table, tag, partCols, v, track)
+
+    /** Write (file key, position) tombstones, schema [[dvSchema]], as one
+      * DV sidecar group; returns its table-relative name.
+      */
+    def sidecar(tombs: DataFrame): String = {
+      val sub = track("dv")
+      tombs.coalesce(1).write.parquet(new File(table, sub).getAbsolutePath)
+      sub
+    }
+
+    private[TxLog] def discard(): Unit =
+      groups.foreach(g => graft.Tables.rmTree(new File(table, g)))
+  }
+
+  /** The one commit loop for snapshot-derived writers. Each attempt reads
+    * the base version (one `versions` listing; -1 for an empty table),
+    * lets `stage` derive the commit against it, and publishes into slot
+    * `base + 1` ONLY. Contract:
+    *
+    *   - `stage` returning None is a no-op: nothing commits, -1 returns;
+    *   - a lost slot means another commit landed after the base, so the
+    *     staged work is stale: what the attempt wrote ([[Attempt.write]],
+    *     [[Attempt.sidecar]]) is deleted and `stage` re-runs on the new
+    *     base. Retrying stale work into a later slot would resurrect
+    *     concurrently deleted rows and double concurrently appended ones
+    *     (r11 code-review finding). A thrown `stage` deletes them too;
+    *   - a creator's `stage` rejects any base but -1, so losing slot 0
+    *     re-derives into that rejection rather than stacking a second
+    *     declaration onto someone else's table;
+    *   - the winner writes the checkpoint when its version is due.
+    *
+    * Returns the committed version. A commit that does not depend on the
+    * base (a blind append) is a `stage` that ignores it.
+    */
+  private[graft] def transact(table: File)(
+      stage: Attempt => Option[Commit]): Long = {
+    var committed = -1L
+    while (committed < 0) {
+      val a = new Attempt(table, versions(table).lastOption.getOrElse(-1L))
+      try stage(a) match {
+        case None => return -1L
+        case Some(c) =>
+          logDir(table).mkdirs()
+          if (publishSlot(versionFile(table, a.v + 1), commitBody(c)))
+            committed = a.v + 1
+      } finally if (committed < 0) a.discard()
+    }
+    maybeCheckpoint(table, committed)
+    committed
   }
 
   /** Tuple-signature public commit (no stats/mapping/ts) — the original
-    * S40 surface; internal writers use [[commitAdds]].
+    * S40 surface.
     */
   def commit(table: File, adds: Seq[(String, Long)], removes: Seq[String],
-      op: String, metaDdl: Option[String] = None): Long =
-    commitAdds(table, adds.map { case (p, r) => Add(p, r) }, removes, op,
-      metaDdl)
-
-  private[graft] def commitAdds(table: File, adds: Seq[Add],
-      removes: Seq[String], op: String, metaDdl: Option[String] = None,
-      mapping: Option[String] = None, ts: Option[Long] = None,
-      dvs: Seq[Dv] = Seq.empty, partCols: Option[String] = None,
-      constraints: Seq[Constraint] = Seq.empty,
-      bloomIdx: Seq[BloomIdx] = Seq.empty): Long = {
-    logDir(table).mkdirs()
-    val body = commitBody(adds, removes, op, metaDdl, mapping, ts, dvs,
-      partCols, constraints, bloomIdx = bloomIdx)
-    var committed = -1L
-    while (committed < 0) {
-      val v = versions(table).lastOption.map(_ + 1).getOrElse(0L)
-      if (publishSlot(versionFile(table, v), body)) {
-        committed = v
-        maybeCheckpoint(table, v)
-      }
-    }
-    committed
+      op: String, metaDdl: Option[String] = None): Long = {
+    val c = Commit(op, adds.map { case (p, r) => Add(p, r) }, removes, metaDdl)
+    transact(table)(_ => Some(c))
   }
+
+  private val groupSeq = new java.util.concurrent.atomic.AtomicLong
+
+  /** A fresh group directory name. Nanos alone can COLLIDE across threads
+    * racing the same commit slot (observed once in the 4-writer race
+    * spec: both landed in one group dir and the shared `_temporary` broke
+    * the second task commit) — the per-JVM sequence makes the name unique
+    * unconditionally.
+    */
+  private def newGroup(prefix: String): String =
+    s"${prefix}_${System.nanoTime()}_${groupSeq.incrementAndGet()}"
 
   /** Write `df` as a fresh immutable file group under the table dir;
     * returns one [[Add]] (relative path, row count, per-column min/max
@@ -656,17 +710,15 @@ object TxLog {
     * stats are the data-skipping input [[snapshotPruned]] prunes against
     * with zero footer reads at query time. Integral columns only:
     * min/max compare exactly in i64, no float-rounding or collation
-    * hazards in the prune.
+    * hazards in the prune. Files carry bloom bitsets for the indexes
+    * declared as of `base` (-1: none). The group is named by `group`
+    * from the prefix `d_<tag>`; writers inside [[transact]] go through
+    * [[Attempt.write]], whose `group` also tracks it for cleanup.
     */
-  private val groupSeq = new java.util.concurrent.atomic.AtomicLong
-
-  private[graft] def writeFiles(df: DataFrame, table: File,
-      tag: String, partCols: Seq[String] = Seq.empty): Seq[Add] = {
-    // nanos alone can COLLIDE across threads racing the same commit slot
-    // (observed once in the 4-writer race spec: both landed in one group
-    // dir and the shared `_temporary` broke the second task commit) —
-    // the per-JVM sequence makes the group name unique unconditionally
-    val sub = s"d_${tag}_${System.nanoTime()}_${groupSeq.incrementAndGet()}"
+  private[graft] def writeFiles(df: DataFrame, table: File, tag: String,
+      partCols: Seq[String] = Seq.empty, base: Long = -1L,
+      group: String => String = newGroup): Seq[Add] = {
+    val sub = group(s"d_$tag")
     val dir = new File(table, sub)
     if (partCols.isEmpty) df.write.parquet(dir.getAbsolutePath)
     else {
@@ -693,8 +745,7 @@ object TxLog {
     // aggregate over the fresh group (k collect_sets per column, bytes
     // bits/8 per file per column in the log); an unindexed one pays
     // nothing
-    val bloomCols = bloomsAsOf(table,
-      versions(table).lastOption.getOrElse(-1L)).toSeq.sortBy(_._1)
+    val bloomCols = bloomsAsOf(table, base).toSeq.sortBy(_._1)
       .filter { case (c, _) => statCols.contains(c) }
     val bloomsByUri =
       if (bloomCols.isEmpty) Map.empty[String, Map[String, String]]
@@ -836,8 +887,7 @@ object TxLog {
     * needs to touch them — and an EXPLICITLY written null stays null.
     */
   private def withWriteDefaults(df: DataFrame, table: File,
-      base: Option[Long]): DataFrame = {
-    val v = base.getOrElse(-1L)
+      v: Long): DataFrame = {
     val act = defaultsAsOf(table, v)
     if (act.isEmpty) df
     else schemaDdlAsOf(table, v) match {
@@ -852,83 +902,56 @@ object TxLog {
   }
 
   /** Append `df` as one atomic commit; returns the version. On an
-    * ALTERed table the write is schema-ENFORCED (the other half of S50's
-    * evolution contract, the Delta discipline): columns unknown to the
-    * declared schema are rejected with the remedy named — a silently
-    * accepted misspelled column would otherwise null-fill forever on
-    * read. Missing declared columns stay legal (readers null-fill).
+    * ALTERed table the write is schema-enforced ([[requireDeclared]]).
     */
-  def append(df: DataFrame, table: File, ts: Option[Long] = None): Long = {
-    // compare-and-commit, NOT blind retry: the written files depend on
-    // the base version's metadata — a concurrent RENAME would leave the
-    // blind-retried group under stale physical names, and a concurrent
-    // ADD CONSTRAINT would land violating rows AFTER the constraint
-    // commit (log and gate disagreeing about what the table guarantees).
-    // A lost slot re-derives schema check, gate, mapping, and files.
-    var committed = -1L
-    while (committed < 0) {
-      val base = versions(table).lastOption
-      base.flatMap(schemaDdlAsOf(table, _)).foreach {
-        ddl =>
-          val declared = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-            .fieldNames.toSet
-          val unknown = df.schema.fieldNames.filterNot(declared)
-          require(unknown.isEmpty,
-            s"TxLog append: column(s) not in the table's declared schema: " +
-              s"${unknown.mkString(", ")} — ALTER TABLE ADD COLUMNS first")
-      }
+  def append(df: DataFrame, table: File, ts: Option[Long] = None): Long =
+    // the written files depend on the base version's metadata: a racing
+    // RENAME would leave the group under stale physical names, and a
+    // racing ADD CONSTRAINT would land violating rows after the
+    // constraint commit (log and gate disagreeing about what the table
+    // guarantees)
+    transact(table) { a =>
+      requireDeclared(table, a.v, df.schema, "append")
       // defaults/generated columns materialize BEFORE the gate: the
       // constraint must judge the rows as they will LAND (an omitted
       // generated column is filled here and passes its own
       // gen-constraint by construction)
-      val defaulted = withWriteDefaults(df, table, base)
+      val defaulted = withWriteDefaults(df, table, a.v)
       // IDENTITY assignment (S72) precedes the gate so constraints
       // judge rows as they land; the advanced high-water mark rides
       // the SAME commit as the data — atomic allocation
       val (landing, advanced, idPin) = withIdentity(defaulted,
-        identitiesAsOf(table, base.getOrElse(-1L)))
-      // mapped tables store PHYSICAL names; the caller writes logical
-      val mapping = base.map(mappingAsOf(table, _)).getOrElse(Map.empty)
+        identitiesAsOf(table, a.v))
       val files =
         try {
-          enforceConstraints(spark = df.sparkSession, table, landing,
-            "append")
-          writeFiles(toPhysical(landing, mapping),
-            table, "append", partitionColsOf(table))
+          enforceConstraints(table, a.v, landing, "append")
+          // mapped tables store PHYSICAL names; the caller writes logical
+          a.write(toPhysical(landing, mappingAsOf(table, a.v)), "append")
         } finally idPin.foreach(_.unpersist(false))
-      committed = commitIfBase(table, base.getOrElse(-1L), files,
-        Seq.empty, "append", ts = ts, identities = advanced)
-      if (committed < 0) discardFileGroup(table, files)
+      Some(Commit("append", files, ts = ts, identities = advanced))
     }
-    committed
-  }
+
+  /** Reject columns the table's declared schema as of `v` lacks — writes
+    * to an ALTERed table are schema-ENFORCED (the other half of S50's
+    * evolution contract, the Delta discipline): a silently accepted
+    * misspelled column would otherwise null-fill forever on read.
+    * Missing declared columns stay legal (readers null-fill).
+    */
+  private def requireDeclared(table: File, v: Long, schema: StructType,
+      op: String): Unit =
+    schemaDdlAsOf(table, v).foreach { ddl =>
+      val declared = StructType.fromDDL(ddl).fieldNames.toSet
+      val unknown = schema.fieldNames.filterNot(declared)
+      require(unknown.isEmpty,
+        s"TxLog $op: column(s) not in the table's declared schema: " +
+          s"${unknown.mkString(", ")} — ALTER TABLE ADD COLUMNS first")
+    }
 
   /** Source files already loaded by COPY INTO as of `v` (canonical
-    * absolute paths). Same memoized fold as [[constraintsAsOf]] — the
-    * load ledger is log metadata, bytes per commit.
+    * absolute paths) — the load ledger is log metadata, bytes per commit.
     */
-  private val copiedMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), Set[String]]
-
-  private[graft] def copiedAsOf(table: File, v: Long): Set[String] = {
-    if (v < 0) return Set.empty
-    val key = table.getCanonicalPath
-    copiedMemo.get((key, v)) match {
-      case Some(s) => s
-      case None =>
-        var base = v - 1
-        while (base >= 0 && !copiedMemo.contains((key, base))) base -= 1
-        var acc =
-          if (base < 0) Set.empty[String] else copiedMemo((key, base))
-        var i = base + 1
-        while (i <= v) {
-          acc = acc ++ readCommit(table, i).copies
-          copiedMemo.put((key, i), acc)
-          i += 1
-        }
-        acc
-    }
-  }
+  private[graft] val copiedAsOf = new LogFold(Set.empty[String])(
+    (acc, c, _, _) => acc ++ c.copies)
 
   /** COPY INTO (S67, round-13 — Delta's idempotent bulk load): load the
     * parquet files under `srcDir` that this table has NOT already
@@ -970,69 +993,34 @@ object TxLog {
         "is an append-path feature; route the rows through append")
   }
 
-  def copyInto(spark: SparkSession, table: File, srcDir: File): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val base = versions(table).lastOption
-      requireNoIdentity(table, base.getOrElse(-1L), "COPY INTO")
-      val already = copiedAsOf(table, base.getOrElse(-1L))
+  def copyInto(spark: SparkSession, table: File, srcDir: File): Long =
+    transact(table) { a =>
+      requireNoIdentity(table, a.v, "COPY INTO")
+      val already = copiedAsOf(table, a.v)
       val staged = Option(srcDir.listFiles()).getOrElse(Array.empty)
         .filter(f => f.isFile && f.getName.endsWith(".parquet"))
         .map(_.getCanonicalFile).sortBy(_.getName).toSeq
       require(staged.nonEmpty,
         s"TxLog COPY INTO: no .parquet files under $srcDir")
       val fresh = staged.filterNot(f => already.contains(f.getPath))
-      if (fresh.isEmpty) return -1L // fully loaded: idempotent no-op
-      val raw = spark.read.parquet(fresh.map(_.getPath): _*)
-      base.flatMap(schemaDdlAsOf(table, _)).foreach { ddl =>
-        val declared = StructType.fromDDL(ddl).fieldNames.toSet
-        val unknown = raw.schema.fieldNames.filterNot(declared)
-        require(unknown.isEmpty,
-          s"TxLog COPY INTO: column(s) not in the table's declared " +
-            s"schema: ${unknown.mkString(", ")} — ALTER TABLE ADD " +
-            "COLUMNS first")
+      Option.when(fresh.nonEmpty) { // empty: fully loaded, idempotent no-op
+        val raw = spark.read.parquet(fresh.map(_.getPath): _*)
+        requireDeclared(table, a.v, raw.schema, "COPY INTO")
+        val landing = withWriteDefaults(raw, table, a.v)
+        enforceConstraints(table, a.v, landing, "copy-into")
+        val files = a.write(toPhysical(landing, mappingAsOf(table, a.v)),
+          "copy")
+        Commit("copy-into", files, copies = fresh.map(_.getPath))
       }
-      val landing = withWriteDefaults(raw, table, base)
-      enforceConstraints(spark, table, landing, "copy-into")
-      val mapping = base.map(mappingAsOf(table, _)).getOrElse(Map.empty)
-      val files = writeFiles(toPhysical(landing, mapping), table, "copy",
-        partitionColsOf(table))
-      committed = commitIfBase(table, base.getOrElse(-1L), files,
-        Seq.empty, "copy-into", copies = fresh.map(_.getPath))
-      if (committed < 0) discardFileGroup(table, files)
     }
-    committed
-  }
 
   /** IDENTITY high-water marks as of `v`: column → next id to assign.
-    * Same memoized fold as [[constraintsAsOf]]; the latest `identity`
-    * action per column wins (each assigning commit re-emits the
-    * advanced mark, so the fold is the allocation ledger).
+    * The latest `identity` action per column wins (each assigning
+    * commit re-emits the advanced mark, so the fold is the allocation
+    * ledger).
     */
-  private val identityMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), Map[String, Long]]
-
-  private[graft] def identitiesAsOf(table: File, v: Long)
-      : Map[String, Long] = {
-    if (v < 0) return Map.empty
-    val key = table.getCanonicalPath
-    identityMemo.get((key, v)) match {
-      case Some(m) => m
-      case None =>
-        var base = v - 1
-        while (base >= 0 && !identityMemo.contains((key, base))) base -= 1
-        var acc =
-          if (base < 0) Map.empty[String, Long]
-          else identityMemo((key, base))
-        var i = base + 1
-        while (i <= v) {
-          acc = acc ++ readCommit(table, i).identities
-          identityMemo.put((key, i), acc)
-          i += 1
-        }
-        acc
-    }
-  }
+  private[graft] val identitiesAsOf = new LogFold(Map.empty[String, Long])(
+    (acc, c, _, _) => acc ++ c.identities)
 
   /** Assign IDENTITY values to a landing batch (S72 — Delta's
     * `GENERATED ALWAYS AS IDENTITY`, START 1 INCREMENT 1): each
@@ -1083,8 +1071,6 @@ object TxLog {
   def createEmpty(table: File, schemaDdl: String,
       partCols: Seq[String] = Seq.empty,
       identityCols: Seq[String] = Seq.empty): Long = {
-    require(versions(table).isEmpty,
-      s"TxLog CREATE TABLE: $table already has a log")
     val schema = StructType.fromDDL(schemaDdl)
     val missing = partCols.filterNot(schema.fieldNames.contains)
     require(missing.isEmpty, "TxLog CREATE TABLE: PARTITIONED BY " +
@@ -1096,14 +1082,12 @@ object TxLog {
         s"TxLog CREATE TABLE: IDENTITY column `$c` must be BIGINT, " +
           s"got ${f.dataType.sql}")
     }
-    val v = commitIfBase(table, -1L, Seq.empty, Seq.empty, "create",
-      Some(schema.toDDL),
-      partCols = if (partCols.isEmpty) None
-        else Some(partCols.mkString(",")),
-      identities = identityCols.map(_ -> 1L))
-    if (v < 0) sys.error(s"TxLog CREATE TABLE: $table already has a " +
-      "log — a concurrent creator won the slot")
-    v
+    transact(table) { a =>
+      a.requireEmpty(s"TxLog CREATE TABLE: $table already has a log")
+      Some(Commit("create", metaDdl = Some(schema.toDDL),
+        partCols = Option.when(partCols.nonEmpty)(partCols.mkString(",")),
+        identities = identityCols.map(_ -> 1L)))
+    }
   }
 
   /** CREATE TABLE AS SELECT (S71): declaration AND first data load in
@@ -1111,34 +1095,30 @@ object TxLog {
     */
   def createAs(spark: SparkSession, table: File, df: DataFrame,
       partCols: Seq[String] = Seq.empty): Long = {
-    require(versions(table).isEmpty,
-      s"TxLog CREATE TABLE: $table already has a log")
     val missing = partCols.filterNot(df.columns.contains)
     require(missing.isEmpty, "TxLog CREATE TABLE: PARTITIONED BY " +
       s"column(s) not in the data: ${missing.mkString(", ")}")
-    val files = writeFiles(df, table, "create", partCols)
-    val v = commitIfBase(table, -1L, files, Seq.empty, "create",
-      Some(df.schema.toDDL),
-      partCols = if (partCols.isEmpty) None
-        else Some(partCols.mkString(",")))
-    if (v < 0) {
-      discardFileGroup(table, files)
-      sys.error(s"TxLog CREATE TABLE: $table already has a log — a " +
-        "concurrent creator won the slot")
+    transact(table) { a =>
+      a.requireEmpty(s"TxLog CREATE TABLE: $table already has a log")
+      Some(Commit("create", a.write(df, "create", partCols),
+        metaDdl = Some(df.schema.toDDL),
+        partCols = Option.when(partCols.nonEmpty)(partCols.mkString(","))))
     }
-    v
   }
 
   /** The table's declared schema (falling back to the snapshot's footer
     * schema for never-ALTERed tables) — what INSERT INTO binds
     * positionally against.
     */
-  def declaredSchema(spark: SparkSession, table: File): StructType = {
-    val v = versions(table).lastOption.getOrElse(
-      sys.error(s"TxLog: no commits in $table"))
+  def declaredSchema(spark: SparkSession, table: File): StructType =
+    schemaAt(spark, table, versions(table).lastOption.getOrElse(
+      sys.error(s"TxLog: no commits in $table")))
+
+  /** The declared schema as of `v`, else the snapshot's footer schema. */
+  private def schemaAt(spark: SparkSession, table: File,
+      v: Long): StructType =
     schemaDdlAsOf(table, v).map(StructType.fromDDL)
       .getOrElse(snapshot(spark, table, Some(v)).schema)
-  }
 
   // ---- partitioned tables (S58) -------------------------------------------
 
@@ -1187,26 +1167,17 @@ object TxLog {
   def createPartitioned(df: DataFrame, table: File,
       partCols: Seq[String], ts: Option[Long] = None): Long = {
     require(partCols.nonEmpty, "TxLog PARTITIONED BY: no columns given")
-    require(versions(table).isEmpty,
-      s"TxLog PARTITIONED BY: $table already has a log — partitioning " +
-        "is declared at creation and immutable (rewrite into a new table)")
     val missing = partCols.filterNot(df.columns.contains)
     require(missing.isEmpty,
       s"TxLog PARTITIONED BY: column(s) not in the data: " +
         missing.mkString(", "))
-    val files = writeFiles(df, table, "append", partCols)
-    // slot 0 only: losing the create race to another creator must NOT
-    // blind-retry into v1 (which would stack a second, ignored
-    // partition declaration onto someone else's table)
-    val v = commitIfBase(table, -1L, files, Seq.empty,
-      "create-partitioned", ts = ts,
-      partCols = Some(partCols.mkString(",")))
-    if (v < 0) {
-      discardFileGroup(table, files)
-      sys.error(s"TxLog PARTITIONED BY: $table already has a log — " +
-        "a concurrent creator won the slot")
+    transact(table) { a =>
+      a.requireEmpty(s"TxLog PARTITIONED BY: $table already has a log — " +
+        "partitioning is declared at creation and immutable (rewrite " +
+        "into a new table)")
+      Some(Commit("create-partitioned", a.write(df, "append", partCols),
+        ts = ts, partCols = Some(partCols.mkString(","))))
     }
-    v
   }
 
   /** Hive-style partition values carried by a file path: every
@@ -1236,11 +1207,9 @@ object TxLog {
     * drop, `df` lands partitioned, every other partition's files survive
     * by reference, one commit. The CDC full-partition-reload primitive:
     * re-snapshotting one day of a 100-TB table costs that day, not the
-    * table.
-    *
-    * Compare-and-commit: the remove set derives from a snapshot, so a
-    * lost race re-derives rather than re-slotting blindly (a racing
-    * append into the same partition must not survive the overwrite).
+    * table. A racing append into the same partition must not survive
+    * the overwrite, which is why the remove set re-derives on a lost
+    * slot.
     */
   def overwritePartitions(spark: SparkSession, table: File,
       df: DataFrame): Long = {
@@ -1254,33 +1223,29 @@ object TxLog {
       .distinct().collect()
       .map(r => partCols.indices.map(i => partCols(i) -> r.getString(i))
         .toMap).toSet
-    var committed = -1L
-    while (committed < 0) {
-      val v = versions(table).last
-      val st = liveState(table, v)
-      requireLocalized(st, "OVERWRITE PARTITIONS")
+    transact(table) { a =>
+      val v = a.base("OVERWRITE PARTITIONS")
+      requireLocalized(a.st, "OVERWRITE PARTITIONS")
       requireNoIdentity(table, v, "OVERWRITE PARTITIONS")
       // defaults materialize like append's (r15 review): an overwrite
       // omitting a defaulted column otherwise lands files that postdate
       // the declaration yet physically lack it — the read-time fill
       // (keyed on the write epoch) would never patch them and the rows
       // read NULL where append's would read the default
-      val dfd = withWriteDefaults(df, table, Some(v))
-      // gate INSIDE the loop (r12 advice), like append/overwriteAll: a
-      // racing ADD CONSTRAINT between a pre-loop gate and the winning
+      val dfd = withWriteDefaults(df, table, v)
+      // gate INSIDE the transaction (r12 advice), like append/overwriteAll:
+      // a racing ADD CONSTRAINT between an up-front gate and the winning
       // slot would let violating rows commit after the constraint
-      enforceConstraints(spark, table, dfd, "OVERWRITE PARTITIONS")
-      val removed = st.live.filter { a =>
-        val pv = partValsOf(a.path)
+      enforceConstraints(table, v, dfd, "OVERWRITE PARTITIONS")
+      val removed = a.st.live.filter { f =>
+        val pv = partValsOf(f.path)
         combos.exists(c => c.forall { case (k, vv) =>
           pv.get(k).exists(got => got == vv) })
       }.map(_.path)
-      val files = writeFiles(toPhysical(dfd, mappingAsOf(table, v)),
-        table, "overwrite", partCols)
-      committed = commitIfBase(table, v, files, removed, "overwrite")
-      if (committed < 0) discardFileGroup(table, files)
+      val files = a.write(toPhysical(dfd, mappingAsOf(table, v)),
+        "overwrite")
+      Some(Commit("overwrite", files, removed))
     }
-    committed
   }
 
   /** Full-table INSERT OVERWRITE (the unpartitioned half of the
@@ -1289,24 +1254,18 @@ object TxLog {
     * `df`. One commit; old versions still time-travel.
     */
   def overwriteAll(spark: SparkSession, table: File,
-      df: DataFrame): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val v = versions(table).last
-      val st = liveState(table, v)
-      requireLocalized(st, "OVERWRITE")
+      df: DataFrame): Long =
+    transact(table) { a =>
+      val v = a.base("OVERWRITE")
+      requireLocalized(a.st, "OVERWRITE")
       requireNoIdentity(table, v, "OVERWRITE")
       // same write-side default materialization as append (r15 review)
-      val dfd = withWriteDefaults(df, table, Some(v))
-      enforceConstraints(spark, table, dfd, "OVERWRITE")
-      val files = writeFiles(toPhysical(dfd, mappingAsOf(table, v)),
-        table, "overwrite", partitionColsOf(table))
-      committed = commitIfBase(table, v, files, st.live.map(_.path),
+      val dfd = withWriteDefaults(df, table, v)
+      enforceConstraints(table, v, dfd, "OVERWRITE")
+      val files = a.write(toPhysical(dfd, mappingAsOf(table, v)),
         "overwrite")
-      if (committed < 0) discardFileGroup(table, files)
+      Some(Commit("overwrite", files, a.st.live.map(_.path)))
     }
-    committed
-  }
 
   /** Partition-pruned snapshot (S58): keep only live files whose
     * path-carried partition values satisfy `keep` — decided DRIVER-SIDE
@@ -1344,72 +1303,25 @@ object TxLog {
   // ---- CHECK constraints (S59) --------------------------------------------
 
   /** Active CHECK constraints AS OF `v` (name → expression text): the
-    * log's constraint add/drop deltas folded in commit order. Commit
-    * files are immutable, so the fold memoizes per (table, version) with
-    * the recurrence active(v) = active(v−1) ++ deltas(v).
+    * log's constraint add/drop deltas folded in commit order.
     */
-  private val constraintMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), Map[String, String]]
-
-  private[graft] def constraintsAsOf(table: File, v: Long)
-      : Map[String, String] = {
-    if (v < 0) return Map.empty
-    val key = table.getCanonicalPath
-    constraintMemo.get((key, v)) match {
-      case Some(m) => m
-      case None =>
-        // ITERATIVE fold up from the highest memoized version — a
-        // recursive fill would recurse one frame per commit and blow
-        // the stack on the long logs the checkpoint machinery exists for
-        var base = v - 1
-        while (base >= 0 && !constraintMemo.contains((key, base))) base -= 1
-        var acc =
-          if (base < 0) Map.empty[String, String]
-          else constraintMemo((key, base))
-        var i = base + 1
-        while (i <= v) {
-          acc = readCommit(table, i).constraints.foldLeft(acc) {
-            case (a, Constraint(n, Some(e))) => a + (n -> e)
-            case (a, Constraint(n, None)) => a - n
-          }
-          constraintMemo.put((key, i), acc)
-          i += 1
-        }
-        acc
-    }
-  }
+  private[graft] val constraintsAsOf =
+    new LogFold(Map.empty[String, String])((acc, c, _, _) =>
+      c.constraints.foldLeft(acc) {
+        case (m, Constraint(n, Some(e))) => m + (n -> e)
+        case (m, Constraint(n, None)) => m - n
+      })
 
   /** Active column DEFAULTS as of `v`: col → (expr text, declaring
-    * version). Same memoized add/drop fold as [[constraintsAsOf]].
+    * version), folded from the add/drop deltas like [[constraintsAsOf]].
     */
-  private val defaultsMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), Map[String, (String, Long)]]
-
-  private[graft] def defaultsAsOf(table: File, v: Long)
-      : Map[String, (String, Long)] = {
-    if (v < 0) return Map.empty
-    val key = table.getCanonicalPath
-    defaultsMemo.get((key, v)) match {
-      case Some(m) => m
-      case None =>
-        var base = v - 1
-        while (base >= 0 && !defaultsMemo.contains((key, base))) base -= 1
-        var acc =
-          if (base < 0) Map.empty[String, (String, Long)]
-          else defaultsMemo((key, base))
-        var i = base + 1
-        while (i <= v) {
-          acc = readCommit(table, i).colDefaults.foldLeft(acc) {
-            case (a, ColDefault(c, Some(e), since)) =>
-              a + (c -> (e, since.getOrElse(i)))
-            case (a, ColDefault(c, None, _)) => a - c
-          }
-          defaultsMemo.put((key, i), acc)
-          i += 1
-        }
-        acc
-    }
-  }
+  private[graft] val defaultsAsOf =
+    new LogFold(Map.empty[String, (String, Long)])((acc, c, v, _) =>
+      c.colDefaults.foldLeft(acc) {
+        case (m, ColDefault(col, Some(e), since)) =>
+          m + (col -> (e, since.getOrElse(v)))
+        case (m, ColDefault(col, None, _)) => m - col
+      })
 
   /** TYPE WIDENING (S70, round-13 — Delta 4.0's metadata-only widen):
     * re-declare `column` at a WIDER type in one metadata commit — zero
@@ -1431,15 +1343,10 @@ object TxLog {
     "FLOAT" -> Set("DOUBLE"))
 
   def alterWidenColumn(spark: SparkSession, table: File, column: String,
-      newType: String): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val v = versions(table).lastOption.getOrElse(
-        sys.error(s"TxLog: ALTER on empty table $table"))
-      val cur = schemaDdlAsOf(table, v) match {
-        case Some(d) => StructType.fromDDL(d)
-        case None => snapshot(spark, table, Some(v)).schema
-      }
+      newType: String): Long =
+    transact(table) { a =>
+      val v = a.base("ALTER")
+      val cur = schemaAt(spark, table, v)
       val f = cur.fields.find(_.name == column).getOrElse(sys.error(
         s"TxLog ALTER COLUMN: `$column` not in table schema " +
           cur.fieldNames.mkString("(", ", ", ")")))
@@ -1458,80 +1365,33 @@ object TxLog {
       // the mapping (if any) is untouched: widening changes a TYPE, the
       // physical NAME stays — but the metaData action always carries
       // both halves together, so re-emit the current mapping verbatim
-      val mapping = metaAsOf(table, v).flatMap(_._2)
-      committed = commitIfBase(table, v, Seq.empty, Seq.empty,
-        "alter-widen", Some(evolved.toDDL), mapping)
+      Some(Commit("alter-widen", metaDdl = Some(evolved.toDDL),
+        metaMapping = metaAsOf(table, v).flatMap(_._2)))
     }
-    committed
-  }
 
-  /** Active BLOOM indexes as of `v`: physical column → (bits, k). Same
-    * memoized add/drop fold as [[constraintsAsOf]] — bytes-per-commit
-    * driver resolution, never a data read.
+  /** Active BLOOM indexes as of `v`: physical column → (bits, k), an
+    * add/drop fold like [[constraintsAsOf]] — bytes-per-commit driver
+    * resolution, never a data read.
     */
-  private val bloomsMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), Map[String, (Int, Int)]]
-
-  private[graft] def bloomsAsOf(table: File, v: Long)
-      : Map[String, (Int, Int)] = {
-    if (v < 0) return Map.empty
-    val key = table.getCanonicalPath
-    bloomsMemo.get((key, v)) match {
-      case Some(m) => m
-      case None =>
-        var base = v - 1
-        while (base >= 0 && !bloomsMemo.contains((key, base))) base -= 1
-        var acc =
-          if (base < 0) Map.empty[String, (Int, Int)]
-          else bloomsMemo((key, base))
-        var i = base + 1
-        while (i <= v) {
-          acc = readCommit(table, i).bloomIdx.foldLeft(acc) {
-            case (a, BloomIdx(c, Some(spec))) => a + (c -> spec)
-            case (a, BloomIdx(c, None)) => a - c
-          }
-          bloomsMemo.put((key, i), acc)
-          i += 1
-        }
-        acc
-    }
-  }
+  private[graft] val bloomsAsOf =
+    new LogFold(Map.empty[String, (Int, Int)])((acc, c, _, _) =>
+      c.bloomIdx.foldLeft(acc) {
+        case (m, BloomIdx(col, Some(spec))) => m + (col -> spec)
+        case (m, BloomIdx(col, None)) => m - col
+      })
 
   /** The commit that DECLARED each currently-active bloom spec, as of
     * `v` (physical column → declaring version) — the epoch the probe
-    * gates per-file bitsets on. Same memoized incremental fold as
-    * [[bloomsAsOf]]; previously the probe re-derived this by re-reading
-    * every commit ≤ v on each invocation (r14 advisor: unmemoized
+    * gates per-file bitsets on. A memoized fold like [[bloomsAsOf]], so
+    * a probe never re-reads every commit ≤ v (r14 advisor: unmemoized
     * driver work growing linearly with log length per probe batch).
     */
-  private val bloomEpochsMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), Map[String, Long]]
-
-  private[graft] def bloomEpochsAsOf(table: File, v: Long)
-      : Map[String, Long] = {
-    if (v < 0) return Map.empty
-    val key = table.getCanonicalPath
-    bloomEpochsMemo.get((key, v)) match {
-      case Some(m) => m
-      case None =>
-        var base = v - 1
-        while (base >= 0 && !bloomEpochsMemo.contains((key, base)))
-          base -= 1
-        var acc =
-          if (base < 0) Map.empty[String, Long]
-          else bloomEpochsMemo((key, base))
-        var i = base + 1
-        while (i <= v) {
-          acc = readCommit(table, i).bloomIdx.foldLeft(acc) {
-            case (a, BloomIdx(c, Some(_))) => a + (c -> i)
-            case (a, BloomIdx(c, None)) => a - c
-          }
-          bloomEpochsMemo.put((key, i), acc)
-          i += 1
-        }
-        acc
-    }
-  }
+  private val bloomEpochsAsOf =
+    new LogFold(Map.empty[String, Long])((acc, c, v, _) =>
+      c.bloomIdx.foldLeft(acc) {
+        case (m, BloomIdx(col, Some(_))) => m + (col -> v)
+        case (m, BloomIdx(col, None)) => m - col
+      })
 
   /** Declare a per-file BLOOM FILTER INDEX on `column` (S66, round-13 —
     * Delta's `CREATE BLOOMFILTER INDEX`): every write from this commit
@@ -1559,35 +1419,32 @@ object TxLog {
     require(bits >= 64 && bits % 64 == 0,
       s"TxLog: bloom bits must be a positive multiple of 64, got $bits")
     require(k >= 1 && k <= 8, s"TxLog: bloom k must be in [1, 8], got $k")
-    val vOpt = versions(table).lastOption
-    vOpt.foreach { v =>
-      val schema = schemaDdlAsOf(table, v).map(StructType.fromDDL)
-        .getOrElse(snapshot(spark, table, Some(v)).schema)
-      val f = schema.fields.find(_.name == column).getOrElse(sys.error(
-        s"TxLog: bloom index column `$column` not in table schema " +
-          schema.fieldNames.mkString("(", ", ", ")")))
-      require(f.dataType == LongType ||
-        f.dataType == org.apache.spark.sql.types.IntegerType,
-        s"TxLog: bloom index needs an integral column; `$column` is " +
-          f.dataType.simpleString)
+    transact(table) { a =>
+      if (a.v >= 0) {
+        val schema = schemaAt(spark, table, a.v)
+        val f = schema.fields.find(_.name == column).getOrElse(sys.error(
+          s"TxLog: bloom index column `$column` not in table schema " +
+            schema.fieldNames.mkString("(", ", ", ")")))
+        require(f.dataType == LongType ||
+          f.dataType == org.apache.spark.sql.types.IntegerType,
+          s"TxLog: bloom index needs an integral column; `$column` is " +
+            f.dataType.simpleString)
+      }
+      val phys = mappingAsOf(table, a.v).getOrElse(column, column)
+      Some(Commit("bloom_index",
+        bloomIdx = Seq(BloomIdx(phys, Some((bits, k))))))
     }
-    val phys = vOpt.map(v => mappingAsOf(table, v).getOrElse(column, column))
-      .getOrElse(column)
-    commitAdds(table, Seq.empty, Seq.empty, "bloom_index",
-      bloomIdx = Seq(BloomIdx(phys, Some((bits, k)))))
   }
 
   /** Drop the bloom index on `column`: new files stop carrying bitsets;
     * bitsets already in the log stay (harmless — nothing consults them
     * once the spec is gone).
     */
-  def alterDropBloomIndex(table: File, column: String): Long = {
-    val phys = versions(table).lastOption
-      .map(v => mappingAsOf(table, v).getOrElse(column, column))
-      .getOrElse(column)
-    commitAdds(table, Seq.empty, Seq.empty, "bloom_index_drop",
-      bloomIdx = Seq(BloomIdx(phys, None)))
-  }
+  def alterDropBloomIndex(table: File, column: String): Long =
+    transact(table) { a =>
+      val phys = mappingAsOf(table, a.v).getOrElse(column, column)
+      Some(Commit("bloom_index_drop", bloomIdx = Seq(BloomIdx(phys, None))))
+    }
 
   /** Active GENERATED columns as of `v`: the defaults whose auto
     * constraint `gen_<col>` is active — the marker that distinguishes a
@@ -1611,40 +1468,16 @@ object TxLog {
     * silent false-negative prune) and that a pre-default file carries
     * the column physically (missed fill). Data files are immutable and
     * their paths unique per write, so the first add IS the commit that
-    * materialized the bytes. Memoized per (table, v); commit files are
-    * immutable so entries never go stale.
+    * materialized the bytes. An incremental fold (r15 review: rebuilding
+    * the whole map per new version cost O(log²) cumulative driver reads
+    * over a table's life): first(v) = first(v−1) plus v's unseen adds.
     */
-  private val addedAtMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), Map[String, Long]]
-
-  private def addedAtVersions(table: File, v: Long): Map[String, Long] = {
-    // incremental per-version fold like bloomsAsOf (r15 review: the
-    // per-(table, v) memo rebuilt the whole map by re-reading every
-    // commit ≤ v on each NEW version — O(log²) cumulative driver reads
-    // over a table's life). first(v) = first(v−1) min-merged with v's
-    // adds; commit files are immutable so entries never go stale.
-    if (v < 0) return Map.empty
-    val key = table.getCanonicalPath
-    addedAtMemo.get((key, v)) match {
-      case Some(m) => m
-      case None =>
-        var base = v - 1
-        while (base >= 0 && !addedAtMemo.contains((key, base))) base -= 1
-        var acc =
-          if (base < 0) Map.empty[String, Long]
-          else addedAtMemo((key, base))
-        var i = base + 1
-        while (i <= v) {
-          acc = readCommit(table, i).adds.foldLeft(acc) { (a, add) =>
-            val p = new File(table, add.path).getCanonicalPath
-            if (a.contains(p)) a else a + (p -> i) // FIRST add wins
-          }
-          addedAtMemo.put((key, i), acc)
-          i += 1
-        }
-        acc
-    }
-  }
+  private val addedAtVersions =
+    new LogFold(Map.empty[String, Long])((acc, c, v, table) =>
+      c.adds.foldLeft(acc) { (m, add) =>
+        val p = new File(table, add.path).getCanonicalPath
+        if (m.contains(p)) m else m + (p -> v) // FIRST add wins
+      })
 
   /** Partition `paths` by the DEFAULT fills each file needs as of `v`
     * (S63): a column's default fills only files added BEFORE its
@@ -1699,11 +1532,9 @@ object TxLog {
     * batch-proportional filter-count over the INCOMING rows only.
     */
   def alterAddConstraint(spark: SparkSession, table: File,
-      name: String, exprText: String): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val v = versions(table).lastOption.getOrElse(
-        sys.error(s"TxLog: ADD CONSTRAINT on empty table $table"))
+      name: String, exprText: String): Long =
+    transact(table) { a =>
+      val v = a.base("ADD CONSTRAINT")
       require(!constraintsAsOf(table, v).contains(name),
         s"TxLog ADD CONSTRAINT: $name already exists — DROP it first")
       val violations = snapshot(spark, table, Some(v))
@@ -1711,34 +1542,31 @@ object TxLog {
       require(violations == 0,
         s"TxLog ADD CONSTRAINT $name: $violations existing row(s) " +
           s"violate CHECK ($exprText) — fix the data first")
-      committed = commitIfBase(table, v, Seq.empty, Seq.empty,
-        "add-constraint",
-        constraints = Seq(Constraint(name, Some(exprText))))
+      Some(Commit("add-constraint",
+        constraints = Seq(Constraint(name, Some(exprText)))))
     }
-    committed
-  }
 
   /** ALTER TABLE … DROP CONSTRAINT name: metadata-only commit. */
-  def alterDropConstraint(table: File, name: String): Long = {
-    val v = versions(table).lastOption.getOrElse(
-      sys.error(s"TxLog: DROP CONSTRAINT on empty table $table"))
-    require(constraintsAsOf(table, v).contains(name),
-      s"TxLog DROP CONSTRAINT: no such constraint: $name")
-    commitAdds(table, Seq.empty, Seq.empty, "drop-constraint",
-      constraints = Seq(Constraint(name, None)))
-  }
+  def alterDropConstraint(table: File, name: String): Long =
+    transact(table) { a =>
+      require(constraintsAsOf(table, a.base("DROP CONSTRAINT"))
+        .contains(name), s"TxLog DROP CONSTRAINT: no such constraint: $name")
+      Some(Commit("drop-constraint",
+        constraints = Seq(Constraint(name, None))))
+    }
 
-  /** Gate an INCOMING write batch on the table's active constraints: one
+  /** Gate an INCOMING write batch on the constraints active at the
+    * commit's base version `v` (a constraint landing after it wins the
+    * slot, so the writer re-derives and is gated again): one
     * filter-count job over `df` (all constraints folded into a single
     * conjunction — one pass however many are declared); the first
     * violated constraint rejects with its count. Rewrite paths
     * (delete/compact/zorder survivors) skip this — their rows already
     * passed it on the way in.
     */
-  private def enforceConstraints(spark: SparkSession, table: File,
-      df: DataFrame, op: String): Unit = {
-    val cs = versions(table).lastOption
-      .map(constraintsAsOf(table, _)).getOrElse(Map.empty)
+  private def enforceConstraints(table: File, v: Long, df: DataFrame,
+      op: String): Unit = {
+    val cs = constraintsAsOf(table, v)
     if (cs.isEmpty) return
     val counts = df.agg(
       count(lit(1)).as("_n"),
@@ -1925,19 +1753,11 @@ object TxLog {
     val both = defaults.keySet.intersect(generated.keySet)
     require(both.isEmpty, "TxLog ALTER: column(s) cannot be both DEFAULT " +
       s"and GENERATED: ${both.mkString(", ")}")
-    // compare-and-commit: the dup check and the evolved schema derive
-    // from the base version's schema, so a racing commit (another ALTER
-    // adding the same column) must force a RE-VALIDATION, not a blind
-    // later-slot publish (two concurrent identical ALTERs would otherwise
-    // both pass the check and commit a duplicate field)
-    var committed = -1L
-    while (committed < 0) {
-      val v = versions(table).lastOption.getOrElse(
-        sys.error(s"TxLog: ALTER on empty table $table"))
-      val cur = schemaDdlAsOf(table, v) match {
-        case Some(d) => org.apache.spark.sql.types.StructType.fromDDL(d)
-        case None => snapshot(spark, table, Some(v)).schema
-      }
+    // two concurrent identical ALTERs must not both pass the dup check:
+    // the check re-runs against whatever version precedes the slot
+    transact(table) { a =>
+      val v = a.base("ALTER")
+      val cur = schemaAt(spark, table, v)
       val added = org.apache.spark.sql.types.StructType.fromDDL(addDdl)
       val dup = added.fieldNames.filter(cur.fieldNames.contains)
       require(dup.isEmpty,
@@ -1983,13 +1803,12 @@ object TxLog {
       val genConstraints = generated.toSeq.sortBy(_._1).map { case (c, e) =>
         Constraint(s"gen_$c", Some(s"$c <=> ($e)"))
       }
-      committed = commitIfBase(table, v, Seq.empty, Seq.empty, "alter",
-        Some(evolved.toDDL), mapping,
+      Some(Commit("alter", metaDdl = Some(evolved.toDDL),
+        metaMapping = mapping,
         colDefaults = (defaults ++ generated).toSeq.sortBy(_._1)
           .map { case (c, e) => ColDefault(c, Some(e)) },
-        constraints = genConstraints)
+        constraints = genConstraints))
     }
-    committed
   }
 
   /** ALTER TABLE … RENAME COLUMN on the log format (round-12, r11
@@ -2006,10 +1825,9 @@ object TxLog {
     * false-positives), which errs on the safe side: the alternative is
     * a table whose every write throws unresolved-column forever.
     */
-  private def constraintsReferencing(table: File, colName: String)
-      : Seq[String] =
-    versions(table).lastOption.map(constraintsAsOf(table, _))
-      .getOrElse(Map.empty)
+  private def constraintsReferencing(table: File, v: Long,
+      colName: String): Seq[String] =
+    constraintsAsOf(table, v)
       .collect { case (n, e)
         if ("""\b""" + java.util.regex.Pattern.quote(colName) +
           """\b""").r.findFirstIn(e).isDefined => n }.toSeq.sorted
@@ -2021,10 +1839,9 @@ object TxLog {
     * the fill — the same brick the constraint guard prevents, through
     * the default channel.
     */
-  private def defaultsReferencing(table: File, colName: String)
-      : Seq[String] =
-    versions(table).lastOption.map(defaultsAsOf(table, _))
-      .getOrElse(Map.empty)
+  private def defaultsReferencing(table: File, v: Long,
+      colName: String): Seq[String] =
+    defaultsAsOf(table, v)
       .collect { case (c, (e, _))
         if c != colName &&
           ("""\b""" + java.util.regex.Pattern.quote(colName) +
@@ -2037,25 +1854,20 @@ object TxLog {
     require(!partitionColsOf(table).contains(from),
       s"TxLog RENAME: $from is a partition column — the layout is " +
         "declared at creation and immutable (rewrite into a new table)")
-    // a CHECK constraint referencing the old name would make every
-    // later write throw unresolved-column — the Delta restriction
-    val refs = constraintsReferencing(table, from)
-    require(refs.isEmpty,
-      s"TxLog RENAME: $from is referenced by CONSTRAINT " +
-        s"${refs.mkString(", ")} — DROP the constraint first")
-    val drefs = defaultsReferencing(table, from)
-    require(drefs.isEmpty,
-      s"TxLog RENAME: $from is referenced by the DEFAULT/generation " +
-        s"expression of column(s) ${drefs.mkString(", ")} — drop " +
-        "those defaults first")
-    var committed = -1L
-    while (committed < 0) {
-      val v = versions(table).lastOption.getOrElse(
-        sys.error(s"TxLog: ALTER on empty table $table"))
-      val cur = schemaDdlAsOf(table, v) match {
-        case Some(d) => org.apache.spark.sql.types.StructType.fromDDL(d)
-        case None => snapshot(spark, table, Some(v)).schema
-      }
+    transact(table) { a =>
+      val v = a.base("ALTER")
+      // a CHECK constraint referencing the old name would make every
+      // later write throw unresolved-column — the Delta restriction
+      val refs = constraintsReferencing(table, v, from)
+      require(refs.isEmpty,
+        s"TxLog RENAME: $from is referenced by CONSTRAINT " +
+          s"${refs.mkString(", ")} — DROP the constraint first")
+      val drefs = defaultsReferencing(table, v, from)
+      require(drefs.isEmpty,
+        s"TxLog RENAME: $from is referenced by the DEFAULT/generation " +
+          s"expression of column(s) ${drefs.mkString(", ")} — drop " +
+          "those defaults first")
+      val cur = schemaAt(spark, table, v)
       require(cur.fieldNames.contains(from),
         s"TxLog RENAME: no such column: $from")
       require(!cur.fieldNames.contains(to),
@@ -2080,11 +1892,9 @@ object TxLog {
         case (e, declV) => Seq(ColDefault(from, None),
           ColDefault(to, Some(e), Some(declV)))
       }
-      committed = commitIfBase(table, v, Seq.empty, Seq.empty, "alter",
-        Some(evolved.toDDL), Some(encodeMapping(m)),
-        colDefaults = migrate)
+      Some(Commit("alter", metaDdl = Some(evolved.toDDL),
+        metaMapping = Some(encodeMapping(m)), colDefaults = migrate))
     }
-    committed
   }
 
   /** ALTER TABLE … DROP COLUMN on the log format (round-12): ONE
@@ -2099,23 +1909,18 @@ object TxLog {
     require(!partitionColsOf(table).contains(name),
       s"TxLog DROP: $name is a partition column — the layout is " +
         "declared at creation and immutable (rewrite into a new table)")
-    val refs = constraintsReferencing(table, name)
-    require(refs.isEmpty,
-      s"TxLog DROP: $name is referenced by CONSTRAINT " +
-        s"${refs.mkString(", ")} — DROP the constraint first")
-    val drefs = defaultsReferencing(table, name)
-    require(drefs.isEmpty,
-      s"TxLog DROP: $name is referenced by the DEFAULT/generation " +
-        s"expression of column(s) ${drefs.mkString(", ")} — drop " +
-        "those defaults first")
-    var committed = -1L
-    while (committed < 0) {
-      val v = versions(table).lastOption.getOrElse(
-        sys.error(s"TxLog: ALTER on empty table $table"))
-      val cur = schemaDdlAsOf(table, v) match {
-        case Some(d) => org.apache.spark.sql.types.StructType.fromDDL(d)
-        case None => snapshot(spark, table, Some(v)).schema
-      }
+    transact(table) { a =>
+      val v = a.base("ALTER")
+      val refs = constraintsReferencing(table, v, name)
+      require(refs.isEmpty,
+        s"TxLog DROP: $name is referenced by CONSTRAINT " +
+          s"${refs.mkString(", ")} — DROP the constraint first")
+      val drefs = defaultsReferencing(table, v, name)
+      require(drefs.isEmpty,
+        s"TxLog DROP: $name is referenced by the DEFAULT/generation " +
+          s"expression of column(s) ${drefs.mkString(", ")} — drop " +
+          "those defaults first")
+      val cur = schemaAt(spark, table, v)
       require(cur.fieldNames.contains(name),
         s"TxLog DROP: no such column: $name")
       require(cur.fields.length > 1,
@@ -2130,11 +1935,9 @@ object TxLog {
         if (defaultsAsOf(table, v).contains(name))
           Seq(ColDefault(name, None))
         else Seq.empty
-      committed = commitIfBase(table, v, Seq.empty, Seq.empty, "alter",
-        Some(evolved.toDDL), Some(encodeMapping(m)),
-        colDefaults = dropDefault)
+      Some(Commit("alter", metaDdl = Some(evolved.toDDL),
+        metaMapping = Some(encodeMapping(m)), colDefaults = dropDefault))
     }
-    committed
   }
 
   /** TIMESTAMP AS OF binding (round-12, r11 verdict task 3): the
@@ -2178,8 +1981,8 @@ object TxLog {
       : (DataFrame, Int, Int) = {
     val v = version.orElse(versions(table).lastOption).getOrElse(
       sys.error(s"TxLog: no commits in $table"))
-    // ONE log resolve serves the live set, the DV attachments, and (via
-    // liveFiles' shared path) the prune — not one per consumer
+    // ONE log resolve serves the live set, the DV attachments and the
+    // prune — not one per consumer
     val st = liveState(table, v)
     val files = st.live
     val phys = mappingAsOf(table, v).getOrElse(column, column)
@@ -2189,12 +1992,9 @@ object TxLog {
     })
     val frame =
       if (kept.isEmpty) {
-        val schema = schemaDdlAsOf(table, v) match {
-          case Some(ddl) => StructType.fromDDL(ddl)
-          case None => snapshot(spark, table, Some(v)).schema
-        }
         spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          schemaAt(spark, table, v))
       } else assemble(spark, table, v, kept, st.dvs)
     (frame, kept.size, files.size)
   }
@@ -2302,10 +2102,7 @@ object TxLog {
         }
       }
     }
-    lazy val emptySchema = schemaDdlAsOf(table, v) match {
-      case Some(ddl) => StructType.fromDDL(ddl)
-      case None => snapshot(spark, table, Some(v)).schema
-    }
+    lazy val emptySchema = schemaAt(spark, table, v)
     values.map { value =>
       val kept = files.filter { a =>
         val rangeOk = a.stats.get(phys) match {
@@ -2396,39 +2193,31 @@ object TxLog {
     */
   def deleteWhere(spark: SparkSession, table: File,
       pred: org.apache.spark.sql.Column,
-      alias: Option[String] = None): Long = {
-    // compare-and-commit: the rewrite derives from a SNAPSHOT, so a
-    // commit landing in between invalidates it — a blind retry into the
-    // next slot would re-add survivor copies of rows a racing delete
-    // also rewrote (duplicates) or re-remove files a racer already
-    // removed; on a lost race the whole derivation re-runs (the same
-    // discipline as deleteWhereDV / zorder / overwritePartitions)
-    var committed = -1L
-    while (committed < 0) {
-      val v = versions(table).last
-      val st = liveState(table, v)
-      requireLocalized(st, "DELETE")
-      val affectedRel = affectedFiles(spark, table, v, st, pred, alias)
-      if (affectedRel.isEmpty) return -1L
-      // the affected files re-read under the declared schema with their
-      // DVs applied (assemble): `pred` is in LOGICAL names, and a raw
-      // footer read would resurrect tombstoned rows into the rewrite
-      val affected = st.live.filter(a => affectedRel.contains(a.path))
-      val frame = assemble(spark, table, v, affected, st.dvs)
-      // SQL three-valued logic: DELETE removes rows where pred is TRUE;
-      // a NULL-valued pred keeps the row — plain !pred is NULL for those
-      // and would silently drop them (the Dml module's survivor rule)
-      val survivors = alias.map(frame.as(_)).getOrElse(frame)
-        .filter(!coalesce(pred, lit(false)))
-      val files =
-        if (survivors.isEmpty) Seq.empty[Add]
-        else writeFiles(toPhysical(survivors, mappingAsOf(table, v)),
-          table, "delete", partitionColsOf(table))
-      committed = commitIfBase(table, v, files, affectedRel, "delete")
-      if (committed < 0) discardFileGroup(table, files)
+      alias: Option[String] = None): Long =
+    // a racing delete's rewrite must not be undone: re-adding survivor
+    // copies of rows it also rewrote would duplicate them
+    transact(table) { a =>
+      val v = a.base("DELETE")
+      requireLocalized(a.st, "DELETE")
+      val affectedRel = affectedFiles(spark, table, v, a.st, pred, alias)
+      Option.when(affectedRel.nonEmpty) {
+        // the affected files re-read under the declared schema with their
+        // DVs applied (assemble): `pred` is in LOGICAL names, and a raw
+        // footer read would resurrect tombstoned rows into the rewrite
+        val affected = a.st.live.filter(f => affectedRel.contains(f.path))
+        val frame = assemble(spark, table, v, affected, a.st.dvs)
+        // SQL three-valued logic: DELETE removes rows where pred is TRUE;
+        // a NULL-valued pred keeps the row — plain !pred is NULL for those
+        // and would silently drop them (the Dml module's survivor rule)
+        val survivors = alias.map(frame.as(_)).getOrElse(frame)
+          .filter(!coalesce(pred, lit(false)))
+        val files =
+          if (survivors.isEmpty) Seq.empty[Add]
+          else a.write(toPhysical(survivors, mappingAsOf(table, v)),
+            "delete")
+        Commit("delete", files, affectedRel)
+      }
     }
-    committed
-  }
 
   /** Copy-on-write UPDATE (round-13, the statement surface's row-level
     * third leg next to [[deleteWhere]]/[[merge]]): rewrite only the live
@@ -2455,10 +2244,9 @@ object TxLog {
       s"TxLog UPDATE: assignment to partition column(s) " +
         s"${badSets.mkString(", ")} is not supported; use DELETE + " +
         "append to move rows across partitions")
-    var committed = -1L
-    while (committed < 0) {
-      val v = versions(table).last
-      val st = liveState(table, v)
+    transact(table) { a =>
+      val v = a.base("UPDATE")
+      val st = a.st
       requireLocalized(st, "UPDATE")
       val declared = schemaDdlAsOf(table, v)
         .map(d => StructType.fromDDL(d).fieldNames.toSeq)
@@ -2468,40 +2256,39 @@ object TxLog {
       require(unknown.isEmpty,
         s"TxLog UPDATE: no such column(s): ${unknown.mkString(", ")}")
       val affectedRel = affectedFiles(spark, table, v, st, pred, alias)
-      if (affectedRel.isEmpty) return -1L
-      val affected = st.live.filter(a => affectedRel.contains(a.path))
-      val frame = assemble(spark, table, v, affected, st.dvs)
-      val aliased = alias.map(frame.as(_)).getOrElse(frame)
-      val setMap = sets.toMap
-      // every assignment CASTs to the declared column type (the Delta
-      // assignment-cast rule): an uncast widening value (SET bigint_col
-      // = 1.5) would otherwise commit a DOUBLE-typed file the declared
-      // schema can never read back (r13 review)
-      val assigned = aliased.select(declared.map { c =>
-        setMap.get(c).map(vv => when(pred, vv).otherwise(col(c))
-          .cast(frame.schema(c).dataType).as(c))
-          .getOrElse(col(c))
-      }: _*)
-      // GENERATED columns the statement does not assign RECOMPUTE from
-      // the post-assignment row (the Delta rule) — without this, any
-      // UPDATE touching a referenced column would be rejected wholesale
-      // by the auto gen-constraint (r13 review). Unconditional over the
-      // affected rows: generation expressions are deterministic, so
-      // recomputing an untouched row reproduces its stored value.
-      val rewritten = generatedOf(table, v).foldLeft(assigned) {
-        case (d, (c, e)) if !setMap.contains(c) =>
-          d.withColumn(c, expr(e).cast(d.schema(c).dataType))
-        case (d, _) => d
+      Option.when(affectedRel.nonEmpty) {
+        val affected = st.live.filter(f => affectedRel.contains(f.path))
+        val frame = assemble(spark, table, v, affected, st.dvs)
+        val aliased = alias.map(frame.as(_)).getOrElse(frame)
+        val setMap = sets.toMap
+        // every assignment CASTs to the declared column type (the Delta
+        // assignment-cast rule): an uncast widening value (SET bigint_col
+        // = 1.5) would otherwise commit a DOUBLE-typed file the declared
+        // schema can never read back (r13 review)
+        val assigned = aliased.select(declared.map { c =>
+          setMap.get(c).map(vv => when(pred, vv).otherwise(col(c))
+            .cast(frame.schema(c).dataType).as(c))
+            .getOrElse(col(c))
+        }: _*)
+        // GENERATED columns the statement does not assign RECOMPUTE from
+        // the post-assignment row (the Delta rule) — without this, any
+        // UPDATE touching a referenced column would be rejected wholesale
+        // by the auto gen-constraint (r13 review). Unconditional over the
+        // affected rows: generation expressions are deterministic, so
+        // recomputing an untouched row reproduces its stored value.
+        val rewritten = generatedOf(table, v).foldLeft(assigned) {
+          case (d, (c, e)) if !setMap.contains(c) =>
+            d.withColumn(c, expr(e).cast(d.schema(c).dataType))
+          case (d, _) => d
+        }
+        // the gate sees the post-update rows: an assignment driving a row
+        // into violation must reject, the Delta CHECK-on-write contract
+        enforceConstraints(table, v, rewritten, "UPDATE")
+        val files = a.write(toPhysical(rewritten, mappingAsOf(table, v)),
+          "update")
+        Commit("update", files, affectedRel)
       }
-      // the gate sees the post-update rows: an assignment driving a row
-      // into violation must reject, the Delta CHECK-on-write contract
-      enforceConstraints(spark, table, rewritten, "UPDATE")
-      val files = writeFiles(toPhysical(rewritten, mappingAsOf(table, v)),
-        table, "update", partitionColsOf(table))
-      committed = commitIfBase(table, v, files, affectedRel, "update")
-      if (committed < 0) discardFileGroup(table, files)
     }
-    committed
   }
 
   /** MERGE-ON-READ DELETE via deletion vectors (round-12): instead of
@@ -2522,46 +2309,31 @@ object TxLog {
     *
     * Tombstones are computed over the CURRENT state (existing DVs
     * applied), so re-deleting an already-tombstoned row is a no-op and
-    * the per-file counts never double-subtract. Compare-and-commit: the
-    * positions derive from a snapshot; a racing commit re-derives.
-    * Returns the version, or -1 when nothing matched.
+    * the per-file counts never double-subtract. Returns the version, or
+    * -1 when nothing matched.
     */
   def deleteWhereDV(spark: SparkSession, table: File,
-      pred: org.apache.spark.sql.Column): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val v = versions(table).last
-      val st = liveState(table, v)
-      requireLocalized(st, "DV DELETE")
+      pred: org.apache.spark.sql.Column): Long =
+    transact(table) { a =>
+      val v = a.base("DV DELETE")
+      requireLocalized(a.st, "DV DELETE")
       val matches =
-        assemble(spark, table, v, st.live, st.dvs, keepPos = true)
+        assemble(spark, table, v, a.st.live, a.st.dvs, keepPos = true)
           .filter(pred)
           .select(col("_gf_rel").as("f"), col("_gi").as("i"))
       // file-count-bounded driver read: one row per affected file
       val perFile = matches.groupBy(col("f")).count()
         .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
-      if (perFile.isEmpty) return -1L
-      val sub = s"dv_${System.nanoTime()}_${groupSeq.incrementAndGet()}"
-      matches.coalesce(1).write
-        .parquet(new File(table, sub).getAbsolutePath)
-      // sidecar `f` stays the basename join key; the ATTACHMENT names the
-      // table-relative Add.path so log bookkeeping stays path-addressed
-      val toPath = byBase(table, st.live)
-      val dvs = perFile.map { case (f, n) => Dv(toPath(f), sub, n) }
-      committed = commitIfBase(table, v, Seq.empty, Seq.empty,
-        "dv-delete", None, None, None, dvs.toSeq)
-      if (committed < 0) {
-        // lost the slot: the sidecar references a stale snapshot's
-        // positions — discard it before re-deriving (vacuum never walks
-        // uncommitted dv groups, so it would leak forever)
-        val dir = new File(table, sub)
-        Option(dir.listFiles()).foreach(_.foreach(_.delete()))
-        dir.delete()
-        ()
+      Option.when(perFile.nonEmpty) {
+        val sub = a.sidecar(matches)
+        // sidecar `f` stays the basename join key; the ATTACHMENT names
+        // the table-relative Add.path so log bookkeeping stays
+        // path-addressed
+        val toPath = byBase(table, a.st.live)
+        Commit("dv-delete",
+          dvs = perFile.map { case (f, n) => Dv(toPath(f), sub, n) }.toSeq)
       }
     }
-    committed
-  }
 
   /** SHALLOW CLONE (round-12): create a NEW table whose first commit
     * references the source's live data files (and DV sidecars) by
@@ -2583,8 +2355,6 @@ object TxLog {
     * before vacuuming the source past their shared history.
     */
   def cloneShallow(spark: SparkSession, source: File, target: File): Long = {
-    require(versions(target).isEmpty,
-      s"TxLog CLONE: target $target already has a log")
     val v = versions(source).lastOption.getOrElse(
       sys.error(s"TxLog CLONE: source $source has no commits"))
     // Column DEFAULTS (and generated columns, which ride the default
@@ -2628,14 +2398,13 @@ object TxLog {
     val idents = identitiesAsOf(source, v).toSeq.sortBy(_._1)
     // slot-0-ONLY commit (r15 review): losing the create race to a
     // concurrent writer must REJECT, not stack the clone's metadata
-    // onto someone else's table — the createEmpty/createAs discipline
-    val committed = commitIfBase(target, -1L, adds, Seq.empty, "clone",
-      meta.map(_._1), meta.flatMap(_._2), None, dvs,
-      constraints = cons, partCols = pc, identities = idents)
-    require(committed == 0L,
-      s"TxLog CLONE: lost the create race for $target — another writer " +
-        "committed first")
-    committed
+    // onto someone else's table
+    transact(target) { a =>
+      a.requireEmpty(s"TxLog CLONE: target $target already has a log")
+      Some(Commit("clone", adds, metaDdl = meta.map(_._1),
+        metaMapping = meta.flatMap(_._2), dvs = dvs, constraints = cons,
+        partCols = pc, identities = idents))
+    }
   }
 
   /** Reject file-identity DML while any live file is an external
@@ -2662,45 +2431,47 @@ object TxLog {
     * materialize DVs, then restore).
     */
   def restore(spark: SparkSession, table: File, toVersion: Long): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val latest = versions(table).last
+    var noop = -1L
+    val v = transact(table) { a =>
+      val latest = a.base("RESTORE")
       require(toVersion >= 0 && toVersion <= latest,
         s"TxLog RESTORE: version $toVersion outside [0, $latest]")
-      if (toVersion == latest) return latest // no-op
-      val want = liveState(table, toVersion)
-      val have = liveState(table, latest)
-      val missing = want.live.filterNot(a =>
-        new File(table, a.path).exists())
-      require(missing.isEmpty,
-        s"TxLog RESTORE: version $toVersion's data files are past the " +
-          s"vacuum horizon: ${missing.map(_.path).mkString(", ")}")
-      val havePaths = have.live.map(_.path).toSet
-      val wantPaths = want.live.map(_.path).toSet
-      val coLive = havePaths.intersect(wantPaths)
-      val dvDiff = coLive.filter(p =>
-        want.dvs.getOrElse(p, Seq.empty) != have.dvs.getOrElse(p, Seq.empty))
-      require(dvDiff.isEmpty,
-        "TxLog RESTORE: deletion-vector state differs for live file(s) " +
-          s"${dvDiff.mkString(", ")} — compact first to materialize DVs, " +
-          "then restore")
-      val adds = want.live.filterNot(a => havePaths(a.path))
-      val removes = have.live.map(_.path).filterNot(wantPaths)
-      val dvs = adds.flatMap(a => want.dvs.getOrElse(a.path, Seq.empty))
-      // the restored version's declared schema must come back too; a
-      // footer-owned target (no metaData yet) under a later-declared
-      // latest re-declares what the target's footers say
-      val meta = metaAsOf(table, toVersion)
-      val needMeta = meta != metaAsOf(table, latest)
-      val ddlOut =
-        if (!needMeta) None
-        else meta.map(_._1).orElse(Some(
-          assemble(spark, table, toVersion, want.live, want.dvs)
-            .schema.toDDL))
-      committed = commitIfBase(table, latest, adds, removes, "restore",
-        ddlOut, if (needMeta) meta.flatMap(_._2) else None, None, dvs)
+      if (toVersion == latest) { noop = latest; None }
+      else {
+        val want = liveState(table, toVersion)
+        val have = a.st
+        val missing = want.live.filterNot(f =>
+          new File(table, f.path).exists())
+        require(missing.isEmpty,
+          s"TxLog RESTORE: version $toVersion's data files are past the " +
+            s"vacuum horizon: ${missing.map(_.path).mkString(", ")}")
+        val havePaths = have.live.map(_.path).toSet
+        val wantPaths = want.live.map(_.path).toSet
+        val coLive = havePaths.intersect(wantPaths)
+        val dvDiff = coLive.filter(p => want.dvs.getOrElse(p, Seq.empty) !=
+          have.dvs.getOrElse(p, Seq.empty))
+        require(dvDiff.isEmpty,
+          "TxLog RESTORE: deletion-vector state differs for live file(s) " +
+            s"${dvDiff.mkString(", ")} — compact first to materialize " +
+            "DVs, then restore")
+        val adds = want.live.filterNot(f => havePaths(f.path))
+        val removes = have.live.map(_.path).filterNot(wantPaths)
+        val dvs = adds.flatMap(f => want.dvs.getOrElse(f.path, Seq.empty))
+        // the restored version's declared schema must come back too; a
+        // footer-owned target (no metaData yet) under a later-declared
+        // latest re-declares what the target's footers say
+        val meta = metaAsOf(table, toVersion)
+        val needMeta = meta != metaAsOf(table, latest)
+        val ddlOut =
+          if (!needMeta) None
+          else meta.map(_._1).orElse(Some(
+            assemble(spark, table, toVersion, want.live, want.dvs)
+              .schema.toDDL))
+        Some(Commit("restore", adds, removes, ddlOut,
+          if (needMeta) meta.flatMap(_._2) else None, dvs = dvs))
+      }
     }
-    committed
+    if (v < 0) noop else v
   }
 
   /** Transactional MERGE (upsert) — the Delta `WHEN MATCHED THEN UPDATE
@@ -2718,18 +2489,15 @@ object TxLog {
     * table. Cost is |affected files| + |source|, not |table|.
     */
   def merge(spark: SparkSession, table: File, source: DataFrame,
-      keys: Seq[String]): Long = {
-    // compare-and-commit like deleteWhere: a racing commit between the
-    // snapshot read and the publish re-derives the whole merge
-    var committed = -1L
-    while (committed < 0) {
-      val v = versions(table).last
-      val st = liveState(table, v)
+      keys: Seq[String]): Long =
+    transact(table) { a =>
+      val v = a.base("MERGE")
+      val st = a.st
       requireLocalized(st, "MERGE")
       requireNoIdentity(table, v, "MERGE")
       // only the INCOMING side needs the gate: kept target rows passed
       // it on their own way in
-      enforceConstraints(spark, table, source, "MERGE")
+      enforceConstraints(table, v, source, "MERGE")
       val snap = assemble(spark, table, v, st.live, st.dvs)
       val srcKeys = source.select(keys.map(col): _*).distinct()
       // the affected probe rides the scan's _gf_rel metadata column (the
@@ -2746,7 +2514,7 @@ object TxLog {
           spark.createDataFrame(spark.sparkContext.emptyRDD[
             org.apache.spark.sql.Row], snap.schema)
         else assemble(spark, table, v,
-          st.live.filter(a => affectedRel.contains(a.path)), st.dvs)
+          st.live.filter(f => affectedRel.contains(f.path)), st.dvs)
       // matched keys live ONLY in affected files, so the match census
       // needs no second snapshot scan
       val keptTarget = affected.join(srcKeys, keys, "left_anti")
@@ -2756,13 +2524,10 @@ object TxLog {
       val rewritten = keptTarget
         .unionByName(updates.select(snap.columns.toIndexedSeq.map(col): _*))
         .unionByName(inserts.select(snap.columns.toIndexedSeq.map(col): _*))
-      val files = writeFiles(toPhysical(rewritten, mappingAsOf(table, v)),
-        table, "merge", partitionColsOf(table))
-      committed = commitIfBase(table, v, files, affectedRel, "merge")
-      if (committed < 0) discardFileGroup(table, files)
+      val files = a.write(toPhysical(rewritten, mappingAsOf(table, v)),
+        "merge")
+      Some(Commit("merge", files, affectedRel))
     }
-    committed
-  }
 
   /** Multi-clause conditional MERGE spec (round-13) — the full Delta
     * statement surface. Clause payloads are SQL expression TEXT in terms
@@ -2808,8 +2573,7 @@ object TxLog {
     *     Delta assignment-cast rule), so clause expressions may be
     *     narrower literals.
     *
-    * Compare-and-commit like every snapshot-derived writer; the
-    * constraint gate sees the full post-merge affected rows. Returns the
+    * The constraint gate sees the full post-merge affected rows. Returns the
     * version, or -1 when the statement is a no-op (nothing matched, no
     * inserts).
     *
@@ -2822,10 +2586,9 @@ object TxLog {
       spec: MergeSpec, evolve: Boolean = false): Long = {
     require(spec.matched.nonEmpty || spec.notMatched.nonEmpty ||
       spec.notMatchedBySource.nonEmpty, "TxLog MERGE: no clauses")
-    var committed = -1L
-    while (committed < 0) {
-      val v = versions(table).last
-      val st = liveState(table, v)
+    transact(table) { a =>
+      val v = a.base("MERGE")
+      val st = a.st
       requireLocalized(st, "MERGE")
       val baseSchema = snapshot(spark, table, Some(v)).schema
       // WITH SCHEMA EVOLUTION (S69, round-13 — the Delta autoMerge
@@ -2886,187 +2649,187 @@ object TxLog {
             spark.catalog.dropTempView(pv)
             rel
           }
-        if (affectedRel.isEmpty && spec.notMatched.isEmpty) return -1L
-        val affected = st.live.filter(a => affectedRel.contains(a.path))
-        val tFrame =
-          if (affected.isEmpty)
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              StructType(schema.fields ++ Seq(
-                org.apache.spark.sql.types.StructField("_gf_rel",
-                  org.apache.spark.sql.types.StringType),
-                org.apache.spark.sql.types.StructField("_gi", LongType))))
-          else withNewNulls(
-            assemble(spark, table, v, affected, st.dvs, keepPos = true))
-        tFrame.createOrReplaceTempView(tv)
-        // ---- cardinality rule ---------------------------------------
-        if (spec.matched.nonEmpty && affected.nonEmpty) {
-          val dup = spark.sql(
-            s"""SELECT 1 FROM $tv AS ${spec.tAlias}
-               |JOIN $sv AS ${spec.sAlias} ON ${spec.cond}
-               |GROUP BY ${spec.tAlias}._gf_rel, ${spec.tAlias}._gi
-               |HAVING count(*) > 1 LIMIT 1""".stripMargin).count()
-          require(dup == 0, "TxLog MERGE: a target row matches more " +
-            "than one source row — the SQL cardinality rule rejects the " +
-            "nondeterministic update; de-duplicate the source on the " +
-            "join keys first")
-        }
-        // ---- existing rows: first-match clause CASE, inlined --------
-        def guards(cs: Seq[Option[String]], base: Int): String =
-          cs.zipWithIndex.map { case (g, i) =>
-            s"WHEN ${g.map(x => s"($x)").getOrElse("true")} " +
-              s"THEN ${base + i}"
-          }.mkString(" ")
-        val mCase =
-          if (spec.matched.isEmpty) "-1"
-          else s"CASE ${guards(spec.matched.map(_._1), 0)} ELSE -1 END"
-        val nCase =
-          if (spec.notMatchedBySource.isEmpty) "-1"
-          else "CASE " +
-            s"${guards(spec.notMatchedBySource.map(_._1), 100)} ELSE -1 END"
-        val act = s"(CASE WHEN coalesce(${spec.sAlias}.__m, false) " +
-          s"THEN $mCase ELSE $nCase END)"
-        val deleteActs =
-          spec.matched.zipWithIndex.collect {
-            case ((_, None), i) => i } ++
-          spec.notMatchedBySource.zipWithIndex.collect {
-            case ((_, None), j) => 100 + j }
-        val colExprs = declared.map { c =>
-          val whens =
-            spec.matched.zipWithIndex.flatMap { case ((_, sets), i) =>
-              sets.flatMap(_.get(c)).map(e => s"WHEN $i THEN ($e)") } ++
-            spec.notMatchedBySource.zipWithIndex.flatMap {
-              case ((_, sets), j) =>
-                sets.flatMap(_.get(c)).map(e => s"WHEN ${100 + j} THEN ($e)")
-            }
-          if (whens.isEmpty) s"${spec.tAlias}.$c AS $c"
-          else s"CAST(CASE $act ${whens.mkString(" ")} " +
-            s"ELSE ${spec.tAlias}.$c END AS ${typeOf(c)}) AS $c"
-        }
-        val keep =
-          if (deleteActs.isEmpty) "true"
-          else s"$act NOT IN (${deleteActs.mkString(", ")})"
-        // with NO matched clause the cardinality rule does not apply —
-        // but the LEFT JOIN would still FAN OUT a target row matching
-        // several source rows, silently duplicating pass-throughs (r13
-        // review). Matched rows then need nothing from the source, so
-        // they route through a SEMI join (fan-out-proof) and the
-        // BY-SOURCE clauses through the complementary ANTI join.
-        val survivors =
-          if (spec.matched.isEmpty && spec.notMatchedBySource.nonEmpty) {
-            val passed = spark.sql(
-              s"""SELECT ${declared.map(c =>
-                   s"${spec.tAlias}.$c AS $c").mkString(", ")}
-                 |FROM $tv AS ${spec.tAlias}
-                 |LEFT SEMI JOIN $sv AS ${spec.sAlias}
-                 |ON ${spec.cond}""".stripMargin)
-            val antiCols = declared.map { c =>
-              val whens = spec.notMatchedBySource.zipWithIndex.flatMap {
+        if (affectedRel.isEmpty && spec.notMatched.isEmpty) None
+        else {
+          val affected = st.live.filter(f => affectedRel.contains(f.path))
+          val tFrame =
+            if (affected.isEmpty)
+              spark.createDataFrame(
+                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+                StructType(schema.fields ++ Seq(
+                  org.apache.spark.sql.types.StructField("_gf_rel",
+                    org.apache.spark.sql.types.StringType),
+                  org.apache.spark.sql.types.StructField("_gi", LongType))))
+            else withNewNulls(
+              assemble(spark, table, v, affected, st.dvs, keepPos = true))
+          tFrame.createOrReplaceTempView(tv)
+          // ---- cardinality rule ---------------------------------------
+          if (spec.matched.nonEmpty && affected.nonEmpty) {
+            val dup = spark.sql(
+              s"""SELECT 1 FROM $tv AS ${spec.tAlias}
+                 |JOIN $sv AS ${spec.sAlias} ON ${spec.cond}
+                 |GROUP BY ${spec.tAlias}._gf_rel, ${spec.tAlias}._gi
+                 |HAVING count(*) > 1 LIMIT 1""".stripMargin).count()
+            require(dup == 0, "TxLog MERGE: a target row matches more " +
+              "than one source row — the SQL cardinality rule rejects the " +
+              "nondeterministic update; de-duplicate the source on the " +
+              "join keys first")
+          }
+          // ---- existing rows: first-match clause CASE, inlined --------
+          def guards(cs: Seq[Option[String]], base: Int): String =
+            cs.zipWithIndex.map { case (g, i) =>
+              s"WHEN ${g.map(x => s"($x)").getOrElse("true")} " +
+                s"THEN ${base + i}"
+            }.mkString(" ")
+          val mCase =
+            if (spec.matched.isEmpty) "-1"
+            else s"CASE ${guards(spec.matched.map(_._1), 0)} ELSE -1 END"
+          val nCase =
+            if (spec.notMatchedBySource.isEmpty) "-1"
+            else "CASE " +
+              s"${guards(spec.notMatchedBySource.map(_._1), 100)} ELSE -1 END"
+          val act = s"(CASE WHEN coalesce(${spec.sAlias}.__m, false) " +
+            s"THEN $mCase ELSE $nCase END)"
+          val deleteActs =
+            spec.matched.zipWithIndex.collect {
+              case ((_, None), i) => i } ++
+            spec.notMatchedBySource.zipWithIndex.collect {
+              case ((_, None), j) => 100 + j }
+          val colExprs = declared.map { c =>
+            val whens =
+              spec.matched.zipWithIndex.flatMap { case ((_, sets), i) =>
+                sets.flatMap(_.get(c)).map(e => s"WHEN $i THEN ($e)") } ++
+              spec.notMatchedBySource.zipWithIndex.flatMap {
                 case ((_, sets), j) =>
                   sets.flatMap(_.get(c)).map(e => s"WHEN ${100 + j} THEN ($e)")
               }
-              if (whens.isEmpty) s"${spec.tAlias}.$c AS $c"
-              else s"CAST(CASE ($nCase) ${whens.mkString(" ")} " +
-                s"ELSE ${spec.tAlias}.$c END AS ${typeOf(c)}) AS $c"
-            }
-            val antiKeep =
-              if (deleteActs.isEmpty) "true"
-              else s"($nCase) NOT IN (${deleteActs.mkString(", ")})"
-            passed.unionByName(spark.sql(
-              s"""SELECT ${antiCols.mkString(", ")}
-                 |FROM $tv AS ${spec.tAlias}
-                 |LEFT ANTI JOIN $sv AS ${spec.sAlias} ON ${spec.cond}
-                 |WHERE $antiKeep""".stripMargin))
-          } else spark.sql(
-            s"""SELECT ${colExprs.mkString(", ")}
-               |FROM $tv AS ${spec.tAlias}
-               |LEFT JOIN (SELECT *, true AS __m FROM $sv)
-               |  AS ${spec.sAlias} ON ${spec.cond}
-               |WHERE $keep""".stripMargin)
-        // ---- inserts: anti-join + first-match clause CASE -----------
-        // the anti-join target: with matched/by-source clauses the
-        // affected files contain every source-matched row by the probe's
-        // construction, so `tv` suffices; an INSERT-ONLY merge skipped
-        // the probe (nothing rewrites) and must anti-join the FULL
-        // snapshot — an empty `tv` would wrongly insert matched rows
-        val av = s"graft_mrg_a_$n"
-        val antiView =
-          if (spec.matched.isEmpty && spec.notMatchedBySource.isEmpty) {
-            withNewNulls(assemble(spark, table, v, st.live, st.dvs))
-              .createOrReplaceTempView(av)
-            av
-          } else tv
-        val inserts =
-          if (spec.notMatched.isEmpty) None
-          else {
-            val iAct =
-              s"(CASE ${guards(spec.notMatched.map(_._1), 0)} ELSE -1 END)"
-            val iCols = declared.map { c =>
-              val whens = spec.notMatched.zipWithIndex.flatMap {
-                case ((_, sets), i) =>
-                  sets.get(c).map(e => s"WHEN $i THEN ($e)")
-              }
-              if (whens.isEmpty) s"CAST(NULL AS ${typeOf(c)}) AS $c"
-              else s"CAST(CASE $iAct ${whens.mkString(" ")} " +
-                s"ELSE NULL END AS ${typeOf(c)}) AS $c"
-            }
-            val raw = spark.sql(
-              s"""SELECT ${iCols.mkString(", ")},
-                 |  CAST($iAct AS INT) AS _iact
-                 |FROM $sv AS ${spec.sAlias}
-                 |LEFT ANTI JOIN $antiView AS ${spec.tAlias}
-                 |ON ${spec.cond}
-                 |WHERE $iAct >= 0""".stripMargin)
-            // a column a clause does NOT set takes its declared DEFAULT /
-            // GENERATED expression instead of NULL (the Delta
-            // insert-default rule) — applied in a SECOND projection where
-            // every table column already carries its INSERTED value, so a
-            // generation expression binds to the row being inserted,
-            // never to raw source columns; clause-set values (including
-            // explicit NULLs) pass through untouched via the act id
-            val dflt = defaultsAsOf(table, v)
-              .filter { case (c, _) => declared.contains(c) }
-            val filled = dflt.toSeq.sortBy(_._1).foldLeft(raw) {
-              case (d, (c, (e, _))) =>
-                val unsetIds = spec.notMatched.zipWithIndex.collect {
-                  case ((_, sets), i) if !sets.contains(c) => i
-                }
-                if (unsetIds.isEmpty) d
-                else d.withColumn(c,
-                  when(col("_iact").isin(unsetIds.map(Int.box): _*),
-                    expr(e).cast(d.schema(c).dataType))
-                    .otherwise(col(c)))
-            }.drop("_iact")
-            Some(filled)
+            if (whens.isEmpty) s"${spec.tAlias}.$c AS $c"
+            else s"CAST(CASE $act ${whens.mkString(" ")} " +
+              s"ELSE ${spec.tAlias}.$c END AS ${typeOf(c)}) AS $c"
           }
-        val merged = inserts.map(survivors.unionByName(_))
-          .getOrElse(survivors)
-        // GENERATED columns recompute uniformly over the final frame
-        // (deterministic expressions: untouched rows reproduce their
-        // stored value; updated/inserted rows get the post-change value).
-        // In DML the expression is AUTHORITATIVE — a clause assigning a
-        // generated column is overridden by the recompute, the Delta
-        // UPDATE-recompute rule — while plain appends VALIDATE
-        // writer-provided values via the gen-constraint (r13 review).
-        val rewritten = generatedOf(table, v).foldLeft(merged) {
-          case (d, (c, e)) =>
-            d.withColumn(c, expr(e).cast(d.schema(c).dataType))
+          val keep =
+            if (deleteActs.isEmpty) "true"
+            else s"$act NOT IN (${deleteActs.mkString(", ")})"
+          // with NO matched clause the cardinality rule does not apply —
+          // but the LEFT JOIN would still FAN OUT a target row matching
+          // several source rows, silently duplicating pass-throughs (r13
+          // review). Matched rows then need nothing from the source, so
+          // they route through a SEMI join (fan-out-proof) and the
+          // BY-SOURCE clauses through the complementary ANTI join.
+          val survivors =
+            if (spec.matched.isEmpty && spec.notMatchedBySource.nonEmpty) {
+              val passed = spark.sql(
+                s"""SELECT ${declared.map(c =>
+                     s"${spec.tAlias}.$c AS $c").mkString(", ")}
+                   |FROM $tv AS ${spec.tAlias}
+                   |LEFT SEMI JOIN $sv AS ${spec.sAlias}
+                   |ON ${spec.cond}""".stripMargin)
+              val antiCols = declared.map { c =>
+                val whens = spec.notMatchedBySource.zipWithIndex.flatMap {
+                  case ((_, sets), j) =>
+                    sets.flatMap(_.get(c))
+                      .map(e => s"WHEN ${100 + j} THEN ($e)")
+                }
+                if (whens.isEmpty) s"${spec.tAlias}.$c AS $c"
+                else s"CAST(CASE ($nCase) ${whens.mkString(" ")} " +
+                  s"ELSE ${spec.tAlias}.$c END AS ${typeOf(c)}) AS $c"
+              }
+              val antiKeep =
+                if (deleteActs.isEmpty) "true"
+                else s"($nCase) NOT IN (${deleteActs.mkString(", ")})"
+              passed.unionByName(spark.sql(
+                s"""SELECT ${antiCols.mkString(", ")}
+                   |FROM $tv AS ${spec.tAlias}
+                   |LEFT ANTI JOIN $sv AS ${spec.sAlias} ON ${spec.cond}
+                   |WHERE $antiKeep""".stripMargin))
+            } else spark.sql(
+              s"""SELECT ${colExprs.mkString(", ")}
+                 |FROM $tv AS ${spec.tAlias}
+                 |LEFT JOIN (SELECT *, true AS __m FROM $sv)
+                 |  AS ${spec.sAlias} ON ${spec.cond}
+                 |WHERE $keep""".stripMargin)
+          // ---- inserts: anti-join + first-match clause CASE -----------
+          // the anti-join target: with matched/by-source clauses the
+          // affected files contain every source-matched row by the probe's
+          // construction, so `tv` suffices; an INSERT-ONLY merge skipped
+          // the probe (nothing rewrites) and must anti-join the FULL
+          // snapshot — an empty `tv` would wrongly insert matched rows
+          val av = s"graft_mrg_a_$n"
+          val antiView =
+            if (spec.matched.isEmpty && spec.notMatchedBySource.isEmpty) {
+              withNewNulls(assemble(spark, table, v, st.live, st.dvs))
+                .createOrReplaceTempView(av)
+              av
+            } else tv
+          val inserts =
+            if (spec.notMatched.isEmpty) None
+            else {
+              val iAct =
+                s"(CASE ${guards(spec.notMatched.map(_._1), 0)} ELSE -1 END)"
+              val iCols = declared.map { c =>
+                val whens = spec.notMatched.zipWithIndex.flatMap {
+                  case ((_, sets), i) =>
+                    sets.get(c).map(e => s"WHEN $i THEN ($e)")
+                }
+                if (whens.isEmpty) s"CAST(NULL AS ${typeOf(c)}) AS $c"
+                else s"CAST(CASE $iAct ${whens.mkString(" ")} " +
+                  s"ELSE NULL END AS ${typeOf(c)}) AS $c"
+              }
+              val raw = spark.sql(
+                s"""SELECT ${iCols.mkString(", ")},
+                   |  CAST($iAct AS INT) AS _iact
+                   |FROM $sv AS ${spec.sAlias}
+                   |LEFT ANTI JOIN $antiView AS ${spec.tAlias}
+                   |ON ${spec.cond}
+                   |WHERE $iAct >= 0""".stripMargin)
+              // a column a clause does NOT set takes its declared DEFAULT /
+              // GENERATED expression instead of NULL (the Delta
+              // insert-default rule) — applied in a SECOND projection where
+              // every table column already carries its INSERTED value, so a
+              // generation expression binds to the row being inserted,
+              // never to raw source columns; clause-set values (including
+              // explicit NULLs) pass through untouched via the act id
+              val dflt = defaultsAsOf(table, v)
+                .filter { case (c, _) => declared.contains(c) }
+              val filled = dflt.toSeq.sortBy(_._1).foldLeft(raw) {
+                case (d, (c, (e, _))) =>
+                  val unsetIds = spec.notMatched.zipWithIndex.collect {
+                    case ((_, sets), i) if !sets.contains(c) => i
+                  }
+                  if (unsetIds.isEmpty) d
+                  else d.withColumn(c,
+                    when(col("_iact").isin(unsetIds.map(Int.box): _*),
+                      expr(e).cast(d.schema(c).dataType))
+                      .otherwise(col(c)))
+              }.drop("_iact")
+              Some(filled)
+            }
+          val merged = inserts.map(survivors.unionByName(_))
+            .getOrElse(survivors)
+          // GENERATED columns recompute uniformly over the final frame
+          // (deterministic expressions: untouched rows reproduce their
+          // stored value; updated/inserted rows get the post-change value).
+          // In DML the expression is AUTHORITATIVE — a clause assigning a
+          // generated column is overridden by the recompute, the Delta
+          // UPDATE-recompute rule — while plain appends VALIDATE
+          // writer-provided values via the gen-constraint (r13 review).
+          val rewritten = generatedOf(table, v).foldLeft(merged) {
+            case (d, (c, e)) =>
+              d.withColumn(c, expr(e).cast(d.schema(c).dataType))
+          }
+          // the gate sees the full post-merge state of the affected rows
+          enforceConstraints(table, v, rewritten, "MERGE")
+          // matched deletes can empty every affected file, and an
+          // insert-only merge whose guards drop everything produces no
+          // rows at all — commit removes-only / no-op instead of handing
+          // writeFiles an empty frame (the probe runs only in those cases)
+          val files =
+            if ((deleteActs.nonEmpty || affectedRel.isEmpty) &&
+                rewritten.isEmpty) Seq.empty[Add]
+            else a.write(toPhysical(rewritten, writeMapping), "merge")
+          Option.when(files.nonEmpty || affectedRel.nonEmpty)(Commit(
+            "merge", files, affectedRel, evoDdl, evoMapping))
         }
-        // the gate sees the full post-merge state of the affected rows
-        enforceConstraints(spark, table, rewritten, "MERGE")
-        // matched deletes can empty every affected file, and an
-        // insert-only merge whose guards drop everything produces no
-        // rows at all — commit removes-only / no-op instead of handing
-        // writeFiles an empty frame (the probe runs only in those cases)
-        val files =
-          if ((deleteActs.nonEmpty || affectedRel.isEmpty) &&
-              rewritten.isEmpty) Seq.empty[Add]
-          else writeFiles(toPhysical(rewritten, writeMapping),
-            table, "merge", partitionColsOf(table))
-        if (files.isEmpty && affectedRel.isEmpty) return -1L
-        committed = commitIfBase(table, v, files, affectedRel, "merge",
-          evoDdl, evoMapping)
-        if (committed < 0) discardFileGroup(table, files)
       } finally {
         spark.catalog.dropTempView(sv)
         spark.catalog.dropTempView(tv)
@@ -3074,7 +2837,6 @@ object TxLog {
         ()
       }
     }
-    committed
   }
 
   /** CDC APPLY (S60): land one collapsed changelog batch — ≤1 row per
@@ -3098,9 +2860,9 @@ object TxLog {
     * accumulate commit after commit until `compact` materializes them.
     *
     * `txnApp`/`txnBatch` stamp the commit with the exactly-once txn
-    * marker ([[lastTxnBatch]]): a replayed batch id is detected in the
-    * log and skipped (returns -1) — the streaming foreachBatch contract.
-    * Compare-and-commit like every snapshot-derived writer.
+    * marker: a batch id at or below the app's highest marker as of the
+    * base ([[txnsAsOf]]) is a replay and is skipped (returns -1) — the
+    * streaming foreachBatch contract.
     */
   def applyChanges(spark: SparkSession, table: File, changes: DataFrame,
       keys: Seq[String], txnApp: Option[String] = None,
@@ -3130,70 +2892,59 @@ object TxLog {
     val upsertSchema = StructType(changes.schema.filterNot(_.name == "_op"))
     val upsertRows = batch.filter(r => "upsert" == r.getString(opAt))
       .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.patch(opAt, Nil, 1)))
-    var committed = -1L
-    while (committed < 0) {
-      if (txnApp.exists(a => lastTxnBatch(table, a).exists(_ >= txnBatch)))
-        return -1L
-      val v = versions(table).last
-      val st = liveState(table, v)
-      requireLocalized(st, "CDC APPLY")
-      requireNoIdentity(table, v, "CDC APPLY")
-      val declared = schemaDdlAsOf(table, v).map(StructType.fromDDL)
-      // schema-ENFORCED like append (r15 review): a misspelled extra
-      // column would otherwise be silently dropped by the table-columns
-      // projection below, and an omitted defaulted column would land
-      // physically missing with a post-declaration write epoch the
-      // read-time fill never patches
-      declared.foreach { d =>
-        val unknown = upsertSchema.fieldNames.filterNot(d.fieldNames.toSet)
-        require(unknown.isEmpty,
-          "TxLog CDC APPLY: column(s) not in the table's declared " +
-            s"schema: ${unknown.mkString(", ")} — ALTER TABLE ADD " +
-            "COLUMNS first")
-      }
-      val mapping = mappingAsOf(table, v)
-      val landing = Option.when(upsertRows.nonEmpty) {
-        val upserts = withWriteDefaults(spark.createDataFrame(
-          java.util.Arrays.asList(upsertRows: _*), upsertSchema), table,
-          Some(v))
-        // the upserts land in the table's column order and types (a
-        // footer-owned table reads its schema off one live file)
-        val target = declared.orElse(st.live.headOption.map(a =>
-          readAs(spark, table, v, Seq(new File(table, a.path)
-            .getAbsolutePath)).schema)).getOrElse(upserts.schema)
-        val out = upserts.select(target.fields.toSeq.map(f =>
-          if (upserts.schema(f.name).dataType == f.dataType) col(f.name)
-          else col(f.name).cast(f.dataType).as(f.name)): _*)
-        // the constraint gate sees only the rows that will LAND
-        enforceConstraints(spark, table, out, "CDC APPLY")
-        out
-      }
-      val hits = probeKeyRows(spark, table, v, st, keys, probeKeys,
-        keys.map(k => mapping.getOrElse(k, k)))
-      val toPath = byBase(table, st.live)
-      val perFile = hits.groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (k, ps) => (k, ps.map(_._2).sorted) }
-      val (small, large) = perFile.partition(_._2.size <= inlineDvMax)
-      val sidecar =
-        if (large.isEmpty) None
-        else Some(writeSidecar(spark, table,
-          large.flatMap { case (k, ps) => ps.map(k -> _) }))
-      val dvs =
-        small.map { case (k, ps) => Dv(toPath(k), "", ps.size, ps) } ++
-          large.map { case (k, ps) => Dv(toPath(k), sidecar.get, ps.size) }
-      // one file of upserts: a local relation would otherwise write one
-      // file per core
-      val files = landing.toSeq.flatMap(l => writeFiles(
-        toPhysical(l.coalesce(1), mapping), table, "cdc",
-        partitionColsOf(table)))
-      committed = commitIfBase(table, v, files, Seq.empty, "cdc-apply",
-        dvs = dvs, txn = txnApp.map(a => (a, txnBatch)))
-      if (committed < 0) {
-        discardFileGroup(table, files)
-        sidecar.foreach(sub => graft.Tables.rmTree(new File(table, sub)))
+    transact(table) { a =>
+      // a replayed batch id is already in the log: skip it
+      if (txnApp.exists(app =>
+          txnsAsOf(table, a.v).get(app).exists(_ >= txnBatch))) None
+      else {
+        val v = a.base("CDC APPLY")
+        val st = a.st
+        requireLocalized(st, "CDC APPLY")
+        requireNoIdentity(table, v, "CDC APPLY")
+        // schema-ENFORCED like append (r15 review): a misspelled extra
+        // column would otherwise be silently dropped by the table-columns
+        // projection below, and an omitted defaulted column would land
+        // physically missing with a post-declaration write epoch the
+        // read-time fill never patches
+        requireDeclared(table, v, upsertSchema, "CDC APPLY")
+        val declared = schemaDdlAsOf(table, v).map(StructType.fromDDL)
+        val mapping = mappingAsOf(table, v)
+        val landing = Option.when(upsertRows.nonEmpty) {
+          val upserts = withWriteDefaults(spark.createDataFrame(
+            java.util.Arrays.asList(upsertRows: _*), upsertSchema), table, v)
+          // the upserts land in the table's column order and types (a
+          // footer-owned table reads its schema off one live file)
+          val target = declared.orElse(st.live.headOption.map(f =>
+            readAs(spark, table, v, Seq(new File(table, f.path)
+              .getAbsolutePath)).schema)).getOrElse(upserts.schema)
+          val out = upserts.select(target.fields.toSeq.map(f =>
+            if (upserts.schema(f.name).dataType == f.dataType) col(f.name)
+            else col(f.name).cast(f.dataType).as(f.name)): _*)
+          // the constraint gate sees only the rows that will LAND
+          enforceConstraints(table, v, out, "CDC APPLY")
+          out
+        }
+        val hits = probeKeyRows(spark, table, v, st, keys, probeKeys,
+          keys.map(k => mapping.getOrElse(k, k)))
+        val toPath = byBase(table, st.live)
+        val perFile = hits.groupBy(_._1).toSeq.sortBy(_._1)
+          .map { case (k, ps) => (k, ps.map(_._2).sorted) }
+        val (small, large) = perFile.partition(_._2.size <= inlineDvMax)
+        val sidecar = Option.when(large.nonEmpty)(a.sidecar(
+          spark.createDataFrame(java.util.Arrays.asList(large.flatMap {
+            case (k, ps) => ps.map(org.apache.spark.sql.Row(k, _)) }: _*),
+            dvSchema)))
+        val dvs =
+          small.map { case (k, ps) => Dv(toPath(k), "", ps.size, ps) } ++
+            large.map { case (k, ps) => Dv(toPath(k), sidecar.get, ps.size) }
+        // one file of upserts: a local relation would otherwise write one
+        // file per core
+        val files = landing.toSeq.flatMap(l =>
+          a.write(toPhysical(l.coalesce(1), mapping), "cdc"))
+        Some(Commit("cdc-apply", files, dvs = dvs,
+          txns = txnApp.map(_ -> txnBatch).toSeq))
       }
     }
-    committed
   }
 
   /** The live rows at `v` whose `keys` equal a tuple of `probeKeys`, as
@@ -3228,18 +2979,6 @@ object TxLog {
       frame.filter(hit).select(col("_gf_rel"), col("_gi")).collect()
         .map(r => (r.getString(0), r.getLong(1))).toSeq
     }
-  }
-
-  /** Write (file key, position) tombstones as one DV sidecar group;
-    * returns its table-relative name.
-    */
-  private def writeSidecar(spark: SparkSession, table: File,
-      tombs: Seq[(String, Long)]): String = {
-    val sub = s"dv_${System.nanoTime()}_${groupSeq.incrementAndGet()}"
-    spark.createDataFrame(java.util.Arrays.asList(tombs.map { case (f, i) =>
-        org.apache.spark.sql.Row(f, i) }: _*), dvSchema)
-      .coalesce(1).write.parquet(new File(table, sub).getAbsolutePath)
-    sub
   }
 
   /** Streaming CDC APPLY: every micro-batch of the events changelog
@@ -3474,31 +3213,25 @@ object TxLog {
     * nightly while years of cold partitions stay untouched.
     */
   def compactWhere(spark: SparkSession, table: File,
-      keep: Map[String, String] => Boolean, targetFiles: Int): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val v = versions(table).last
-      val st = liveState(table, v)
+      keep: Map[String, String] => Boolean, targetFiles: Int): Long =
+    transact(table) { a =>
+      val v = a.base("OPTIMIZE WHERE")
       val partCols = partitionColsOf(table)
       require(partCols.nonEmpty,
         s"TxLog OPTIMIZE WHERE: $table is not partitioned — use plain " +
           "OPTIMIZE (partition predicates need a declared layout)")
-      val selected = st.live.filter { a =>
-        val pv = partValsOf(a.path)
+      val selected = a.st.live.filter { f =>
+        val pv = partValsOf(f.path)
         partCols.forall(pv.contains) && keep(pv)
       }
-      if (selected.isEmpty) return -1L // nothing matches: no commit
-      val frame = assemble(spark, table, v, selected, st.dvs)
-      val files = writeFiles(
-        toPhysical(frame.repartition(targetFiles, partCols.map(col): _*),
-          mappingAsOf(table, v)),
-        table, "compact", partCols)
-      committed = commitIfBase(table, v, files, selected.map(_.path),
-        "compact-where")
-      if (committed < 0) discardFileGroup(table, files)
+      Option.when(selected.nonEmpty) { // nothing matches: no commit
+        val frame = assemble(spark, table, v, selected, a.st.dvs)
+        val files = a.write(
+          toPhysical(frame.repartition(targetFiles, partCols.map(col): _*),
+            mappingAsOf(table, v)), "compact")
+        Commit("compact-where", files, selected.map(_.path))
+      }
     }
-    committed
-  }
 
   /** ACID compaction (S23, with the commit this time): bin ALL live
     * files into `targetFiles` rewritten ones in one add+remove commit.
@@ -3511,13 +3244,11 @@ object TxLog {
     * re-derives it whole, so it needs a conflict rule that lets it
     * commit over those commits first.
     */
-  def compact(spark: SparkSession, table: File, targetFiles: Int): Long = {
-    // compare-and-commit: a delete/merge landing mid-compaction would
-    // otherwise be silently undone by the compacted re-add of its rows
-    var committed = -1L
-    while (committed < 0) {
-      val v = versions(table).last
-      val live = liveFiles(table, v)
+  def compact(spark: SparkSession, table: File, targetFiles: Int): Long =
+    // a delete/merge landing mid-compaction would otherwise be silently
+    // undone by the compacted re-add of its rows
+    transact(table) { a =>
+      val v = a.base("OPTIMIZE")
       val partCols = partitionColsOf(table)
       // a partitioned table compacts WITHIN its layout: one shuffle keyed
       // on the partition columns bins each partition's files, and the
@@ -3527,13 +3258,9 @@ object TxLog {
           .coalesce(targetFiles)
         else snapshot(spark, table, Some(v))
           .repartition(targetFiles, partCols.map(col): _*)
-      val files = writeFiles(toPhysical(all, mappingAsOf(table, v)),
-        table, "compact", partCols)
-      committed = commitIfBase(table, v, files, live.map(_.path), "compact")
-      if (committed < 0) discardFileGroup(table, files)
+      val files = a.write(toPhysical(all, mappingAsOf(table, v)), "compact")
+      Some(Commit("compact", files, a.st.live.map(_.path)))
     }
-    committed
-  }
 
   /** Commits whose add/remove sets carry identical row bags — skipped
     * unread by the change feed (batch and streaming alike).
@@ -3559,14 +3286,8 @@ object TxLog {
       targetFiles: Int): Long = {
     require(zCols.size == 2,
       s"TxLog OPTIMIZE ZORDER: exactly two columns supported, got $zCols")
-    // compare-and-commit loop: the rewrite is derived from a SNAPSHOT, so
-    // a commit landing between the read and our publish invalidates the
-    // work (a later-slot publish would resurrect its deletes / double its
-    // appends); on a lost race the whole rewrite re-derives from the new
-    // latest version
-    var committed = -1L
-    while (committed < 0) {
-      val v = versions(table).last
+    transact(table) { a =>
+      val v = a.base("OPTIMIZE ZORDER")
       val snap = snapshot(spark, table, Some(v))
       val Seq(c1, c2) = zCols
       val st = snap.agg(
@@ -3586,15 +3307,10 @@ object TxLog {
         .bitwiseOR(shiftleft(
           Layout.spread(rank(c2, st.getLong(2), st.getLong(3))), 1))
       val sorted = snap.repartitionByRange(targetFiles, z)
-      val files = writeFiles(toPhysical(sorted, mappingAsOf(table, v)),
-        table, "zorder", partitionColsOf(table))
-      committed = commitIfBase(table, v, files,
-        liveFiles(table, v).map(_.path), "zorder")
-      // a lost race orphans a FULL table copy no committed add ever
-      // references — vacuum can't reclaim it, so delete it here
-      if (committed < 0) discardFileGroup(table, files)
+      val files = a.write(toPhysical(sorted, mappingAsOf(table, v)),
+        "zorder")
+      Some(Commit("zorder", files, a.st.live.map(_.path)))
     }
-    committed
   }
 
   // ---- multi-table atomic commit (S45, round-10; r9 verdict task 4) ------
@@ -3619,7 +3335,7 @@ object TxLog {
       writeFiles(df, new File(db, t), "append")
         .map(a => a.copy(path = s"$t/${a.path}"))
     }
-    commitAdds(db, adds, Seq.empty, "txn-append")
+    transact(db)(_ => Some(Commit("txn-append", adds)))
   }
 
   /** Snapshot of ONE table of the database at `version` (default latest):
@@ -3630,7 +3346,7 @@ object TxLog {
       version: Option[Long] = None): DataFrame = {
     val v = version.orElse(versions(db).lastOption).getOrElse(
       sys.error(s"TxLog: no commits in $db"))
-    val files = liveFiles(db, v).filter(_.path.startsWith(table + "/"))
+    val files = liveState(db, v).live.filter(_.path.startsWith(table + "/"))
     require(files.nonEmpty, s"TxLog: version $v has no live files for $table")
     spark.read.parquet(
       files.map(a => new File(db, a.path).getAbsolutePath): _*)
@@ -3638,38 +3354,21 @@ object TxLog {
 
   /** Highest batch id committed for `app`, from the txn markers in the
     * log — the idempotence ledger of the exactly-once streaming sink.
+    * Public so a restarted sink can read where to resume; the writers
+    * themselves check [[txnsAsOf]] at their attempt's base.
     */
   def lastTxnBatch(table: File, app: String): Option[Long] =
     versions(table).lastOption.flatMap(txnsAsOf(table, _).get(app))
 
-  /** app → highest committed batch id as of `v`. Same memoized fold as
-    * [[copiedAsOf]]: a call reads only the commits newer than its memo,
-    * so a streaming sink's per-batch check stays O(new commits), not
-    * O(log length) — checkpoints carry no txn markers to bound it.
+  /** app → highest committed batch id as of `v`. The fold reads only the
+    * commits newer than its memo, so a streaming sink's per-batch check
+    * stays O(new commits), not O(log length) — checkpoints carry no txn
+    * markers to bound it.
     */
-  private val txnMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), Map[String, Long]]
-
-  private def txnsAsOf(table: File, v: Long): Map[String, Long] = {
-    val key = table.getCanonicalPath
-    txnMemo.get((key, v)) match {
-      case Some(m) => m
-      case None =>
-        var base = v - 1
-        while (base >= 0 && !txnMemo.contains((key, base))) base -= 1
-        var acc =
-          if (base < 0) Map.empty[String, Long] else txnMemo((key, base))
-        var i = base + 1
-        while (i <= v) {
-          acc = readCommit(table, i).txns.foldLeft(acc) { case (m, (a, b)) =>
-            m.updated(a, math.max(b, m.getOrElse(a, b)))
-          }
-          txnMemo.put((key, i), acc)
-          i += 1
-        }
-        acc
-    }
-  }
+  private val txnsAsOf = new LogFold(Map.empty[String, Long])(
+    (acc, c, _, _) => c.txns.foldLeft(acc) { case (m, (app, b)) =>
+      m.updated(app, math.max(b, m.getOrElse(app, b)))
+    })
 
   /** EXACTLY-ONCE streaming append (the Delta `txn` idempotence pattern):
     * a foreachBatch sink calls this per micro-batch; the (app, batchId)
@@ -3682,60 +3381,26 @@ object TxLog {
     */
   def exactlyOnceAppend(table: File, app: String, batchId: Long,
       df: DataFrame): Boolean = {
-    // compare-and-commit like append (r12 advice): the written files
-    // depend on the base version's metadata — a blind-retry would leave
-    // a batch racing a RENAME stored under stale LOGICAL names (readAs
-    // binds PHYSICAL names → the renamed column silently reads NULL
-    // forever), and one racing an ADD CONSTRAINT would land violating
-    // rows after the guarantee. Every iteration re-derives the schema
-    // check, the gate, the mapping, AND the files from the live base.
-    var committed = -1L
-    while (committed < 0) {
-      if (lastTxnBatch(table, app).exists(_ >= batchId)) return false
-      val base = versions(table).lastOption
-      requireNoIdentity(table, base.getOrElse(-1L), "stream-append")
-      base.flatMap(schemaDdlAsOf(table, _)).foreach { ddl =>
-        val declared = StructType.fromDDL(ddl).fieldNames.toSet
-        val unknown = df.schema.fieldNames.filterNot(declared)
-        require(unknown.isEmpty,
-          "TxLog stream-append: column(s) not in the table's declared " +
-            s"schema: ${unknown.mkString(", ")} — ALTER TABLE ADD " +
-            "COLUMNS first")
+    // the written files depend on the base version's metadata, like
+    // append's (r12 advice): a batch racing a RENAME would otherwise be
+    // stored under stale LOGICAL names (readAs binds PHYSICAL names → the
+    // renamed column silently reads NULL forever), and one racing an ADD
+    // CONSTRAINT would land violating rows after the guarantee
+    transact(table) { a =>
+      Option.unless(txnsAsOf(table, a.v).get(app).exists(_ >= batchId)) {
+        requireNoIdentity(table, a.v, "stream-append")
+        requireDeclared(table, a.v, df.schema, "stream-append")
+        val landing = withWriteDefaults(df, table, a.v)
+        enforceConstraints(table, a.v, landing, "stream-append")
+        // the streaming sink preserves a declared partition layout too — a
+        // layoutless batch would dodge partition pruning and, worse, dodge
+        // a later overwritePartitions of its partition
+        val files = a.write(toPhysical(landing, mappingAsOf(table, a.v)),
+          s"txn$batchId")
+        Commit("stream-append", files, txns = Seq(app -> batchId))
       }
-      val landing = withWriteDefaults(df, table, base)
-      enforceConstraints(df.sparkSession, table, landing, "stream-append")
-      val mapping = base.map(mappingAsOf(table, _)).getOrElse(Map.empty)
-      // the streaming sink preserves a declared partition layout too — a
-      // layoutless batch would dodge partition pruning and, worse, dodge
-      // a later overwritePartitions of its partition
-      val files = writeFiles(toPhysical(landing, mapping), table,
-        s"txn$batchId", partitionColsOf(table))
-      committed = commitIfBase(table, base.getOrElse(-1L), files,
-        Seq.empty, "stream-append", txn = Some((app, batchId)))
-      // losing a slot orphans the group (no log action references it;
-      // vacuum walks logged adds and would never reclaim it) — delete
-      // before re-deriving (r9 advice)
-      if (committed < 0) discardFileGroup(table, files)
-    }
-    true
+    } >= 0
   }
-
-  /** Physically delete a freshly written, never-committed file group:
-    * the whole per-commit `d_*` subtree (data files, partition
-    * subdirectories, writer markers). Safe because the group is
-    * referenced by NO log action — only the loser of a commit race calls
-    * this, on the group it just wrote itself.
-    */
-  private def discardFileGroup(table: File,
-      files: Seq[Add]): Unit =
-    files.map(_.path.split('/').head).distinct
-      .filter(_.startsWith("d_")).foreach { sub =>
-        def rm(f: File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(); ()
-        }
-        rm(new File(table, sub))
-      }
 
   /** Streaming writer: every micro-batch lands as one exactly-once
     * TxLog commit. The TxLog twin of Streams.cdcUpsertJdbcQuery.
@@ -4127,15 +3792,21 @@ object TxLog {
     * same metadata-not-data cost class as snapshot resolution; a real
     * deployment serves it from the checkpointed action set.
     */
-  def txlogHistory(spark: SparkSession, dir: String): DataFrame = {
+  def txlogHistory(spark: SparkSession, dir: String): DataFrame =
+    history(spark, demoTable(spark, dir))
+
+  /** DESCRIBE HISTORY of `table`: per committed version, the operation,
+    * the logical row count after the commit (add bookkeeping minus live
+    * DV tombstones) and the delta against the previous version — from log
+    * metadata alone.
+    */
+  def history(spark: SparkSession, table: File): DataFrame = {
     import spark.implicits._
-    val t = demoTable(spark, dir)
-    val vs = versions(t)
-    // logical counts: add bookkeeping minus live DV tombstones (r12)
-    val counts = vs.map(v => liveState(t, v).rowCount)
+    val vs = versions(table)
+    val counts = vs.map(v => liveState(table, v).rowCount)
     vs.zipWithIndex.map { case (v, i) =>
       val prev = if (i == 0) 0L else counts(i - 1)
-      (v, readCommit(t, v).op, counts(i), counts(i) - prev)
+      (v, readCommit(table, v).op, counts(i), counts(i) - prev)
     }.toDF("version", "op", "n_rows", "rows_delta")
       .orderBy(col("version"))
   }

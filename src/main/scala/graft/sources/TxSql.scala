@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel,
 /** SQL statement surface over TxLog tables (SURVEY.md §2.1 row S49,
   * round-11) — the r10 verdict's What's-missing #4 second half: time
   * travel and DESCRIBE HISTORY existed only as code-level APIs
-  * (`TxLog.snapshot(v)` / `TxLog.txlogHistory`); a MySQL-migration user
+  * (`TxLog.snapshot(v)` / `TxLog.history`); a MySQL-migration user
   * writes STATEMENTS. Two forms:
   *
   *   `SELECT … FROM <name> VERSION AS OF <v> …`  — parsed by SPARK'S OWN
@@ -186,7 +186,7 @@ object TxSql {
           inner.matches("(?is).*\\btable_changes\\s*\\(.*"))
         spark.sql(prefix + " " + bindAsOfText(spark, inner))
       else bindRegistered(spark, prefix + " " + inner)
-    case describeRe(name) => describeHistory(spark, tableOf(name))
+    case describeRe(name) => TxLog.history(spark, tableOf(name))
     case describeDetailRe(name) => describeDetail(spark, name, tableOf(name))
     case optimizeZRe(name, c1, c2) =>
       optSummary(spark, name,
@@ -748,22 +748,6 @@ object TxSql {
       .toDF("name", "format", "location", "num_files", "num_rows",
         "size_bytes", "partition_columns", "n_constraints", "n_defaults",
         "latest_version")
-  }
-
-  /** Delta's DESCRIBE HISTORY shape for any registered table: version,
-    * op, rows after the commit, delta vs the previous version — from log
-    * metadata alone (add actions carry row counts).
-    */
-  private def describeHistory(spark: SparkSession, table: File): DataFrame = {
-    import spark.implicits._
-    val vs = TxLog.versions(table)
-    // logical counts: add bookkeeping minus live DV tombstones (r12)
-    val counts = vs.map(v => TxLog.liveState(table, v).rowCount)
-    vs.zipWithIndex.map { case (v, i) =>
-      val prev = if (i == 0) 0L else counts(i - 1)
-      (v, TxLog.readCommit(table, v).op, counts(i), counts(i) - prev)
-    }.toDF("version", "op", "n_rows", "rows_delta")
-      .orderBy(col("version"))
   }
 
   /** sql_time_travel (S49) — the statement surface end to end on the

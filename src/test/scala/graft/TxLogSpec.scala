@@ -21,6 +21,22 @@ class TxLogSpec extends SparkSpec {
     (from until from + n).map(i => (i, s"v$i")).toDF("id", "payload")
   }
 
+  /** Data (`d_*`) and DV sidecar (`dv_*`) groups under `t` that no commit
+    * or checkpoint names — what a writer that lost its slot must not
+    * leave behind. Group names are unique, so a text match on the log
+    * decides.
+    */
+  private def unreferencedGroups(t: java.io.File): Seq[String] = {
+    val log = Option(new java.io.File(t, "_graft_log").listFiles())
+      .getOrElse(Array.empty).filter(_.isFile)
+      .map(f => new String(java.nio.file.Files.readAllBytes(f.toPath)))
+      .mkString("\n")
+    Option(t.listFiles()).getOrElse(Array.empty).map(_.getName)
+      .filter(n => n.startsWith("d_") || n.startsWith("dv_"))
+      .filterNot(n => log.contains(s"\"$n/") || log.contains(s"\"$n\""))
+      .toSeq.sorted
+  }
+
   test("appends commit sequential versions and the snapshot unions them") {
     val t = freshTable("append")
     assert(TxLog.append(rows(10), t) == 0L)
@@ -54,6 +70,7 @@ class TxLogSpec extends SparkSpec {
     // all four landed, on four DISTINCT sequential versions
     assert(versions == Seq(1L, 2L, 3L, 4L), s"got $versions")
     assert(TxLog.snapshot(spark, t).count() == 1 + 4 * 3)
+    assert(unreferencedGroups(t).isEmpty, unreferencedGroups(t))
   }
 
   test("commit primitive is create-if-absent under TIGHT contention: " +
@@ -92,7 +109,7 @@ class TxLogSpec extends SparkSpec {
     // checkpoints landed every 10 commits
     assert(TxLog.checkpoints(t) == Seq(10L, 20L),
       s"checkpoints: ${TxLog.checkpoints(t)}")
-    val (live, base, replayed) = TxLog.resolve(t, 24L)
+    val TxLog.LiveState(live, _, base, replayed) = TxLog.liveState(t, 24L)
     assert(base == 20L && replayed <= 10,
       s"resolution read base=$base + $replayed commits")
     // checkpoint-based resolution is EXACT: same live set, same data
@@ -101,7 +118,7 @@ class TxLogSpec extends SparkSpec {
     // time travel BELOW the first checkpoint still replays correctly
     assert(TxLog.snapshot(spark, t, Some(4L)).count() == 10)
     // and a version between checkpoints uses the right base
-    val (_, base14, replayed14) = TxLog.resolve(t, 14L)
+    val TxLog.LiveState(_, _, base14, replayed14) = TxLog.liveState(t, 14L)
     assert(base14 == 10L && replayed14 <= 4)
   }
 
@@ -524,16 +541,29 @@ class TxLogSpec extends SparkSpec {
       "never duplicates the column") {
     val t = freshTable("alterrace")
     TxLog.append(rows(10), t)
-    // 1 ALTER + 3 appends race: the alter's compare-and-commit must
-    // re-validate against whatever version actually precedes its slot
-    val threads = (0 until 4).map { i =>
+    // 1 ALTER + 1 bloom-index declaration + 3 appends race: each
+    // metadata commit must re-validate against whatever version actually
+    // precedes its slot
+    val threads = (0 until 5).map { i =>
       new Thread(() =>
         if (i == 0) { TxLog.alterAddColumns(spark, t, "extra BIGINT"); () }
+        else if (i == 4) {
+          TxLog.alterAddBloomIndex(spark, t, "id", bits = 1024); ()
+        }
         else { TxLog.append(rows(5, 100L * (i + 1)), t); () })
     }
     threads.foreach(_.start()); threads.foreach(_.join())
-    assert(TxLog.versions(t) == (0L to 4L),
-      "race should land 5 sequential versions")
+    assert(TxLog.versions(t) == (0L to 5L),
+      "race should land 6 sequential versions")
+    // the declaration landed on its own version, and every append
+    // derived from a base at or after it carries bitsets
+    val ops = TxLog.versions(t).map(v => v -> TxLog.readCommit(t, v))
+    val vb = ops.collect { case (v, c) if c.op == "bloom_index" => v }
+    assert(vb.size == 1, s"ops: ${ops.map(_._2.op)}")
+    ops.collect { case (v, c) if c.op == "append" && v > vb.head =>
+      assert(c.adds.nonEmpty && c.adds.forall(_.blooms.contains("id")),
+        s"append v$v after the bloom declaration lacks bitsets")
+    }
     val snap = TxLog.snapshot(spark, t)
     assert(snap.schema.fieldNames.count(_ == "extra") == 1)
     assert(snap.count() == 25) // 10 + 3x5, every append survived
@@ -695,7 +725,7 @@ class TxLogSpec extends SparkSpec {
     val t = freshTable("ckptstats")
     (0 until 12).foreach(i => TxLog.append(rows(3, 10L * i).coalesce(1), t))
     assert(TxLog.checkpoints(t).nonEmpty, "no checkpoint landed")
-    val (_, base, _) = TxLog.resolve(t, 11L)
+    val base = TxLog.liveState(t, 11L).base
     assert(base == 10L, "resolution should use the checkpoint")
     // prune on id: only the files whose [min,max] overlap [50,59]
     val (df, nRead, nTotal) = TxLog.snapshotPruned(spark, t, "id", 50L, 59L)
@@ -1077,6 +1107,7 @@ class TxLogSpec extends SparkSpec {
     assert(snap.count() == 18, "a stale rewrite duplicated survivors")
     assert(snap.select(col("id")).distinct().count() == 18)
     assert(snap.filter(col("id") < 2).isEmpty)
+    assert(unreferencedGroups(t).isEmpty, unreferencedGroups(t))
   }
 
   test("MERGE racing MERGE on disjoint keys: both land, the loser " +
@@ -1112,6 +1143,7 @@ class TxLogSpec extends SparkSpec {
     assert(snap.filter(col("id") === 1L).head.getString(1) == "upd_1")
     assert(snap.filter(col("id") === 101L).head.getString(1) == "upd_101")
     assert(snap.filter(col("id").isin(50L, 60L)).count() == 2)
+    assert(unreferencedGroups(t).isEmpty, unreferencedGroups(t))
   }
 
   test("MERGE racing OPTIMIZE: the file-identity conflict forces the " +
@@ -1150,6 +1182,71 @@ class TxLogSpec extends SparkSpec {
     assert(snap.select(col("id")).distinct().count() == 21)
     assert(snap.filter(col("id") === 1L).head.getString(1) == "merged")
     assert(snap.filter(col("id") === 200L).count() == 1)
+    assert(unreferencedGroups(t).isEmpty, unreferencedGroups(t))
+  }
+
+  test("compaction racing a marked CDC apply tail on hot keys: both " +
+      "commit, the state is the sequential fold, the feed is row-exact") {
+    import spark.implicits._
+    val t = freshTable("compacttail")
+    TxLog.append(rows(200).repartition(4), t)                  // v0
+    // 8 batches over 25 hot keys (upserts and deletes, a key deleted in
+    // one batch and upserted in a later one) plus one fresh key each
+    val batches = (0 until 8).map { b =>
+      (0 until 10).map(k => ((k * 7 + b * 3) % 25).toLong).distinct
+        .map(id => (id, s"b${b}_$id",
+          if ((id + b) % 4 == 0) "delete" else "upsert")) :+
+        ((200L + b % 3, s"b${b}_new", "upsert"))
+    }
+    import java.util.concurrent.{Callable, CountDownLatch, Executors}
+    val pool = Executors.newFixedThreadPool(2)
+    val gate = new CountDownLatch(1)
+    val fApply = pool.submit(new Callable[Seq[Long]] {
+      override def call(): Seq[Long] = {
+        gate.await()
+        batches.zipWithIndex.map { case (rs, b) =>
+          TxLog.applyChanges(spark, t, rs.toDF("id", "payload", "_op"),
+            Seq("id"), Some("tail"), b.toLong)
+        }
+      }
+    })
+    val fCompact = pool.submit(new Callable[Long] {
+      override def call(): Long = {
+        gate.await()
+        TxLog.compact(spark, t, targetFiles = 2)
+      }
+    })
+    gate.countDown()
+    val applied = fApply.get()
+    val compacted = fCompact.get()
+    pool.shutdown()
+    assert((applied :+ compacted).sorted == (1L to 9L),
+      s"applies $applied, compact $compacted")
+    assert(TxLog.readCommit(t, compacted).op == "compact")
+    // the sequential LWW fold of the batches over the base rows
+    val states = batches.scanLeft((0L until 200L).map(i => i -> s"v$i")
+        .toMap) { (st, rs) =>
+      rs.foldLeft(st) { case (m, (id, p, op)) =>
+        if (op == "upsert") m + (id -> p) else m - id }
+    }
+    val got = TxLog.snapshot(spark, t).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+    assert(got == states.last.toSeq.sorted)
+    // every apply's feed: the replaced image deleted, the new one
+    // inserted; the compaction contributes nothing
+    val expected = batches.indices.flatMap { b =>
+      batches(b).flatMap { case (id, _, _) =>
+        val (o, n) = (states(b).get(id), states(b + 1).get(id))
+        o.map(p => (applied(b), "delete", id, p)).toSeq ++
+          n.map(p => (applied(b), "insert", id, p))
+      }
+    }.sorted
+    val feed = TxLog.changeFeed(spark, t, 0L, 9L)
+      .select("_version", "_change_type", "id", "payload").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3)))
+      .toSeq.sorted
+    assert(feed == expected)
+    assert(unreferencedGroups(t).isEmpty, unreferencedGroups(t))
   }
 
   test("CHECK constraints: declaration validates existing data, every " +
@@ -2322,12 +2419,12 @@ class TxLogSpec extends SparkSpec {
     TxLog.append(slab("a", Seq(3L)), t)                        // v2
     TxLog.append(slab("b", Seq(10L)), t)                       // v3
     TxSql.register("optw_probe", t)
-    val before = TxLog.resolve(t, 3L)._1.map(_.path)
+    val before = TxLog.liveState(t, 3L).live.map(_.path)
     val bFiles = before.filter(_.contains("_p_grp=b"))
     assert(before.count(_.contains("_p_grp=a")) == 3 && bFiles.size == 1)
     val res = TxSql.sql(spark, "OPTIMIZE optw_probe WHERE grp = 'a'")
     assert(res.collect().head.getLong(2) == 4L)
-    val after = TxLog.resolve(t, 4L)._1.map(_.path)
+    val after = TxLog.liveState(t, 4L).live.map(_.path)
     // grp=a's three fragments compacted; grp=b's file untouched BY PATH
     assert(after.count(_.contains("_p_grp=a")) < 3, s"a files: $after")
     assert(after.filter(_.contains("_p_grp=b")) == bFiles,

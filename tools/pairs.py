@@ -18,8 +18,10 @@ For every end-to-end metric of BENCHMARK.json it prints each side's
 median and quartiles, the pairs the change won (ties count for neither
 side) and whether a gain claim holds: the change wins at least nine
 tenths of the pairs, and the medians differ, in the better direction, by
-more than the parent's interquartile range. The runs themselves and the
-summary go to `<workdir>/pairs_<workload>.json`.
+more than the parent's interquartile range. It also prints a
+no-regression verdict per metric against the metric's `bound` (see
+`verdict`), and exits 1 when any metric regressed. The runs themselves
+and the summary go to `<workdir>/pairs_<workload>.json`.
 """
 import argparse
 import json
@@ -79,6 +81,29 @@ def quartiles(xs):
     return q1, med, q3
 
 
+def verdict(lower, bound, par, chg):
+    """No-regression verdict of one metric from its per-run values.
+
+    `regressed`: the change's median is worse than the parent's by more
+    than `bound` (a fraction of the parent's median). Otherwise
+    `unresolved` when the parent's own spread (interquartile range over
+    median) exceeds `bound` and not every change run beats every parent
+    run: the runs cannot tell a change within the bound from noise.
+    Otherwise `ok`.
+    """
+    pq1, pmed, pq3 = quartiles(par)
+    cmed = quartiles(chg)[1]
+    if not pmed:
+        return "ok" if cmed == pmed else "unresolved"
+    worse = (cmed - pmed) if lower else (pmed - cmed)
+    if worse / abs(pmed) > bound:
+        return "regressed"
+    beats_all = max(chg) < min(par) if lower else min(chg) > max(par)
+    if (pq3 - pq1) / abs(pmed) > bound and not beats_all:
+        return "unresolved"
+    return "ok"
+
+
 def summarize(metrics, pairs):
     rows = []
     for m in metrics:
@@ -103,6 +128,7 @@ def summarize(metrics, pairs):
                      "parent_q": [pq1, pmed, pq3],
                      "change_q": [cq1, cmed, cq3],
                      "won": won, "lost": lost, "gain_rule": holds,
+                     "verdict": verdict(lower, m["bound"], par, chg),
                      "rel_change": (cmed - pmed) / pmed if pmed else None})
     return rows
 
@@ -158,20 +184,23 @@ def main():
           f"parent {failed['parent']}/{attempted['parent']}, "
           f"change {failed['change']}/{attempted['change']}")
     print("| metric | parent q1 / median / q3 | change q1 / median / q3 "
-          "| change | pairs won | gain rule |")
-    print("| --- | --- | --- | --- | --- | --- |")
+          "| change | bound | pairs won | gain rule | no-regression |")
+    print("| --- | --- | --- | --- | --- | --- | --- | --- |")
     for r in rows:
         fmt = lambda q: " / ".join(f"{x:.4g}" for x in q)
         rel = f"{100 * r['rel_change']:+.1f}%" if r["rel_change"] is not None \
             else "-"
         print(f"| {r['metric']} | {fmt(r['parent_q'])} | "
-              f"{fmt(r['change_q'])} | {rel} | {r['won']}/{r['n']} | "
-              f"{'holds' if r['gain_rule'] else 'no'} |")
+              f"{fmt(r['change_q'])} | {rel} | {r['bound']} | "
+              f"{r['won']}/{r['n']} | "
+              f"{'holds' if r['gain_rule'] else 'no'} | {r['verdict']} |")
     out = os.path.join(workdir, f"pairs_{a.workload}.json")
     with open(out, "w") as f:
         json.dump({"workload": a.workload, "parent": sha, "pairs": pairs,
                    "dropped": dropped, "summary": rows}, f, indent=1)
     log(f"runs and summary written to {out}")
+    if any(r["verdict"] == "regressed" for r in rows):
+        sys.exit(1)
 
 
 if __name__ == "__main__":
