@@ -33,14 +33,18 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *   - MERGE-ON-READ CDC APPLY: a changelog batch commits deletion
   *     vectors for the live rows it replaces plus one file of upserts,
   *     rewriting no data file — |batch| cost per commit, whatever the
-  *     table size; small vectors ride inline in the log action;
+  *     table size; small vectors ride inline in the log action. The same
+  *     write lands the replaced rows as a change-data file, so the
+  *     commit's change feed is read from its two files, not derived;
   *   - ACID COMPACTION: S23's small-file OPTIMIZE as one commit that
   *     adds the binned rewrite and removes the fragments — readers
   *     switch atomically, and time travel still serves the pre-compact
   *     versions from the original files.
   *
   * Log layout: `<table>/_graft_log/%08d.json`, one JSON action per line
-  * (`add` with path+rows, `remove`, `commit` with the operation tag);
+  * (`add` with path+rows, `cdc` with path+rows for a change-data file —
+  * never live, read only by the change feed — `remove`, `dv`, `commit`
+  * with the operation tag, plus the metadata actions [[Commit]] lists);
   * data files live in per-commit subdirectories and are referenced by
   * table-relative path. Nothing is ever overwritten in place — the log
   * and the data files are both append-only, which is what makes every
@@ -172,7 +176,9 @@ object TxLog {
     * RENAMEd/DROPped (Delta column-mapping mode); absent = identity
     * (legacy logs parse unchanged). `ts` is the commit's deterministic
     * wall-time surrogate for TIMESTAMP AS OF binding, when the writer
-    * stamped one.
+    * stamped one. `cdc` lists change-data files: files the commit wrote
+    * that are never live and hold the row images it deleted (see
+    * [[applyChanges]]).
     */
   private[graft] case class Commit(op: String, adds: Seq[Add] = Seq.empty,
     removes: Seq[String] = Seq.empty, metaDdl: Option[String] = None,
@@ -183,7 +189,8 @@ object TxLog {
     bloomIdx: Seq[BloomIdx] = Seq.empty,
     copies: Seq[String] = Seq.empty,
     identities: Seq[(String, Long)] = Seq.empty,
-    txns: Seq[(String, Long)] = Seq.empty)
+    txns: Seq[(String, Long)] = Seq.empty,
+    cdc: Seq[Add] = Seq.empty)
 
   private val addRe =
     ("""\{"add":\s*\{"path":\s*"((?:[^"\\]|\\.)+)",\s*"rows":\s*(\d+)""" +
@@ -197,6 +204,8 @@ object TxLog {
   private val dvInlineRe =
     ("""\{"dv":\s*\{"path":\s*"((?:[^"\\]|\\.)+)",\s*"pos":\s*\[([0-9,\s]*)\],""" +
       """\s*"rows":\s*(\d+)\}\}""").r
+  private val cdcRe =
+    """\{"cdc":\s*\{"path":\s*"((?:[^"\\]|\\.)+)",\s*"rows":\s*(\d+)\}\}""".r
   private val removeRe =
     """\{"remove":\s*\{"path":\s*"((?:[^"\\]|\\.)+)"\}\}""".r
   private val opRe = """\{"commit":\s*\{"op":\s*"([^"]+)"[^}]*\}\}""".r
@@ -255,6 +264,7 @@ object TxLog {
     val lines = Files.readAllLines(versionFile(table, v).toPath)
     import scala.jdk.CollectionConverters._
     var adds = Vector.empty[Add]
+    var cdc = Vector.empty[Add]
     var removes = Vector.empty[String]
     var dvs = Vector.empty[Dv]
     var op = "unknown"
@@ -276,6 +286,7 @@ object TxLog {
         // silently vanishing as an unmatched line)
         case addRe(p, r, s, b) =>
           adds :+= Add(unq(p), r.toLong, parseStats(s), parseBlooms(b))
+        case cdcRe(p, r) => cdc :+= Add(unq(p), r.toLong)
         case removeRe(p) => removes :+= unq(p)
         case DvAction(d) => dvs :+= d
         case opRe(o) => op = o
@@ -303,7 +314,7 @@ object TxLog {
       }
     }
     Commit(op, adds, removes, meta, mapping, ts, dvs, partCols, constraints,
-      colDefaults, bloomIdx, copies, identities, txns)
+      colDefaults, bloomIdx, copies, identities, txns, cdc)
   }
 
   /** Inverse of [[q]]'s escaping for constraint expression round-trips:
@@ -572,12 +583,14 @@ object TxLog {
   }
 
   /** The wire form of `c`: one JSON action per line, in a fixed order
-    * (adds, removes, DVs, partition, constraints, defaults, bloom specs,
-    * copies, identities, txns, metaData, then the commit line), so the
-    * same actions always render byte-identically.
+    * (adds, change-data files, removes, DVs, partition, constraints,
+    * defaults, bloom specs, copies, identities, txns, metaData, then the
+    * commit line), so the same actions always render byte-identically.
     */
   private def commitBody(c: Commit): String =
     (c.adds.map(renderAdd) ++
+      c.cdc.map(f =>
+        s"""{"cdc": {"path": ${q(f.path)}, "rows": ${f.rows}}}""") ++
       c.removes.map(p => s"""{"remove": {"path": ${q(p)}}}""") ++
       c.dvs.map(renderDv) ++
       c.partCols.map(p => s"""{"partition": {"cols": ${q(p)}}}""") ++
@@ -845,18 +858,30 @@ object TxLog {
     */
   private[graft] def readAs(spark: SparkSession, table: File, v: Long,
       paths: Seq[String]): DataFrame =
+    readBound(spark, table, v, paths)
+
+  /** [[readAs]] with the DEFAULT fills as of `v` applied, plus `extra`
+    * columns evaluated on each raw scan (per-file metadata such as
+    * `_metadata.row_index` or `input_file_name()`, which must sit
+    * directly over the scan). Absolute or canonical file paths, since
+    * the fills key on the file's canonical path.
+    */
+  private def readBound(spark: SparkSession, table: File, v: Long,
+      paths: Seq[String],
+      extra: Seq[org.apache.spark.sql.Column] = Seq.empty): DataFrame = {
+    def one(ps: Seq[String]): DataFrame = {
+      val (raw, proj) = rawDeclared(spark, table, v, ps)
+      raw.select(proj ++ extra: _*)
+    }
     fillGroups(table, v, paths) match {
-      case None =>
-        val (raw, proj) = rawDeclared(spark, table, v, paths)
-        raw.select(proj: _*)
+      case None => one(paths)
       case Some(groups) =>
         // per-epoch scans: each group reads once with its own fill set
         // (usually two groups — pre- and post-declaration files)
-        groups.map { case (fills, ps) =>
-          val (raw, proj) = rawDeclared(spark, table, v, ps)
-          applyFills(raw.select(proj: _*), fills)
-        }.reduce(_ unionByName _)
+        groups.map { case (fills, ps) => applyFills(one(ps), fills) }
+          .reduce(_ unionByName _)
     }
+  }
 
   /** The raw physical-schema read of `paths` AS OF `v`, paired with the
     * physical→logical projection columns — callers that need per-file
@@ -1471,10 +1496,12 @@ object TxLog {
     * materialized the bytes. An incremental fold (r15 review: rebuilding
     * the whole map per new version cost O(log²) cumulative driver reads
     * over a table's life): first(v) = first(v−1) plus v's unseen adds.
+    * Change-data files count too: the feed reads them with the fills,
+    * and an unknown file would fill an explicit NULL in a pre-image.
     */
   private val addedAtVersions =
     new LogFold(Map.empty[String, Long])((acc, c, v, table) =>
-      c.adds.foldLeft(acc) { (m, add) =>
+      (c.adds ++ c.cdc).foldLeft(acc) { (m, add) =>
         val p = new File(table, add.path).getCanonicalPath
         if (m.contains(p)) m else m + (p -> v) // FIRST add wins
       })
@@ -1637,20 +1664,9 @@ object TxLog {
     * DVs and under the declared-schema projection.
     */
   private def readAsPos(spark: SparkSession, table: File, v: Long,
-      paths: Seq[String]): DataFrame = {
-    val rel = fileKeyExpr.as("_gf_rel")
-    val idx = col("_metadata.row_index").as("_gi")
-    def one(ps: Seq[String]): DataFrame = {
-      val (raw, proj) = rawDeclared(spark, table, v, ps)
-      raw.select(proj :+ rel :+ idx: _*)
-    }
-    fillGroups(table, v, paths) match {
-      case None => one(paths)
-      case Some(groups) =>
-        groups.map { case (fills, ps) => applyFills(one(ps), fills) }
-          .reduce(_ unionByName _)
-    }
-  }
+      paths: Seq[String]): DataFrame =
+    readBound(spark, table, v, paths, Seq(fileKeyExpr.as("_gf_rel"),
+      col("_metadata.row_index").as("_gi")))
 
   /** Read a live-file subset under the AS-OF schema with the files' live
     * DELETION VECTORS applied (merge-on-read): tombstoned (file, row)
@@ -2847,14 +2863,27 @@ object TxLog {
     * rewritten: the commit carries deletion vectors (DVs) tombstoning
     * the live rows the batch replaces, plus one new file of upserts —
     * the shape a MongoDB-oplog → warehouse replicator ships, at a cost
-    * of |batch| written plus one key-column probe of the live files
-    * whose key stats admit a batch key, never |table|.
+    * of |batch| written plus one probe of the live files whose key stats
+    * admit a batch key, never |table|.
+    *
+    * The commit also carries its own CHANGE DATA (Delta's `cdc` action):
+    * the probe returns the matched live rows whole, so the rows the DVs
+    * tombstone — the commit's delete images — are on the driver already
+    * and land as a change-data file next to the upsert file, in the same
+    * write job. The feed then reads this commit as its upsert file
+    * (inserts) plus its change-data file (deletes), with no rescan of
+    * the DV'd files and no netting ([[feedForVersions]]). That needs
+    * the two files to never hold the same row image, so an UNCHANGED
+    * upsert — one equal to a live row of its key, compared the way the
+    * feed's grouping compares rows ([[grouped]]) — is skipped: that live
+    * row stays, the upsert is not written, and only the key's other live
+    * rows (duplicates) are deleted. The snapshot is the same either way.
     *
     * `changes` is ONE micro-batch, so its size is bounded by the
     * trigger: it is collected to the driver once and audited there, and
     * a retry after a lost commit slot reuses those rows — the source is
     * never evaluated twice. The Spark work per commit is the probe scan
-    * and the upsert write (plus one sidecar write when a file's vector
+    * and the one write (plus one sidecar write when a file's vector
     * outgrows [[inlineDvMax]]). Positions are taken over the current
     * state, so DVs stacked on one file hold only new positions; they
     * accumulate commit after commit until `compact` materializes them.
@@ -2892,6 +2921,10 @@ object TxLog {
     val upsertSchema = StructType(changes.schema.filterNot(_.name == "_op"))
     val upsertRows = batch.filter(r => "upsert" == r.getString(opAt))
       .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.patch(opAt, Nil, 1)))
+    def rowsOf(rows: Seq[org.apache.spark.sql.Row], schema: StructType) =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    def keyOf(r: org.apache.spark.sql.Row): Any =
+      grouped(keys.map(k => r.getAs[Any](k)))
     transact(table) { a =>
       // a replayed batch id is already in the log: skip it
       if (txnApp.exists(app =>
@@ -2910,8 +2943,8 @@ object TxLog {
         val declared = schemaDdlAsOf(table, v).map(StructType.fromDDL)
         val mapping = mappingAsOf(table, v)
         val landing = Option.when(upsertRows.nonEmpty) {
-          val upserts = withWriteDefaults(spark.createDataFrame(
-            java.util.Arrays.asList(upsertRows: _*), upsertSchema), table, v)
+          val upserts = withWriteDefaults(rowsOf(upsertRows, upsertSchema),
+            table, v)
           // the upserts land in the table's column order and types (a
           // footer-owned table reads its schema off one live file)
           val target = declared.orElse(st.live.headOption.map(f =>
@@ -2924,39 +2957,99 @@ object TxLog {
           enforceConstraints(table, v, out, "CDC APPLY")
           out
         }
-        val hits = probeKeyRows(spark, table, v, st, keys, probeKeys,
-          keys.map(k => mapping.getOrElse(k, k)))
+        // the post-images as they land; a projection of a local
+        // relation collects on the driver, without a job
+        val post = landing.toSeq.flatMap(_.collect().toSeq)
+        val names = landing.map(_.columns.toSeq).getOrElse(Seq.empty)
+        def image(r: org.apache.spark.sql.Row): Any =
+          grouped(names.map(n => r.getAs[Any](n)))
+        val postByKey = post.map(r => keyOf(r) -> image(r)).toMap
+        val (images, hits) = probeKeyRows(spark, table, v, st, keys,
+          probeKeys, keys.map(k => mapping.getOrElse(k, k)))
+        // per unchanged upsert, the one live row of its key it equals
+        val kept = hits.groupBy(keyOf).toSeq.flatMap { case (k, hs) =>
+          postByKey.get(k).flatMap(p => hs.find(h => image(h) == p))
+        }
+        val unchanged = kept.map(keyOf).toSet
+        def at(h: org.apache.spark.sql.Row): (String, Long) =
+          (h.getAs[String]("_gf_rel"), h.getAs[Long]("_gi"))
+        val keptAt = kept.map(at).toSet
+        val deleted = hits.filterNot(h => keptAt(at(h)))
         val toPath = byBase(table, st.live)
-        val perFile = hits.groupBy(_._1).toSeq.sortBy(_._1)
+        val perFile = deleted.map(at).groupBy(_._1).toSeq.sortBy(_._1)
           .map { case (k, ps) => (k, ps.map(_._2).sorted) }
         val (small, large) = perFile.partition(_._2.size <= inlineDvMax)
         val sidecar = Option.when(large.nonEmpty)(a.sidecar(
-          spark.createDataFrame(java.util.Arrays.asList(large.flatMap {
-            case (k, ps) => ps.map(org.apache.spark.sql.Row(k, _)) }: _*),
-            dvSchema)))
+          rowsOf(large.flatMap { case (k, ps) =>
+            ps.map(org.apache.spark.sql.Row(k, _)) }, dvSchema)))
         val dvs =
           small.map { case (k, ps) => Dv(toPath(k), "", ps.size, ps) } ++
             large.map { case (k, ps) => Dv(toPath(k), sidecar.get, ps.size) }
-        // one file of upserts: a local relation would otherwise write one
-        // file per core
-        val files = landing.toSeq.flatMap(l =>
-          a.write(toPhysical(l.coalesce(1), mapping), "cdc"))
-        Some(Commit("cdc-apply", files, dvs = dvs,
-          txns = txnApp.map(_ -> txnBatch).toSeq))
+        // ONE write job over two single-partition inputs: the upserts
+        // that land, then the delete images. The commit protocol names
+        // each file by its input's split index (part-00000-…,
+        // part-00001-…), which tells the data file from the change-data
+        // file; a job per file would pay a job's fixed cost twice. An RDD
+        // union keeps the splits apart (a partitioning-aware Dataset
+        // union zips two single-partition children into one). The rows
+        // take the table read's schema, whose columns are nullable, in
+        // the upserts' column order.
+        val read = StructType(images.filterNot(f =>
+          f.name == "_gf_rel" || f.name == "_gi"))
+        val schema = landing.fold(read)(l =>
+          if (deleted.isEmpty) l.schema else StructType(l.columns.map(read(_))))
+        val inputs = Seq(
+          post.filterNot(r => unchanged(keyOf(r))) -> false,
+          deleted.map(h => org.apache.spark.sql.Row.fromSeq(
+            schema.fieldNames.toSeq.map(h.getAs[Any]))) -> true)
+          .filter(_._1.nonEmpty)
+        val files = if (inputs.isEmpty) Seq.empty else a.write(toPhysical(
+          spark.createDataFrame(spark.sparkContext.union(inputs.map(i =>
+            spark.sparkContext.parallelize(i._1, 1))), schema), mapping),
+          "cdc")
+        val (cdc, adds) = files.partition(f => inputs(splitIndex(f.path))._2)
+        Some(Commit("cdc-apply", adds, dvs = dvs,
+          txns = txnApp.map(_ -> txnBatch).toSeq,
+          cdc = cdc.map(f => Add(f.path, f.rows))))
       }
     }
   }
 
-  /** The live rows at `v` whose `keys` equal a tuple of `probeKeys`, as
-    * (file key, row position) — the apply's one probe scan. Reads only
-    * the key columns and positions of the files whose log stats admit a
-    * batch key (`physKeys` name the stats), with their current DVs
-    * applied, filtered by the keys as a literal set: a broadcast of the
-    * driver-held keys would cost a job of its own.
+  /** The split (task partition) index a library write named a data file
+    * by: `part-<split>-<job uuid>…`.
+    */
+  private def splitIndex(path: String): Int =
+    """part-(\d+)-""".r.findPrefixMatchOf(new File(path).getName)
+      .map(_.group(1).toInt)
+      .getOrElse(sys.error(s"TxLog: not a part file: $path"))
+
+  /** A row value as the change feed's grouping compares it: NaN equals
+    * NaN, −0.0 equals 0.0 and binary values compare by content, through
+    * structs, arrays and maps. Two values are the same row image to the
+    * feed iff their `grouped` forms are `==`.
+    */
+  private def grouped(x: Any): Any = x match {
+    case d: Double => java.lang.Double.doubleToLongBits(d + 0.0)
+    case f: Float => java.lang.Float.floatToIntBits(f + 0.0f)
+    case b: Array[Byte] => b.toSeq
+    case r: org.apache.spark.sql.Row => r.toSeq.map(grouped)
+    case s: scala.collection.Seq[_] => s.map(grouped)
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, v) => grouped(k) -> grouped(v) }
+    case other => other
+  }
+
+  /** The live rows at `v` whose `keys` equal a tuple of `probeKeys` —
+    * the apply's one probe scan: every table column plus the row's file
+    * key and position (`_gf_rel`, `_gi`), and the frame's schema. Reads
+    * the files whose log stats admit a batch key (`physKeys` name the
+    * stats), with their current DVs and DEFAULT fills applied, filtered
+    * by the keys as a literal set: a broadcast of the driver-held keys
+    * would cost a job of its own. Only matched rows reach the driver.
     */
   private def probeKeyRows(spark: SparkSession, table: File, v: Long,
       st: LiveState, keys: Seq[String], probeKeys: Seq[Seq[Any]],
-      physKeys: Seq[String]): Seq[(String, Long)] = {
+      physKeys: Seq[String]): (StructType, Seq[org.apache.spark.sql.Row]) = {
     // stats are integral ranges: only an integral key value can miss one
     def admits(a: Add): Boolean = probeKeys.exists(_.zip(physKeys).forall {
       case (x @ (_: java.lang.Long | _: Integer | _: java.lang.Short |
@@ -2968,7 +3061,7 @@ object TxLog {
     })
     val candidates =
       if (probeKeys.isEmpty) Seq.empty else st.live.filter(admits)
-    if (candidates.isEmpty) Seq.empty
+    if (candidates.isEmpty) (StructType(Nil), Seq.empty)
     else {
       val frame = assemble(spark, table, v, candidates, st.dvs, keepPos = true)
       val hit =
@@ -2976,8 +3069,7 @@ object TxLog {
         else struct(keys.map(col): _*).isin(probeKeys.map(t =>
           struct(t.zip(keys).map { case (x, k) =>
             lit(x).cast(frame.schema(k).dataType).as(k) }: _*)): _*)
-      frame.filter(hit).select(col("_gf_rel"), col("_gi")).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq
+      (frame.schema, frame.filter(hit).collect().toSeq)
     }
   }
 
@@ -3003,32 +3095,35 @@ object TxLog {
       }
       .start()
 
-  /** Row-level CHANGE DATA FEED between two versions, derived purely
-    * from the log's add/remove file sets (the Delta CDF shape, computed
-    * after the fact instead of written eagerly): for each commit in
+  /** Row-level CHANGE DATA FEED between two versions (the Delta CDF
+    * shape), derived from the log's add/remove file sets, except for
+    * commits that carry their change data: for each commit in
     * (fromVersion, toVersion], rows present in its added files but not
     * its removed files are `insert`s, rows present in removed but not
-    * added are `delete`s, and a MERGE's updated row surfaces as its
+    * added are `delete`s, and an updated row surfaces as its
     * delete+insert pre/post-image pair. Data-preserving commits
     * (op=compact) contribute nothing by definition and are skipped
-    * without reading a byte.
+    * without reading a byte. A CDC apply commit wrote its delete images
+    * as change-data files ([[applyChanges]]), so its feed is read, not
+    * derived: adds are inserts, change-data files deletes.
     *
     * Scale: cost is bounded by the files TOUCHED by the commits in
     * range — the CDF property that makes downstream incremental view
     * maintenance delta-proportional instead of snapshot-diff-sized
-    * (S7 diffs two full snapshots; this reads only the changed files) —
-    * and the whole window resolves in ONE distributed pass: every
-    * touched file is read once (a file both added and removed within the
-    * window is still one read — the (version, sign) lookup multiplies
-    * its rows), a literal path → (version, sign) map maps each row to
-    * its commit and side, and the per-commit bag-difference is the SIGNED
-    * NET COUNT per row value (adds − removes per (version, row): +n → n
-    * inserts, −n → n deletes — exact under duplicate rows, the same
+    * (S7 diffs two full snapshots; this reads only the changed files).
+    * The derived part resolves the whole window in ONE distributed pass:
+    * every touched file is read once (a file both added and removed
+    * within the window is still one read — the (version, sign) lookup
+    * multiplies its rows), a literal path → (version, sign) map maps each
+    * row to its commit and side, and the per-commit bag-difference is the
+    * SIGNED NET COUNT per row value (adds − removes per (version, row):
+    * +n → n inserts, −n → n deletes — exact under duplicate rows, the same
     * multiset algebra exceptAll computes, without a per-commit job
     * train: the r9 bench measured the per-commit exceptAll form at
     * 1.37 s against ~0.4 s for this one-aggregate shape on the same
-    * 5-commit window). Requires the touched files to still exist — a
-    * feed window inside the vacuum retention horizon, Delta's contract.
+    * 5-commit window). The read part is one scan with no shuffle.
+    * Requires the touched files to still exist — a feed window
+    * inside the vacuum retention horizon, Delta's contract.
     */
   def changeFeed(spark: SparkSession, table: File, fromVersion: Long,
       toVersion: Long): DataFrame = {
@@ -3042,8 +3137,14 @@ object TxLog {
     * core of the batch [[changeFeed]] and the streaming consumer (the
     * stream discovers VERSIONS exactly-once; the conversion reads the
     * log, so streamed ≡ batch by construction). None when no commit in
-    * the set changes data. Three signal classes fold into ONE netting
-    * aggregate (see [[feedOfEntries]]):
+    * the set changes data. Every file reads under the latest declared
+    * schema with the DEFAULT fills as of the latest version, so a row
+    * image equals the row the snapshot served ([[readBound]]).
+    *
+    * Commits that carry their change data ([[carriesChangeData]]) are
+    * read directly: adds → `insert`, change-data files → `delete`; their
+    * DVs are never read. The others' three signal classes fold into ONE
+    * netting aggregate (see [[feedOfEntries]]):
     *
     *   - file-level (path, version, +1/−1) from add/remove actions;
     *   - DV tombstones (round-12): a dv action's (file, row) positions
@@ -3055,15 +3156,18 @@ object TxLog {
     *     −1 would double-delete them, so the prior tombstones re-enter
     *     at +1 and net to zero (they were deleted at the DV's version,
     *     not now).
+    *
+    * A window that mixes both kinds unions the two parts.
     */
   private[graft] def feedForVersions(spark: SparkSession, table: File,
       vs: Seq[Long]): Option[DataFrame] = {
     val commits = vs.sorted.map(v => (v, readCommit(table, v)))
       .filterNot { case (_, c) => dataPreservingOps(c.op) }
-    val entries = commits.flatMap { case (v, c) =>
+    val (read, derived) = commits.partition(vc => carriesChangeData(vc._2))
+    val entries = derived.flatMap { case (v, c) =>
       c.adds.map(a => (a.path, v, 1)) ++ c.removes.map(p => (p, v, -1))
     }
-    val rowLevel = commits.flatMap { case (v, c) =>
+    val rowLevel = derived.flatMap { case (v, c) =>
       val dvDeletes =
         if (c.dvs.isEmpty) Seq.empty else Seq((v, c.dvs, -1))
       val corrections = {
@@ -3075,40 +3179,94 @@ object TxLog {
       }
       dvDeletes ++ corrections
     }
-    if (entries.isEmpty && rowLevel.isEmpty) None
-    else Some(feedOfEntries(spark, table, entries, rowLevel))
+    // ALL file reads bind the latest DECLARED schema (r12 advice): on a
+    // column-mapped table raw footer reads would emit PHYSICAL names, and
+    // mixed pre-/post-ADD-COLUMNS footers would misalign the unions —
+    // the feed's rows surface under the latest logical names, the Delta
+    // CDF read-schema convention.
+    lazy val declaredV = versions(table).last
+    val parts =
+      readFeed(spark, table, declaredV, read.flatMap { case (v, c) =>
+        c.adds.map(a => (a.path, v, "insert")) ++
+          c.cdc.map(f => (f.path, v, "delete"))
+      }).toSeq ++
+        Option.when(entries.nonEmpty || rowLevel.nonEmpty)(
+          feedOfEntries(spark, table, declaredV, entries, rowLevel))
+    if (parts.nonEmpty) Some(parts.reduce(_ unionByName _))
+    else Option.when(read.nonEmpty) {
+      // CDC applies that changed no row: an empty feed, not "no commits"
+      val s = schemaAt(spark, table, declaredV)
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType(StructField("_version", LongType, nullable = false) +:
+          StructField("_change_type", StringType, nullable = false) +:
+          s.fields.toSeq))
+    }
   }
+
+  /** True when `c`'s files hold its whole row-level change, so the feed
+    * reads it instead of deriving it: a commit with change-data files
+    * (its deletes; its adds are its inserts), or a CDC apply that
+    * deleted nothing — no DV, no remove — whose adds are all inserts.
+    */
+  private def carriesChangeData(c: Commit): Boolean =
+    c.cdc.nonEmpty ||
+      (c.op == "cdc-apply" && c.dvs.isEmpty && c.removes.isEmpty)
+
+  /** A file as the feed identifies it: the bare absolute path of its
+    * canonical URI, which is what [[scannedPath]] reports for it.
+    */
+  private def feedPath(table: File, p: String): String =
+    new File(table, p).getCanonicalFile.toURI.toString
+      .replaceFirst("^file:/+", "/")
+
+  /** The scanned row's file as [[feedPath]] names it: input_file_name
+    * yields file:///abs, a File URI file:/abs — both normalize to a bare
+    * absolute path.
+    */
+  private def scannedPath: org.apache.spark.sql.Column =
+    regexp_replace(input_file_name(), "^file:/+", "/")
+
+  /** Every row of `files` (table-relative path, writing version, change
+    * type) as a feed row, in one scan with no shuffle: a literal path →
+    * (version, change type) map tags each row by its file. None for no
+    * files.
+    */
+  private def readFeed(spark: SparkSession, table: File, declaredV: Long,
+      files: Seq[(String, Long, String)]): Option[DataFrame] =
+    Option.when(files.nonEmpty) {
+      val tag = map(files.flatMap { case (p, v, kind) =>
+        Seq(lit(feedPath(table, p)),
+          struct(lit(v).as("_version"), lit(kind).as("_change_type")))
+      }: _*).getItem(scannedPath)
+      val rows = readBound(spark, table, declaredV,
+        files.map(f => new File(table, f._1).getCanonicalPath),
+        Seq(tag.as("_tag")))
+      rows.select(col("_tag._version").as("_version") +:
+        col("_tag._change_type").as("_change_type") +:
+        rows.columns.filterNot(_ == "_tag").toSeq.map(col): _*)
+    }
 
   /** Bag-difference core: rows×(version, sign) from file entries, plus
     * row-level DV adjustment frames, all through ONE netting aggregate —
     * (version, row) net > 0 → inserts, < 0 → deletes, 0 → cancelled.
     */
   private def feedOfEntries(spark: SparkSession, table: File,
-      entries: Seq[(String, Long, Int)],
-      rowLevel: Seq[(Long, Seq[Dv], Int)] = Seq.empty): DataFrame = {
-    // ALL file reads bind the latest DECLARED schema (r12 advice): on a
-    // column-mapped table raw footer reads would emit PHYSICAL names, and
-    // mixed pre-/post-ADD-COLUMNS footers would misalign the unionByName
-    // with the DV adjustment frames — the feed's rows surface under the
-    // latest logical names, the Delta CDF read-schema convention.
-    val declaredV = versions(table).last
-    // input_file_name yields file:///abs, a File URI file:/abs — both
-    // normalize to a bare absolute path for the lookup
-    def bare(uri: String): String = uri.replaceFirst("^file:/+", "/")
+      declaredV: Long, entries: Seq[(String, Long, Int)],
+      rowLevel: Seq[(Long, Seq[Dv], Int)]): DataFrame = {
     val fileFrame: Option[DataFrame] = if (entries.isEmpty) None else {
-      def uriOf(p: String) = new File(table, p).getCanonicalFile.toURI.toString
-      val canonical = entries.map(e => uriOf(e._1)).distinct
       // path → its (version, sign) entries as ONE literal map: a file
       // both added and removed inside the window explodes to both rows,
       // and no job ships a driver-held set to the executors
-      val lookup = map(entries.groupBy(e => bare(uriOf(e._1))).toSeq
+      val lookup = map(entries.groupBy(e => feedPath(table, e._1)).toSeq
         .flatMap { case (p, es) =>
           Seq(lit(p), array(es.map { case (_, v, sg) =>
             struct(lit(v).as("_version"), lit(sg).as("_sign")) }: _*))
         }: _*)
-      val (raw, proj) = rawDeclared(spark, table, declaredV, canonical)
-      Some(raw.select(proj :+
-          regexp_replace(input_file_name(), "^file:/+", "/").as("_path"): _*)
+      val paths = entries.map(e => new File(table, e._1).getCanonicalPath)
+        .distinct
+      Some(readBound(spark, table, declaredV, paths,
+          Seq(scannedPath.as("_path")))
         .withColumn("_vs", explode(lookup.getItem(col("_path"))))
         .withColumn("_version", col("_vs._version"))
         .withColumn("_sign", col("_vs._sign"))
@@ -3122,10 +3280,7 @@ object TxLog {
       Seq(inl, side).filter(_.nonEmpty).map { part =>
         val dataPaths = part.map(_.path).distinct
           .map(p => new File(table, p).getAbsolutePath)
-        val (raw, proj) = rawDeclared(spark, table, declaredV, dataPaths)
-        val data = raw.select(proj :+
-          fileKeyExpr.as("_gf_rel") :+
-          col("_metadata.row_index").as("_gi"): _*)
+        val data = readAsPos(spark, table, declaredV, dataPaths)
         val hit =
           if (part.head.inline) data.filter(inlineTombstoned(table, part))
           else data.join(broadcast(sidecarTombstones(spark, table, part)),
@@ -3174,7 +3329,9 @@ object TxLog {
     * anything (S75 cont., round-14 — Delta's `VACUUM … DRY RUN`): the
     * operator's pre-flight before an irreversible delete. Same candidate
     * derivation [[vacuum]] deletes from — data files no retained version
-    * references, plus DV sidecar groups past the horizon; external
+    * references, plus DV sidecar groups past the horizon, plus the
+    * change-data files of commits below it (a feed window inside the
+    * horizon never reads them; the ones at or above it stay); external
     * (`../`, clone-inherited) references belong to the SOURCE table and
     * are never candidates. Log-metadata work plus one existence check
     * per candidate; zero data reads.
@@ -3200,7 +3357,10 @@ object TxLog {
     val dv = everDv.filterNot(retainedDv)
       .filterNot(_.startsWith(".."))
       .filter(dp => new File(table, dp).exists())
-    data ++ dv
+    val cdc = vs.filter(_ < retainFromVersion)
+      .flatMap(v => readCommit(table, v).cdc.map(_.path))
+      .filter(p => new File(table, p).exists())
+    data ++ dv ++ cdc
   }
 
   /** Partition-scoped OPTIMIZE (round-13, the Delta `OPTIMIZE … WHERE`

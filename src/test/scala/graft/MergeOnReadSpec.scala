@@ -8,10 +8,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.TxLog
 
-/** Merge-on-read CDC apply: the commit shape (DVs + one upsert file, no
-  * rewrite), its row-exact change feed under hot keys, the log round
-  * trips the inline vectors go through, the Spark-job budget of a
-  * commit, the footer-derived file stats, and the bounded txn ledger.
+/** Merge-on-read CDC apply: the commit shape (DVs + one upsert file + one
+  * change-data file, no rewrite), its row-exact change feed under hot
+  * keys, skipped unchanged upserts, the log round trips the inline
+  * vectors go through, vacuum of change-data files, the Spark-job budget
+  * of a commit and its feed, the footer-derived file stats, and the
+  * bounded txn ledger.
   */
 class MergeOnReadSpec extends SparkSpec {
   import spark.implicits._
@@ -106,6 +108,10 @@ class MergeOnReadSpec extends SparkSpec {
       val c = TxLog.readCommit(t, v)
       assert(c.removes.isEmpty && c.adds.size == 1 && c.dvs.forall(_.inline),
         s"v$v is not one upsert file plus inline DVs: $c")
+      // the delete images ride one change-data file, one per DV'd row
+      assert(c.cdc.size <= 1 &&
+        c.cdc.map(_.rows).sum == c.dvs.map(_.rows).sum,
+        s"v$v change-data files do not match its DVs: $c")
       assert(state(t) == ref.toSeq.sorted, s"snapshot at v$v")
       val want = delta(v, before, ref)
       assert(feedRows(TxLog.changeFeed(spark, t, v - 1, v)) == want,
@@ -180,10 +186,119 @@ class MergeOnReadSpec extends SparkSpec {
     val (v, applyJobs) =
       jobsOf(TxLog.applyChanges(spark, t, batch(1), Seq("id")))
     assert(applyJobs <= 2, s"applyChanges ran $applyJobs jobs")
+    // the feed reads the commit's upsert file and change-data file: one
+    // scan each, no shuffle, none of the 16 DV'd data files
     val (rows, feedJobs) =
       jobsOf(TxLog.changeFeed(spark, t, v - 1, v).collect())
-    assert(feedJobs <= 2, s"changeFeed ran $feedJobs jobs")
+    assert(feedJobs <= 1, s"changeFeed ran $feedJobs jobs")
     assert(rows.count(_.getAs[String]("_change_type") == "insert") == 45)
+    val (_, viewJobs) = jobsOf(TxLog.changeFeed(spark, t, v - 1, v)
+      .groupBy(col("_change_type"))
+      .agg(count(lit(1)), sum(col("id"))).collect())
+    assert(viewJobs <= 2, s"an aggregate over the feed ran $viewJobs jobs")
+    val c = TxLog.readCommit(t, v)
+    def canonical(p: String) = new File(p).getCanonicalPath
+    assert(c.adds.size == 1 && c.cdc.size == 1)
+    assert(TxLog.changeFeed(spark, t, v - 1, v).inputFiles
+      .map(u => canonical(new java.net.URI(u).getPath)).toSet ==
+      (c.adds ++ c.cdc).map(f => canonical(new File(t, f.path).getPath)).toSet)
+  }
+
+  /** A frame's rows as comparable tuples: doubles by their grouping bits
+    * (NaN equals NaN, −0.0 equals 0.0).
+    */
+  private def norm(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToLongBits(d + 0.0)
+      case x => x
+    })
+
+  /** The sequential multiset delta between two snapshots, as feed rows
+    * (version, change type, columns…).
+    */
+  private def multisetDelta(v: Long, before: Seq[Seq[Any]],
+      after: Seq[Seq[Any]]): Seq[String] =
+    (before.diff(after).map(r => (Seq(v, "delete") ++ r).mkString(",")) ++
+      after.diff(before).map(r => (Seq(v, "insert") ++ r).mkString(",")))
+      .sorted
+
+  private def feedOf(t: File, from: Long, to: Long): Seq[String] =
+    norm(TxLog.changeFeed(spark, t, from, to)).map(_.mkString(",")).sorted
+
+  test("unchanged upserts are skipped: -0.0 over 0.0, NaN over NaN and a " +
+      "duplicated key's matching row stay live, and the feed equals the " +
+      "sequential multiset delta") {
+    val t = freshTable("skip")
+    TxLog.createEmpty(t, "id BIGINT, x DOUBLE")
+    TxLog.append(Seq((1L, 0.0), (2L, Double.NaN), (3L, 5.0), (4L, 1.0))
+      .toDF("id", "x").coalesce(1), t)
+    TxLog.append(Seq((3L, 6.0)).toDF("id", "x"), t) // key 3 twice
+    def apply(rows: Seq[(Long, Double, String)]): Long = {
+      val before = norm(TxLog.snapshot(spark, t))
+      val v = TxLog.applyChanges(spark, t, rows.toDF("id", "x", "_op"),
+        Seq("id"))
+      assert(feedOf(t, v - 1, v) ==
+        multisetDelta(v, before, norm(TxLog.snapshot(spark, t))),
+        s"feed of v$v")
+      v
+    }
+    val v = apply(Seq((1L, -0.0, "upsert"), (2L, Double.NaN, "upsert"),
+      (3L, 6.0, "upsert"), (4L, 2.0, "upsert")))
+    val c = TxLog.readCommit(t, v)
+    // only key 4 changed; key 3's other live row is deleted
+    assert(c.adds.map(_.rows) == Seq(1L) && c.cdc.map(_.rows) == Seq(2L) &&
+      c.dvs.map(_.rows).sum == 2L, s"$c")
+    assert(feedOf(t, v - 1, v) == Seq(s"$v,delete,3,${
+      java.lang.Double.doubleToLongBits(5.0)}", s"$v,delete,4,${
+      java.lang.Double.doubleToLongBits(1.0)}", s"$v,insert,4,${
+      java.lang.Double.doubleToLongBits(2.0)}").sorted)
+    assert(TxLog.snapshot(spark, t).count() == 4)
+    // a batch that changes nothing writes no file, and its feed is empty
+    val idle = apply(Seq((1L, 0.0, "upsert"), (9L, 0.0, "delete")))
+    val ci = TxLog.readCommit(t, idle)
+    assert(ci.adds.isEmpty && ci.cdc.isEmpty && ci.dvs.isEmpty)
+    assert(TxLog.changeFeed(spark, t, idle - 1, idle).isEmpty)
+  }
+
+  test("a CDC apply tail: vacuum keeps the change-data files of retained " +
+      "versions and reclaims older ones; the streamed feed equals the " +
+      "batch feed") {
+    val t = freshTable("tailvac")
+    TxLog.createEmpty(t, "id BIGINT, v STRING")                    // v0
+    TxLog.append((0L until 20L).map(i => (i, s"v$i")).toDF("id", "v")
+      .coalesce(1), t)                                              // v1
+    val snaps = scala.collection.mutable.Map(1L -> state(t))
+    val vs = (0 until 6).map { i =>                                 // v2-v7
+      val v = TxLog.applyChanges(spark, t,
+        Seq((1L, s"a$i", "upsert"), (2L + i, null, "delete"),
+          (100L + i, s"n$i", "upsert")).toDF("id", "v", "_op"), Seq("id"))
+      snaps(v) = state(t); v
+    }
+    def cdcOf(v: Long) = TxLog.readCommit(t, v).cdc.map(_.path)
+    assert(vs.forall(v => cdcOf(v).size == 1))
+    // the streamed feed over the apply commits equals the batch feed
+    val base = freshTable("tailvac_stream")
+    TxLog.runChangeFeedStream(spark, t, new File(base, "feed"),
+      new File(base, "ckpt"))
+    assert(feedRows(spark.read.parquet(new File(base, "feed").getPath)) ==
+      feedRows(TxLog.changeFeed(spark, t, -1L, vs.last)))
+    // horizon inside the tail: older change-data files go, retained stay
+    val horizon = vs(3)
+    val (older, kept) = vs.partition(_ < horizon)
+    val preview = TxLog.vacuumPreview(t, horizon)
+    assert(older.flatMap(cdcOf).forall(preview.contains))
+    assert(!kept.flatMap(cdcOf).exists(preview.contains))
+    assert(TxLog.vacuum(t, horizon).toSet == preview.toSet)
+    assert(older.flatMap(cdcOf).forall(p => !new File(t, p).exists()))
+    assert(kept.flatMap(cdcOf).forall(p => new File(t, p).exists()))
+    assert(TxLog.vacuumPreview(t, horizon).isEmpty)
+    // the feed over the retained window still reads
+    val want = kept.flatMap { v =>
+      val (b, a) = (snaps(v - 1).toMap, snaps(v).toMap)
+      delta(v, b, a)
+    }.sorted
+    assert(feedRows(TxLog.changeFeed(spark, t, horizon - 1, vs.last)) == want)
+    assert(state(t).toMap == snaps(vs.last).toMap)
   }
 
   test("footer-derived Add rows and min/max equal the aggregate over the " +

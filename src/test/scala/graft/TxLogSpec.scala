@@ -1627,6 +1627,35 @@ class TxLogSpec extends SparkSpec {
       "a dropped column's default leaked onto the re-added name")
   }
 
+  test("the change feed reads DEFAULT fills: DV, copy-on-write and CDC " +
+      "apply deletes carry the row the snapshot served") {
+    import spark.implicits._
+    val t = freshTable("cfdflt")
+    TxLog.append(Seq((1L, "a"), (2L, "b"), (3L, "c"), (5L, "e"))
+      .toDF("id", "v").coalesce(1), t)                               // v0
+    TxLog.alterAddColumns(spark, t, "w INT", Map("w" -> "7"))        // v1
+    def feed(v: Long): Seq[String] =
+      TxLog.changeFeed(spark, t, v - 1, v).collect().toSeq
+        .map(_.toSeq.mkString(",")).sorted
+    assert(TxLog.snapshot(spark, t).filter(col("id") === 1L).head()
+      .getAs[Int]("w") == 7)
+    val dv = TxLog.deleteWhereDV(spark, t, col("id") === 1L)         // v2
+    assert(feed(dv) == Seq(s"$dv,delete,1,a,7"))
+    // the rewrite's survivors net out: no delete/insert pair for 3 or 5
+    val cow = TxLog.deleteWhere(spark, t, col("id") === 2L)          // v3
+    assert(feed(cow) == Seq(s"$cow,delete,2,b,7"))
+    // an explicit NULL written after the declaration stays NULL in the
+    // change-data file's delete image
+    TxLog.append(Seq((4L, "d", null.asInstanceOf[Integer]))
+      .toDF("id", "v", "w"), t)                                      // v4
+    val ap = TxLog.applyChanges(spark, t,
+      Seq((3L, "c2", 8, "upsert"), (4L, "d2", 9, "upsert"))
+        .toDF("id", "v", "w", "_op"), Seq("id"))                     // v5
+    assert(TxLog.readCommit(t, ap).cdc.size == 1)
+    assert(feed(ap) == Seq(s"$ap,delete,3,c,7", s"$ap,delete,4,d,null",
+      s"$ap,insert,3,c2,8", s"$ap,insert,4,d2,9").sorted)
+  }
+
   test("ALTER ADD COLUMNS statement parses DEFAULT literals, including " +
       "a quoted string containing a comma") {
     import graft.sources.TxSql
