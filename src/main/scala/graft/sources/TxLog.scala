@@ -1,9 +1,20 @@
 package graft.sources
 
 import graft.Query
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{LongType, StringType, StructField,
-  StructType}
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetOutputFormat,
+  ParquetWriter}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
+  Expression, Literal, Pmod, XxHash64}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions,
+  ParquetUtils, ParquetWriteSupport}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
+  StructField, StructType}
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
@@ -33,9 +44,11 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *   - MERGE-ON-READ CDC APPLY: a changelog batch commits deletion
   *     vectors for the live rows it replaces plus one file of upserts,
   *     rewriting no data file — |batch| cost per commit, whatever the
-  *     table size; small vectors ride inline in the log action. The same
-  *     write lands the replaced rows as a change-data file, so the
-  *     commit's change feed is read from its two files, not derived;
+  *     table size; small vectors ride inline in the log action. The
+  *     replaced rows land as a change-data file beside the upserts, so
+  *     the commit's change feed is read from its two files, not
+  *     derived. The Spark work is the probe scan; its files are written
+  *     on the driver, since the batch is already there;
   *   - ACID COMPACTION: S23's small-file OPTIMIZE as one commit that
   *     adds the binned rewrite and removes the fragments — readers
   *     switch atomically, and time travel still serves the pre-compact
@@ -67,9 +80,9 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * snapshot resolution is a driver-side line scan of the log (a real
   * deployment checkpoints the action set every N commits — same
   * replay-vs-checkpoint trade as the S26 offset table); data-file reads
-  * are ordinary pruned parquet scans, and every writer path (append,
-  * delete rewrite, compaction) is a distributed write of only the files
-  * it touches.
+  * are ordinary pruned parquet scans, and every writer path over a
+  * distributed frame (append, delete rewrite, compaction) is a
+  * distributed write of only the files it touches.
   */
 object TxLog {
   import org.apache.spark.sql.functions._
@@ -645,12 +658,29 @@ object TxLog {
         partCols: Seq[String] = partitionColsOf(table)): Seq[Add] =
       writeFiles(df, table, tag, partCols, v, track)
 
+    /** Write driver-held `parts` (physical column names) as a fresh data
+      * group from the driver, one file per non-empty part, laid out and
+      * bloom-indexed as of `v` (see [[writeRows]]); the [[Add]]s of each
+      * part.
+      */
+    def writeRows(spark: SparkSession, parts: Seq[Seq[Row]],
+        schema: StructType, tag: String): Seq[Seq[Add]] =
+      TxLog.writeRows(spark, parts, schema, table, track(s"d_$tag"),
+        partitionColsOf(table), bloomsAsOf(table, v))
+
     /** Write (file key, position) tombstones, schema [[dvSchema]], as one
       * DV sidecar group; returns its table-relative name.
       */
     def sidecar(tombs: DataFrame): String = {
       val sub = track("dv")
       tombs.coalesce(1).write.parquet(new File(table, sub).getAbsolutePath)
+      sub
+    }
+
+    /** [[sidecar]] for driver-held tombstones, written from the driver. */
+    def sidecar(spark: SparkSession, tombs: Seq[Row]): String = {
+      val sub = track("dv")
+      TxLog.writeRows(spark, Seq(tombs), dvSchema, table, sub)
       sub
     }
 
@@ -715,18 +745,21 @@ object TxLog {
   private def newGroup(prefix: String): String =
     s"${prefix}_${System.nanoTime()}_${groupSeq.incrementAndGet()}"
 
-  /** Write `df` as a fresh immutable file group under the table dir;
-    * returns one [[Add]] (relative path, row count, per-column min/max
-    * stats for integral columns) per data file. Counts AND stats come
-    * from the Parquet footers the write just produced, read on the
-    * driver (Iceberg's file-metrics collection): no Spark job, and the
-    * stats are the data-skipping input [[snapshotPruned]] prunes against
-    * with zero footer reads at query time. Integral columns only:
-    * min/max compare exactly in i64, no float-rounding or collation
-    * hazards in the prune. Files carry bloom bitsets for the indexes
-    * declared as of `base` (-1: none). The group is named by `group`
-    * from the prefix `d_<tag>`; writers inside [[transact]] go through
-    * [[Attempt.write]], whose `group` also tracks it for cleanup.
+  /** Write `df` as a fresh immutable file group under the table dir —
+    * the writer for DISTRIBUTED frames (append, rewrites, compaction):
+    * one Spark write job through Spark's output committer. Returns one
+    * [[Add]] (relative path, row count, per-column min/max stats for
+    * integral columns) per data file. Counts AND stats come from the
+    * Parquet footers the write just produced, read on the driver
+    * (Iceberg's file-metrics collection): no Spark job, and the stats
+    * are the data-skipping input [[snapshotPruned]] prunes against with
+    * zero footer reads at query time. Integral columns only: min/max
+    * compare exactly in i64, no float-rounding or collation hazards in
+    * the prune. Files carry bloom bitsets for the indexes declared as of
+    * `base` (-1: none). The group is named by `group` from the prefix
+    * `d_<tag>`; writers inside [[transact]] go through [[Attempt.write]],
+    * whose `group` also tracks it for cleanup. Rows already on the
+    * driver go through [[writeRows]] instead.
     */
   private[graft] def writeFiles(df: DataFrame, table: File, tag: String,
       partCols: Seq[String] = Seq.empty, base: Long = -1L,
@@ -749,10 +782,7 @@ object TxLog {
         .parquet(dir.getAbsolutePath)
     }
     val spark = df.sparkSession
-    val statCols = df.schema.fields.collect {
-      case f if f.dataType == LongType ||
-        f.dataType == org.apache.spark.sql.types.IntegerType => f.name
-    }.toSeq
+    val statCols = integralCols(df.schema)
     // declared bloom indexes whose (physical) column this frame carries:
     // their bitsets need the values, so an indexed table pays one
     // aggregate over the fresh group (k collect_sets per column, bytes
@@ -764,21 +794,16 @@ object TxLog {
       if (bloomCols.isEmpty) Map.empty[String, Map[String, String]]
       else {
         val aggs = bloomCols.zipWithIndex.flatMap { case ((c, (bits, k)), ci) =>
-          (0 until k).map(i => collect_set(
-            pmod(xxhash64(lit(i), col(c).cast("long")), lit(bits.toLong)))
-            .as(s"_bl_${ci}_$i"))
+          (0 until k).map(i => collect_set(Bridge.column(
+            bloomBit(Bridge.expression(col(c)), i, bits))).as(s"_bl_${ci}_$i"))
         }
         spark.read.schema(df.schema).parquet(dir.getAbsolutePath)
           .groupBy(input_file_name().as("f"))
           .agg(aggs.head, aggs.tail: _*)
           .collect().map { r =>
             r.getString(0) -> bloomCols.zipWithIndex.map {
-              case ((c, (bits, k)), ci) =>
-                val words = new Array[Long](bits / 64)
-                for (i <- 0 until k;
-                     p <- r.getAs[scala.collection.Seq[Long]](s"_bl_${ci}_$i"))
-                  words(p.toInt >> 6) |= 1L << (p & 63)
-                c -> words.map(w => f"$w%016x").mkString
+              case ((c, (bits, k)), ci) => c -> bloomHex((0 until k).flatMap(
+                i => r.getAs[scala.collection.Seq[Long]](s"_bl_${ci}_$i")), bits)
             }.toMap
           }.toMap
       }
@@ -796,14 +821,15 @@ object TxLog {
         case _: java.net.URISyntaxException => u
       }) -> v
     }
-    val conf = spark.sessionState.newHadoopConf()
     walk(dir).sortBy(_.getName).map { f =>
       // match on the GROUP-relative path, never the basename alone: a
       // partitioned write puts the SAME part filename into every
       // partition directory of a task, and a basename match would hand
       // every such Add one arbitrary sibling's bitsets
       val rel = dir.toPath.relativize(f.toPath).toString
-      val (n, stats) = footerStats(f, statCols, conf)
+      val reader = ParquetFileReader.open(new LocalInputFile(f.toPath))
+      val (n, stats) = try footerStats(reader.getFooter, statCols)
+        finally reader.close()
       val blooms = bloomsRaw.collectFirst {
         case (u, v) if u.endsWith(s"/$rel") => v
       }.getOrElse(Map.empty[String, String])
@@ -811,20 +837,150 @@ object TxLog {
     }
   }
 
+  /** Write rows ALREADY ON THE DRIVER as the file group `sub` (table-
+    * relative), from the driver: one Parquet file per non-empty part of
+    * `parts`, whose rows follow `schema` (physical column names); returns
+    * each part's [[Add]]s, an empty part none. A CDC micro-batch is a
+    * few hundred rows, so the write job [[writeFiles]] would run — its
+    * scheduling, the output committer's `_temporary` renames, and Hadoop's
+    * local filesystem, which forks `chmod` for every permission it sets
+    * and writes `.crc` and `_SUCCESS` files — costs far more than the
+    * bytes. The files are the ones that job writes:
+    *
+    *   - the Hadoop conf is prepared by the call a Spark write task makes
+    *     (`ParquetUtils.prepareWrite`: the session's codec, timestamp
+    *     type, legacy format, rebase and field-ID settings) and Spark's
+    *     own `ParquetWriteSupport` encodes the rows;
+    *   - files are named `part-<part>-<uuid>-c000.<codec>.parquet`, or
+    *     `….c000.…` inside the `_p_` Hive directories of a `partCols`
+    *     layout (the value as [[writeFiles]] casts it, the directory
+    *     name as Spark's writer escapes it);
+    *   - a row's position (`_metadata.row_index`) is its index among its
+    *     part's rows in that file;
+    *   - bitsets follow `blooms` (physical column → (bits, k)) through
+    *     the same expression as [[writeFiles]]' aggregate ([[bloomBit]]),
+    *     and counts and stats come from the footer the writer just built.
+    *
+    * Written through parquet's `LocalOutputFile`: the local filesystem
+    * only, like the rest of the log.
+    */
+  private[graft] def writeRows(spark: SparkSession, parts: Seq[Seq[Row]],
+      schema: StructType, table: File, sub: String,
+      partCols: Seq[String] = Seq.empty,
+      blooms: Map[String, (Int, Int)] = Map.empty): Seq[Seq[Add]] = {
+    if (parts.forall(_.isEmpty)) return parts.map(_ => Seq.empty[Add])
+    val sqlConf = spark.sessionState.conf
+    val conf = {
+      val job = org.apache.hadoop.mapreduce.Job.getInstance(
+        spark.sessionState.newHadoopConf())
+      ParquetUtils.prepareWrite(sqlConf, job, schema,
+        new ParquetOptions(Map.empty[String, String], sqlConf))
+      job.getConfiguration
+    }
+    val codec = ParquetOutputFormat.getCompression(conf)
+    def bound(c: String) = {
+      val at = schema.fieldIndex(c)
+      BoundReference(at, schema(at).dataType, nullable = true)
+    }
+    val statCols = integralCols(schema)
+    val bloomExprs = blooms.toSeq.collect {
+      case (c, (bits, k)) if statCols.contains(c) =>
+        (c, bits, (0 until k).map(i => bloomBit(bound(c), i, bits)))
+    }
+    val partValues = partCols.map(c => c ->
+      Cast(bound(c), StringType, Some(sqlConf.sessionLocalTimeZone)))
+    def partDir(r: InternalRow): String = partValues.map { case (c, e) =>
+      ExternalCatalogUtils.getPartitionPathString(s"_p_$c",
+        Option(e.eval(r)).map(_.toString).orNull)
+    }.mkString("/")
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    val uuid = java.util.UUID.randomUUID()
+    // Spark's partitioned writer counts files as `.c000`, its plain one
+    // as `-c000`
+    val counter = if (partCols.isEmpty) "-c000" else ".c000"
+    parts.zipWithIndex.map { case (rows, part) =>
+      val internal = rows.map(r => toCatalyst(r).asInstanceOf[InternalRow])
+      internal.groupBy(partDir).toSeq.sortBy(_._1).map { case (d, rs) =>
+        val name =
+          f"part-$part%05d-$uuid$counter${codec.getExtension}.parquet"
+        val rel = if (d.isEmpty) name else s"$d/$name"
+        val f = new File(new File(table, sub), rel)
+        f.getParentFile.mkdirs()
+        // the writer properties a Spark write task's ParquetOutputFormat
+        // reads from the same conf
+        import ParquetOutputFormat._
+        val w = new RowWriterBuilder(new LocalOutputFile(f.toPath))
+          .withConf(conf)
+          .withCompressionCodec(codec)
+          .withRowGroupSize(getLongBlockSize(conf))
+          .withPageSize(getPageSize(conf))
+          .withDictionaryPageSize(getDictionaryPageSize(conf))
+          .withDictionaryEncoding(getEnableDictionary(conf))
+          .withWriterVersion(getWriterVersion(conf))
+          .withValidation(getValidation(conf))
+          .withPageWriteChecksumEnabled(getPageWriteChecksumEnabled(conf))
+          .build()
+        try rs.foreach(w.write) finally w.close()
+        val (n, stats) = footerStats(w.getFooter, statCols)
+        Add(s"$sub/$rel", n, stats, bloomExprs.map { case (c, bits, es) =>
+          c -> bloomHex(rs.flatMap(r => es.map(_.eval(r).asInstanceOf[Long])),
+            bits)
+        }.toMap)
+      }
+    }
+  }
+
+  /** A parquet writer of Spark's `InternalRow`s, through Spark's own
+    * `ParquetWriteSupport`, into a parquet `OutputFile`.
+    */
+  private final class RowWriterBuilder(out: org.apache.parquet.io.OutputFile)
+      extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](out) {
+    override protected def self(): RowWriterBuilder = this
+    override protected def getWriteSupport(
+        conf: org.apache.hadoop.conf.Configuration)
+        : org.apache.parquet.hadoop.api.WriteSupport[InternalRow] =
+      new ParquetWriteSupport
+    override protected def getWriteSupport(
+        conf: org.apache.parquet.conf.ParquetConfiguration)
+        : org.apache.parquet.hadoop.api.WriteSupport[InternalRow] =
+      new ParquetWriteSupport
+  }
+
+  /** The top-level integral columns of `schema`: the ones files carry
+    * min/max stats (and may carry bloom bitsets) for.
+    */
+  private def integralCols(schema: StructType): Seq[String] =
+    schema.fields.collect {
+      case f if f.dataType == LongType || f.dataType == IntegerType => f.name
+    }.toSeq
+
+  /** Hash `i` of a `bits`-wide bloom bitset on `value`:
+    * `pmod(xxhash64(i, CAST(value AS BIGINT)), bits)`. The one definition
+    * of a bit position: [[writeFiles]]' aggregate, [[writeRows]] and the
+    * [[snapshotPrunedEqMulti]] probe all evaluate it.
+    */
+  private def bloomBit(value: Expression, i: Int, bits: Int): Expression =
+    Pmod(new XxHash64(Seq(Literal(i), Cast(value, LongType))),
+      Literal(bits.toLong))
+
+  /** A bitset's log form: the big-endian hex of its `bits / 64` words,
+    * bit `p` set for every position `p`.
+    */
+  private def bloomHex(positions: Iterable[Long], bits: Int): String = {
+    val words = new Array[Long](bits / 64)
+    positions.foreach(p => words(p.toInt >> 6) |= 1L << (p & 63))
+    words.map(w => f"$w%016x").mkString
+  }
+
   /** Row count and per-column [min, max] of one Parquet file, from its
     * footer's row-group statistics. A column gets no range when it holds
     * no non-null value, or when a row group carries no statistics for it
     * (a file without a range is never pruned).
     */
-  private def footerStats(f: File, statCols: Seq[String],
-      conf: org.apache.hadoop.conf.Configuration)
+  private def footerStats(footer: ParquetMetadata, statCols: Seq[String])
       : (Long, Map[String, (Long, Long)]) = {
     import scala.jdk.CollectionConverters._
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.toURI), conf))
-    val blocks = try reader.getFooter.getBlocks.asScala.toSeq
-      finally reader.close()
+    val blocks = footer.getBlocks.asScala.toSeq
     val stats = statCols.flatMap { c =>
       val chunks = blocks.flatMap(_.getColumns.asScala
         .find(_.getPath.toArray.toSeq == Seq(c)).map(_.getStatistics))
@@ -2071,18 +2227,14 @@ object TxLog {
     val files = st.live
     val phys = mappingAsOf(table, v).getOrElse(column, column)
     // probe positions for every value under the declared (bits, k) spec
-    // — one LocalTableScan row, no data read
+    // — evaluated on the driver, no data read and no job
     val positions: Map[Long, Seq[Int]] =
       bloomsAsOf(table, v).get(phys) match {
         case None => Map.empty
         case Some((bits, k)) =>
-          val cols = for (vi <- values.indices; i <- 0 until k) yield
-            pmod(xxhash64(lit(i), lit(values(vi))), lit(bits.toLong))
-              .as(s"p_${vi}_$i")
-          val r = spark.range(1).select(cols: _*).collect().head
-          values.zipWithIndex.map { case (value, vi) =>
-            value -> (0 until k).map(i => r.getLong(vi * k + i).toInt)
-          }.toMap
+          values.map(value => value -> (0 until k).map(i =>
+            bloomBit(Literal(value), i, bits).eval().asInstanceOf[Long].toInt))
+            .toMap
       }
     val spec = bloomsAsOf(table, v).get(phys)
     // Epoch guard (r13 advisor): a bitset only encodes the (bits, k)
@@ -2869,10 +3021,10 @@ object TxLog {
     * The commit also carries its own CHANGE DATA (Delta's `cdc` action):
     * the probe returns the matched live rows whole, so the rows the DVs
     * tombstone — the commit's delete images — are on the driver already
-    * and land as a change-data file next to the upsert file, in the same
-    * write job. The feed then reads this commit as its upsert file
-    * (inserts) plus its change-data file (deletes), with no rescan of
-    * the DV'd files and no netting ([[feedForVersions]]). That needs
+    * and land as a change-data file next to the upsert file. The feed
+    * then reads this commit as its upsert file (inserts) plus its
+    * change-data file (deletes), with no rescan of the DV'd files and
+    * no netting ([[feedForVersions]]). That needs
     * the two files to never hold the same row image, so an UNCHANGED
     * upsert — one equal to a live row of its key, compared the way the
     * feed's grouping compares rows ([[grouped]]) — is skipped: that live
@@ -2882,11 +3034,13 @@ object TxLog {
     * `changes` is ONE micro-batch, so its size is bounded by the
     * trigger: it is collected to the driver once and audited there, and
     * a retry after a lost commit slot reuses those rows — the source is
-    * never evaluated twice. The Spark work per commit is the probe scan
-    * and the one write (plus one sidecar write when a file's vector
-    * outgrows [[inlineDvMax]]). Positions are taken over the current
-    * state, so DVs stacked on one file hold only new positions; they
-    * accumulate commit after commit until `compact` materializes them.
+    * never evaluated twice. The Spark work per commit is the probe scan;
+    * its files — the upsert file, the change-data file and the sidecar
+    * of a vector that outgrows [[inlineDvMax]] — are written on the
+    * driver ([[Attempt.writeRows]]), with no job. Positions are taken
+    * over the current state, so DVs stacked on one file hold only new
+    * positions; they accumulate commit after commit until `compact`
+    * materializes them.
     *
     * `txnApp`/`txnBatch` stamp the commit with the exactly-once txn
     * marker: a batch id at or below the app's highest marker as of the
@@ -2921,8 +3075,6 @@ object TxLog {
     val upsertSchema = StructType(changes.schema.filterNot(_.name == "_op"))
     val upsertRows = batch.filter(r => "upsert" == r.getString(opAt))
       .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.patch(opAt, Nil, 1)))
-    def rowsOf(rows: Seq[org.apache.spark.sql.Row], schema: StructType) =
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
     def keyOf(r: org.apache.spark.sql.Row): Any =
       grouped(keys.map(k => r.getAs[Any](k)))
     transact(table) { a =>
@@ -2943,7 +3095,8 @@ object TxLog {
         val declared = schemaDdlAsOf(table, v).map(StructType.fromDDL)
         val mapping = mappingAsOf(table, v)
         val landing = Option.when(upsertRows.nonEmpty) {
-          val upserts = withWriteDefaults(rowsOf(upsertRows, upsertSchema),
+          val upserts = withWriteDefaults(spark.createDataFrame(
+            java.util.Arrays.asList(upsertRows: _*), upsertSchema),
             table, v)
           // the upserts land in the table's column order and types (a
           // footer-owned table reads its schema off one live file)
@@ -2979,49 +3132,32 @@ object TxLog {
         val perFile = deleted.map(at).groupBy(_._1).toSeq.sortBy(_._1)
           .map { case (k, ps) => (k, ps.map(_._2).sorted) }
         val (small, large) = perFile.partition(_._2.size <= inlineDvMax)
-        val sidecar = Option.when(large.nonEmpty)(a.sidecar(
-          rowsOf(large.flatMap { case (k, ps) =>
-            ps.map(org.apache.spark.sql.Row(k, _)) }, dvSchema)))
+        val sidecar = Option.when(large.nonEmpty)(a.sidecar(spark,
+          large.flatMap { case (k, ps) => ps.map(Row(k, _)) }))
         val dvs =
           small.map { case (k, ps) => Dv(toPath(k), "", ps.size, ps) } ++
             large.map { case (k, ps) => Dv(toPath(k), sidecar.get, ps.size) }
-        // ONE write job over two single-partition inputs: the upserts
-        // that land, then the delete images. The commit protocol names
-        // each file by its input's split index (part-00000-…,
-        // part-00001-…), which tells the data file from the change-data
-        // file; a job per file would pay a job's fixed cost twice. An RDD
-        // union keeps the splits apart (a partitioning-aware Dataset
-        // union zips two single-partition children into one). The rows
+        // the upserts that land and the delete images, written from the
+        // driver as the commit's data file and change-data file. The rows
         // take the table read's schema, whose columns are nullable, in
-        // the upserts' column order.
+        // the upserts' column order, under the physical names.
         val read = StructType(images.filterNot(f =>
           f.name == "_gf_rel" || f.name == "_gi"))
         val schema = landing.fold(read)(l =>
           if (deleted.isEmpty) l.schema else StructType(l.columns.map(read(_))))
-        val inputs = Seq(
-          post.filterNot(r => unchanged(keyOf(r))) -> false,
-          deleted.map(h => org.apache.spark.sql.Row.fromSeq(
-            schema.fieldNames.toSeq.map(h.getAs[Any]))) -> true)
-          .filter(_._1.nonEmpty)
-        val files = if (inputs.isEmpty) Seq.empty else a.write(toPhysical(
-          spark.createDataFrame(spark.sparkContext.union(inputs.map(i =>
-            spark.sparkContext.parallelize(i._1, 1))), schema), mapping),
+        val Seq(adds, cdc) = a.writeRows(spark, Seq(
+            post.filterNot(r => unchanged(keyOf(r))),
+            deleted.map(h =>
+              Row.fromSeq(schema.fieldNames.toSeq.map(h.getAs[Any])))),
+          StructType(schema.map(f =>
+            f.copy(name = mapping.getOrElse(f.name, f.name)))),
           "cdc")
-        val (cdc, adds) = files.partition(f => inputs(splitIndex(f.path))._2)
         Some(Commit("cdc-apply", adds, dvs = dvs,
           txns = txnApp.map(_ -> txnBatch).toSeq,
           cdc = cdc.map(f => Add(f.path, f.rows))))
       }
     }
   }
-
-  /** The split (task partition) index a library write named a data file
-    * by: `part-<split>-<job uuid>…`.
-    */
-  private def splitIndex(path: String): Int =
-    """part-(\d+)-""".r.findPrefixMatchOf(new File(path).getName)
-      .map(_.group(1).toInt)
-      .getOrElse(sys.error(s"TxLog: not a part file: $path"))
 
   /** A row value as the change feed's grouping compares it: NaN equals
     * NaN, −0.0 equals 0.0 and binary values compare by content, through
@@ -3312,17 +3448,41 @@ object TxLog {
     * version >= `retainFromVersion`. Time travel and changeFeed windows
     * reaching below the horizon stop working — the Delta/Iceberg
     * retention contract. Metadata (the log) is never deleted, so history
-    * STRUCTURE stays auditable. Returns the deleted relative paths.
+    * STRUCTURE stays auditable. A deleted file's checksum goes with it,
+    * and so does a group (or partition) directory left with no data
+    * file, marker and all. Returns the deleted relative paths (data,
+    * sidecar and change-data), as [[vacuumPreview]] lists them.
     */
   def vacuum(table: File, retainFromVersion: Long): Seq[String] = {
     // report only files ACTUALLY deleted this call — a re-run is a no-op
-    vacuumPreview(table, retainFromVersion).filter { p =>
+    val deleted = vacuumPreview(table, retainFromVersion).filter { p =>
       val f = new File(table, p)
       if (f.isDirectory) { // DV sidecar group dir
-        Option(f.listFiles()).foreach(_.foreach(_.delete()))
-        f.delete()
-      } else Files.deleteIfExists(f.toPath)
+        graft.Tables.rmTree(f)
+        true
+      } else {
+        // the checksum Hadoop's local filesystem wrote beside the file
+        Files.deleteIfExists(new File(f.getParentFile, s".${f.getName}.crc")
+          .toPath)
+        Files.deleteIfExists(f.toPath)
+      }
     }
+    // a group dir, or a partition dir inside one, with no data file left
+    // goes too: its `_SUCCESS` marker and checksums belong to no file
+    val root = table.getCanonicalFile.toPath
+    def holdsData(d: File): Boolean =
+      Option(d.listFiles()).getOrElse(Array.empty).exists(f =>
+        if (f.isDirectory) holdsData(f) else f.getName.endsWith(".parquet"))
+    deleted.map(p => new File(table, p).getCanonicalFile.getParentFile)
+      .distinct.foreach { d =>
+        var dir = d
+        while (dir.toPath.startsWith(root) && dir.toPath != root &&
+            !holdsData(dir)) {
+          graft.Tables.rmTree(dir)
+          dir = dir.getParentFile
+        }
+      }
+    deleted
   }
 
   /** The files a VACUUM at this horizon WOULD reclaim, without touching

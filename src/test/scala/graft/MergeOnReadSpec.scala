@@ -4,15 +4,17 @@ import java.io.File
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.sources.TxLog
 
 /** Merge-on-read CDC apply: the commit shape (DVs + one upsert file + one
   * change-data file, no rewrite), its row-exact change feed under hot
   * keys, skipped unchanged upserts, the log round trips the inline
   * vectors go through, vacuum of change-data files, the Spark-job budget
-  * of a commit and its feed, the footer-derived file stats, and the
+  * of a commit and its feed, the footer-derived file stats, the files
+  * the apply writes from the driver (equal to Spark's writer's), and the
   * bounded txn ledger.
   */
 class MergeOnReadSpec extends SparkSpec {
@@ -70,6 +72,20 @@ class MergeOnReadSpec extends SparkSpec {
       while (marks.get < 1) Thread.sleep(1)
       (r, jobs.get)
     } finally sc.removeSparkListener(l)
+  }
+
+  /** Every entry under the table-relative group dir `group`, files and
+    * directories, relative to it.
+    */
+  private def groupFiles(t: File, group: String): Set[String] = {
+    val root = new File(t, group).toPath
+    val all = java.nio.file.Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      all.iterator().asScala.filter(_ != root)
+        .filter(p => !p.toFile.isDirectory || p.toFile.list().isEmpty)
+        .map(p => root.relativize(p).toString).toSet
+    } finally all.close()
   }
 
   test("hot keys: stacked DVs fold to last-writer-wins, the feed is " +
@@ -158,11 +174,14 @@ class MergeOnReadSpec extends SparkSpec {
     TxLog.createEmpty(t, "id BIGINT, v STRING")
     TxLog.append((0L until 600L).map(i => (i, s"v$i")).toDF("id", "v")
       .coalesce(1), t)
-    val v = TxLog.applyChanges(spark, t,
+    val (v, jobs) = jobsOf(TxLog.applyChanges(spark, t,
       (0L until 400L).map(i => (i, s"u$i", "upsert")).toDF("id", "v", "_op"),
-      Seq("id"))
+      Seq("id")))
+    // the probe; the sidecar is written from the driver, like the files
+    assert(jobs <= 1, s"applyChanges ran $jobs jobs")
     val c = TxLog.readCommit(t, v)
     assert(c.dvs.size == 1 && !c.dvs.head.inline && c.dvs.head.rows == 400)
+    assert(groupFiles(t, c.dvs.head.dvPath).size == 1)
     val want = ((0L until 400L).map(i => (i, s"u$i")) ++
       (400L until 600L).map(i => (i, s"v$i"))).sorted
     assert(state(t) == want)
@@ -185,7 +204,8 @@ class MergeOnReadSpec extends SparkSpec {
     TxLog.applyChanges(spark, t, batch(0), Seq("id")) // warms code paths
     val (v, applyJobs) =
       jobsOf(TxLog.applyChanges(spark, t, batch(1), Seq("id")))
-    assert(applyJobs <= 2, s"applyChanges ran $applyJobs jobs")
+    // the probe scan; the commit's two files are written on the driver
+    assert(applyJobs <= 1, s"applyChanges ran $applyJobs jobs")
     // the feed reads the commit's upsert file and change-data file: one
     // scan each, no shuffle, none of the 16 DV'd data files
     val (rows, feedJobs) =
@@ -199,6 +219,11 @@ class MergeOnReadSpec extends SparkSpec {
     val c = TxLog.readCommit(t, v)
     def canonical(p: String) = new File(p).getCanonicalPath
     assert(c.adds.size == 1 && c.cdc.size == 1)
+    // the commit's group holds exactly its two files: no committer
+    // `_temporary`, `_SUCCESS` marker or checksum
+    val group = c.adds.head.path.takeWhile(_ != '/')
+    assert(groupFiles(t, group) ==
+      (c.adds ++ c.cdc).map(_.path.stripPrefix(s"$group/")).toSet)
     assert(TxLog.changeFeed(spark, t, v - 1, v).inputFiles
       .map(u => canonical(new java.net.URI(u).getPath)).toSet ==
       (c.adds ++ c.cdc).map(f => canonical(new File(t, f.path).getPath)).toSet)
@@ -340,6 +365,152 @@ class MergeOnReadSpec extends SparkSpec {
       plain.count(a => a.rows == 1000 && !a.stats.contains("n")) == 1)
     assert(check(mixed.repartition(2), Seq("p")).size >= 3) // partitioned
     assert(check(mixed.limit(0).coalesce(1)).size == 1)    // empty frame
+  }
+
+  /** A value as the file comparison sees it: doubles by their raw bits
+    * (−0.0 differs from 0.0, NaN is one value), binary by content,
+    * through structs, arrays and maps.
+    */
+  private def exact(x: Any): Any = x match {
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case b: Array[Byte] => b.toSeq
+    case r: Row => r.toSeq.map(exact)
+    case s: scala.collection.Seq[_] => s.map(exact)
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, v) => exact(k) -> exact(v) }
+    case other => other
+  }
+
+  /** What a reader can tell of one written file: its rows in position
+    * order, its footer schema, key-value metadata (Spark's row schema
+    * and version) and writer, and per row group its row count and each
+    * column chunk's codec, encodings and statistics.
+    */
+  private def fileImage(f: File) = {
+    import scala.jdk.CollectionConverters._
+    val rows = spark.read.parquet(f.getAbsolutePath)
+      .select(col("*"), col("_metadata.row_index").as("_ri"))
+      .orderBy("_ri").drop("_ri").collect().toSeq.map(exact)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      new org.apache.parquet.io.LocalInputFile(f.toPath))
+    val footer = try reader.getFooter finally reader.close()
+    val meta = footer.getFileMetaData
+    (rows, meta.getSchema.toString, meta.getKeyValueMetaData.asScala.toMap,
+      meta.getCreatedBy, footer.getBlocks.asScala.toSeq.map(b =>
+        (b.getRowCount, b.getColumns.asScala.toSeq.map(c =>
+          (c.getPath.toDotString, c.getCodec, c.getEncodings.asScala.toSet,
+            c.getStatistics.toString)))))
+  }
+
+  private val driverGroups = new AtomicInteger
+
+  /** Write `rows` once through Spark's writer ([[TxLog.writeFiles]], one
+    * task) and once from the driver ([[TxLog.writeRows]]) into `t`, with
+    * the layout and bloom specs as of `base`, and assert the two groups
+    * are the same files: the same partition directories and file-name
+    * shape, the same `Add` rows, stats and bitsets, and the same
+    * [[fileImage]]. Returns the driver's files.
+    */
+  private def sameAsSpark(t: File, rows: Seq[Row], schema: StructType,
+      partCols: Seq[String] = Seq.empty, base: Long = -1L): Seq[TxLog.Add] = {
+    val bySpark = TxLog.writeFiles(spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*), schema).coalesce(1), t, "spark",
+      partCols, base)
+    val byDriver = TxLog.writeRows(spark, Seq(rows), schema, t,
+      s"d_driver_${driverGroups.incrementAndGet()}", partCols,
+      TxLog.bloomsAsOf(t, base)).flatten
+    def dir(a: TxLog.Add) = a.path.split('/').toSeq.drop(1).dropRight(1)
+    def shape(a: TxLog.Add) = new File(a.path).getName.replaceAll(
+      "[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "<uuid>")
+    val pairs = bySpark.sortBy(dir(_).mkString("/"))
+      .zip(byDriver.sortBy(dir(_).mkString("/")))
+    assert(bySpark.size == byDriver.size && pairs.forall { case (a, b) =>
+      dir(a) == dir(b) && shape(a) == shape(b) }, s"$bySpark\n$byDriver")
+    pairs.foreach { case (a, b) =>
+      assert((a.rows, a.stats, a.blooms) == (b.rows, b.stats, b.blooms),
+        s"Add of ${b.path}")
+      assert(fileImage(new File(t, a.path)) == fileImage(new File(t, b.path)),
+        s"file ${b.path}")
+    }
+    byDriver
+  }
+
+  test("driver-written files equal Spark-written ones for every column " +
+      "type, under the defaults and under zstd with TIMESTAMP_MICROS") {
+    val schema = StructType.fromDDL("id BIGINT, i INT, d DOUBLE, " +
+      "dec DECIMAL(12,3), dt DATE, ts TIMESTAMP, s STRING, b BINARY, " +
+      "st STRUCT<x: INT, y: STRING>, arr ARRAY<BIGINT>, " +
+      "m MAP<STRING, DOUBLE>")
+    val rows = Seq(
+      Row(1L, 7, Double.NaN, new java.math.BigDecimal("123456789.125"),
+        java.sql.Date.valueOf("2024-02-29"),
+        java.sql.Timestamp.valueOf("2024-02-29 12:34:56.789123"), "a",
+        Array[Byte](1, 2), Row(1, "x"), Seq(1L, null), Map("k" -> -0.0)),
+      Row(2L, null, -0.0, null, null, null, null, null, null, null, null),
+      Row(null, Int.MinValue, 0.0, new java.math.BigDecimal("-0.001"),
+        java.sql.Date.valueOf("1500-03-01"),
+        java.sql.Timestamp.valueOf("1899-12-31 23:59:59"), "",
+        Array.empty[Byte], Row(null, null), Seq.empty, Map.empty)) ++
+      (0 until 60).map(n => Row(n * 7919L, n % 4, n / 7.0,
+        java.math.BigDecimal.valueOf(n * 1001L, 3),
+        java.sql.Date.valueOf(s"2024-01-${1 + n % 28}"),
+        new java.sql.Timestamp(1700000000000L + n * 1000L), s"s${n % 5}",
+        Array.fill[Byte](n % 3)(n.toByte), Row(n, s"y$n"),
+        Seq.fill(n % 3)(n.toLong), Map(s"k${n % 2}" -> n * 0.5)))
+    val t = freshTable("sameas")
+    sameAsSpark(t, rows, schema)
+    val keys = Seq("spark.sql.parquet.compression.codec",
+      "spark.sql.parquet.outputTimestampType")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    keys.zip(Seq("zstd", "TIMESTAMP_MICROS")).foreach { case (k, x) =>
+      spark.conf.set(k, x) }
+    val zstd = try sameAsSpark(t, rows, schema) finally saved.foreach {
+      case (k, Some(x)) => spark.conf.set(k, x)
+      case (k, None) => spark.conf.unset(k)
+    }
+    assert(zstd.forall(_.path.endsWith(".zstd.parquet")))
+    assert(fileImage(new File(t, zstd.head.path))._2
+      .contains("int64 ts (TIMESTAMP(MICROS,true))"))
+  }
+
+  test("driver-written files keep the table's layouts: physical names on " +
+      "a column-mapped table, Spark's partition directories, and the " +
+      "aggregate path's bloom bitsets") {
+    // column-mapped: after RENAME v → w an apply's files carry `v`
+    val m = freshTable("sameas_mapped")
+    TxLog.createEmpty(m, "id BIGINT, v STRING")
+    TxLog.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), m)
+    TxLog.alterRenameColumn(spark, m, "v", "w")
+    val v = TxLog.applyChanges(spark, m, Seq((1L, "a1", "upsert"),
+      (3L, "c", "upsert")).toDF("id", "w", "_op"), Seq("id"))
+    val c = TxLog.readCommit(m, v)
+    assert(c.adds.size == 1 && c.cdc.size == 1)
+    (c.adds ++ c.cdc).foreach(f => assert(spark.read
+      .parquet(new File(m, f.path).getAbsolutePath).columns.toSeq ==
+      Seq("id", "v"), s"${f.path} does not carry the physical names"))
+    assert(TxLog.snapshot(spark, m).select("id", "w").as[(Long, String)]
+      .collect().toSeq.sorted == Seq((1L, "a1"), (2L, "b"), (3L, "c")))
+    sameAsSpark(m, Seq(Row(4L, "d"), Row(5L, null)),
+      StructType.fromDDL("id BIGINT, v STRING"))
+    // partitioned: values that Hive-escape, and a null
+    val p = freshTable("sameas_part")
+    val ps = StructType.fromDDL("id BIGINT, k STRING, n INT")
+    val kinds = Seq("a b", "50%", "x/y", "k=v", null)
+    val files = sameAsSpark(p, (0 until 25).map(i =>
+      Row(i.toLong, kinds(i % 5), i % 2)), ps, Seq("k", "n"))
+    assert(files.size == 10 && files.exists(
+      _.path.contains("/_p_k=__HIVE_DEFAULT_PARTITION__/")))
+    assert(files.map(f => TxLog.partValsOf(f.path)("k")).toSet ==
+      kinds.toSet)
+    // bloom-indexed: bitsets on a BIGINT and an INT column
+    val b = freshTable("sameas_bloom")
+    TxLog.createEmpty(b, "id BIGINT, n INT, s STRING")
+    TxLog.alterAddBloomIndex(spark, b, "id", bits = 1024, k = 3)
+    val bv = TxLog.alterAddBloomIndex(spark, b, "n", bits = 256, k = 2)
+    val bloomed = sameAsSpark(b, (0 until 40).map(i =>
+      Row(if (i == 5) null else i * 31L, i % 9, s"s$i")),
+      StructType.fromDDL("id BIGINT, n INT, s STRING"), base = bv)
+    assert(bloomed.forall(_.blooms.keySet == Set("id", "n")))
   }
 
   test("the txn ledger stays exact over a long log: a replayed old batch " +

@@ -912,6 +912,75 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.vacuum(t, 2L).isEmpty)
   }
 
+  /** Files under `t` outside the log that a vacuum at `horizon` should
+    * have left nothing of: every file that is not retained — live at a
+    * version ≥ `horizon`, a change-data file of one, or inside a
+    * retained DV sidecar group — nor the checksum or `_SUCCESS` marker
+    * (and its checksum) of a directory that holds a retained file.
+    */
+  private def strays(t: java.io.File, horizon: Long): Seq[String] = {
+    val vs = TxLog.versions(t).filter(_ >= horizon)
+    val states = vs.map(TxLog.liveState(t, _))
+    val retained = (states.flatMap(_.live.map(_.path)) ++
+      vs.flatMap(TxLog.readCommit(t, _).cdc.map(_.path))).toSet
+    val sidecars = states.flatMap(
+      _.dvs.values.flatten.filterNot(_.inline).map(_.dvPath)).toSet
+    def walk(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap(f =>
+        if (f.isDirectory) walk(f) else Seq(f))
+    walk(t).map(f => t.toPath.relativize(f.toPath).toString)
+      .filterNot(_.startsWith("_graft_log/"))
+      .filterNot { rel =>
+        val dir = Option(new java.io.File(rel).getParent).getOrElse("")
+        val name = new java.io.File(rel).getName
+        val of = if (name.startsWith(".") && name.endsWith(".crc"))
+          name.drop(1).dropRight(4) else name
+        retained(if (dir.isEmpty) of else s"$dir/$of") ||
+          sidecars.exists(g => rel.startsWith(s"$g/")) ||
+          (of == "_SUCCESS" && retained.exists(_.startsWith(s"$dir/")))
+      }.sorted
+  }
+
+  test("vacuum leaves only retained files, their checksums and their " +
+      "groups' markers: no orphaned .crc, _SUCCESS or empty group") {
+    import spark.implicits._
+    // two appends, then compact: both append groups empty out
+    val t = freshTable("vacstray")
+    TxLog.append(rows(5), t)
+    TxLog.append(rows(5, 5), t)
+    val appended = TxLog.liveState(t, 1L).live.map(_.path)
+    val vc = TxLog.compact(spark, t, 1)
+    assert(TxLog.vacuum(t, vc).sorted == appended.sorted)
+    assert(strays(t, vc).isEmpty, strays(t, vc))
+    assert(appended.map(_.takeWhile(_ != '/')).distinct
+      .forall(g => !new java.io.File(t, g).exists()))
+    assert(TxLog.snapshot(spark, t).count() == 10)
+    // partitioned: the partition dirs inside a group empty out too
+    val p = freshTable("vacstray_part")
+    TxLog.createPartitioned(rows(6).withColumn("k", col("id") % 2), p,
+      Seq("k"))
+    TxLog.append(rows(4, 10).withColumn("k", col("id") % 2), p)
+    val vp = TxLog.compact(spark, p, 1)
+    assert(TxLog.vacuum(p, vp).nonEmpty)
+    assert(strays(p, vp).isEmpty, strays(p, vp))
+    assert(TxLog.snapshot(spark, p).count() == 10)
+    // a CDC apply tail: a driver-written sidecar and change-data files
+    // below the horizon go, the retained tail commit stays
+    val c = freshTable("vacstray_cdc")
+    TxLog.createEmpty(c, "id BIGINT, payload STRING")
+    TxLog.append(rows(600).coalesce(1), c)
+    val side = TxLog.applyChanges(spark, c, (0L until 300L)
+      .map(i => (i, s"u$i", "upsert")).toDF("id", "payload", "_op"), Seq("id"))
+    assert(TxLog.readCommit(c, side).dvs.exists(!_.inline))
+    TxLog.deleteWhereDV(spark, c, col("id") >= 590)
+    val h = TxLog.compact(spark, c, 1)
+    TxLog.applyChanges(spark, c, Seq((1L, "w1", "upsert"),
+      (2L, null, "delete")).toDF("id", "payload", "_op"), Seq("id"))
+    assert(TxLog.vacuum(c, h).nonEmpty)
+    assert(strays(c, h).isEmpty, strays(c, h))
+    assert(TxLog.snapshot(spark, c).count() == 589)
+  }
+
   test("DV attachments survive a checkpoint round-trip") {
     val t = freshTable("dvckpt")
     TxLog.append(rows(100).coalesce(1), t)           // v0

@@ -73,6 +73,25 @@ EVENTS = (trigger(7, T0, 0, 0, 150) +
           sql(21, T0 + 2150, T0 + 2160, group="feed"))
 
 
+def fork(ms):
+    """A jdk.ProcessStart event, as `jfr print --json` prints it, at
+    epoch ms `ms` plus 0.5 ms (nanosecond digits)."""
+    iso = tp.datetime.datetime.fromtimestamp(
+        ms // 1000, tp.datetime.timezone.utc).strftime("%Y-%m-%dT%H:%M:%S")
+    return {"type": "jdk.ProcessStart", "values": {
+        "startTime": f"{iso}.{ms % 1000:03d}500000Z", "duration": "PT0S",
+        "pid": 1, "command": "chmod 644 x"}}
+
+
+# trigger 7: two inside apply.1, one between executions; trigger 9: one
+# inside view.1; one before the first trigger, one after the last
+FORKS = {"recording": {"events": [
+    fork(T0 - 5), fork(T0 + 40), fork(T0 + 99), fork(T0 + 150),
+    fork(T0 + 2250), fork(T0 + 9000),
+    {"type": "jdk.ThreadStart", "values": {"startTime":
+                                           "2026-01-01T00:00:00.050Z"}}]}}
+
+
 class TriggerPhasesTest(unittest.TestCase):
     def rows(self, groups=("apply", "view")):
         triggers, execs = tp.parse(EVENTS)
@@ -121,6 +140,49 @@ class TriggerPhasesTest(unittest.TestCase):
         text = tp.render(rows, cols, med)
         self.assertEqual(len(text.splitlines()), 4)
         self.assertTrue(text.splitlines()[-1].lstrip().startswith("median"))
+
+    def test_jfr_timestamps_keep_sub_millisecond_digits(self):
+        self.assertEqual(tp.jfr_ms("2026-01-01T00:00:00.040500000Z"),
+                         T0 + 40.5)
+        self.assertEqual(tp.jfr_ms("2026-01-01T00:00:01Z"), T0 + 1000)
+
+    def test_forks_per_trigger_and_execution(self):
+        triggers, execs = tp.parse(EVENTS)
+        forks = sorted(tp.jfr_ms(e["values"]["startTime"])
+                       for e in FORKS["recording"]["events"]
+                       if e["type"] == "jdk.ProcessStart")
+        r7, r9 = tp.breakdown(triggers, execs, {"apply", "view"}, forks)
+        self.assertEqual((r7["forks"], r7["apply.1.forks"],
+                          r7["apply.2.forks"], r7["view.1.forks"]),
+                         (3, 2, 0, 0))
+        self.assertEqual((r9["forks"], r9["apply.1.forks"],
+                          r9["view.1.forks"]), (1, 0, 1))
+        # forks go right after the stream phases
+        cols = tp.columns([r7, r9])
+        self.assertEqual(cols[cols.index("forks") - 1], "triggerExecution")
+        # without a recording there is no forks column
+        self.assertNotIn("forks", tp.breakdown(triggers, execs, {"apply"})[0])
+
+    def test_main_reads_a_jfr_json_file(self):
+        paths = []
+        for suffix, body in ((".json", "\n".join(json.dumps(e)
+                                                  for e in EVENTS)),
+                             (".json", json.dumps(FORKS))):
+            with tempfile.NamedTemporaryFile("w", suffix=suffix,
+                                             delete=False) as f:
+                f.write(body)
+            paths.append(f.name)
+        out = io.StringIO()
+        try:
+            with contextlib.redirect_stdout(out):
+                self.assertEqual(tp.main([paths[0], "--json", "--jfr",
+                                          paths[1]]), 0)
+        finally:
+            for p in paths:
+                os.unlink(p)
+        got = json.loads(out.getvalue())
+        self.assertEqual([r["forks"] for r in got["triggers"]], [3, 1])
+        self.assertEqual(got["median"]["apply.1.forks"], 1)
 
     def test_main_reads_a_log_file(self):
         with tempfile.NamedTemporaryFile("w", suffix=".json",

@@ -4,6 +4,7 @@
 Usage (from the repository root):
 
     python3 tools/trigger_phases.py EVENTLOG [--groups apply,view] [--json]
+        [--jfr RECORDING]
 
 EVENTLOG is one Spark event log file: plain JSON lines, or compressed
 with zstd (`.zst`/`.zstd`, decompressed with the `zstd` command). To
@@ -29,6 +30,17 @@ n-th such execution of the group in the trigger):
           job);
     job   ms from the first job's submission to the last job's end;
     n     the jobs it ran.
+
+With `--jfr RECORDING` it also counts forked processes: the
+`jdk.ProcessStart` events of a Java Flight Recording of the same run
+(a `.jfr` file, read with the JDK's `jfr` command, or the JSON that
+`jfr print --json --events jdk.ProcessStart` printed). A `forks` column
+counts the ones that started inside the trigger, and `<label>.forks`
+the ones inside each listed execution, matched by time window. To
+record one next to the event log:
+
+    JAVA_TOOL_OPTIONS="-XX:StartFlightRecording=filename=/some/run.jfr,\
+settings=profile,dumponexit=true -Dspark.eventLog.enabled=true ..."
 
 The last row is the median of each column over the triggers that have
 it. `--json` prints the same as one JSON object instead.
@@ -63,6 +75,30 @@ def epoch_ms(iso):
     """Epoch milliseconds of a progress event's ISO-8601 UTC timestamp."""
     t = datetime.datetime.strptime(iso.rstrip("Z"), "%Y-%m-%dT%H:%M:%S.%f")
     return int(t.replace(tzinfo=datetime.timezone.utc).timestamp() * 1000)
+
+
+def jfr_ms(iso):
+    """Epoch milliseconds (fractional) of a JFR ISO-8601 UTC timestamp,
+    whose fraction may run to nanoseconds."""
+    base, _, frac = iso.rstrip("Z").partition(".")
+    t = datetime.datetime.strptime(base, "%Y-%m-%dT%H:%M:%S")
+    return (t.replace(tzinfo=datetime.timezone.utc).timestamp() * 1000 +
+            (float("0." + frac) * 1000 if frac else 0.0))
+
+
+def read_forks(path):
+    """Start times (epoch ms, ascending) of the recording's
+    jdk.ProcessStart events."""
+    if path.endswith(".json"):
+        with open(path) as f:
+            text = f.read()
+    else:
+        text = subprocess.run(["jfr", "print", "--json", "--events",
+                               "jdk.ProcessStart", path], check=True,
+                              capture_output=True).stdout.decode()
+    return sorted(jfr_ms(e["values"]["startTime"])
+                  for e in json.loads(text)["recording"]["events"]
+                  if e.get("type") == "jdk.ProcessStart")
 
 
 def parse(events):
@@ -117,14 +153,20 @@ def parse(events):
                             key=lambda x: (x["start"], x["id"]))
 
 
-def breakdown(triggers, execs, groups):
+def breakdown(triggers, execs, groups, forks=None):
     """One row per trigger: its phases plus per-execution columns. An
     execution that runs inside a listed one of the same group (a nested
-    execution) counts toward it."""
+    execution) counts toward it. With `forks` (process start times),
+    the trigger and each listed execution also count the ones that
+    started inside them."""
+    def started(lo, hi):
+        return sum(1 for f in forks if lo <= f <= hi)
     rows = []
     for t in triggers:
         row = {"batch": t["batch"]}
         row.update(t["phases"])
+        if forks is not None:
+            row["forks"] = started(t["start"], t["end"])
         listed = []
         for x in execs:
             if x["group"] not in groups or \
@@ -148,6 +190,8 @@ def breakdown(triggers, execs, groups):
             row[f"{label}.pre"] = first - x["start"]
             row[f"{label}.job"] = last - first
             row[f"{label}.n"] = len(x["jobs"])
+            if forks is not None:
+                row[f"{label}.forks"] = started(x["start"], x["end"])
             prev_end = x["end"]
         rows.append(row)
     return rows
@@ -184,9 +228,12 @@ def main(argv=None):
     ap.add_argument("--groups", default="apply,view",
                     help="comma-separated job groups to list")
     ap.add_argument("--json", action="store_true")
+    ap.add_argument("--jfr", metavar="RECORDING",
+                    help="count the recording's process starts")
     a = ap.parse_args(argv)
     triggers, execs = parse(read_events(a.eventlog))
-    rows = breakdown(triggers, execs, set(a.groups.split(",")))
+    rows = breakdown(triggers, execs, set(a.groups.split(",")),
+                     read_forks(a.jfr) if a.jfr else None)
     if not rows:
         print("no data triggers in the log", file=sys.stderr)
         return 1
